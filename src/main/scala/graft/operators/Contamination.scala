@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination (SURVEY.md §2.7 [EXT]): flag training
@@ -28,41 +28,13 @@ object Contamination {
   val Tau = 0.5
   val BenchMaxId = 50L
 
-  /** Built-in-function formulation of [[graft.plans.TokenNgramsExpr]] over
-    * an ALREADY-TOKENIZED column. Callers must materialize the token array
-    * in its own projection first (the [[TextOps.langIdScoreOfToks]]
-    * discipline): the lambda body is re-evaluated per element with no CSE,
-    * so an inlined `split` would re-tokenize the text once per shingle
-    * POSITION. Guarded: texts shorter than `n` tokens yield an empty array
-    * (a bare `sequence(0, size-n)` would DESCEND for negative ends —
-    * Spark sequences run backwards when start > stop); NULL stays NULL to
-    * match the kernel. Bit-equality with the kernel is asserted in
-    * VectorExprSpec. */
-  def tokenShinglesOfToks(toks: Column, n: Int = ShingleN): Column =
-    when(toks.isNull, lit(null).cast("array<string>"))
-      .when(size(toks) >= n,
-        array_distinct(transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-      .otherwise(typedLit(Array.empty[String]))
-
-  /** Convenience form over raw text — fine for one-off expressions; inside
-    * plans prefer materializing the tokens and [[tokenShinglesOfToks]]. */
-  def tokenShingles(text: Column, n: Int = ShingleN): Column =
-    tokenShinglesOfToks(split(text, " "), n)
-
-  /** (doc_id, sh) with sh = distinct token n-grams: the codegen'd
-    * [[graft.plans.TokenNgramsExpr]] kernel when the session has
-    * GraftExtensions (one char-scan per row, index-arithmetic substrings
-    * — measured ~3× the whole key's cost cheaper than the interpreted
-    * lambda at sf0.1), the two-projection HOF form otherwise (same
-    * catalog-fallback contract as Similarity.simhashFor). */
+  /** (doc_id, sh) with sh = distinct token n-grams from the codegen'd
+    * [[graft.plans.TokenNgramsExpr]] kernel (one char-scan per row,
+    * index-arithmetic substrings — measured ~3× the whole key's cost
+    * cheaper than the interpreted lambda at sf0.1). */
   private def shingled(docs: DataFrame, n: Int): DataFrame =
-    if (docs.sparkSession.catalog.functionExists("graft_token_ngrams"))
-      docs.select(col("doc_id"),
-        call_function("graft_token_ngrams", col("text"), lit(n)).as("sh"))
-    else
-      docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .select(col("doc_id"), tokenShinglesOfToks(col("toks"), n).as("sh"))
+    docs.select(col("doc_id"),
+      call_function("graft_token_ngrams", col("text"), lit(n)).as("sh"))
 
   /** Containment of each corpus document in each benchmark document:
     * |shingles(doc) ∩ shingles(bench)| / |shingles(doc)|, kept when

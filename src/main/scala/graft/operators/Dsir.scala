@@ -97,42 +97,26 @@ object Dsir {
 
   /** Score ANY (doc_id, …, text) frame against trained weights: appends
     * `n_feat`, `lw_mean` (mean micro-log10 weight per feature, 6 dp) and
-    * `selected` (positive total weight). Kernel when the session has
-    * GraftExtensions, bit-equal HOF fold otherwise (the engine-wide
-    * catalog-fallback contract). */
+    * `selected` (positive total weight). */
   def score(docs: DataFrame, model: Map[String, Long], oov: Long): DataFrame =
-    scoreWith(docs, model, oov,
-      useKernel = docs.sparkSession.catalog.functionExists("graft_unigram_score"))
-
-  /** Both scoring formulations behind one switch so the spec can assert
-    * their bit-equality (the engine-wide kernel≡HOF contract). */
-  private[operators] def scoreWith(docs: DataFrame, model: Map[String, Long],
-      oov: Long, useKernel: Boolean): DataFrame =
     scoreFeats(docs
         .withColumn("toks", split(col("text"), " ")) // own projection — see trainWeights
         .withColumn("feats", bucketsOfToks(col("toks"))),
-      model, oov, useKernel)
-      .drop("toks")
+      model, oov)
 
   /** Scoring over a frame that already carries the hashed `feats` column
-    * (consumed and dropped) — the shared half of [[scoreWith]]. */
-  private[operators] def scoreFeats(withF: DataFrame, model: Map[String, Long],
-      oov: Long, useKernel: Boolean): DataFrame = {
-    val withFeats = withF
+    * (consumed and dropped) through the `graft_unigram_score` kernel — the
+    * shared half of [[score]] and [[dsirSelect]]. */
+  private def scoreFeats(withF: DataFrame, model: Map[String, Long],
+      oov: Long): DataFrame =
+    withF
       .withColumn("n_feat", size(col("feats")).cast("long"))
-    val lwSum =
-      if (useKernel)
-        call_function("graft_unigram_score", col("feats"), typedLit(model), lit(oov))
-      else
-        aggregate(col("feats"), lit(0L),
-          (s, f) => s + coalesce(element_at(typedLit(model), f), lit(oov)))
-    withFeats
-      .withColumn("lw_sum", lwSum)
+      .withColumn("lw_sum",
+        call_function("graft_unigram_score", col("feats"), typedLit(model), lit(oov)))
       .withColumn("lw_mean",
         round(col("lw_sum").cast("double") / LmScore.Micro / col("n_feat"), 6))
       .withColumn("selected", col("lw_sum") > 0)
       .drop("toks", "feats", "lw_sum")
-  }
 
   /** Declared key (`dsir_select`): target = the `en` slice, raw = the
     * whole corpus; one training pass, kernel scoring, sign cut. */
@@ -154,8 +138,7 @@ object Dsir {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (model, oov) = trainWeightsFromFeats(
       feats.select((col("lang") === "en").as("is_target"), col("feats")))
-    val out = scoreFeats(feats, model, oov,
-        useKernel = spark.catalog.functionExists("graft_unigram_score"))
+    val out = scoreFeats(feats, model, oov)
       .select("doc_id", "lang", "n_feat", "lw_mean", "selected")
       .orderBy("doc_id")
     // one narrow verdict row per doc — materialize and release the

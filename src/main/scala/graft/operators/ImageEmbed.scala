@@ -85,7 +85,7 @@ object ImageEmbed {
     MediaExtractor.embedFrame(images, MediaExtractor.ImageExtractor)
 
   /** Near-dup verdicts over an embedding frame: 64-bit hyperplane
-    * signature (`graft_vec_simhash` kernel; HOF fallback off-session) →
+    * signature (`graft_vec_simhash` kernel) →
     * the 4×16 banded-Hamming candidate mining of [[ImagePhash.phashDedup]]
     * (pigeonhole-exact at signature radius [[ImagePhash.HammingMax]]) →
     * EXACT cosine verify at `threshold` on candidates only. Precision is
@@ -124,8 +124,8 @@ object ImageEmbed {
     // union-then-distinct of per-table pair sets is exactly the distinct
     // of the single join's surviving pairs.
     val sigs = e.select(col("media_id"),
-      Similarity.simhashFor(e, col("v"), 64).as("_sig0"),
-      Similarity.simhashFor(e, reverse(col("v")), 64).as("_sig1"))
+      Similarity.simhash(col("v"), 64).as("_sig0"),
+      Similarity.simhash(reverse(col("v")), 64).as("_sig1"))
     val banded = sigs.select(col("media_id"),
       explode(array((0 until 2).flatMap(ti =>
         (0 until ImagePhash.Bands).map(b =>
@@ -147,7 +147,7 @@ object ImageEmbed {
     val verified = cand
       .join(e.select(col("media_id").as("lo"), col("v").as("v_lo")), "lo")
       .join(e.select(col("media_id").as("hi"), col("v").as("v_hi")), "hi")
-      .filter(Similarity.cosineFor(e, col("v_lo"), col("v_hi")) >= threshold)
+      .filter(Similarity.cosine(col("v_lo"), col("v_hi")) >= threshold)
     val dupOf = verified.groupBy(col("hi").as("media_id"))
       .agg(min("lo").as("dup_of"))
     val out = e.select("media_id").join(dupOf, Seq("media_id"), "left")

@@ -105,10 +105,11 @@ object LmScore {
   /** THE scale scoring path: `graft_unigram_score` (a codegen'd kernel
     * with a real executor-local hash table — see
     * [[graft.plans.UnigramScoreExpr]]) over a driver-resident model.
-    * Bit-equal to [[score]] (asserted in LmScoreSpec); unlike it, lookup
-    * cost is O(1) per token instead of a linear scan of the map literal,
-    * which is what makes a production-sized (30k+) vocabulary usable —
-    * the HOF form is O(tokens × V) and stops scaling past toy vocabs. */
+    * Bit-equal to the built-in `aggregate` fold (asserted in LmScoreSpec);
+    * unlike it, lookup cost is O(1) per token instead of a linear scan of
+    * the map literal, which is what makes a production-sized (30k+)
+    * vocabulary usable — the HOF form is O(tokens × V) and stops scaling
+    * past toy vocabs. */
   def scoreKernel(docs: DataFrame, model: Map[String, Long], oov: Long): DataFrame =
     docs
       .withColumn("toks", split(col("text"), " "))
@@ -118,26 +119,6 @@ object LmScore {
           col("toks"), typedLit(model), lit(oov))
           .cast("double") / Micro / col("n_tok"), 6))
       .drop("toks")
-
-  /** Reference formulation over built-ins only (the oracle-shaped twin of
-    * [[scoreKernel]]): appends `n_tok` and `lp_mean` via a broadcast
-    * 1-row model and an `aggregate` fold. Correct at any scale but
-    * `element_at` against a map column is a linear scan per token — use
-    * [[scoreKernel]] when the vocabulary is more than a few dozen
-    * entries. */
-  def score(docs: DataFrame, modelRow: DataFrame): DataFrame = {
-    // tokenize ONCE into an array column; n_tok and the fold both read it
-    // (CollapseProject keeps non-cheap expressions used more than once in
-    // their own projection, so the split really evaluates once per row)
-    val sumMicro = aggregate(col("toks"), lit(0L),
-      (s, t) => s + coalesce(element_at(col("model"), t), col("oov")))
-    docs.crossJoin(broadcast(modelRow))
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_tok", size(col("toks")).cast("long"))
-      .withColumn("lp_mean",
-        round(sumMicro.cast("double") / Micro / col("n_tok"), 6))
-      .drop("model", "oov", "toks")
-  }
 
   /** Declared key (`lm_score`): train on the en slice, score the whole
     * corpus through the kernel path. Non-reference-language documents

@@ -107,83 +107,23 @@ object ProductQuant {
 
   /** Encode a (vec_id, v) frame against the codebooks: appends `codes`
     * (array<int>, length M) — per subspace the argmin-squared-L2 codeword
-    * index, ties to the lower code (the `array_min` struct order). Pure
-    * narrow projection over the codebook literal. */
+    * index, ties to the lower code. One codegen'd primitive loop over the
+    * codebook literal ([[graft.plans.PqEncodeExpr]]). */
   def encode(emb: DataFrame, codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    encodeWith(emb, codebooks,
-      useKernel = emb.sparkSession.catalog.functionExists("graft_pq_encode"))
-
-  /** Both encode formulations behind one switch so the spec can assert
-    * their bit-equality (the engine-wide kernel≡HOF contract — the HOF
-    * form is four nested higher-order functions, interpreted per
-    * (subspace × codeword); the kernel is one codegen'd primitive loop,
-    * see [[graft.plans.PqEncodeExpr]]). */
-  private[operators] def encodeWith(emb: DataFrame,
-      codebooks: Seq[Seq[Seq[Double]]], useKernel: Boolean): DataFrame = {
-    val m = codebooks.size
-    val ks = codebooks.head.size
-    val dsub = codebooks.head.head.size
-    val cb = typedLit(codebooks)
-    val codes =
-      if (useKernel) call_function("graft_pq_encode", col("v"), cb)
-      else transform(sequence(lit(0), lit(m - 1)), mi => {
-        val sub = slice(col("v"), mi * dsub + 1, lit(dsub))
-        array_min(transform(sequence(lit(0), lit(ks - 1)), k =>
-          struct(
-            aggregate(
-              zip_with(sub, element_at(element_at(cb, mi + 1), k + 1),
-                (x, y) => (x - y) * (x - y)),
-              lit(0d), (s, x) => s + x).as("d2"),
-            k.as("code")))).getField("code")
-      })
-    emb.withColumn("codes", codes)
-  }
+    emb.withColumn("codes",
+      call_function("graft_pq_encode", col("v"), typedLit(codebooks)))
 
   /** The per-query flat ADC table: entry m·Ks + k = ⟨q_sub(m), cb(m)(k)⟩.
-    * One array<double> column of M·Ks entries on the QUERY frame. */
+    * One array<double> column of M·Ks entries on the QUERY frame
+    * ([[graft.plans.AdcTableExpr]]). */
   def adcTable(qv: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
-    adcTableWith(qv, codebooks,
-      useKernel = org.apache.spark.sql.SparkSession.active
-        .catalog.functionExists("graft_adc_table"))
-
-  /** Both table formulations behind one switch so the spec can assert
-    * their bit-equality (kernel≡HOF contract — the HOF is four nested
-    * higher-order functions with a slice + zip allocation per
-    * (subspace × codeword) per query row; the kernel is one codegen'd
-    * primitive loop, see [[graft.plans.AdcTableExpr]]). */
-  private[operators] def adcTableWith(qv: Column,
-      codebooks: Seq[Seq[Seq[Double]]], useKernel: Boolean): Column = {
-    val m = codebooks.size
-    val ks = codebooks.head.size
-    val dsub = codebooks.head.head.size
-    val cb = typedLit(codebooks)
-    if (useKernel) call_function("graft_adc_table", qv, cb)
-    else flatten(transform(sequence(lit(0), lit(m - 1)), mi =>
-      transform(sequence(lit(0), lit(ks - 1)), k =>
-        aggregate(
-          zip_with(slice(qv, mi * dsub + 1, lit(dsub)),
-            element_at(element_at(cb, mi + 1), k + 1), (x, y) => x * y),
-          lit(0d), (s, x) => s + x))))
-  }
+    call_function("graft_adc_table", qv, typedLit(codebooks))
 
   /** ADC score of a codes column against a flat table column:
-    * Σ_m table[m·Ks + codes(m)] — M indexed array reads per row. */
+    * Σ_m table[m·Ks + codes(m)] — M indexed array reads per row
+    * ([[graft.plans.AdcScoreExpr]]). */
   def adcScore(codes: Column, table: Column, ks: Int): Column =
-    adcScoreWith(codes, table, ks,
-      useKernel = org.apache.spark.sql.SparkSession.active
-        .catalog.functionExists("graft_adc_score"))
-
-  /** Both ADC-score formulations behind one switch so the spec can
-    * assert their bit-equality (kernel≡HOF contract — the HOF allocates
-    * a sequence + zipped array per row; see
-    * [[graft.plans.AdcScoreExpr]]). */
-  private[operators] def adcScoreWith(codes: Column, table: Column,
-      ks: Int, useKernel: Boolean): Column =
-    if (useKernel) call_function("graft_adc_score", codes, table, lit(ks))
-    else aggregate(
-      zip_with(codes, sequence(lit(0), size(codes) - 1),
-        (c, mi) => element_at(table, mi * ks + c + 1)),
-      lit(0d), (s, x) => s + x)
+    call_function("graft_adc_score", codes, table, lit(ks))
 
   /** PQ search over frames: ADC shortlist over the coded corpus, exact
     * rerank of the shortlist on full vectors — the two-stage serving
@@ -208,12 +148,10 @@ object ProductQuant {
       .select("q_id", "vec_id")
     // exact rerank of the shortlist (full vectors re-join by id — the
     // standard two-stage serving shape)
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
     val wR = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     short.join(emb, "vec_id")
       .join(broadcast(q.select("q_id", "qv")), "q_id")
-      .withColumn("cos", dotQ) // normalized vectors: dot = cosine
+      .withColumn("cos", Similarity.dot(col("v"), col("qv"))) // normalized: dot = cosine
       .withColumn("rn", row_number().over(wR))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("vec_id"), round(col("cos"), 6).as("cos"))
@@ -248,12 +186,10 @@ object ProductQuant {
       .withColumn("srn", row_number().over(wS))
       .filter(col("srn") <= shortlist)
       .select("q_id", "vec_id")
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
     val wR = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     val out = short.join(emb, "vec_id")
       .join(broadcast(q.select("q_id", "qv")), "q_id")
-      .withColumn("cos", dotQ)
+      .withColumn("cos", Similarity.dot(col("v"), col("qv")))
       .withColumn("rn", row_number().over(wR))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("vec_id"), round(col("cos"), 6).as("cos"))

@@ -73,12 +73,12 @@ object SemDedup {
     // ivfTopk index-build shape)
     val cids = emb.crossJoin(cdf)
       .select(col("vec_id"),
-        struct(Similarity.dotFor(emb, diff, diff).as("d2"), col("cid").as("cid")).as("sc"))
+        struct(Similarity.dot(diff, diff).as("d2"), col("cid").as("cid")).as("sc"))
       .groupBy("vec_id").agg(min(col("sc")).as("m"))
       .select(col("vec_id"), col("m.cid").as("cid"))
     val assigned = emb
       .select(col("vec_id"), col("v"),
-        sqrt(Similarity.dotFor(emb, col("v"), col("v"))).as("nrm"))
+        sqrt(Similarity.dot(col("v"), col("v"))).as("nrm"))
       .join(cids, "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The verdict frame is narrow (vec_id, cid, n_near, keep — no vectors),
@@ -107,7 +107,7 @@ object SemDedup {
     // shard; candidates are Σ|cluster|² and the shuffle key is cid
     val near = assigned.as("a").join(assigned.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-      .filter(Similarity.dotFor(assigned, col("a.v"), col("b.v"))
+      .filter(Similarity.dot(col("a.v"), col("b.v"))
         / (col("a.nrm") * col("b.nrm")) >= tau)
       .groupBy(col("b.vec_id").as("vec_id"))
       .agg(count(lit(1)).as("n_near"))

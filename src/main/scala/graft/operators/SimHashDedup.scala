@@ -22,34 +22,12 @@ object SimHashDedup {
   val hammingMax = 3
   val chunks: Int = hammingMax + 1 // pigeonhole: ≥1 exact chunk match
 
-  /** 64-bit SimHash over an array of PRE-COMPUTED token hashes: for each
-    * bit i, sum +1/-1 over tokens according to bit i of the hash; bit set
-    * iff sum ≥ 0. Taking hashes (not tokens) keeps the expensive string
-    * hash to ONE evaluation per token — callers materialize the hash array
-    * in its own projection (CollapseProject won't inline a non-cheap alias
-    * referenced 64×). Built-ins only, ANSI-safe.
-    */
-  def simhashOfHashes(tokenHashes: Column): Column = {
-    val bitCols = (0 until bits).map { i =>
-      val contrib = aggregate(
-        transform(tokenHashes,
-          h => when(shiftrightunsigned(h, i).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)),
-        lit(0L), (s, x) => s + x)
-      when(contrib >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ bitwiseOR _)
-  }
-
-  /** Convenience: SimHash directly from text (hashes each token once). */
-  def simhashText(text: Column): Column =
-    simhashOfHashes(transform(split(text, " "), t => xxhash64(t)))
-
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** 64-bit SimHash signature per document: `(doc_id, sig)`. One narrow
     * projection — tokens hashed once, then the native single-pass kernel
-    * (graft.plans.SimHashExpr; equality with [[simhashOfHashes]] asserted
-    * in VectorExprSpec). */
+    * (graft.plans.SimHashExpr; equality with the built-in per-bit
+    * formulation asserted in VectorExprSpec). */
   def signatures(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"),
       transform(split(col("text"), " "), t => xxhash64(t)).as("th")) // hash once

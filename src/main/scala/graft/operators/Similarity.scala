@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * The `embeddings` table carries a native `array<float>` column (E4 —
   * multimodal columns are opaque arrays/binaries with typed metadata; no
-  * custom type system needed). All vector math is built-in higher-order
-  * functions (`zip_with` + `aggregate`) — codegen'd, no UDFs.
+  * custom type system needed). Dot products and SimHash run in the native
+  * codegen'd kernels GraftExtensions registers (`graft_dot`,
+  * `graft_vec_simhash`) — no UDFs.
   *
   * Scale story:
   *  - [[simTopk]] is brute-force top-k: query set BROADCAST against the
@@ -48,13 +49,9 @@ object Similarity {
     * Resolves to the native codegen'd [[graft.plans.DotProductExpr]]
     * (registered by GraftExtensions via Engine.session): a primitive loop
     * with no per-element lambda dispatch or intermediate array — same
-    * index-order summation as the HOF fold (bit-equality asserted in
-    * VectorExprSpec), just faster. [[hofDot]] keeps the pure-built-in form. */
+    * index-order summation as the HOF fold (bit-equality with the test-scope
+    * reference asserted in VectorExprSpec), just faster. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
-  /** Built-in higher-order-function formulation (no extensions needed). */
-  def hofDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0d), (s, x) => s + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -86,28 +83,12 @@ object Similarity {
     *
     * Resolves to the native codegen'd [[graft.plans.VecSimHashExpr]]
     * (registered by GraftExtensions): one primitive loop hashing each index
-    * once and updating all `bits` projections — where [[hofSimhash]] runs
-    * `bits` separate interpreted `aggregate(zip_with(...))` folds, each
-    * re-walking the vector and re-hashing every index (16× redundant work
-    * at bits=16, all of it outside whole-stage codegen). Bit-equality with
-    * the HOF form asserted in VectorExprSpec. */
+    * once and updating all `bits` projections — where the built-in
+    * formulation runs `bits` separate interpreted `aggregate(zip_with(...))`
+    * folds, each re-walking the vector and re-hashing every index.
+    * Bit-equality with that test-scope reference asserted in VectorExprSpec. */
   def simhash(v: Column, bits: Int = 16): Column =
     call_function("graft_vec_simhash", v, lit(bits))
-
-  /** Built-in higher-order-function formulation of [[simhash]] (no
-    * extensions needed) — kept as the independent control arm for the
-    * kernel's bit-equality spec. */
-  def hofSimhash(v: Column, bits: Int = 16): Column = {
-    // hyperplane component r_i[d] ∈ {-1, +1} from the parity of xxhash64(i, d)
-    val bitCols = (0 until bits).map { i =>
-      val proj = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, d) => when(pmod(xxhash64(lit(i), d), lit(2)) === 0, x).otherwise(-x)),
-        lit(0d), (s, x) => s + x)
-      when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ bitwiseOR _)
-  }
 
   /** E1/E2: embedding-cosine NEAR-DUPLICATE pairs — vectors whose cosine
     * ≥ `threshold`, found via SimHash hyperplane buckets with single-bit
@@ -117,21 +98,6 @@ object Similarity {
     * [[graft.operators.MinHashDedup]], for the embedding modality.
     * @param emb columns (vec_id: Long, v: array<double>)
     */
-  /** [[simhash]]/[[dot]] resolve through the SQL function registry, so they
-    * need GraftExtensions on the session; these pick the native kernels when
-    * registered and degrade to the bit-equal built-in HOF forms otherwise —
-    * [[embedDedup]]/[[annTopk]] then work on ANY session (the HOF fallback
-    * is slower, not different; bit-equality asserted in VectorExprSpec). */
-  private[operators] def simhashFor(df: DataFrame, v: Column, bits: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_vec_simhash")) simhash(v, bits)
-    else hofSimhash(v, bits)
-
-  private[operators] def dotFor(df: DataFrame, a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("graft_dot")) dot(a, b) else hofDot(a, b)
-
-  private[operators] def cosineFor(df: DataFrame, a: Column, b: Column): Column =
-    dotFor(df, a, b) / (sqrt(dotFor(df, a, a)) * sqrt(dotFor(df, b, b)))
-
   def embedDedup(emb: DataFrame, threshold: Double = 0.95, prefixBits: Int = 8): DataFrame = {
     // bucket table is (vec_id, bucket) ONLY — the multi-probe explode fans
     // each row out ×(prefixBits+1), so carrying the vector through it would
@@ -139,7 +105,7 @@ object Similarity {
     // the verify stage on the deduplicated candidate ids instead (the same
     // ids-first-arrays-at-verify shape as MinHashDedup).
     val sigs = emb
-      .withColumn("bucket", pmod(simhashFor(emb, col("v"), prefixBits), lit(1L << prefixBits)))
+      .withColumn("bucket", pmod(simhash(col("v"), prefixBits), lit(1L << prefixBits)))
       .select(col("vec_id"), col("bucket"))
     val probed = sigs
       .withColumn("probe", explode(array(
@@ -152,7 +118,7 @@ object Similarity {
     cand
       .join(emb.select(col("vec_id").as("vec_a"), col("v").as("v_a")), "vec_a")
       .join(emb.select(col("vec_id").as("vec_b"), col("v").as("v_b")), "vec_b")
-      .withColumn("cos", cosineFor(emb, col("v_a"), col("v_b")))
+      .withColumn("cos", cosine(col("v_a"), col("v_b")))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos"))
   }
@@ -269,7 +235,7 @@ object Similarity {
     val diff = zip_with(col("v"), col("cv"), (x, y) => x - y)
     emb.crossJoin(cdf)
       .select(col("vec_id"),
-        struct(dotFor(emb, diff, diff).as("d2"), col("cid").as("cid")).as("sc"))
+        struct(dot(diff, diff).as("d2"), col("cid").as("cid")).as("sc"))
       .groupBy("vec_id").agg(min(col("sc")).as("m"))
       .select(col("vec_id"), col("m.cid").as("cid"), round(col("m.d2"), 6).as("d2"))
       .orderBy("vec_id")
@@ -310,7 +276,7 @@ object Similarity {
       .select(col("cid"), col("cv").cast("array<double>").as("cv"))
     val w = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("cid"))
     queries.crossJoin(broadcast(cdf))
-      .withColumn("ccos", cosineFor(queries, col("qv"), col("cv")))
+      .withColumn("ccos", cosine(col("qv"), col("cv")))
       .withColumn("prn", row_number().over(w))
       .filter(col("prn") <= nProbe)
       .select(col("q_id"), col("qv"), col("cid"))
@@ -331,7 +297,7 @@ object Similarity {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     assigned.join(probes, Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosineFor(assigned, col("v"), col("qv")))
+      .withColumn("cos", cosine(col("v"), col("qv")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("vec_id"), round(col("cos"), 6).as("cos"))
@@ -429,7 +395,7 @@ object Similarity {
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val emb = base
-      .withColumn("bucket", pmod(simhashFor(base, col("v"), prefixBits), lit(1L << prefixBits)))
+      .withColumn("bucket", pmod(simhash(col("v"), prefixBits), lit(1L << prefixBits)))
     val probes = emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket").as("qb"))
       // multi-probe: own bucket + each single-bit flip
@@ -437,7 +403,7 @@ object Similarity {
         (col("qb") +: (0 until prefixBits).map(b => col("qb").bitwiseXOR(lit(1L << b)))): _*)))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     emb.join(broadcast(probes), col("bucket") === col("probe") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosineFor(base, col("v"), col("qv")))
+      .withColumn("cos", cosine(col("v"), col("qv")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("vec_id"), round(col("cos"), 6).as("cos"))

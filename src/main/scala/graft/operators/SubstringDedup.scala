@@ -70,37 +70,20 @@ object SubstringDedup {
     * window. The operator's exchange currency, factored so the batch form
     * and the incremental form ([[SubstringIncremental]]) build the
     * identical digest space (and the persisted index stores exactly these
-    * `g` values). `carry` threads extra columns through the fan-out
+    * `g` values) through the codegen'd [[graft.plans.WindowDigestsExpr]]
+    * kernel. `carry` threads extra columns through the fan-out
     * unchanged — the bounded streaming form passes its watermarked
     * event-time attribute (watermarks survive projections). */
   def windowDigests(docs: DataFrame, spanL: Int = SpanL,
       carry: Seq[String] = Nil): DataFrame =
-    windowDigestsWith(docs, spanL, carry,
-      useKernel = docs.sparkSession.catalog
-        .functionExists("graft_window_digests"))
-
-  /** Both digest formulations behind one switch so the spec can assert
-    * their bit-equality (kernel≡HOF contract — the HOF allocates a slice
-    * + concat buffer per WINDOW; see
-    * [[graft.plans.WindowDigestsExpr]]). */
-  private[operators] def windowDigestsWith(docs: DataFrame, spanL: Int,
-      carry: Seq[String], useKernel: Boolean): DataFrame = {
-    val windows =
-      if (useKernel)
-        call_function("graft_window_digests", col("toks"), lit(spanL))
-      else transform(
-        sequence(lit(1), size(col("toks")) - (spanL - 1)),
-        i => struct(i.cast("long").as("pos"),
-          md5(concat_ws(" ", slice(col("toks"), i, lit(spanL)))).as("g")))
     docs
       .select(col("doc_id") +: split(col("text"), " ").as("toks") +:
         carry.map(col): _*)
       .filter(size(col("toks")) >= spanL)
-      .select(col("doc_id") +: explode(windows).as("pg") +:
-        carry.map(col): _*)
+      .select(col("doc_id") +: explode(call_function("graft_window_digests",
+          col("toks"), lit(spanL))).as("pg") +: carry.map(col): _*)
       .select(col("doc_id") +: col("pg.pos").as("pos") +: col("pg.g").as("g") +:
         carry.map(col): _*)
-  }
 
   /** Step 3 alone: session-merge duplicated window positions per document
     * (gap > L breaks a region; ≤ L keeps it contiguous since windows span

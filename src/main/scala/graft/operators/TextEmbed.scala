@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * distribution DSIR importance-weights is the one this embeds), hashed
   * into [[Dim]] signed buckets and L2-normalized (`graft_hash_embed`,
   * feature hashing per Weinberger et al. 2009; [[graft.plans
-  * .HashEmbedExpr]] for the kernel/HOF contract). Near-duplicate
+  * .HashEmbedExpr]] for the kernel and its reference). Near-duplicate
   * paraphrases — a few tokens swapped, clauses reordered, small drops —
   * keep most n-grams and land at cosine ≳ 0.9; independently drawn
   * documents share almost none and land near 0. Downstream is
@@ -39,45 +39,10 @@ object TextEmbed {
   val CosThreshold = 0.8
 
   /** (id, …, text) → (id, v): the hashed n-gram embedding as one narrow
-    * projection. Kernel when the session has GraftExtensions, bit-equal
-    * HOF fold otherwise (the engine-wide catalog-fallback contract). */
+    * `graft_hash_embed` projection ([[embedColumn]]). */
   def embedText(docs: DataFrame, idCol: String = "doc_id",
       dim: Int = Dim): DataFrame =
-    embedWith(docs, idCol, dim,
-      useKernel = docs.sparkSession.catalog.functionExists("graft_hash_embed"))
-
-  /** Both formulations behind one switch so the spec can assert their
-    * bit-equality. The HOF form touches all `dim` slots per feature —
-    * the O(dim × features) cost the kernel exists to avoid — but spells
-    * the identical arithmetic in built-ins: same xxhash64(seed 42), same
-    * pmod bucket, same bit-32 sign, same fold order (unigrams then
-    * bigrams), same normalization. */
-  private[operators] def embedWith(docs: DataFrame, idCol: String, dim: Int,
-      useKernel: Boolean): DataFrame = {
-    val toksCol = split(col("text"), " ")
-    val v =
-      if (useKernel) call_function("graft_hash_embed", toksCol, lit(dim))
-      else {
-        // toks materializes in its own projection (the Dsir lambda
-        // re-split lesson)
-        val feats = concat(col("toks"), TextOps.gramsOfToks(col("toks"), 2))
-        def bucket(f: Column) = pmod(xxhash64(f), lit(dim.toLong))
-        def sign(f: Column) =
-          lit(1.0) - shiftrightunsigned(xxhash64(f), 32)
-            .bitwiseAND(lit(1L)).cast("double") * 2.0
-        val acc = aggregate(feats,
-          array_repeat(lit(0.0), dim),
-          (a, f) => transform(a, (s, i) =>
-            s + when(bucket(f) === i.cast("long"), sign(f)).otherwise(0.0)))
-        val ss = aggregate(acc, lit(0.0), (s, x) => s + x * x)
-        when(ss > 0.0, transform(acc, x => x / sqrt(ss))).otherwise(acc)
-      }
-    if (useKernel)
-      docs.select(col(idCol), v.as("v"))
-    else
-      docs.select(col(idCol), toksCol.as("toks"))
-        .select(col(idCol), v.as("v"))
-  }
+    docs.select(col(idCol), embedColumn(col("text"), dim).as("v"))
 
   // ------------------------------------------------------------- fixture
 
@@ -197,7 +162,7 @@ object TextEmbed {
     val tables: Seq[Column] = Seq(col("v"), reverse(col("v")),
       shift1(col("v")), reverse(shift1(col("v"))))
     val sigs = e.select(col("doc_id") +: tables.zipWithIndex.map {
-      case (t, ti) => Similarity.simhashFor(e, t, 64).as(s"_sig$ti") }: _*)
+      case (t, ti) => Similarity.simhash(t, 64).as(s"_sig$ti") }: _*)
     val banded = sigs.select(col("doc_id"),
       explode(array(tables.indices.flatMap(ti => (0 until Bands).map(b =>
         struct(lit(ti * Bands + b).as("tb"),
@@ -212,7 +177,7 @@ object TextEmbed {
     val verified = cand
       .join(e.select(col("doc_id").as("lo"), col("v").as("v_lo")), "lo")
       .join(e.select(col("doc_id").as("hi"), col("v").as("v_hi")), "hi")
-      .filter(Similarity.cosineFor(e, col("v_lo"), col("v_hi")) >= threshold)
+      .filter(Similarity.cosine(col("v_lo"), col("v_hi")) >= threshold)
     val dupOf = verified.groupBy(col("hi").as("doc_id"))
       .agg(min("lo").as("dup_of"))
     val out = e.select("doc_id").join(dupOf, Seq("doc_id"), "left")
@@ -272,7 +237,7 @@ object TextEmbed {
     // signatures now ride one projection and a single explode fans out the
     // identical (doc_id, tbl, b, bv, v[, carry…]) row multiset.
     val sigCols = tableImages(nTables).zipWithIndex.map { case (t, ti) =>
-      Similarity.simhashFor(emb, t, 64).as(s"_sig$ti") }
+      Similarity.simhash(t, 64).as(s"_sig$ti") }
     emb.select(Seq(col("doc_id"), col("v")) ++ sigCols ++ carry.map(col): _*)
       .select(Seq(col("doc_id"), col("v"),
         explode(array((0 until nTables).flatMap(ti => (0 until nBands).map(b =>
@@ -285,12 +250,10 @@ object TextEmbed {
         ++ carry.map(col): _*)
   }
 
-  /** The embedding as a bare COLUMN over a text column — the kernel path
-    * only, for STREAMING composition where extra columns (watermarked
-    * event times) must ride the projection (every streaming entry point
-    * runs under [[graft.Engine.session]], which installs the
-    * extensions; the kernel≡HOF bit-equality is pinned in
-    * TextEmbedSpec). */
+  /** The embedding as a bare COLUMN over a text column, also for
+    * STREAMING composition where extra columns (watermarked event times)
+    * must ride the projection. The kernel≡reference bit-equality is
+    * pinned in TextEmbedSpec. */
   def embedColumn(text: Column, dim: Int = Dim): Column =
     call_function("graft_hash_embed", split(text, " "), lit(dim))
 
@@ -311,7 +274,7 @@ object TextEmbed {
     val inDrops = inCand
       .join(batchEmb.select(col("doc_id").as("lo"), col("v").as("v_lo")), "lo")
       .join(batchEmb.select(col("doc_id").as("hi"), col("v").as("v_hi")), "hi")
-      .filter(Similarity.cosineFor(batchEmb, col("v_lo"), col("v_hi")) >= threshold)
+      .filter(Similarity.cosine(col("v_lo"), col("v_hi")) >= threshold)
       .select(col("hi").as("doc_id"))
     val crossCand = bb.as("x").join(idxBands.as("i"),
         col("x.tbl") === col("i.tbl") && col("x.b") === col("i.b") &&
@@ -322,7 +285,7 @@ object TextEmbed {
       .join(batchEmb.select(col("doc_id"), col("v").as("v_b")), Seq("doc_id"))
       .join(idxVecs.select(col("doc_id").as("idx_id"), col("v").as("v_i")),
         Seq("idx_id"))
-      .filter(Similarity.cosineFor(batchEmb, col("v_b"), col("v_i")) >= threshold)
+      .filter(Similarity.cosine(col("v_b"), col("v_i")) >= threshold)
       .select("doc_id")
     inDrops.union(crossDrops).distinct()
   }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
 /** Text-analysis operators for LLM training-data pipelines (SURVEY.md §2.7
   * E1/E3): token statistics, quality scoring, fingerprint dedup, language ID.
   *
-  * Everything is built-in column expressions / higher-order functions — no
-  * UDFs — so the per-document work stays codegen'd and embarrassingly
+  * Everything is built-in column expressions, higher-order functions or
+  * the codegen'd kernels GraftExtensions registers — no UDFs — so the
+  * per-document work stays codegen'd and embarrassingly
   * parallel (narrow transforms; the only shuffles are the final keyed
   * aggregations / dedup windows).
   */
@@ -81,9 +82,8 @@ object TextOps {
     * Scale shape: one narrow projection per document — no explode, no
     * shuffle, no per-doc groupBy (the oracle's unnest+GROUP BY form is the
     * harness, not the plan). The counters come from the codegen'd
-    * [[graft.plans.RepetitionStatsExpr]] kernel (one char scan per doc)
-    * when the session has GraftExtensions, else from built-in HOFs
-    * (transform/slice gram multiset, aggregate-fold max run). Verdict: "short" below [[RepetitionMinGrams]] 2-grams
+    * [[graft.plans.RepetitionStatsExpr]] kernel (one char scan per doc).
+    * Verdict: "short" below [[RepetitionMinGrams]] 2-grams
     * (top2_frac ≥ 1/n2 makes the threshold meaningless on tiny docs —
     * Gopher gates these filters behind a min-word precondition), then
     * "drop" when top2_frac > [[RepetitionTau]] (boilerplate-dominated),
@@ -97,60 +97,21 @@ object TextOps {
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
       .otherwise(typedLit(Array.empty[String]))
 
-  /** Max multiplicity of any element in an array: sort, then one
-    * aggregate() pass tracking the current and best run length. Null-safe
-    * prev comparison so an initial sentinel can't alias a real gram. */
-  private[graft] def maxMultiplicity(arr: Column): Column = {
-    val init = struct(
-      lit(null).cast("string").as("prev"), lit(0L).as("run"), lit(0L).as("best"))
-    aggregate(
-      array_sort(arr), init,
-      (a, x) => {
-        val run = when(x.eqNullSafe(a.getField("prev")), a.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(a.getField("best"), run).as("best"))
-      },
-      a => a.getField("best"))
-  }
+  /** Raw (n2, d2, top2, n3, d3) repetition counters per document from the
+    * codegen'd graft_repetition_stats kernel (one char scan + hash counts
+    * per doc). Shared by [[repetition]] and [[gopherRules]]. */
+  private[operators] def repetitionCounters(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      call_function("graft_repetition_stats", col("text")).as("s"))
+      .select(col("doc_id"), col("s.n2").as("n2"), col("s.d2").as("d2"),
+        col("s.top2").as("top2"), col("s.n3").as("n3"), col("s.d3").as("d3"))
 
   /** The repetition transform on ANY frame with (doc_id, text) — pure
     * stateless column expressions, so the identical function runs over a
     * bounded table or a readStream frame (the [[quality]] contract).
     * Documents with fewer than 2 tokens have no 2-grams and are dropped. */
-  /** Raw (n2, d2, top2, n3, d3) repetition counters per document — via the
-    * codegen'd graft_repetition_stats kernel when the session has
-    * GraftExtensions (one char scan + hash counts per doc), the HOF form
-    * otherwise (the Contamination.shingled fallback contract); both
-    * produce identical longs (bit-equality asserted in VectorExprSpec).
-    * Shared by [[repetition]] and [[gopherRules]]. */
-  private[operators] def repetitionCounters(docs: DataFrame): DataFrame =
-    if (docs.sparkSession.catalog.functionExists("graft_repetition_stats"))
-      docs.select(col("doc_id"),
-        call_function("graft_repetition_stats", col("text")).as("s"))
-        .select(col("doc_id"), col("s.n2").as("n2"), col("s.d2").as("d2"),
-          col("s.top2").as("top2"), col("s.n3").as("n3"), col("s.d3").as("d3"))
-    else
-      // materialize toks as its own projection: a lambda body
-      // re-evaluates non-attribute subexpressions PER ELEMENT, so passing
-      // split(text) straight into gramsOfToks' transform() would re-split
-      // the whole document for every gram position — O(n²) splits per doc
-      // (measured ~10× on this key at sf0.1)
-      docs
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .select(col("doc_id"),
-          gramsOfToks(col("toks"), 2).as("g2"),
-          gramsOfToks(col("toks"), 3).as("g3"))
-        .select(col("doc_id"),
-          size(col("g2")).cast("long").as("n2"),
-          size(array_distinct(col("g2"))).cast("long").as("d2"),
-          maxMultiplicity(col("g2")).as("top2"),
-          size(col("g3")).cast("long").as("n3"),
-          size(array_distinct(col("g3"))).cast("long").as("d3"))
-
-  def repetition(docs: DataFrame): DataFrame = {
-    val counters = repetitionCounters(docs)
-    counters
+  def repetition(docs: DataFrame): DataFrame =
+    repetitionCounters(docs)
       .filter(col("n2") > 0)
       .select(col("doc_id"),
         ((col("n2") - col("d2")).cast("double") / col("n2")).as("dup2_frac"),
@@ -160,7 +121,6 @@ object TextOps {
         when(col("n2") < RepetitionMinGrams, "short")
           .when(col("top2").cast("double") / col("n2") > RepetitionTau, "drop")
           .otherwise("keep").as("verdict"))
-  }
 
   def docRepetition(spark: SparkSession, dir: String): DataFrame =
     repetition(Tables.documents(spark, dir)).orderBy("doc_id")
@@ -283,34 +243,10 @@ object TextOps {
   val WinnowK = 7
   val WinnowW = 4
 
-  /** Built-in-function formulation of [[graft.plans.WinnowExpr]]: the same
-    * polynomial rolling hash (base 257 mod 2³¹−1), window minima,
-    * distinct+sort — via `transform`/`aggregate`/`slice`. Interpreted
-    * lambdas re-substring the text per (position × offset): correct
-    * everywhere (no extension registration needed), ~k× the work of the
-    * kernel. Bit-equality with the kernel is asserted in VectorExprSpec. */
-  def hofWinnow(text: Column, k: Int = WinnowK, w: Int = WinnowW): Column = {
-    val hs = transform(
-      sequence(lit(0), length(text) - k),
-      i => aggregate(sequence(lit(1), lit(k)), lit(0L),
-        (h, j) => (h * lit(graft.plans.WinnowExpr.Base)
-          + ascii(substr(text, i + j, lit(1)))) % lit(graft.plans.WinnowExpr.Mod)))
-    val mins = transform(
-      sequence(lit(0), greatest(lit(0), size(hs) - w)),
-      i => array_min(slice(hs, i + lit(1), lit(w))))
-    // NULL text must stay NULL to match the kernel (a bare when() treats a
-    // NULL condition as false and would fall through to the empty array).
-    when(text.isNull, lit(null).cast("array<bigint>"))
-      .when(length(text) >= k, array_sort(array_distinct(mins)))
-      .otherwise(typedLit(Array.empty[Long]))
-  }
-
-  /** Kernel when the session has GraftExtensions, HOF form otherwise
-    * (same catalog-fallback contract as Similarity.simhashFor). */
-  private def winnowFor(df: DataFrame, text: Column, k: Int, w: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_winnow"))
-      call_function("graft_winnow", text, lit(k), lit(w))
-    else hofWinnow(text, k, w)
+  /** Winnowing fingerprints of `text` via the codegen'd
+    * [[graft.plans.WinnowExpr]] kernel. */
+  private def winnow(text: Column, k: Int, w: Int): Column =
+    call_function("graft_winnow", text, lit(k), lit(w))
 
   /** Declared key (`doc_fingerprint`): winnowing fingerprints per document
     * — the rolling-hash member of the dedup family (exact bag-of-words
@@ -327,7 +263,7 @@ object TextOps {
     val docs = Tables.documents(spark, dir)
     docs
       .select(col("doc_id"),
-        winnowFor(docs, col("text"), WinnowK, WinnowW).as("fps"))
+        winnow(col("text"), WinnowK, WinnowW).as("fps"))
       .select(
         col("doc_id"),
         size(col("fps")).as("n_fp"),
@@ -367,7 +303,7 @@ object TextOps {
     // sides of the fp self-join) — without the persist the kernel runs ~3×
     // per doc (the MinHashDedup shingle-frame discipline).
     val post = docs
-      .select(col("doc_id"), winnowFor(docs, col("text"), k, w).as("fps"))
+      .select(col("doc_id"), winnow(col("text"), k, w).as("fps"))
       .select(col("doc_id"), explode(col("fps")).as("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val kept = post.join(
@@ -413,52 +349,23 @@ object TextOps {
     * Exactness contract: per-character-class terms `n_c·log10(n_c)` are
     * quantized to integer micro units ([[graft.operators.LmScore.Micro]])
     * before summation — order-independent integer arithmetic, so the
-    * oracle's per-group row sum is bit-equal to this one-pass
-    * run-length fold. The final `(log10(n) − Σ/n)/log10(2)` is a chain
+    * oracle's per-group row sum is bit-equal to the kernel's per-document
+    * sum. The final `(log10(n) − Σ/n)/log10(2)` is a chain
     * of single IEEE ops on identical doubles.
     *
-    * Scale shape: a pure narrow fold per document — sort the char array,
-    * one `aggregate` pass accumulating run terms (the [[maxMultiplicity]]
-    * pattern) — no explode, no shuffle, embarrassingly parallel. The
+    * Scale shape: one narrow projection per document through the
+    * codegen'd [[graft.plans.CharStatsExpr]] kernel (one code-point scan +
+    * histogram) — no explode, no shuffle, embarrassingly parallel. The
     * oracle's unnest+GROUP BY form is the harness, not the plan. */
   def charEntropyBits(text: Column): Column =
-    charEntropyBitsOfChars(sortedChars(text))
+    entropyBitsOf(call_function("graft_char_stats", text))
 
-  /** Sorted non-space char array — split-by-empty-pattern explodes to
-    * single chars in ONE pass; the transform(sequence, substring(i, 1))
-    * spelling is O(position) per char on UTF8String (byte-offset walk),
-    * O(n²) per document (measured 14.7 s → 1.5 s on this key at sf0.1).
-    * Callers that consume it more than once should materialize it in its
-    * own projection (the langId toks discipline). */
-  private[graft] def sortedChars(text: Column): Column =
-    array_sort(filter(split(text, ""), c => c =!= " "))
-
-  /** The entropy fold over an ALREADY-SORTED char array column. */
-  def charEntropyBitsOfChars(chars: Column): Column = {
-    // run = 0 at the first element (initial state): log10(0) is -Inf and
-    // 0·(-Inf) is NaN, which would null the whole accumulator — guard it
-    def term(run: Column): Column =
-      when(run > 0,
-        round(log10(run.cast("double")) * run * LmScore.Micro, 0).cast("long"))
-        .otherwise(lit(0L))
-    val init = struct(
-      lit(null).cast("string").as("prev"), lit(0L).as("run"), lit(0L).as("acc"))
-    val folded = aggregate(
-      chars, init,
-      (a, x) => {
-        val same = x.eqNullSafe(a.getField("prev"))
-        struct(
-          x.as("prev"),
-          when(same, a.getField("run") + 1L).otherwise(lit(1L)).as("run"),
-          when(same, a.getField("acc"))
-            .otherwise(a.getField("acc") + term(a.getField("run"))).as("acc"))
-      },
-      a => a.getField("acc") + term(a.getField("run")))
-    val n = size(chars)
+  /** Entropy in bits from a `graft_char_stats` struct (n, d, acc). */
+  private def entropyBitsOf(st: Column): Column =
     round(
-      (log10(n.cast("double")) - folded.cast("double") / LmScore.Micro / n)
+      (log10(st.getField("n").cast("double"))
+        - st.getField("acc").cast("double") / LmScore.Micro / st.getField("n"))
         / log10(lit(2.0)), 6)
-  }
 
   /** Declared key (`char_entropy`): per-document character entropy with
     * the char count, distinct-char count, and a coarse verdict band.
@@ -467,34 +374,17 @@ object TextOps {
     * the oracle's char-unnest CTE drops the doc entirely), so the filter
     * pins the two sides to the same row set. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    // the codegen'd graft_char_stats kernel when the session has
-    // GraftExtensions (one code-point scan + histogram per doc — no
-    // per-character array/sort/fold), the HOF form otherwise; both
-    // bit-equal (VectorExprSpec), so the oracle is shared. Kernel longs
-    // cast to int to keep the declared key's original output schema.
-    if (spark.catalog.functionExists("graft_char_stats"))
-      docs
-        .select(col("doc_id"),
-          call_function("graft_char_stats", col("text")).as("st"))
-        .filter(col("st.n") > 0)
-        .select(col("doc_id"),
-          col("st.n").cast("int").as("n_chars_ns"),
-          col("st.d").cast("int").as("n_distinct"),
-          round(
-            (log10(col("st.n").cast("double"))
-              - col("st.acc").cast("double") / LmScore.Micro / col("st.n"))
-              / log10(lit(2.0)), 6).as("entropy_bits"))
-        .orderBy("doc_id")
-    else
-      docs
-        .select(col("doc_id"), sortedChars(col("text")).as("cs"))
-        .filter(size(col("cs")) > 0)
-        .select(col("doc_id"),
-          size(col("cs")).as("n_chars_ns"),
-          size(array_distinct(col("cs"))).as("n_distinct"),
-          charEntropyBitsOfChars(col("cs")).as("entropy_bits"))
-        .orderBy("doc_id")
+    // kernel longs cast to int to keep the declared key's original
+    // output schema
+    Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        call_function("graft_char_stats", col("text")).as("st"))
+      .filter(col("st.n") > 0)
+      .select(col("doc_id"),
+        col("st.n").cast("int").as("n_chars_ns"),
+        col("st.d").cast("int").as("n_distinct"),
+        entropyBitsOf(col("st")).as("entropy_bits"))
+      .orderBy("doc_id")
   }
 
   // ------------------------------------------------------------- language ID

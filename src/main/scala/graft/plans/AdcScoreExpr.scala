@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * codes(mi)] — `graft_adc_score(codes, table, ks)` over an ARRAY<INT>
   * codes column and an ARRAY<DOUBLE> per-query lookup table.
   *
-  * Why a kernel: the built-in formulation ([[graft.operators.ProductQuant
-  * .adcScore]]'s `aggregate(zip_with(codes, sequence(...), ...))`)
+  * Why a kernel: the built-in formulation ([[graft.operators
+  * .KernelReference.hofAdcScore]]'s `aggregate(zip_with(codes, sequence(...), ...))`)
   * allocates a sequence and a zipped array per ROW and dispatches an
   * interpreted lambda per element — and this expression runs once per
   * (candidate × query) pair in the ADC shortlist stage, the highest-row-

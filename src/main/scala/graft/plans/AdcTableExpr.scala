@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * ARRAY<DOUBLE> of M·Ks partial inner products.
   *
   * Why a kernel (r22; the r21 verdict's #5): the built-in formulation
-  * ([[graft.operators.ProductQuant.adcTable]]'s
+  * ([[graft.operators.KernelReference.hofAdcTable]]'s
   * `flatten(transform(sequence, mi -> transform(sequence, k ->
   * aggregate(zip_with(slice(qv, …), cb[mi][k]), …))))`) is four nested
   * higher-order functions evaluated via interpreted lambda dispatch, with
@@ -34,8 +34,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *    `sequence`, only the inner `aggregate` sees the NULL slice).
   *
   * The codebook child must be a foldable ARRAY<ARRAY<ARRAY<DOUBLE>>>
-  * literal; it is flattened once per (deserialized) expression instance —
-  * the [[PqEncodeExpr]] / InSet compile-once discipline.
+  * literal, validated at analysis and flattened once per (deserialized)
+  * expression instance ([[Codebook]]) — the [[PqEncodeExpr]] / InSet
+  * compile-once discipline.
   */
 case class AdcTableExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -47,49 +48,16 @@ case class AdcTableExpr(left: Expression, right: Expression)
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _),
-            ArrayType(ArrayType(ArrayType(DoubleType, _), _), _)) =>
-        if (!right.foldable)
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires a foldable (literal) codebook")
-        else TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<DOUBLE>, ARRAY<ARRAY<ARRAY<DOUBLE>>>), " +
-          s"got ${a.simpleString} and ${b.simpleString}")
-    }
+    Codebook.checkInputs(prettyName, left, right)
 
-  /** (m, ks, dsub, flat row-major codebook) — built once per
-    * (deserialized) expression instance from the foldable child. */
-  @transient private lazy val cb: (Int, Int, Int, Array[Double]) = {
-    val outer = right.eval(null).asInstanceOf[ArrayData]
-    val m = outer.numElements()
-    val first = outer.getArray(0)
-    val ks = first.numElements()
-    val dsub = first.getArray(0).numElements()
-    val flat = new Array[Double](m * ks * dsub)
-    var mi = 0
-    while (mi < m) {
-      val cbm = outer.getArray(mi)
-      var k = 0
-      while (k < ks) {
-        val cw = cbm.getArray(k)
-        var j = 0
-        while (j < dsub) {
-          flat((mi * ks + k) * dsub + j) = cw.getDouble(j)
-          j += 1
-        }
-        k += 1
-      }
-      mi += 1
-    }
-    (m, ks, dsub, flat)
-  }
+  /** The flattened codebook — built once per (deserialized) expression
+    * instance from the foldable child. */
+  @transient private lazy val cb: Codebook = Codebook.of(right)
 
   /** Table loop; also the codegen entry point. Boxed entries so a NULL
     * (short/null-element subspace slice) survives into the array. */
   def tableFor(qv: ArrayData): ArrayData = {
-    val (m, ks, dsub, flat) = cb
+    val Codebook(m, ks, dsub, flat) = cb
     val n = if (qv == null) 0 else qv.numElements()
     val out = new Array[Any](m * ks)
     var mi = 0

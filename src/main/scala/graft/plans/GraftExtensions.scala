@@ -2,13 +2,16 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Engine extension point (SparkSessionExtensions): registers the native
   * expressions under SQL-callable names. Installed by
   * [[graft.Engine.session]] via `spark.sql.extensions`; after that
   * `SELECT graft_dot(a, b)` and `functions.call_function("graft_dot", …)`
-  * resolve to [[DotProductExpr]].
+  * resolve to [[DotProductExpr]]. The operators call these functions
+  * unconditionally: without the extensions a `call_function("graft_…")`
+  * fails at analysis with `UNRESOLVED_ROUTINE` naming the routine.
   *
   * This is tier (c) of the custom-operator preference order (SURVEY.md §4.2):
   * only the scalar expression needed codegen; no custom LogicalPlan/
@@ -16,87 +19,45 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProductExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash64"),
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "graft_minhash64"),
-      (children: Seq[Expression]) => MinHashSignatureExpr(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHashExpr].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => SimHashExpr(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_vec_simhash"),
-      new ExpressionInfo(classOf[VecSimHashExpr].getName, "graft_vec_simhash"),
-      (children: Seq[Expression]) => VecSimHashExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_token_ngrams"),
-      new ExpressionInfo(classOf[TokenNgramsExpr].getName, "graft_token_ngrams"),
-      (children: Seq[Expression]) => TokenNgramsExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStatsExpr].getName, "graft_repetition_stats"),
-      (children: Seq[Expression]) => RepetitionStatsExpr(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_char_stats"),
-      new ExpressionInfo(classOf[CharStatsExpr].getName, "graft_char_stats"),
-      (children: Seq[Expression]) => CharStatsExpr(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_unigram_score"),
-      new ExpressionInfo(classOf[UnigramScoreExpr].getName, "graft_unigram_score"),
-      (children: Seq[Expression]) =>
-        UnigramScoreExpr(children(0), children(1), children(2))))
+    for ((name, cls, build) <- GraftExtensions.Functions)
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
+  }
+}
+
+object GraftExtensions {
+
+  /** Every registered SQL function: (name, expression class, builder).
+    * Operators call these names directly — there is no interpreted
+    * fallback when the extensions are missing. */
+  val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProductExpr], c => DotProductExpr(c(0), c(1))),
+    ("graft_minhash64", classOf[MinHashSignatureExpr], c => MinHashSignatureExpr(c(0))),
+    ("graft_simhash64", classOf[SimHashExpr], c => SimHashExpr(c(0))),
+    ("graft_vec_simhash", classOf[VecSimHashExpr], c => VecSimHashExpr(c(0), c(1))),
+    ("graft_token_ngrams", classOf[TokenNgramsExpr], c => TokenNgramsExpr(c(0), c(1))),
+    ("graft_repetition_stats", classOf[RepetitionStatsExpr], c => RepetitionStatsExpr(c(0))),
+    ("graft_char_stats", classOf[CharStatsExpr], c => CharStatsExpr(c(0))),
+    ("graft_unigram_score", classOf[UnigramScoreExpr],
+      c => UnigramScoreExpr(c(0), c(1), c(2))),
     // Spark's runtime-filter bloom expressions (codegen'd, mergeable
     // sketch aggregate) are internal-only — InjectRuntimeFilter uses them
     // but no SQL name is registered. Exposing them lets queries build a
     // key-set bloom on a filtered dim side as a scalar subquery and prune
     // a fact scan with it BEFORE the join shuffle (see
     // operators.BloomJoin). Both take xxhash64(key) longs.
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-        case Seq(c, n) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-        case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hash_embed"),
-      new ExpressionInfo(classOf[HashEmbedExpr].getName, "graft_hash_embed"),
-      (children: Seq[Expression]) => HashEmbedExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_adc_score"),
-      new ExpressionInfo(classOf[AdcScoreExpr].getName, "graft_adc_score"),
-      (children: Seq[Expression]) =>
-        AdcScoreExpr(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_window_digests"),
-      new ExpressionInfo(classOf[WindowDigestsExpr].getName, "graft_window_digests"),
-      (children: Seq[Expression]) => WindowDigestsExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_adc_table"),
-      new ExpressionInfo(classOf[AdcTableExpr].getName, "graft_adc_table"),
-      (children: Seq[Expression]) => AdcTableExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncodeExpr].getName, "graft_pq_encode"),
-      (children: Seq[Expression]) => PqEncodeExpr(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowExpr].getName, "graft_winnow"),
-      (children: Seq[Expression]) => WinnowExpr(children(0), children(1), children(2))))
-    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
-  }
+    ("graft_bloom_agg", classOf[BloomFilterAggregate], {
+      case Seq(c) => new BloomFilterAggregate(c)
+      case Seq(c, n) => new BloomFilterAggregate(c, n)
+      case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
+    }),
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      c => BloomFilterMightContain(c(0), c(1))),
+    ("graft_hash_embed", classOf[HashEmbedExpr], c => HashEmbedExpr(c(0), c(1))),
+    ("graft_adc_score", classOf[AdcScoreExpr], c => AdcScoreExpr(c(0), c(1), c(2))),
+    ("graft_window_digests", classOf[WindowDigestsExpr], c => WindowDigestsExpr(c(0), c(1))),
+    ("graft_adc_table", classOf[AdcTableExpr], c => AdcTableExpr(c(0), c(1))),
+    ("graft_pq_encode", classOf[PqEncodeExpr], c => PqEncodeExpr(c(0), c(1))),
+    ("graft_winnow", classOf[WinnowExpr], c => WinnowExpr(c(0), c(1), c(2))))
 }

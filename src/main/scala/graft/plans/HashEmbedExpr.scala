@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * with sign from an independent hash bit (bit 32), which keeps the
   * inner products unbiased; the final vector is L2-normalized so cosine
   * is directly comparable across document lengths. xxhash64 with Spark's
-  * default seed 42 is used so the HOF fallback — built entirely from
+  * default seed 42 is used so the HOF reference
+  * ([[graft.operators.KernelReference.hofEmbed]]) — built entirely from
   * `functions.xxhash64`/`transform`/`aggregate` — is bit-equal
-  * (asserted in TextEmbedSpec; the engine-wide kernel≡HOF contract).
+  * (asserted in TextEmbedSpec).
   *
   * Why a kernel: the HOF form touches all `dim` accumulator slots per
   * feature (`transform` rebuilds the array), an O(dim × features)
@@ -65,7 +66,7 @@ case class HashEmbedExpr(left: Expression, right: Expression)
     val s = if (f == null) UTF8String.EMPTY_UTF8 else f
     val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
       s.numBytes, 42L)
-    // pmod + sign bit — the exact arithmetic the HOF fallback spells out
+    // pmod + sign bit — the exact arithmetic the HOF reference spells out
     val b = ((h % dim) + dim) % dim
     val sign = if (((h >>> 32) & 1L) == 0L) 1.0 else -1.0
     acc(b.toInt) += sign

@@ -5,15 +5,15 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Codegen'd product-quantization encoder: per subspace, the
   * argmin-squared-L2 codeword index of the vector's slice against a
   * FOLDABLE codebook literal — `graft_pq_encode(v, codebooks)` returning
   * ARRAY<INT> of length M.
   *
-  * Why a kernel: the built-in formulation ([[graft.operators.ProductQuant
-  * .encode]]'s `transform(sequence, mi -> array_min(transform(sequence,
+  * Why a kernel: the built-in formulation ([[graft.operators
+  * .KernelReference.hofPqEncode]]'s `transform(sequence, mi -> array_min(transform(sequence,
   * k -> struct(aggregate(zip_with(...)), k))))`) is four nested
   * higher-order functions — evaluated via interpreted lambda dispatch
   * with an intermediate array allocation per (subspace × codeword), i.e.
@@ -38,8 +38,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *    an all-zero codes array, NOT NULL — spec-pinned).
   *
   * The codebook child must be a foldable ARRAY<ARRAY<ARRAY<DOUBLE>>>
-  * literal; it is flattened once per (deserialized) expression instance —
-  * the [[UnigramScoreExpr]] / InSet compile-once discipline. Codebooks
+  * literal, validated at analysis and flattened once per (deserialized)
+  * expression instance ([[Codebook]]) — the [[UnigramScoreExpr]] / InSet
+  * compile-once discipline. Codebooks
   * are driver-resident model state (M × Ks × dsub doubles, kilobytes),
   * shipped inside the serialized plan exactly like the HOF's `typedLit`.
   */
@@ -52,50 +53,17 @@ case class PqEncodeExpr(left: Expression, right: Expression)
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _),
-            ArrayType(ArrayType(ArrayType(DoubleType, _), _), _)) =>
-        if (!right.foldable)
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires a foldable (literal) codebook")
-        else TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<DOUBLE>, ARRAY<ARRAY<ARRAY<DOUBLE>>>), " +
-          s"got ${a.simpleString} and ${b.simpleString}")
-    }
+    Codebook.checkInputs(prettyName, left, right)
 
-  /** (m, ks, dsub, flat row-major codebook) — built once per executor
-    * from the foldable child. */
-  @transient private lazy val cb: (Int, Int, Int, Array[Double]) = {
-    val outer = right.eval(null).asInstanceOf[ArrayData]
-    val m = outer.numElements()
-    val first = outer.getArray(0)
-    val ks = first.numElements()
-    val dsub = first.getArray(0).numElements()
-    val flat = new Array[Double](m * ks * dsub)
-    var mi = 0
-    while (mi < m) {
-      val cbm = outer.getArray(mi)
-      var k = 0
-      while (k < ks) {
-        val cw = cbm.getArray(k)
-        var j = 0
-        while (j < dsub) {
-          flat((mi * ks + k) * dsub + j) = cw.getDouble(j)
-          j += 1
-        }
-        k += 1
-      }
-      mi += 1
-    }
-    (m, ks, dsub, flat)
-  }
+  /** The flattened codebook — built once per (deserialized) expression
+    * instance from the foldable child. */
+  @transient private lazy val cb: Codebook = Codebook.of(right)
 
   /** Encoding loop; also the codegen entry point (invoked through an
     * expression reference — the flattened codebook lives on this
     * instance). */
   def encodeVec(v: ArrayData): ArrayData = {
-    val (m, ks, dsub, flat) = cb
+    val Codebook(m, ks, dsub, flat) = cb
     val n = if (v == null) 0 else v.numElements()
     val codes = new Array[Int](m)
     var mi = 0

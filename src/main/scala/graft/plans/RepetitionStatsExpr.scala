@@ -81,7 +81,7 @@ object RepetitionStatsExpr {
     }
     ends(t) = len
 
-    // (total, distinct, maxMultiplicity) over the n-gram multiset
+    // (total, distinct, max multiplicity) over the n-gram multiset
     def stats(n: Int): (Long, Long, Long) = {
       val nGrams = nToks - n + 1
       if (nGrams <= 0) return (0L, 0L, 0L)

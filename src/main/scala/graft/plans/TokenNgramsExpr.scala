@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * for token boundaries and emits index-arithmetic substrings: no
   * per-position array slicing, no string building, no lambda dispatch.
   * The higher-order-function formulation
-  * ([[graft.operators.Contamination.tokenShinglesOfToks]]) evaluates an
+  * ([[graft.operators.KernelReference.tokenShinglesOfToks]]) evaluates an
   * interpreted `transform` whose body re-slices and re-joins per position
   * (~5 µs/shingle measured at sf0.1 — it was the contamination key's
   * dominant cost).

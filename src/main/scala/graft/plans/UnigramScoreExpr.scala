@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why a kernel: the built-in formulation
   * (`aggregate(toks, 0L, (s,t) -> s + coalesce(element_at(model,t), oov))`
-  * — [[graft.operators.LmScore.score]]) evaluates `element_at` against an
+  * — [[graft.operators.KernelReference.hofLmScore]]) evaluates `element_at` against an
   * `ArrayBasedMapData`, which is a LINEAR SCAN of the map — O(V) string
   * comparisons per token, so a production-sized vocabulary (30k+) makes
   * scoring O(tokens × V) and unusable at scale (measured: a 30k-entry

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * bit i (i < bits) is the sign of v · r_i, where hyperplane component
   * r_i[d] ∈ {+1, −1} is the parity of xxhash64(i, d) — the same
   * deterministic pseudo-random planes as the higher-order-function
-  * formulation in [[graft.operators.Similarity.hofSimhash]], which
+  * formulation in [[graft.operators.KernelReference.hofSimhash]], which
   * evaluates `bits` separate interpreted `aggregate(zip_with(...))` folds
   * (each re-walking the vector AND re-hashing every index). This kernel
   * hashes each index once and updates all bit projections in a single

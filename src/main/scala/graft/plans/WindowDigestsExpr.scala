@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ARRAY<STRUCT<pos: BIGINT, g: STRING>>.
   *
   * Why a kernel: the built-in formulation ([[graft.operators
-  * .SubstringDedup.windowDigests]]'s `transform(sequence(...), i ->
+  * .KernelReference.hofWindowDigests]]'s `transform(sequence(...), i ->
   * struct(i, md5(concat_ws(" ", slice(toks, i, L)))))`) allocates a
   * slice array + a concat buffer per WINDOW through interpreted lambda
   * dispatch — ~n_tok windows per document, the dominant expression of
@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * one loop that reuses a single byte buffer and digest instance per
   * thread.
   *
-  * Bit-equality with the HOF form (asserted in LlmOpsSpec): the joined
+  * Bit-equality with the HOF form (asserted in SubstringIncrementalSpec): the joined
   * window is the window's NON-NULL tokens separated by single spaces
   * (`concat_ws` semantics), digested as UTF-8 and hex-encoded lowercase
   * (`md5` semantics); a NULL toks array yields NULL. Callers filter

@@ -31,12 +31,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * k-gram exists); when fewer than w hashes exist, the single window is
   * the whole hash sequence. NULL text / k / w → NULL.
   *
-  * The built-in-function formulation ([[graft.operators.TextOps.hofWinnow]])
-  * evaluates the same chain through interpreted `transform`/`aggregate`
-  * lambdas re-substringing the text per (position × offset); this kernel
+  * The built-in-function formulation
+  * ([[graft.operators.KernelReference.hofWinnow]]) evaluates the same
+  * chain through interpreted `transform`/`aggregate` lambdas
+  * re-substringing the text per (position × offset); this kernel
   * walks the code-point array once per position in generated Java.
   * Registered as SQL function `graft_winnow(text, k, w)`; bit-equality
-  * with the HOF form asserted in VectorExprSpec.
+  * with the HOF form and a plain-Scala reference
+  * ([[graft.operators.KernelReference.winnowRef]]) asserted in
+  * VectorExprSpec.
   */
 case class WinnowExpr(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
@@ -94,7 +97,7 @@ object WinnowExpr {
     * index is pushed and popped at most once). The rolling recurrence is
     * algebraically the same polynomial as the direct k-term chain, so the
     * output is bit-identical to the unrolled form the DuckDB oracle and
-    * [[graft.operators.TextOps.hofWinnow]] compute.
+    * [[graft.operators.KernelReference.hofWinnow]] compute.
     */
   def winnow(s: String, k: Int, w: Int): GenericArrayData = {
     if (k < 1 || k > 1024 || w < 1 || w > 1024)

@@ -43,7 +43,7 @@ class LmScoreSpec extends SparkSpec {
     val m = modelRow.collect()(0)
     val model = m.getAs[Map[String, Long]]("model")
     val oov = m.getAs[Long]("oov")
-    val got = LmScore.score(
+    val got = KernelReference.hofLmScore(
       Seq((10L, "a b zzz")).toDF("doc_id", "text"), modelRow).collect()(0)
     val wantSum = model("a") + model("b") + oov
     assert(got.getAs[Long]("n_tok") === 3L)
@@ -67,7 +67,7 @@ class LmScoreSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val viaKernel = LmScore.scoreKernel(docs, m, oov)
       .select("doc_id", "n_tok", "lp_mean")
-    val viaFold = LmScore.score(docs, modelRow)
+    val viaFold = KernelReference.hofLmScore(docs, modelRow)
       .select("doc_id", "n_tok", "lp_mean")
     assert(viaKernel.exceptAll(viaFold).count() === 0)
     assert(viaFold.exceptAll(viaKernel).count() === 0)

@@ -346,9 +346,9 @@ class ProductQuantSpec extends SparkSpec {
     val emb = normEmb
     val cbs = ProductQuant.trainCodebooks(spark, emb)
     // real corpus: identical codes row for row
-    val k = ProductQuant.encodeWith(emb, cbs, useKernel = true)
+    val k = ProductQuant.encode(emb, cbs)
       .select("vec_id", "codes")
-    val h = ProductQuant.encodeWith(emb, cbs, useKernel = false)
+    val h = emb.withColumn("codes", KernelReference.hofPqEncode(col("v"), cbs))
       .select("vec_id", "codes")
     assert(k.exceptAll(h).count() === 0)
     assert(h.exceptAll(k).count() === 0)
@@ -364,10 +364,10 @@ class ProductQuantSpec extends SparkSpec {
       (4L, None))                                        // null vector
       .toDF("vec_id", "v")
       .select(col("vec_id"), col("v").cast("array<double>").as("v"))
-    val ek = ProductQuant.encodeWith(edge, cbs, useKernel = true)
+    val ek = ProductQuant.encode(edge, cbs)
       .select("vec_id", "codes").collect().map(r => (r.getLong(0), r.get(1))).toMap
-    val eh = ProductQuant.encodeWith(edge, cbs, useKernel = false)
-      .select("vec_id", "codes").collect().map(r => (r.getLong(0), r.get(1))).toMap
+    val eh = edge.select(col("vec_id"), KernelReference.hofPqEncode(col("v"), cbs).as("codes"))
+      .collect().map(r => (r.getLong(0), r.get(1))).toMap
     Seq(1L, 2L, 3L, 4L).foreach { id => assert(ek(id) === eh(id), s"vec $id") }
   }
 
@@ -381,11 +381,9 @@ class ProductQuantSpec extends SparkSpec {
     val coded = ProductQuant.encode(emb, cbs).select("vec_id", "codes")
       .crossJoin(broadcast(q))
     val k = coded.select(col("vec_id"),
-      ProductQuant.adcScoreWith(col("codes"), col("tbl"), ProductQuant.Ks,
-        useKernel = true).as("s"))
+      ProductQuant.adcScore(col("codes"), col("tbl"), ProductQuant.Ks).as("s"))
     val h = coded.select(col("vec_id"),
-      ProductQuant.adcScoreWith(col("codes"), col("tbl"), ProductQuant.Ks,
-        useKernel = false).as("s"))
+      KernelReference.hofAdcScore(col("codes"), col("tbl"), ProductQuant.Ks).as("s"))
     assert(k.exceptAll(h).count() === 0)
     assert(h.exceptAll(k).count() === 0)
     // NULL codes NULL-poison the fold on both formulations (an OOB
@@ -394,12 +392,12 @@ class ProductQuantSpec extends SparkSpec {
     // would raise on it; the kernel's null there is defensive only)
     val edge = Seq((2L, Option.empty[Seq[Int]], Seq(0.5, 1.5)))
       .toDF("vec_id", "codes", "tbl")
-    Seq(true, false).foreach { uk =>
-      val r = edge.select(col("vec_id"),
-        ProductQuant.adcScoreWith(col("codes"), col("tbl"), ProductQuant.Ks,
-          useKernel = uk).as("s")).collect()
-      assert(r.forall(_.isNullAt(1)), s"useKernel=$uk")
-    }
+    Seq("kernel" -> ProductQuant.adcScore(col("codes"), col("tbl"), ProductQuant.Ks),
+        "reference" -> KernelReference.hofAdcScore(col("codes"), col("tbl"), ProductQuant.Ks))
+      .foreach { case (arm, score) =>
+        val r = edge.select(col("vec_id"), score.as("s")).collect()
+        assert(r.forall(_.isNullAt(1)), arm)
+      }
   }
 
   test("adc table kernel ≡ HOF fold, bit-equal incl. short/null-element vectors") {
@@ -409,9 +407,9 @@ class ProductQuantSpec extends SparkSpec {
     val cbs = ProductQuant.trainCodebooks(spark, emb)
     // real corpus: identical M·Ks table row for row
     val k = emb.select(col("vec_id"),
-      ProductQuant.adcTableWith(col("v"), cbs, useKernel = true).as("tbl"))
+      ProductQuant.adcTable(col("v"), cbs).as("tbl"))
     val h = emb.select(col("vec_id"),
-      ProductQuant.adcTableWith(col("v"), cbs, useKernel = false).as("tbl"))
+      KernelReference.hofAdcTable(col("v"), cbs).as("tbl"))
     assert(k.exceptAll(h).count() === 0)
     assert(h.exceptAll(k).count() === 0)
     // edge shapes the HOF defines implicitly: a short vector NULLs the
@@ -428,12 +426,39 @@ class ProductQuantSpec extends SparkSpec {
       .toDF("vec_id", "v")
       .select(col("vec_id"), col("v").cast("array<double>").as("v"))
     val ek = edge.select(col("vec_id"),
-        ProductQuant.adcTableWith(col("v"), cbs, useKernel = true).as("tbl"))
+        ProductQuant.adcTable(col("v"), cbs).as("tbl"))
       .collect().map(r => (r.getLong(0), r.get(1))).toMap
     val eh = edge.select(col("vec_id"),
-        ProductQuant.adcTableWith(col("v"), cbs, useKernel = false).as("tbl"))
+        KernelReference.hofAdcTable(col("v"), cbs).as("tbl"))
       .collect().map(r => (r.getLong(0), r.get(1))).toMap
     Seq(1L, 2L, 3L, 4L).foreach { id => assert(ek(id) === eh(id), s"vec $id") }
+  }
+
+  test("pq_encode and adc_table reject malformed codebooks at analysis, by name") {
+    val spark0 = spark
+    import spark0.implicits._
+    val v = Seq(Tuple1(Seq(1.0, 2.0, 3.0, 4.0))).toDF("v")
+    val cases = Seq(
+      "CAST(NULL AS ARRAY<ARRAY<ARRAY<DOUBLE>>>)" -> "codebook is NULL",
+      "CAST(array() AS ARRAY<ARRAY<ARRAY<DOUBLE>>>)" -> "no subspaces",
+      "array(CAST(array() AS ARRAY<ARRAY<DOUBLE>>))" -> "subspace 0 has no codewords",
+      "array(array(CAST(array() AS ARRAY<DOUBLE>)))" -> "codewords are empty",
+      "array(array(array(1d, 2d), array(3d, 4d)), array(array(1d, 2d)))" ->
+        "subspace 1 has 1 codewords",
+      "array(array(array(1d, 2d), array(3d)))" -> "codeword 1 has 1 entries",
+      "array(array(array(1d, 2d)), CAST(NULL AS ARRAY<ARRAY<DOUBLE>>))" -> "subspace 1 is NULL",
+      "array(array(array(1d, 2d), CAST(NULL AS ARRAY<DOUBLE>)))" -> "codeword 1 is NULL",
+      "array(array(array(1d, CAST(NULL AS DOUBLE))))" -> "entry 1 is NULL")
+    for (fn <- Seq("graft_pq_encode", "graft_adc_table"); (cb, why) <- cases) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        v.selectExpr(s"$fn(v, $cb)"))
+      assert(e.getMessage.contains(fn) && e.getMessage.contains(why),
+        s"$fn with $cb: ${e.getMessage}")
+    }
+    // a well-formed 2 × 2 × 2 codebook still analyzes and runs
+    val ok = "array(array(array(1d, 2d), array(3d, 4d)), array(array(7d, 8d), array(3d, 4d)))"
+    val r = v.selectExpr(s"graft_pq_encode(v, $ok)", s"graft_adc_table(v, $ok)").head()
+    assert(r.getSeq[Int](0) === Seq(0, 1) && r.getSeq[Double](1) === Seq(5.0, 11.0, 53.0, 25.0))
   }
 
   test("ivfpq_append declared key: appended index recall-green, repeat-call served") {

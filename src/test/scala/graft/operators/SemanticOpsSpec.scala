@@ -43,7 +43,7 @@ class SemanticOpsSpec extends SparkSpec {
     Similarity.writeIvfIndex(spark, dir, base, c = 2, lloydIters = 0)
     val (assigned, _) = Similarity.readIvfIndex(spark, dir)
     val withNrm = assigned.withColumn("nrm",
-      sqrt(Similarity.hofDot(col("v"), col("v"))))
+      sqrt(KernelReference.hofDot(col("v"), col("v"))))
       .persist()
     val r = SemDedup.pruneAssigned(withNrm).collect()
       .map(x => x.getLong(0) -> x.getBoolean(3)).toMap
@@ -137,10 +137,16 @@ class SemanticOpsSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf0001).select("doc_id", "lang", "text")
     val (model, oov) = Dsir.trainWeights(
       docs.select((col("lang") === "en").as("is_target"), col("text")))
-    val k = Dsir.scoreWith(docs, model, oov, useKernel = true)
+    val k = Dsir.score(docs, model, oov)
       .select("doc_id", "n_feat", "lw_mean", "selected")
-    val h = Dsir.scoreWith(docs, model, oov, useKernel = false)
-      .select("doc_id", "n_feat", "lw_mean", "selected")
+    // the same hashed features and derived columns, summed by the HOF fold
+    val h = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), Dsir.bucketsOfToks(col("toks")).as("feats"))
+      .select(col("doc_id"), size(col("feats")).cast("long").as("n_feat"),
+        KernelReference.hofUnigramScore(col("feats"), model, oov).as("lw_sum"))
+      .select(col("doc_id"), col("n_feat"),
+        round(col("lw_sum").cast("double") / LmScore.Micro / col("n_feat"), 6).as("lw_mean"),
+        (col("lw_sum") > 0).as("selected"))
     assert(k.exceptAll(h).isEmpty && h.exceptAll(k).isEmpty,
       "the two scoring formulations must be row-for-row identical")
   }

@@ -19,10 +19,13 @@ class SubstringIncrementalSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val docs = graft.Tables.documents(spark, sf0001).select("doc_id", "text")
-    val k = SubstringDedup.windowDigestsWith(docs, SubstringDedup.SpanL,
-      Nil, useKernel = true)
-    val h = SubstringDedup.windowDigestsWith(docs, SubstringDedup.SpanL,
-      Nil, useKernel = false)
+    val k = SubstringDedup.windowDigests(docs, SubstringDedup.SpanL)
+    val h = docs
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .filter(size(col("toks")) >= SubstringDedup.SpanL)
+      .select(col("doc_id"), explode(KernelReference.hofWindowDigests(
+        col("toks"), SubstringDedup.SpanL)).as("pg"))
+      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
     assert(k.exceptAll(h).count() === 0)
     assert(h.exceptAll(k).count() === 0)
     // concat_ws skips NULL tokens entirely (single separator) — pin the
@@ -37,11 +40,7 @@ class SubstringIncrementalSpec extends SparkSpec {
       call_function("graft_window_digests", col("toks"),
         lit(SubstringDedup.SpanL)).as("w")).collect()
     val eh = edge.select(
-      transform(
-        sequence(lit(1), size(col("toks")) - (SubstringDedup.SpanL - 1)),
-        i => struct(i.cast("long").as("pos"),
-          md5(concat_ws(" ",
-            slice(col("toks"), i, lit(SubstringDedup.SpanL)))).as("g"))).as("w"))
+      KernelReference.hofWindowDigests(col("toks"), SubstringDedup.SpanL).as("w"))
       .collect()
     assert(ek.map(_.get(0)) === eh.map(_.get(0)))
   }

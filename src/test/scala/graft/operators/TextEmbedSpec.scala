@@ -3,8 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The text-embedding pathway: kernel≡HOF bit-equality (the engine-wide
-  * contract), fixture cosine margins around the verify threshold, the
+/** The text-embedding pathway: kernel≡HOF-reference bit-equality,
+  * fixture cosine margins around the verify threshold, the
   * planted-paraphrase verdicts, and the persisted ANN serving top-1. */
 class TextEmbedSpec extends SparkSpec {
 
@@ -16,9 +16,11 @@ class TextEmbedSpec extends SparkSpec {
       (3L, "repeat repeat repeat repeat"),
       (4L, (1 to 200).map(i => s"w$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val k = TextEmbed.embedWith(docs, "doc_id", 64, useKernel = true)
+    val k = TextEmbed.embedText(docs, "doc_id", 64)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val h = TextEmbed.embedWith(docs, "doc_id", 64, useKernel = false)
+    // toks materializes in its own projection (the Dsir lambda re-split lesson)
+    val h = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), KernelReference.hofEmbed(col("toks"), 64).as("v"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(k.keySet === h.keySet)
     k.foreach { case (id, kv) =>
@@ -40,14 +42,14 @@ class TextEmbedSpec extends SparkSpec {
       .join(emb.select(col("doc_id"), col("v").as("v_t")), Seq("doc_id"))
       .join(emb.select(col("doc_id").as("twin_of"), col("v").as("v_b")),
         Seq("twin_of"))
-      .select(Similarity.cosineFor(emb, col("v_t"), col("v_b")).as("c"))
+      .select(Similarity.cosine(col("v_t"), col("v_b")).as("c"))
     val twinMin = pairs.agg(min("c")).head().getDouble(0)
     // distinct-base cosines: all base pairs (400² /2 — fine at spec scale)
     val bases = emb.join(fix.filter(col("kind") === "base").select("doc_id"),
       Seq("doc_id"))
     val distinctMax = bases.as("a").join(bases.as("b"),
         col("a.doc_id") < col("b.doc_id"))
-      .select(Similarity.cosineFor(emb, col("a.v"), col("b.v")).as("c"))
+      .select(Similarity.cosine(col("a.v"), col("b.v")).as("c"))
       .agg(max("c")).head().getDouble(0)
     info(f"twin min cosine $twinMin%.4f, distinct max cosine $distinctMax%.4f, " +
       f"threshold ${TextEmbed.CosThreshold}")

@@ -1,13 +1,25 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{KernelReference, Similarity}
 import org.apache.spark.sql.functions._
 
-/** Native codegen'd graft_dot (DotProductExpr) — registration via
-  * SparkSessionExtensions, SQL + call_function resolution, bit-exact
-  * equality with the HOF formulation, and null semantics. */
+/** The native codegen'd kernels — registration via SparkSessionExtensions,
+  * SQL + call_function resolution, bit-exact equality with the reference
+  * formulations in [[graft.operators.KernelReference]], and null
+  * semantics. */
 class VectorExprSpec extends SparkSpec {
+
+  test("GraftExtensions registers all 16 graft_* functions on the engine session") {
+    // operators call these names with no fallback, so each must resolve
+    val names = Seq("graft_dot", "graft_minhash64", "graft_simhash64",
+      "graft_vec_simhash", "graft_token_ngrams", "graft_repetition_stats",
+      "graft_char_stats", "graft_unigram_score", "graft_bloom_agg",
+      "graft_might_contain", "graft_hash_embed", "graft_adc_score",
+      "graft_window_digests", "graft_adc_table", "graft_pq_encode", "graft_winnow")
+    assert(GraftExtensions.Functions.map(_._1).sorted === names.sorted)
+    for (n <- names) assert(spark.catalog.functionExists(n), s"$n must resolve")
+  }
 
   test("graft_dot resolves via SQL and computes the dot product") {
     val r = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
@@ -52,7 +64,7 @@ class VectorExprSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(10)
-    val df = emb.withColumn("d", Similarity.hofDot(col("v"), col("v")))
+    val df = emb.withColumn("d", KernelReference.hofDot(col("v"), col("v")))
     assert(df.queryExecution.optimizedPlan.toString.contains("graft_dot"),
       "aggregate(zip_with(a,b,(x,y)->x*y),0,(s,v)->s+v) must rewrite to DotProductExpr")
     // swapped-operand variant must NOT match the rewrite
@@ -82,7 +94,7 @@ class VectorExprSpec extends SparkSpec {
       .withColumn("th", transform(split(col("text"), " "), t => xxhash64(t)))
     val diff = docs
       .withColumn("sig_native", call_function("graft_simhash64", col("th")))
-      .withColumn("sig_builtin", graft.operators.SimHashDedup.simhashOfHashes(col("th")))
+      .withColumn("sig_builtin", KernelReference.simhashOfHashes(col("th")))
       .filter(col("sig_native") =!= col("sig_builtin"))
       .count()
     assert(diff === 0L)
@@ -94,7 +106,7 @@ class VectorExprSpec extends SparkSpec {
     for (bits <- Seq(4, 16)) {
       val diff = emb
         .withColumn("sig_native", call_function("graft_vec_simhash", col("v"), lit(bits)))
-        .withColumn("sig_hof", Similarity.hofSimhash(col("v"), bits))
+        .withColumn("sig_hof", KernelReference.hofSimhash(col("v"), bits))
         .filter(col("sig_native") =!= col("sig_hof"))
         .count()
       assert(diff === 0L, s"bits=$bits")
@@ -168,27 +180,58 @@ class VectorExprSpec extends SparkSpec {
     assert(e.getMessage.contains("1..1024"))
   }
 
-  test("graft_winnow kernel is bit-identical to the HOF formulation on real docs") {
+  /** Docs whose `graft_winnow(text, k, w)` differs from the plain-Scala
+    * reference, as (doc_id, kernel, reference). */
+  private def winnowMismatches(docs: org.apache.spark.sql.DataFrame, k: Int, w: Int) =
+    docs.select(col("doc_id"), col("text"),
+        call_function("graft_winnow", col("text"), lit(k), lit(w)).as("native"))
+      .collect().toSeq
+      .map(r => (r.getLong(0), Option(r.getSeq[Long](2)),
+        Option(KernelReference.winnowRef(r.getString(1), k, w))))
+      .filter { case (_, native, ref) => native != ref }
+
+  test("graft_winnow kernel matches the plain-Scala reference on real docs") {
+    // every sf0.001 doc at the declared k=7/w=4
     val docs = graft.Tables.documents(spark, sf0001).select(col("doc_id"), col("text"))
-    val diff = docs
-      .withColumn("native", call_function("graft_winnow", col("text"), lit(7), lit(4)))
-      .withColumn("hof", graft.operators.TextOps.hofWinnow(col("text")))
-      .filter(col("native") =!= col("hof"))
-      .count()
-    assert(diff === 0L)
+    val bad = winnowMismatches(docs, 7, 4)
+    assert(bad.isEmpty, bad.take(3).mkString("; "))
   }
 
-  test("graft_winnow matches HOF at large k/w (rolling hash + deque path)") {
+  test("graft_winnow matches plain-Scala reference at large k/w (deque path)") {
     // k=50/w=100 forces the rolling update and multi-evict deque turns that
     // the declared k=7/w=4 barely exercises
     val docs = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text")).limit(50)
-    val diff = docs
-      .withColumn("native", call_function("graft_winnow", col("text"), lit(50), lit(100)))
-      .withColumn("hof", graft.operators.TextOps.hofWinnow(col("text"), 50, 100))
-      .filter(col("native") =!= col("hof"))
-      .count()
-    assert(diff === 0L)
+    val bad = winnowMismatches(docs, 50, 100)
+    assert(bad.isEmpty, bad.take(3).mkString("; "))
+  }
+
+  test("graft_winnow ≡ hofWinnow ≡ plain-Scala reference on crafted edge inputs") {
+    import spark.implicits._
+    val texts = Seq(
+      None,                                      // NULL
+      Some(""), Some("abc"),                     // shorter than k
+      Some("abcdefg"),                           // exactly k = 7
+      Some("aaaaaaaaaaaa"), Some("abababababab"), // repeated characters
+      Some("abcdefghij"),
+      Some("ünïcödé tëxt ünïcödé"),              // non-ASCII BMP
+      Some("日本語のテキストです日本語"),
+      Some("😀😁😂😃 surrogate pairs 😀😁😂😃😄"))    // supplementary code points
+    val df = texts.toDF("text")
+    for ((k, w) <- Seq((7, 4), (3, 2), (1, 1))) {
+      val rows = df.select(col("text"),
+          call_function("graft_winnow", col("text"), lit(k), lit(w)).as("native"),
+          KernelReference.hofWinnow(col("text"), k, w).as("hof"))
+        .collect()
+      assert(rows.length === texts.length)
+      for (r <- rows) {
+        val ref = Option(KernelReference.winnowRef(r.getString(0), k, w))
+        val native = Option(r.getSeq[Long](1))
+        val hof = Option(r.getSeq[Long](2))
+        assert(native === ref, s"kernel vs plain-Scala at k=$k w=$w on ${r.getString(0)}")
+        assert(hof === ref, s"hof vs plain-Scala at k=$k w=$w on ${r.getString(0)}")
+      }
+    }
   }
 
   test("hofWinnow NULL parity with the kernel") {
@@ -197,7 +240,7 @@ class VectorExprSpec extends SparkSpec {
     import spark.implicits._
     val r = Seq(Option.empty[String], Some("abc"), Some("abcdefghij")).toDF("text")
       .select(
-        graft.operators.TextOps.hofWinnow(col("text")).as("hof"),
+        KernelReference.hofWinnow(col("text")).as("hof"),
         call_function("graft_winnow", col("text"),
           lit(graft.operators.TextOps.WinnowK), lit(graft.operators.TextOps.WinnowW)).as("native"))
       .collect()
@@ -225,8 +268,7 @@ class VectorExprSpec extends SparkSpec {
     val r = texts.toDF("text")
       .select(
         call_function("graft_token_ngrams", col("text"), lit(3)).as("native"),
-        graft.operators.Contamination
-          .tokenShinglesOfToks(split(col("text"), " "), 3).as("hof"))
+        KernelReference.tokenShinglesOfToks(split(col("text"), " "), 3).as("hof"))
       .collect()
     for (row <- r) {
       assert(row.isNullAt(0) === row.isNullAt(1))
@@ -237,7 +279,7 @@ class VectorExprSpec extends SparkSpec {
 
   test("graft_char_stats is bit-identical to the HOF entropy fold") {
     import spark.implicits._
-    import graft.operators.{LmScore, TextOps}
+    import graft.operators.LmScore
     val rnd = new scala.util.Random(23)
     val crafted = Seq(
       "abc", "aaaa", "a b c", "  a  ", "mixed CASE text 123 !?",
@@ -253,11 +295,11 @@ class VectorExprSpec extends SparkSpec {
     val rows = (crafted ++ randoms).toDF("text")
       .select(col("text"),
         call_function("graft_char_stats", col("text")).as("st"),
-        TextOps.sortedChars(col("text")).as("cs"))
+        KernelReference.sortedChars(col("text")).as("cs"))
       .select(col("st"),
         size(col("cs")).cast("long").as("n"),
         size(array_distinct(col("cs"))).cast("long").as("d"),
-        TextOps.charEntropyBitsOfChars(col("cs")).as("hof_bits"),
+        KernelReference.charEntropyBitsOfChars(col("cs")).as("hof_bits"),
         when(col("st.n") > 0,
           round((log10(col("st.n").cast("double"))
             - col("st.acc").cast("double") / LmScore.Micro / col("st.n"))
@@ -297,7 +339,7 @@ class VectorExprSpec extends SparkSpec {
       .select(col("s"),
         size(col("g2")).cast("long").as("n2"),
         size(array_distinct(col("g2"))).cast("long").as("d2"),
-        TextOps.maxMultiplicity(col("g2")).as("top2"),
+        KernelReference.maxMultiplicity(col("g2")).as("top2"),
         size(col("g3")).cast("long").as("n3"),
         size(array_distinct(col("g3"))).cast("long").as("d3"))
       .collect()
