@@ -3,8 +3,9 @@ package graft
 /** Throwaway optimization-round harness: interleaved A/B of SESSION-LEVEL
   * SQL confs over declared keys, inside ONE JVM/SparkContext, so both
   * variants sample the same box-noise window (the Bench pass-major
-  * rationale applied to config adjudication — sequential Scratch runs of
-  * two configs confound the delta with era drift).
+  * rationale applied to config adjudication — sequential runs of two
+  * configs confound the delta with era drift). Each run is one
+  * [[Bench.timeKey]].
   *
   * Usage:
   *   sbt "runMain graft.AbConf <key>[,<key>...] <passes> \
@@ -28,22 +29,19 @@ object AbConf {
       confs.foreach { case (k, v) => s.conf.set(k, v) }
       name -> s
     }
-    // per-variant warmup
-    keys.foreach { k =>
-      sessions.foreach { case (_, s) =>
-        SparkEntry.queries(k)(s, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-          "/root/testdata/sf0.1")).write.format("noop").mode("overwrite").save()
-        s.catalog.clearCache()
-      }
-    }
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    def run(k: String, s: org.apache.spark.sql.SparkSession): Double = {
+      s.catalog.clearCache()
+      val (sec, err) = Bench.timeKey(s, sf, k)
+      err.foreach(e => sys.error(s"$k failed: $e"))
+      sec
+    }
+    // per-variant warmup
+    for (k <- keys; (_, s) <- sessions) run(k, s)
     val times = scala.collection.mutable.Map.empty[(String, String), Vector[Double]]
       .withDefaultValue(Vector.empty)
     for (p <- 1 to passes; k <- keys; (name, s) <- sessions) {
-      s.catalog.clearCache()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(k)(s, sf).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = run(k, s)
       times((k, name)) = times((k, name)) :+ sec
       println(f"""{"key":"$k","variant":"$name","pass":$p,"sec":$sec%.3f}""")
       Console.out.flush()

@@ -1,9 +1,11 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+
 /** Per-round benchmark: every declared query against SPARK_GRAFT_SF_DIR,
-  * timed with a noop-format write so the FULL plan executes (a count() lets
-  * Catalyst prune aggregate expressions and the final sort — VERDICT r1 #2).
-  * Failures are surfaced per-query in an "errors" map instead of silently
-  * reporting a plausible timing. One JSON line on stdout.
+  * each run timed by [[Bench.timeKey]]. Failures are surfaced per-query in
+  * an "errors" map instead of silently reporting a plausible timing. One
+  * JSON line on stdout.
   *
   * Timed passes are INTERLEAVED (pass-major: pass 1 over all keys, then
   * pass 2, …) rather than running a key's passes back-to-back. A transient
@@ -17,6 +19,10 @@ package graft
   * pass), so the per-key min is taken over runs from well-separated points
   * in time and survives the outlier. BenchScheduleSpec simulates exactly
   * this failure and asserts the immunity.
+  *
+  * Usage: sbt "runMain graft.Bench [key,key,...]" — with a key list, only
+  * those declared keys are warmed up and timed (isolated per-key timing,
+  * e.g. `SPARK_GRAFT_BENCH_RUNS=6 sbt "runMain graft.Bench skew_agg,set_ops"`).
   */
 object Bench {
 
@@ -35,6 +41,19 @@ object Bench {
     (s.head, s(s.length / 2))
   }
 
+  /** The one timed region: a declared key run to a noop-format write (the
+    * FULL plan executes; a count() lets Catalyst prune aggregate
+    * expressions and the final sort — VERDICT r1 #2). Returns the wall
+    * seconds and, if the query failed, its first error line — a failed
+    * key still reports its time to failure. */
+  def timeKey(spark: SparkSession, sfDir: String, key: String): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err =
+      try { SparkEntry.queries(key)(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(160)) }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Timed passes per key (default 3 → median-of-3). A constrained box can
@@ -47,31 +66,27 @@ object Bench {
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
       .filter(_ >= 1).getOrElse(3)
+    val names = args.headOption.map(_.split(",").toSeq.sorted)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
     val spark = Engine.session("graft-bench")
     // Untimed warmup pass: JIT + whole-stage-codegen compilation costs ~6-7 s
     // on the first query and would swamp the sub-second steady-state numbers
     // (measured in r2: first run 7.2 s, second 0.75 s for the same plan).
     // Recorded in BASELINE.md: r2+ numbers are steady-state.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    names.foreach(timeKey(spark, sfDir, _))
     // Drop anything the warmup pass persisted (e.g. Sessionize's summary
     // cache) so timed runs do their own full work.
     spark.catalog.clearCache()
     def jq(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val names = SparkEntry.queries.keys.toSeq.sorted
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     val errs = scala.collection.mutable.Map.empty[String, String]
     interleavedSchedule(names, runs).foreach { case (pass, name) =>
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        errs(name) = e.toString.takeWhile(_ != '\n').take(160) }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, err) = timeKey(spark, sfDir, name)
+      err.foreach(errs(name) = _)
       times(name) = times(name) :+ sec
       // One line per SLOT, emitted AS MEASURED and flushed: a run killed
       // mid-flight (BENCH_r09: rc 124 on an overloaded box) still leaves

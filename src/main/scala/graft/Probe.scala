@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Reproducible scale probes behind the BASELINE.md experiment log.
   *
@@ -10,227 +12,383 @@ import org.apache.spark.sql.functions._
   * time + an exact verdict (planted recall / zero violations). Run via
   *   sbt "runMain graft.Probe winnow 200000 2000"
   *   sbt "runMain graft.Probe cc 100000 10 1000"
+  * Trailing sizes may be omitted (each falls back to its row's default).
   * Generation is deterministic column arithmetic (no RNG) so every run
-  * probes the identical corpus.
+  * probes the identical corpus. ProbeSpec runs every row of [[Probes]]
+  * at its tiny sizes.
   */
 object Probe {
 
+  /** One probe: its command-line name, the positional sizes it runs at
+    * by default, the smallest sizes at which its verdicts still hold
+    * (ProbeSpec), and the probe itself. */
+  final case class ProbeRow(name: String, defaults: Seq[Int], tiny: Seq[Int],
+      run: (SparkSession, Seq[Int]) => Unit)
+
+  val Probes: Seq[ProbeRow] = Seq(
+    ProbeRow("winnow", Seq(200000, 2000), Seq(2000, 50),
+      (s, a) => winnowProbe(s, a(0), a(1))),
+    ProbeRow("cc", Seq(100000, 10, 1000), Seq(200, 10, 100),
+      (s, a) => ccProbe(s, a(0), a(1), a(2))),
+    ProbeRow("media", Seq(1000000), Seq(3000), (s, a) => mediaProbe(s, a(0))),
+    ProbeRow("streamdedup", Seq(200000), Seq(2000),
+      (s, a) => streamDedupProbe(s, a(0))),
+    ProbeRow("curation", Seq(1000000, 50000, 50000), Seq(3000, 200, 200),
+      (s, a) => curationProbe(s, a(0), a(1), a(2))),
+    ProbeRow("domainmix", Seq(10000000), Seq(20000),
+      (s, a) => domainMixProbe(s, a(0))),
+    ProbeRow("ivf", Seq(1000000, 1024), Seq(2000, 16),
+      (s, a) => ivfProbe(s, a(0), a(1))),
+    ProbeRow("streamcurate", Seq(200000), Seq(2000),
+      (s, a) => streamCurateProbe(s, a(0))),
+    ProbeRow("substr", Seq(200000, 2000), Seq(2000, 100),
+      (s, a) => substrProbe(s, a(0), a(1))),
+    ProbeRow("streameo", Seq(1000000, 200000, 20000, 20000), Seq(2000, 1000, 100, 100),
+      (s, a) => streamExactlyOnceProbe(s, a(0), a(1), a(2), a(3))),
+    ProbeRow("inccuration", Seq(1000000, 200000, 20000, 20000), Seq(2000, 1000, 100, 100),
+      (s, a) => incCurationProbe(s, a(0), a(1), a(2), a(3))),
+    ProbeRow("streamsubstr", Seq(200000, 200000, 10000), Seq(500, 500, 50),
+      (s, a) => streamSubstrProbe(s, a(0), a(1), a(2))),
+    ProbeRow("incsubstr", Seq(200000, 200000, 2000), Seq(500, 500, 50),
+      (s, a) => incSubstrProbe(s, a(0), a(1), a(2))),
+    ProbeRow("bm25batch", Seq(10000000, 3), Seq(5000, 1),
+      (s, a) => bm25ServeBatchProbe(s, a(0), a(1))),
+    ProbeRow("pq", Seq(1000000, 1024), Seq(4000, 16),
+      (s, a) => pqProbe(s, a(0), a(1))),
+    ProbeRow("ivfretrain", Seq(200000, 64, 50), Seq(2000, 8, 10),
+      (s, a) => ivfRetrainProbe(s, a(0), a(1), a(2))),
+    ProbeRow("incdedup", Seq(1000000, 1000000), Seq(2000, 2000),
+      (s, a) => incDedupProbe(s, a(0), a(1))),
+    ProbeRow("incbudget", Seq(1000000, 200000), Seq(24000, 4000),
+      (s, a) => incBudgetProbe(s, a(0), a(1))),
+    ProbeRow("textinc", Seq(200000, 200000, 10000), Seq(2000, 2000, 100),
+      (s, a) => textIncProbe(s, a(0), a(1), a(2))),
+    ProbeRow("textann", Seq(1000000, 10000), Seq(1024, 100),
+      (s, a) => textAnnProbe(s, a(0), a(1))),
+    ProbeRow("indexmaint", Seq(1000000, 100, 2000), Seq(10000, 3, 100),
+      (s, a) => indexMaintProbe(s, a(0), a(1), a(2))),
+    ProbeRow("incminhash", Seq(1000000, 1000000), Seq(2000, 2000),
+      (s, a) => incMinhashProbe(s, a(0), a(1))),
+    ProbeRow("lm", Seq(100000, 1000000), Seq(2000, 3000),
+      (s, a) => lmProbe(s, a(0), a(1))),
+    ProbeRow("semdedup", Seq(1000000, 8192, 10000), Seq(3000, 64, 100),
+      (s, a) => semdedupProbe(s, a(0), a(1), a(2))),
+    ProbeRow("linededup", Seq(1000000, 50000), Seq(2000, 200),
+      (s, a) => lineDedupProbe(s, a(0), a(1))),
+    ProbeRow("dsir", Seq(1000000), Seq(4000), (s, a) => dsirProbe(s, a(0))),
+    ProbeRow("bpe", Seq(1000000, 100000, 16), Seq(2000, 2000, 16),
+      (s, a) => bpeProbe(s, a(0), a(1), a(2))),
+    ProbeRow("rank", Seq(10000000), Seq(20000), (s, a) => rankProbe(s, a(0))),
+    ProbeRow("phash", Seq(200000, 10000), Seq(2000, 100),
+      (s, a) => phashProbe(s, a(0), a(1))),
+    ProbeRow("ivfpq", Seq(1000000, 1024), Seq(4000, 16),
+      (s, a) => ivfpqProbe(s, a(0), a(1))),
+    ProbeRow("streamlines", Seq(200000), Seq(2000),
+      (s, a) => streamLineDedupProbe(s, a(0))),
+    ProbeRow("jpegphash", Seq(100000, 5000), Seq(1000, 100),
+      (s, a) => jpegPhashProbe(s, a(0), a(1))),
+    ProbeRow("audiophash", Seq(100000, 5000), Seq(1000, 100),
+      (s, a) => audioPhashProbe(s, a(0), a(1))),
+    ProbeRow("audioembed", Seq(100000, 5000), Seq(1000, 100),
+      (s, a) => audioEmbedProbe(s, a(0), a(1))),
+    ProbeRow("videophash", Seq(20000, 1000), Seq(300, 30),
+      (s, a) => videoPhashProbe(s, a(0), a(1))),
+    ProbeRow("videoembed", Seq(100000, 2500), Seq(400, 25),
+      (s, a) => videoEmbedProbe(s, a(0), a(1))),
+    ProbeRow("streamphash", Seq(1000000, 200000, 10000), Seq(2000, 1000, 50),
+      (s, a) => streamPhashProbe(s, a(0), a(1), a(2))),
+    ProbeRow("incvphash", Seq(1000000, 1000000, 10000), Seq(2000, 2000, 50),
+      (s, a) => incVideoPhashProbe(s, a(0), a(1), a(2))),
+    ProbeRow("incphash", Seq(1000000, 1000000, 10000), Seq(2000, 2000, 50),
+      (s, a) => incPhashProbe(s, a(0), a(1), a(2))),
+    ProbeRow("bm25serve", Seq(10000000, 3), Seq(200000, 2),
+      (s, a) => bm25ServeProbe(s, a(0), a(1))),
+    ProbeRow("skewjoin", Seq(20000000, 8000000, 3), Seq(6000000, 2000000, 1),
+      (s, a) => skewJoinProbe(s, a(0), a(1), a(2))),
+    ProbeRow("sortlayout", Seq(20000000, 5), Seq(200000, 1),
+      (s, a) => sortLayoutProbe(s, a(0), a(1))),
+    ProbeRow("bucketjoin", Seq(1000000, 4, 5), Seq(2000, 4, 1),
+      (s, a) => bucketJoinProbe(s, a(0), a(1), a(2))),
+    ProbeRow("ivfpqappend", Seq(2000000, 1024), Seq(4000, 16),
+      (s, a) => ivfpqAppendProbe(s, a(0), a(1))),
+    ProbeRow("mediaann", Seq(100000, 5000), Seq(1000, 100),
+      (s, a) => mediaAnnProbe(s, a(0), a(1))),
+    ProbeRow("bpepack", Seq(1000000), Seq(3000), (s, a) => bpePackProbe(s, a(0))),
+    ProbeRow("takedown", Seq(1000000, 10000), Seq(500, 50),
+      (s, a) => takedownProbe(s, a(0), a(1))),
+    ProbeRow("curation20", Seq(10000000, 1000000, 20), Seq(4000, 2000, 4),
+      (s, a) => curation20Probe(s, a(0), a(1), a(2))),
+    ProbeRow("streamivf", Seq(1000000, 100000, 1024), Seq(2000, 200, 16),
+      (s, a) => streamingIvfPqProbe(s, a(0), a(1), a(2))),
+    ProbeRow("bpevocab", Seq(5000000, 10000), Seq(50000, 1000),
+      (s, a) => bpeVocabProbe(s, a(0), a(1))))
+
   def main(args: Array[String]): Unit = {
+    val row = Probes.find(r => args.headOption.contains(r.name)).getOrElse(
+      sys.error(s"unknown probe ${args.headOption.getOrElse("(none)")} " +
+        s"(${Probes.map(_.name).mkString(" | ")})"))
+    val sizes = args.toSeq.tail.map(_.toInt)
+    require(sizes.size <= row.defaults.size,
+      s"${row.name} takes at most ${row.defaults.size} sizes " +
+        s"(defaults ${row.defaults.mkString(" ")})")
     val spark = Engine.session("graft-probe")
-    args.headOption match {
-      case Some("winnow") =>
-        winnowProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(200000),
-          nPlant = args.lift(2).map(_.toInt).getOrElse(2000))
-      case Some("cc") =>
-        ccProbe(spark,
-          nChains = args.lift(1).map(_.toInt).getOrElse(100000),
-          chainLen = args.lift(2).map(_.toInt).getOrElse(10),
-          longPath = args.lift(3).map(_.toInt).getOrElse(1000))
-      case Some("media") =>
-        mediaProbe(spark, n = args.lift(1).map(_.toInt).getOrElse(1000000))
-      case Some("streamdedup") =>
-        streamDedupProbe(spark, nDocs = args.lift(1).map(_.toInt).getOrElse(200000))
-      case Some("curation") =>
-        curationProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nDup = args.lift(2).map(_.toInt).getOrElse(50000),
-          nJunk = args.lift(3).map(_.toInt).getOrElse(50000))
-      case Some("domainmix") =>
-        domainMixProbe(spark, nDocs = args.lift(1).map(_.toInt).getOrElse(10000000))
-      case Some("ivf") =>
-        ivfProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(1000000),
-          c = args.lift(2).map(_.toInt).getOrElse(1024))
-      case Some("streamcurate") =>
-        streamCurateProbe(spark, nDocs = args.lift(1).map(_.toInt).getOrElse(200000))
-      case Some("substr") =>
-        substrProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(200000),
-          nPlant = args.lift(2).map(_.toInt).getOrElse(2000))
-      case Some("keytime") =>
-        keyTimeProbe(spark,
-          keys = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("skew_agg")),
-          reps = args.lift(2).map(_.toInt).getOrElse(6))
-      case Some("streameo") =>
-        streamExactlyOnceProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(200000),
-          nDup = args.lift(3).map(_.toInt).getOrElse(20000),
-          nJunk = args.lift(4).map(_.toInt).getOrElse(20000))
-      case Some("inccuration") =>
-        incCurationProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(200000),
-          nDup = args.lift(3).map(_.toInt).getOrElse(20000),
-          nJunk = args.lift(4).map(_.toInt).getOrElse(20000))
-      case Some("streamsubstr") =>
-        streamSubstrProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(200000),
-          nArrive = args.lift(2).map(_.toInt).getOrElse(200000),
-          nPlant = args.lift(3).map(_.toInt).getOrElse(10000))
-      case Some("incsubstr") =>
-        incSubstrProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(200000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(200000),
-          nPlant = args.lift(3).map(_.toInt).getOrElse(2000))
-      case Some("bm25batch") =>
-        bm25ServeBatchProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(10000000),
-          reps = args.lift(2).map(_.toInt).getOrElse(3))
-      case Some("pq") =>
-        pqProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(1000000),
-          c = args.lift(2).map(_.toInt).getOrElse(1024))
-      case Some("ivfretrain") =>
-        ivfRetrainProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(200000),
-          c = args.lift(2).map(_.toInt).getOrElse(64),
-          nQ = args.lift(3).map(_.toInt).getOrElse(50))
-      case Some("incdedup") =>
-        incDedupProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(1000000))
-      case Some("incbudget") =>
-        incBudgetProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(200000))
-      case Some("textinc") =>
-        textIncProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(200000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(200000),
-          nTwin = args.lift(3).map(_.toInt).getOrElse(10000))
-      case Some("textann") =>
-        textAnnProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(10000))
-      case Some("indexmaint") =>
-        indexMaintProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nAppend = args.lift(2).map(_.toInt).getOrElse(100),
-          perAppend = args.lift(3).map(_.toInt).getOrElse(2000))
-      case Some("incminhash") =>
-        incMinhashProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(1000000))
-      case Some("lm") =>
-        lmProbe(spark,
-          nRef = args.lift(1).map(_.toInt).getOrElse(100000),
-          nScore = args.lift(2).map(_.toInt).getOrElse(1000000))
-      case Some("semdedup") =>
-        semdedupProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(1000000),
-          c = args.lift(2).map(_.toInt).getOrElse(8192),
-          nGroups = args.lift(3).map(_.toInt).getOrElse(10000))
-      case Some("linededup") =>
-        lineDedupProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nClone = args.lift(2).map(_.toInt).getOrElse(50000))
-      case Some("dsir") =>
-        dsirProbe(spark, nDocs = args.lift(1).map(_.toInt).getOrElse(1000000))
-      case Some("bpe") =>
-        bpeProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(1000000),
-          vocab = args.lift(2).map(_.toInt).getOrElse(100000),
-          merges = args.lift(3).map(_.toInt).getOrElse(16))
-      case Some("rank") =>
-        rankProbe(spark, n = args.lift(1).map(_.toInt).getOrElse(10000000))
-      case Some("phash") =>
-        phashProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(200000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(10000))
-      case Some("ivfpq") =>
-        ivfpqProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(1000000),
-          c = args.lift(2).map(_.toInt).getOrElse(1024))
-      case Some("streamlines") =>
-        streamLineDedupProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(200000))
-      case Some("jpegphash") =>
-        jpegPhashProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(100000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(5000))
-      case Some("audiophash") =>
-        audioPhashProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(100000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(5000))
-      case Some("audioembed") =>
-        audioEmbedProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(100000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(5000))
-      case Some("videophash") =>
-        videoPhashProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(20000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(1000))
-      case Some("videoembed") =>
-        videoEmbedProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(100000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(2500))
-      case Some("streamphash") =>
-        streamPhashProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nArrive = args.lift(2).map(_.toInt).getOrElse(200000),
-          nTwin = args.lift(3).map(_.toInt).getOrElse(10000))
-      case Some("incvphash") =>
-        incVideoPhashProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(1000000),
-          nTwin = args.lift(3).map(_.toInt).getOrElse(10000))
-      case Some("incphash") =>
-        incPhashProbe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(1000000),
-          nTwin = args.lift(3).map(_.toInt).getOrElse(10000))
-      case Some("bm25serve") =>
-        bm25ServeProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(10000000),
-          reps = args.lift(2).map(_.toInt).getOrElse(3))
-      case Some("skewjoin") =>
-        skewJoinProbe(spark,
-          nFact = args.lift(1).map(_.toInt).getOrElse(20000000),
-          nDim = args.lift(2).map(_.toInt).getOrElse(8000000),
-          reps = args.lift(3).map(_.toInt).getOrElse(3))
-      case Some("sortlayout") =>
-        sortLayoutProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(20000000),
-          reps = args.lift(2).map(_.toInt).getOrElse(5))
-      case Some("bucketjoin") =>
-        bucketJoinProbe(spark,
-          nOrders = args.lift(1).map(_.toInt).getOrElse(1000000),
-          liPerOrder = args.lift(2).map(_.toInt).getOrElse(4),
-          reps = args.lift(3).map(_.toInt).getOrElse(5))
-      case Some("ivfpqappend") =>
-        ivfpqAppendProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(2000000),
-          c = args.lift(2).map(_.toInt).getOrElse(1024))
-      case Some("mediaann") =>
-        mediaAnnProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(100000),
-          nTwin = args.lift(2).map(_.toInt).getOrElse(5000))
-      case Some("bpepack") =>
-        bpePackProbe(spark, nDocs = args.lift(1).map(_.toInt).getOrElse(1000000))
-      case Some("takedown") =>
-        takedownProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nRetract = args.lift(2).map(_.toInt).getOrElse(10000))
-      case Some("curation20") =>
-        curation20Probe(spark,
-          nIdx = args.lift(1).map(_.toInt).getOrElse(10000000),
-          nBatch = args.lift(2).map(_.toInt).getOrElse(1000000),
-          nights = args.lift(3).map(_.toInt).getOrElse(20))
-      case Some("streamivf") =>
-        streamingIvfPqProbe(spark,
-          n = args.lift(1).map(_.toInt).getOrElse(1000000),
-          nArrive = args.lift(2).map(_.toInt).getOrElse(100000),
-          c = args.lift(3).map(_.toInt).getOrElse(1024))
-      case Some("bpevocab") =>
-        bpeVocabProbe(spark,
-          nDocs = args.lift(1).map(_.toInt).getOrElse(5000000),
-          maxVocab = args.lift(2).map(_.toInt).getOrElse(10000))
-      case other => sys.error(s"unknown probe $other (winnow | cc | media | streamdedup | curation | substr | streamcurate | ivf | domainmix | incdedup | incminhash | incbudget | inccuration | incsubstr | streamsubstr | streameo | bm25batch | pq | ivfretrain | textinc | textann | indexmaint | keytime | lm | semdedup | linededup | dsir | bpe | rank | phash | ivfpq | ivfpqappend | streamlines | jpegphash | audiophash | audioembed | videophash | videoembed | incphash | incvphash | streamphash | bucketjoin | sortlayout | skewjoin | bm25serve | mediaann | bpepack | takedown | curation20 | streamivf | bpevocab)")
-    }
-    spark.stop()
+    try row.run(spark, sizes ++ row.defaults.drop(sizes.size))
+    finally spark.stop()
   }
+
+  // ------------------------------------------------------------ shared
+
+  /** `body`'s result and its wall seconds. */
+  private def clock[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Runs `body` and prints `label` with its wall time. */
+  private def timed[A](label: String)(body: => A): A = {
+    val (r, sec) = clock(body)
+    println(f"[probe] $label: $sec%.2f s")
+    r
+  }
+
+  /** The fastest of `reps` runs of `body`, in seconds. */
+  private def minOver(reps: Int)(body: => Any): Double =
+    (1 to reps).map(_ => clock(body)._2).min
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Runs `body` with the given session confs set, restoring the previous
+    * values (or unsetting) afterwards. */
+  private def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Directory size in bytes, recursively. */
+  private def bytesUnder(p: java.nio.file.Path): Long =
+    if (java.nio.file.Files.isDirectory(p)) {
+      val st = java.nio.file.Files.list(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.map(bytesUnder).sum
+      } finally st.close()
+    } else java.nio.file.Files.size(p)
+
+  /** `prefix<seed>x<j>` for j in [lo, hi] — tokens unique to `seed`. */
+  private def uniqueToks(prefix: String, seed: Column, lo: Int = 0, hi: Int = 29): Column =
+    concat_ws(" ", transform(sequence(lit(lo), lit(hi)),
+      j => concat(lit(prefix), seed, lit("x"), j)))
+
+  /** `nTok` tokens `t<hash(key·mult + j) mod vocab>`: random-vocab text. */
+  private def hashedToks(key: Column, nTok: Int, mult: Int, vocab: Int): Column =
+    concat_ws(" ", transform(sequence(lit(0), lit(nTok - 1)),
+      j => concat(lit("t"), pmod(xxhash64(key * mult + j), lit(vocab)))))
+
+  /** A quality-gate keeper: a leading stopword + 39 hash tokens. */
+  private def keeperText(key: Column): Column =
+    concat_ws(" ", lit("the"), hashedToks(key, 39, 53, 200000))
+
+  /** The incremental-curation corpus text: "a the" + 30 id-unique tokens. */
+  private def freshText(idc: Column): Column =
+    concat_ws(" ", concat(lit("a the "), uniqueToks("d", idc, 1, 30)))
+
+  /** `doc_id` tokens `<tag><doc_id>x<j>` for j in [lo, hi] — as an array. */
+  private def spanToks(tag: String, lo: Int, hi: Int): Column =
+    transform(sequence(lit(lo), lit(hi)),
+      j => concat(lit(tag), col("doc_id"), lit("x"), j))
+
+  /** A 20-token passage at positions 21-40 keyed by `pref`. */
+  private def passage(tag: String, pref: Column): Column =
+    transform(sequence(lit(21), lit(40)), j => concat(lit(tag), pref, lit("q"), j))
+
+  /** Uniform [-1, 1) component keyed by a hash. */
+  private def comp(key: Column): Column =
+    pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
+
+  private def vecIds(spark: SparkSession, lo: Long, hi: Long): DataFrame =
+    spark.range(lo, hi).select(col("id").as("vec_id"))
+
+  /** `ids` (vec_id) as dim-`dim` vectors in `c` natural clusters — a
+    * center component keyed by (cluster, dim index) + 0.25-amplitude
+    * noise keyed by (vec, dim index): the clustered geometry real
+    * embedding corpora have (on UNIFORM random vectors no partition of
+    * space can beat scanning everything; BASELINE records hyperplane LSH
+    * collapsing to 0.18 recall there). `centerSalt` moves every center. */
+  private def clustered(ids: DataFrame, c: Int, dim: Int = 64,
+      centerSalt: Long = 0L): DataFrame = {
+    val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong)) + centerSalt
+    ids.select(col("vec_id"), transform(sequence(lit(0), lit(dim - 1)),
+      j => comp(cluster * dim + j) +
+        comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25).as("v"))
+  }
+
+  /** Brute-force exact top-`k` (q_id, vec_id) of `emb` (vec_id, v) for
+    * every query (q_id, qv) by inner product, self-matches excluded;
+    * persisted. */
+  private def exactTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
+    val e = emb.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", operators.Similarity.dot(col("v"), col("qv")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select("q_id", "vec_id")
+      .persist(MEMORY_AND_DISK)
+    e.count(); e
+  }
+
+  /** The first `nQ` vectors as queries (q_id, qv). */
+  private def firstQueries(emb: DataFrame, nQ: Long): DataFrame =
+    emb.filter(col("vec_id") < nQ).select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** Builds and persists an IVFADC index of `emb` under `dir` (timed) and
+    * reads it back: (assigned, centroids, codebooks). */
+  private def ivfPqIndex(spark: SparkSession, dir: String, emb: DataFrame,
+      n: Long, dim: Int, c: Int, lloydIters: Int = 1,
+      m: Int = operators.ProductQuant.M) = {
+    timed(s"IVFADC index build+persist: $n × dim$dim, c=$c lists + PQ codes") {
+      operators.ProductQuant.writeIvfPqIndex(spark, dir, emb, c, lloydIters, m)
+    }
+    operators.ProductQuant.readIvfPqIndex(spark, dir)
+  }
+
+  /** A planted twin family: media ids `off + i` for base indexes i in
+    * [lo, hi), payload `enc(i)`. */
+  private final case class Twins(off: Long, lo: Long, hi: Long,
+      enc: Long => Array[Byte]) {
+    def size: Long = hi - lo
+    def holds(id: Long, base: Long): Boolean =
+      id >= off + lo && id < off + hi && id - off == base
+    def holds(id: Column, base: Column): Column =
+      id >= off + lo && id < off + hi && base === id - off
+  }
+
+  /** Every twin family as (media_id, payload) rows. */
+  private def twinPayloads(spark: SparkSession, twins: Seq[Twins]): DataFrame = {
+    import spark.implicits._
+    twins.map { t =>
+      val (off, enc) = (t.off, t.enc)
+      spark.range(t.lo, t.hi).map(i => (off + i, enc(i))).toDF("media_id", "payload")
+    }.reduce(_ union _)
+  }
+
+  /** `n` base payloads (`base(id)`) plus every twin family, written as
+    * (media_id, payload) parquet under a fresh dir (timed). */
+  private def writeTwinCorpus(spark: SparkSession, name: String, what: String,
+      n: Int, base: Long => Array[Byte], twins: Seq[Twins]): String = {
+    import spark.implicits._
+    val tmp = tmpDir(s"graft-$name")
+    val gen = (spark.range(n).map(id => (id.longValue, base(id)))
+      .toDF("media_id", "payload") +: twins.map(t => twinPayloads(spark, Seq(t))))
+      .reduce(_ union _)
+    timed(s"$name corpus write ($what)") {
+      gen.repartition(32).write.mode("overwrite").parquet(tmp)
+    }
+    tmp
+  }
+
+  /** The planted-twin perceptual dedup skeleton: write the corpus,
+    * persist the per-item `frame` and count it (throughput), run `dedup`,
+    * and check that every planted twin drops onto its base and nothing
+    * else drops. Returns the persisted frame; the caller releases it. */
+  private def plantedTwinDedup(spark: SparkSession, name: String, what: String,
+      n: Int, base: Long => Array[Byte], twins: Seq[Twins],
+      stage: String, unit: String, payload: String,
+      frame: DataFrame => DataFrame,
+      dedupLabel: String, dedup: DataFrame => DataFrame): DataFrame = {
+    val df = spark.read.parquet(writeTwinCorpus(spark, name, what, n, base, twins))
+    val mb = df.agg(sum(length(col("payload")))).head().getLong(0) / 1e6
+    val items = frame(df).persist(MEMORY_AND_DISK)
+    val (decoded, sec) = clock(items.count())
+    println(f"[probe] $name $stage: $decoded $unit in $sec%.2f s " +
+      f"(${decoded / sec}%.0f $unit/s, ${mb / sec}%.1f MB/s of $payload)")
+    val nTwin = twins.map(_.size).sum
+    assert(decoded == n + nTwin)
+    val verdicts = timed(s"$dedupLabel over $decoded $unit") {
+      dedup(items).filter(!col("keep"))
+        .select(col("media_id"), col("dup_of")).collect()
+    }
+    val exact = verdicts.count(r => twins.exists(_.holds(r.getLong(0), r.getLong(1))))
+    println(s"[probe] $name verdicts: ${verdicts.length} drops, $exact onto " +
+      s"their planted base (expect $nTwin/$nTwin, zero spurious)")
+    assert(verdicts.length == nTwin && exact == nTwin)
+    items
+  }
+
+  /** The embed serving arm: `base` (media_id, v) normalized into a
+    * persisted IVFADC index of `c` lists × `m` PQ subspaces, read back,
+    * and the twin `queries` (media_id, v) served top-1 from it at
+    * nProbe = 2. Gates: ≥ 90 % of queries serve their planted base, and
+    * with `agreeSample` > 0 the served top-1 equals the brute-force exact
+    * top-1 on ≥ 95 % of the first `agreeSample` queries. */
+  private def serveTwins(spark: SparkSession, name: String, base: DataFrame,
+      n: Int, dim: Int, m: Int, queries: DataFrame, twins: Seq[Twins],
+      c: Int = 64, agreeSample: Int = 0): Unit = {
+    import graft.operators.ProductQuant
+    def vecs(df: DataFrame) =
+      ProductQuant.normalized(df.withColumnRenamed("media_id", "vec_id"))
+    val baseEmb = vecs(base).persist(MEMORY_AND_DISK)
+    val (assigned, centroids, cbs) =
+      ivfPqIndex(spark, tmpDir(s"graft-$name-idx"), baseEmb, n, dim, c, m = m)
+    baseEmb.unpersist(blocking = false)
+    val qs = vecs(queries).select(col("vec_id").as("q_id"), col("v").as("qv"))
+      .persist(MEMORY_AND_DISK)
+    val nQ = qs.count()
+    val shortlist = math.max(ProductQuant.Shortlist, n / c + 100)
+    val served = timed(s"serve $nQ twin queries from the persisted index (nProbe=2)") {
+      val r = ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
+          qs, centroids, cbs, k = 1, nProbe = 2, shortlist = shortlist)
+        .select(col("q_id"), col("vec_id").as("top1"))
+        .persist(MEMORY_AND_DISK)
+      r.count(); r
+    }
+    val plantedHits = served
+      .filter(twins.map(_.holds(col("q_id"), col("top1"))).reduce(_ || _)).count()
+    val agree = if (agreeSample == 0) 0L else timed(
+        s"exact baseline: $agreeSample queries × $n brute force") {
+      val exact = exactTopK(assigned.select("vec_id", "v"),
+        qs.orderBy("q_id").limit(agreeSample), k = 1)
+      try exact.join(served, "q_id").filter(col("top1") === col("vec_id")).count()
+      finally exact.unpersist()
+    }
+    println(f"[probe] $name serving: planted-base top-1 $plantedHits/$nQ " +
+      f"(${plantedHits.toDouble / nQ}%.3f)" + (if (agreeSample == 0) "" else
+        f"; served-vs-exact agreement $agree/$agreeSample " +
+          f"(${agree.toDouble / agreeSample}%.3f)") +
+      f" at candidate fraction ${2.0 / c}%.4f of rows × codes-only bytes")
+    served.unpersist(); qs.unpersist()
+    assert(agree >= (agreeSample * 95) / 100,
+      s"IVFADC top-1 must agree with exact top-1 on >=95% of queries, got $agree/$agreeSample")
+    assert(plantedHits >= nQ * 9 / 10,
+      s"planted-base top-1 must hold >=0.9 at this scale, got $plantedHits/$nQ")
+  }
+
+  /** NDJSON files under `tmp/src` drained through `op` (file-drop source,
+    * `maxFiles` per micro-batch) into the idempotent parquet sink at
+    * `tmp/out` (timed); returns the sink's rows. */
+  private def drain(spark: SparkSession, tmp: String, schema: String,
+      label: String, maxFiles: Int = 8)(op: DataFrame => DataFrame): DataFrame = {
+    import graft.streaming.StreamingOps
+    val q = StreamingOps.foreachBatchParquetSink(
+      op(StreamingOps.fileDropSource(spark, s"$tmp/src", schema,
+        maxFilesPerTrigger = maxFiles)),
+      s"$tmp/out", s"$tmp/ck")
+    timed(label)(q.processAllAvailable())
+    q.stop()
+    spark.read.parquet(s"$tmp/out")
+  }
+
+  // ------------------------------------------------------------ probes
 
   /** The FULL curation macro's arrival mode at operating scale — 20
     * autoCompact'd nights against a `nIdx`-doc initial state with
@@ -250,28 +408,23 @@ object Probe {
   def curation20Probe(spark: SparkSession, nIdx: Int, nBatch: Int,
       nights: Int): Unit = {
     import graft.operators._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur20").toString
-    def freshText(idc: Column) = concat_ws(" ",
-      concat(lit("a the "),
-        concat_ws(" ", transform(sequence(lit(1), lit(30)),
-          j => concat(lit("d"), idc, lit("x"), j)))))
+    val dir = tmpDir("graft-cur20")
     def langOf(idc: Column) = element_at(
       array(lit("en"), lit("fr"), lit("de"), lit("es")),
       (pmod(idc, lit(4)) + 1).cast("int"))
     val big = Long.MaxValue / 4
-    // sized to exhaust around night 6-7 at the default 10M/1M geometry
-    // (night 1 contributes ~64M es train tokens, each later night ~6.4M)
-    val esCap = 100000000L
+    // sized to exhaust around night 6-7 (night 1 contributes ~6.4 es
+    // train tokens per initial doc, each later night 1/10 of that at the
+    // default nBatch = nIdx / 10): 100M at the default 10M/1M geometry
+    val esCap = 10L * nIdx
     val budgets = Seq("de" -> big, "en" -> big, "es" -> esCap, "fr" -> big)
     val night1 = spark.range(nIdx).select(col("id").as("doc_id"),
       freshText(col("id")).as("text"), langOf(col("id")).as("lang"))
-    var totals = 0L
-    val t1 = timed(s"night 1 (init): full macro over $nIdx docs") {
+    var totals = timed(s"night 1 (init): full macro over $nIdx docs") {
       CurationIncremental.stepFull(spark, night1, dir, budgets,
         init = true, autoCompact = IndexMaintenance.MaxFragments)
         .agg(coalesce(sum("n_tok"), lit(0L))).head().getLong(0)
     }
-    totals += t1
     val nDup = nBatch / 50 // 2% clones of night-1 docs
     var lastEsRows = -1L
     for (n <- 2 to nights) {
@@ -287,31 +440,19 @@ object Probe {
         CurationIncremental.stepFull(spark, batch, dir, budgets,
           autoCompact = IndexMaintenance.MaxFragments)
       }
-      val t0 = System.nanoTime()
-      val agg = out.agg(coalesce(sum("n_tok"), lit(0L)).as("tok"),
-        count(lit(1)).as("rows"),
-        coalesce(sum(when(col("lang") === "es", 1L).otherwise(0L)), lit(0L))
-          .as("es_rows")).head()
       // stepFull materializes eagerly, so the step itself is what timed
       // the night; this agg is a driver-side read of the checkpointed out
+      val (agg, aggSec) = clock(out.agg(coalesce(sum("n_tok"), lit(0L)).as("tok"),
+        count(lit(1)).as("rows"),
+        coalesce(sum(when(col("lang") === "es", 1L).otherwise(0L)), lit(0L))
+          .as("es_rows")).head())
       totals += agg.getLong(0)
       lastEsRows = agg.getLong(2)
       val frags = IndexMaintenance.fragmentCounts(s"$dir/fps")
-      val stateBytes = {
-        def sz(p: java.nio.file.Path): Long =
-          if (java.nio.file.Files.isDirectory(p)) {
-            val st = java.nio.file.Files.list(p)
-            try {
-              import scala.jdk.CollectionConverters._
-              st.iterator().asScala.map(sz).sum
-            } finally st.close()
-          } else java.nio.file.Files.size(p)
-        sz(java.nio.file.Paths.get(dir))
-      }
+      val stateBytes = bytesUnder(java.nio.file.Paths.get(dir))
       println(f"[probe] curation20 night $n%2d: rows ${agg.getLong(1)}%8d " +
         f"es_rows ${agg.getLong(2)}%7d state ${stateBytes / 1e6}%8.1f MB " +
-        f"frags max ${frags.values.max}%2d " +
-        f"(agg read ${(System.nanoTime() - t0) / 1e9}%.1f s)")
+        f"frags max ${frags.values.max}%2d (agg read $aggSec%.1f s)")
     }
     val (cursor, _, consumed) = CurationIncremental.readCtl(spark, dir)
     val frags = IndexMaintenance.fragmentCounts(s"$dir/fps")
@@ -347,20 +488,11 @@ object Probe {
   def streamingIvfPqProbe(spark: SparkSession, n: Int, nArrive: Int,
       c: Int, dim: Int = 64): Unit = {
     import graft.operators.ProductQuant
-    def comp(key: Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
-    def mkEmb(ids: DataFrame) = {
-      val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong))
-      ids.select(col("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          j => comp(cluster * dim + j) +
-            comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25).as("v"))
-    }
-    val emb = ProductQuant.normalized(
-        mkEmb(spark.range(n).select(col("id").as("vec_id"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import graft.streaming.StreamingOps
+    val emb = ProductQuant.normalized(clustered(vecIds(spark, 0, n), c, dim))
+      .persist(MEMORY_AND_DISK)
     emb.count()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sivf").toString
+    val tmp = tmpDir("graft-sivf")
     val dir = s"$tmp/idx"
     timed(s"IVFADC index build+persist: $n × dim$dim, c=$c") {
       ProductQuant.writeIvfPqIndex(spark, dir, emb, c, lloydIters = 1)
@@ -376,11 +508,10 @@ object Probe {
     // arrivals: NEW ids, RAW vectors (the append owns normalization),
     // 16 files drained 4 per trigger → 4 micro-batches
     val src = s"$tmp/src"
-    mkEmb(spark.range(n.toLong, n.toLong + nArrive)
-        .select(col("id").as("vec_id")))
+    clustered(vecIds(spark, n.toLong, n.toLong + nArrive), c, dim)
       .repartition(16).write.json(src)
-    val q = graft.streaming.StreamingOps.streamingIvfPqAppend(
-      graft.streaming.StreamingOps.fileDropSource(
+    val q = StreamingOps.streamingIvfPqAppend(
+      StreamingOps.fileDropSource(
         spark, src, "vec_id LONG, v ARRAY<DOUBLE>", maxFilesPerTrigger = 4),
       dir, s"$tmp/ck")
     timed(s"streaming IVFADC append drain: $nArrive arrivals, " +
@@ -388,7 +519,7 @@ object Probe {
       q.processAllAvailable()
     }
     q.stop()
-    val assigned = spark.read.parquet(s"$dir/assigned")
+    val assigned = ProductQuant.readIvfPqIndex(spark, dir)._1
     val newRows = assigned.filter(col("vec_id") >= n).count()
     val dupIds = assigned.groupBy("vec_id").count()
       .filter(col("count") > 1).count()
@@ -458,15 +589,13 @@ object Probe {
     * the declared key's parity contract, at 1M. */
   def takedownProbe(spark: SparkSession, nDocs: Int, nRetract: Int): Unit = {
     import graft.operators._
-    val root = java.nio.file.Files.createTempDirectory("takedown").toString
+    val root = tmpDir("takedown")
     val boiler = (0 until 10).map(i => s"boiler$i").mkString(" ")
-    def body(seed: Column) = concat_ws(" ",
-      transform(sequence(lit(0), lit(29)), j => concat(lit("d"), seed, lit("x"), j)))
     val docs = spark.range(nDocs)
       .select(col("id").as("doc_id"),
         when(col("id") % 5 === 0,
-          concat(body(col("id")), lit("\n" + boiler)))
-        .otherwise(body(col("id"))).as("text"))
+          concat(uniqueToks("d", col("id")), lit("\n" + boiler)))
+        .otherwise(uniqueToks("d", col("id"))).as("text"))
     val modR = nDocs / nRetract
     val retr = docs.filter(col("doc_id") % modR === 0)
     val rem = docs.filter(col("doc_id") % modR =!= 0)
@@ -497,11 +626,13 @@ object Probe {
     // verdict: every family bit-equal to a fresh recompute over rem2
     def same(a: DataFrame, b: DataFrame): Boolean =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    val fpOk = same(spark.read.parquet(s"$root/fp").select("fp"),
+    val fpOk = same(IncrementalDedup.readFpIndex(spark, s"$root/fp").select("fp"),
       IncrementalDedup.fingerprints(rem2).select("fp").distinct())
+    // the line and bm25 families have no reader; Takedown reads them raw too
     val lineOk = same(spark.read.parquet(s"$root/line").select("fp"),
       LineDedup.lineFps(rem2))
-    val subOk = same(spark.read.parquet(s"$root/substring/digests").select("g"),
+    val subOk = same(
+      SubstringIncremental.readDigestIndex(spark, s"$root/substring").select("g"),
       SubstringDedup.windowDigests(rem2).select("g").distinct())
     val postOk = same(
       spark.read.parquet(s"$root/bm25/postings").select("term", "doc_id", "tf"),
@@ -518,34 +649,23 @@ object Probe {
       "every family must converge to the fresh-build-without-the-docs state")
   }
 
-  private def timed[A](label: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   /** `winnow_pairs` at scale: `nDocs` random-vocab docs (60 tokens from a
     * 50k vocab, deterministic hash arithmetic) + `nPlant` planted pairs
     * sharing a 30-token passage (~180 chars — far above the k+w−1 = 10
     * winnowing guarantee). Recall = planted pairs recovered with
     * ≥ WinnowMinShared shared fingerprints. */
   def winnowProbe(spark: SparkSession, nDocs: Int, nPlant: Int): Unit = {
-    val body = concat_ws(" ", transform(sequence(lit(0), lit(59)),
-      j => concat(lit("t"), pmod(xxhash64(col("id") * 61 + j), lit(50000)))))
     // per-pair passage: tokens unique to the pair (prefix "p<pairId>x<j>")
-    val passage = concat_ws(" ", transform(sequence(lit(0), lit(29)),
-      j => concat(lit("p"), col("id") % nPlant, lit("x"), j)))
+    val passage = uniqueToks("p", col("id") % nPlant)
     val base = spark.range(nDocs)
       .select(col("id").as("doc_id"),
-        when(col("id") < nPlant, concat(body, lit(" "), passage))
-          .otherwise(body).as("text"))
+        when(col("id") < nPlant,
+          concat(hashedToks(col("id"), 60, 61, 50000), lit(" "), passage))
+          .otherwise(hashedToks(col("id"), 60, 61, 50000)).as("text"))
     val clones = spark.range(nPlant)
       .select((col("id") + nDocs).as("doc_id"),
-        concat(
-          concat_ws(" ", transform(sequence(lit(0), lit(59)),
-            j => concat(lit("t"), pmod(xxhash64((col("id") + nDocs) * 61 + j), lit(50000))))),
-          lit(" "), passage).as("text"))
+        concat(hashedToks(col("id") + nDocs, 60, 61, 50000), lit(" "), passage)
+          .as("text"))
     val docs = base.union(clones)
     val pairs = timed(s"winnowPairs over ${nDocs + nPlant} docs") {
       val p = graft.operators.TextOps.winnowPairs(docs)
@@ -596,43 +716,22 @@ object Probe {
     * frame. Verdict is exact: every planted twin drops onto its base and
     * not one of the `n` distinct images pairs spuriously. */
   def phashProbe(spark: SparkSession, n: Int, nTwin: Int): Unit = {
-    import spark.implicits._
     import graft.operators.ImagePhash
-    val tmp = java.nio.file.Files.createTempDirectory("graft-phash").toString
-    val twinOff = n.toLong // twin ids sit above every base id
-    val gen = spark.range(n).map { id =>
-      val (w, h, px) = ImagePhash.basePixels(id)
-      (id.longValue, ImagePhash.Png.encode(w, h, px,
-        filterFor = r => ((id + r) % 5).toInt, level = 6))
-    }.union(spark.range(nTwin).map { i =>
-      val (w, h, px) = ImagePhash.basePixels(i)
-      (twinOff + i,
+    plantedTwinDedup(spark, "phash", s"$n base + $nTwin re-encoded twins", n,
+      base = { id =>
+        val (w, h, px) = ImagePhash.basePixels(id)
+        ImagePhash.Png.encode(w, h, px, filterFor = r => ((id + r) % 5).toInt, level = 6)
+      },
+      // twin ids sit above every base id
+      twins = Seq(Twins(n.toLong, 0, nTwin, { i =>
+        val (w, h, px) = ImagePhash.basePixels(i)
         ImagePhash.Png.encode(w, h, px,
-          filterFor = r => ((r * 2 + 1) % 5).toInt, level = 9, idatChunk = 512))
-    }).toDF("media_id", "payload")
-    timed(s"phash corpus write ($n base + $nTwin re-encoded twins)") {
-      gen.repartition(32).write.mode("overwrite").parquet(tmp)
-    }
-    val df = spark.read.parquet(tmp)
-    val mb = df.agg(sum(length(col("payload")))).head.getLong(0) / 1e6
-    val hashes = ImagePhash.phashFrame(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val decoded = hashes.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] phash decode+hash: $decoded imgs in $sec%.2f s " +
-      f"(${decoded / sec}%.0f imgs/s, ${mb / sec}%.1f MB/s of PNG)")
-    assert(decoded == n.toLong + nTwin)
-    val verdicts = timed(s"banded-Hamming dedup over $decoded hashes") {
-      ImagePhash.phashDedup(hashes)
-        .filter(!col("keep"))
-        .select(col("media_id"), col("dup_of")).collect()
-    }
-    hashes.unpersist(blocking = false)
-    val exact = verdicts.count(r => r.getLong(0) - twinOff == r.getLong(1))
-    println(s"[probe] phash verdicts: ${verdicts.length} drops, $exact onto " +
-      s"their planted base (expect $nTwin/$nTwin, zero spurious)")
-    assert(verdicts.length == nTwin && exact == nTwin)
+          filterFor = r => ((r * 2 + 1) % 5).toInt, level = 9, idatChunk = 512)
+      })),
+      stage = "decode+hash", unit = "imgs", payload = "PNG",
+      frame = ImagePhash.phashFrame,
+      dedupLabel = "banded-Hamming dedup", dedup = ImagePhash.phashDedup(_))
+      .unpersist(blocking = false)
   }
 
   /** The lossy/cross-format image near-dup path at scale: `n` distinct
@@ -652,50 +751,46 @@ object Probe {
     * distinct images legitimately merge. An exact planted verdict needs
     * separation by construction (see the generator's scaladoc). */
   def jpegPhashProbe(spark: SparkSession, n: Int, nTwin: Int): Unit = {
-    import spark.implicits._
     import graft.operators.{ImagePhash, Jpeg}
     require(2 * nTwin <= n, "twin ranges must be disjoint within the base set")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jpegphash").toString
-    val reOff = n.toLong           // requal twins of bases [0, nTwin)
-    val pngOff = n.toLong + nTwin  // png twins of bases [nTwin, 2*nTwin)
-    val gen = spark.range(n).map { id =>
-      val (w, h, px) = ImagePhash.gridCodePixels(id)
-      (id.longValue, Jpeg.encode(w, h, px, quality = 90,
-        restartInterval = if (id % 3 == 0) 2 else 0))
-    }.union(spark.range(nTwin).map { i =>
-      val (w, h, px) = ImagePhash.gridCodePixels(i)
-      (reOff + i, Jpeg.encode(w, h, px, quality = 70))
-    }).union(spark.range(nTwin, 2L * nTwin).map { i =>
-      val (w, h, px) = ImagePhash.gridCodePixels(i)
-      (pngOff + i, ImagePhash.Png.encode(w, h, px, filterFor = r => (r % 5).toInt))
-    }).toDF("media_id", "payload")
-    timed(s"jpegphash corpus write ($n base JPEG + $nTwin requal + $nTwin PNG twins)") {
-      gen.repartition(32).write.mode("overwrite").parquet(tmp)
-    }
-    val df = spark.read.parquet(tmp)
-    val mb = df.agg(sum(length(col("payload")))).head.getLong(0) / 1e6
-    val hashes = ImagePhash.phashFrame(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val decoded = hashes.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] jpegphash decode+hash: $decoded imgs in $sec%.2f s " +
-      f"(${decoded / sec}%.0f imgs/s, ${mb / sec}%.1f MB/s mixed JPEG+PNG)")
-    assert(decoded == n.toLong + 2 * nTwin)
-    val verdicts = timed(s"banded-Hamming dedup over $decoded hashes") {
-      ImagePhash.phashDedup(hashes)
-        .filter(!col("keep"))
-        .select(col("media_id"), col("dup_of")).collect()
-    }
-    hashes.unpersist(blocking = false)
-    val exact = verdicts.count { r =>
-      val id = r.getLong(0)
-      (id >= pngOff && id - pngOff == r.getLong(1)) ||
-        (id >= reOff && id < pngOff && id - reOff == r.getLong(1))
-    }
-    println(s"[probe] jpegphash verdicts: ${verdicts.length} drops, $exact onto " +
-      s"their planted base (expect ${2 * nTwin}/${2 * nTwin}, zero spurious)")
-    assert(verdicts.length == 2 * nTwin && exact == 2 * nTwin)
+    plantedTwinDedup(spark, "jpegphash",
+      s"$n base JPEG + $nTwin requal + $nTwin PNG twins", n,
+      base = { id =>
+        val (w, h, px) = ImagePhash.gridCodePixels(id)
+        Jpeg.encode(w, h, px, quality = 90,
+          restartInterval = if (id % 3 == 0) 2 else 0)
+      },
+      twins = Seq(
+        // requal twins of bases [0, nTwin)
+        Twins(n.toLong, 0, nTwin, { i =>
+          val (w, h, px) = ImagePhash.gridCodePixels(i)
+          Jpeg.encode(w, h, px, quality = 70)
+        }),
+        // png twins of bases [nTwin, 2*nTwin)
+        Twins(n.toLong + nTwin, nTwin, 2L * nTwin, { i =>
+          val (w, h, px) = ImagePhash.gridCodePixels(i)
+          ImagePhash.Png.encode(w, h, px, filterFor = r => (r % 5).toInt)
+        })),
+      stage = "decode+hash", unit = "imgs", payload = "mixed JPEG+PNG",
+      frame = ImagePhash.phashFrame,
+      dedupLabel = "banded-Hamming dedup", dedup = ImagePhash.phashDedup(_))
+      .unpersist(blocking = false)
+  }
+
+  private def audioBase(id: Long): Array[Byte] = {
+    import graft.operators.{AudioPhash, Wav}
+    Wav.encode(AudioPhash.SampleRate, AudioPhash.gridCodeSamples(id))
+  }
+
+  /** 0.45×-gain twins of bases [0, nTwin) and half-rate decimation twins
+    * of bases [nTwin, 2·nTwin), ids above every base id. */
+  private def audioTwins(n: Int, nTwin: Int): Seq[Twins] = {
+    import graft.operators.{AudioPhash, Wav}
+    Seq(
+      Twins(n.toLong, 0, nTwin, i => Wav.encode(AudioPhash.SampleRate,
+        AudioPhash.scaleTwin(AudioPhash.gridCodeSamples(i)))),
+      Twins(n.toLong + nTwin, nTwin, 2L * nTwin, i => Wav.encode(AudioPhash.SampleRate / 2,
+        AudioPhash.resampleTwin(AudioPhash.gridCodeSamples(i)))))
   }
 
   /** The audio near-dup path at scale: `n` distinct 0.5 s mono PCM16
@@ -707,48 +802,15 @@ object Probe {
     * banded-Hamming dedup. Verdict exact: every planted twin drops onto
     * its base, zero spurious pairs. */
   def audioPhashProbe(spark: SparkSession, n: Int, nTwin: Int): Unit = {
-    import spark.implicits._
-    import graft.operators.{AudioPhash, ImagePhash, Wav}
+    import graft.operators.{AudioPhash, ImagePhash}
     require(2 * nTwin <= n, "twin ranges must be disjoint within the base set")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-audiophash").toString
-    val scOff = n.toLong           // gain twins of bases [0, nTwin)
-    val rsOff = n.toLong + nTwin   // resample twins of bases [nTwin, 2*nTwin)
-    val gen = spark.range(n).map { id =>
-      (id.longValue, Wav.encode(AudioPhash.SampleRate, AudioPhash.gridCodeSamples(id)))
-    }.union(spark.range(nTwin).map { i =>
-      (scOff + i, Wav.encode(AudioPhash.SampleRate,
-        AudioPhash.scaleTwin(AudioPhash.gridCodeSamples(i))))
-    }).union(spark.range(nTwin, 2L * nTwin).map { i =>
-      (rsOff + i, Wav.encode(AudioPhash.SampleRate / 2,
-        AudioPhash.resampleTwin(AudioPhash.gridCodeSamples(i))))
-    }).toDF("media_id", "payload")
-    timed(s"audiophash corpus write ($n base WAV + $nTwin gain + $nTwin resample twins)") {
-      gen.repartition(32).write.mode("overwrite").parquet(tmp)
-    }
-    val df = spark.read.parquet(tmp)
-    val mb = df.agg(sum(length(col("payload")))).head.getLong(0) / 1e6
-    val hashes = AudioPhash.audioPhashFrame(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val decoded = hashes.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] audiophash decode+fingerprint: $decoded clips in $sec%.2f s " +
-      f"(${decoded / sec}%.0f clips/s, ${mb / sec}%.1f MB/s of WAV)")
-    assert(decoded == n.toLong + 2 * nTwin)
-    val verdicts = timed(s"banded-Hamming dedup over $decoded fingerprints") {
-      ImagePhash.phashDedup(hashes)
-        .filter(!col("keep"))
-        .select(col("media_id"), col("dup_of")).collect()
-    }
-    hashes.unpersist(blocking = false)
-    val exact = verdicts.count { r =>
-      val id = r.getLong(0)
-      (id >= rsOff && id - rsOff == r.getLong(1)) ||
-        (id >= scOff && id < rsOff && id - scOff == r.getLong(1))
-    }
-    println(s"[probe] audiophash verdicts: ${verdicts.length} drops, $exact onto " +
-      s"their planted base (expect ${2 * nTwin}/${2 * nTwin}, zero spurious)")
-    assert(verdicts.length == 2 * nTwin && exact == 2 * nTwin)
+    plantedTwinDedup(spark, "audiophash",
+      s"$n base WAV + $nTwin gain + $nTwin resample twins", n,
+      audioBase, audioTwins(n, nTwin),
+      stage = "decode+fingerprint", unit = "clips", payload = "WAV",
+      frame = AudioPhash.audioPhashFrame,
+      dedupLabel = "banded-Hamming dedup", dedup = ImagePhash.phashDedup(_))
+      .unpersist(blocking = false)
   }
 
   /** [[graft.operators.AudioEmbed]] at planted-verdict scale — BOTH halves
@@ -762,79 +824,19 @@ object Probe {
     * served as the query batch — planted-base top-1 and served-vs-exact
     * agreement at the mediaann probe's gates. */
   def audioEmbedProbe(spark: SparkSession, n: Int, nTwin: Int, c: Int = 64): Unit = {
-    import spark.implicits._
-    import graft.operators.{AudioEmbed, AudioPhash, ImageEmbed, ProductQuant, Wav}
+    import graft.operators.{AudioEmbed, ImageEmbed}
     require(2 * nTwin <= n, "twin ranges must be disjoint within the base set")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-audioembed").toString
-    val scOff = n.toLong           // gain twins of bases [0, nTwin)
-    val rsOff = n.toLong + nTwin   // half-rate twins of bases [nTwin, 2*nTwin)
-    val gen = spark.range(n).map { id =>
-      (id.longValue, Wav.encode(AudioPhash.SampleRate, AudioPhash.gridCodeSamples(id)))
-    }.union(spark.range(nTwin).map { i =>
-      (scOff + i, Wav.encode(AudioPhash.SampleRate,
-        AudioPhash.scaleTwin(AudioPhash.gridCodeSamples(i))))
-    }).union(spark.range(nTwin, 2L * nTwin).map { i =>
-      (rsOff + i, Wav.encode(AudioPhash.SampleRate / 2,
-        AudioPhash.resampleTwin(AudioPhash.gridCodeSamples(i))))
-    }).toDF("media_id", "payload")
-    timed(s"audioembed corpus write ($n base WAV + $nTwin gain + $nTwin half-rate twins)") {
-      gen.repartition(32).write.mode("overwrite").parquet(tmp)
-    }
-    val df = spark.read.parquet(tmp)
-    val emb = AudioEmbed.audioEmbedFrame(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val nEmb = emb.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] audioembed decode+profile: $nEmb clips in $sec%.2f s " +
-      f"(${nEmb / sec}%.0f clips/s)")
-    assert(nEmb == n.toLong + 2 * nTwin)
-    // (1) near-dup verdicts through the shared vector stack
-    val verdicts = timed(s"vec-simhash banded near-dup over $nEmb profiles") {
-      ImageEmbed.embedNearDup(emb, threshold = AudioEmbed.CosThreshold)
-        .filter(!col("keep"))
-        .select(col("media_id"), col("dup_of")).collect()
-    }
-    val exact = verdicts.count { r =>
-      val id = r.getLong(0)
-      (id >= rsOff && id - rsOff == r.getLong(1)) ||
-        (id >= scOff && id < rsOff && id - scOff == r.getLong(1))
-    }
-    println(s"[probe] audioembed verdicts: ${verdicts.length} drops, $exact onto " +
-      s"their planted base (expect ${2 * nTwin}/${2 * nTwin}, zero spurious)")
-    assert(verdicts.length == 2 * nTwin && exact == 2 * nTwin)
-    // (2) serving: base profiles → persisted IVFADC index → twin queries
-    val baseEmb = ProductQuant.normalized(
-      emb.filter(col("media_id") < n.toLong).withColumnRenamed("media_id", "vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timed(s"IVFADC index build+persist: $n × dim${AudioEmbed.Dim}, c=$c lists + PQ codes") {
-      ProductQuant.writeIvfPqIndex(spark, s"$tmp/idx", baseEmb, c,
-        lloydIters = 1, m = AudioEmbed.AnnSubspaces)
-    }
-    baseEmb.unpersist(blocking = false)
-    val (assigned, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, s"$tmp/idx")
-    val queries = ProductQuant.normalized(
-      emb.filter(col("media_id") >= n.toLong).withColumnRenamed("media_id", "vec_id"))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val twins = audioTwins(n, nTwin)
+    val emb = plantedTwinDedup(spark, "audioembed",
+      s"$n base WAV + $nTwin gain + $nTwin half-rate twins", n, audioBase, twins,
+      stage = "decode+profile", unit = "clips", payload = "WAV",
+      frame = AudioEmbed.audioEmbedFrame,
+      dedupLabel = "vec-simhash banded near-dup",
+      dedup = ImageEmbed.embedNearDup(_, threshold = AudioEmbed.CosThreshold))
+    serveTwins(spark, "audioembed", emb.filter(col("media_id") < n.toLong), n,
+      AudioEmbed.Dim, AudioEmbed.AnnSubspaces,
+      emb.filter(col("media_id") >= n.toLong), twins, c)
     emb.unpersist(blocking = false)
-    val shortlist = math.max(ProductQuant.Shortlist, n / c + 100)
-    val served = timed(s"serve ${2 * nTwin} twin queries from the persisted index (nProbe=2)") {
-      val r = ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
-          queries, centroids, cbs, k = 1, nProbe = 2, shortlist = shortlist)
-        .select(col("q_id"), col("vec_id").as("top1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count(); r
-    }
-    val plantedHits = served.filter(
-      (col("q_id") >= rsOff && col("top1") === col("q_id") - rsOff) ||
-        (col("q_id") < rsOff && col("top1") === col("q_id") - scOff)).count()
-    println(f"[probe] audioembed serving: planted-base top-1 $plantedHits/${2 * nTwin} " +
-      f"(${plantedHits.toDouble / (2 * nTwin)}%.3f) at candidate fraction " +
-      f"${2.0 / c}%.4f of rows × codes-only bytes")
-    served.unpersist(); queries.unpersist()
-    assert(plantedHits >= (2L * nTwin * 9) / 10,
-      s"planted-base top-1 must hold >=0.9 at this scale, got $plantedHits/${2 * nTwin}")
   }
 
   /** [[graft.operators.VideoPhash]] at planted-verdict scale: `n` base
@@ -845,60 +847,32 @@ object Probe {
     * decode + time-sampled fingerprint throughput over the MIXED corpus
     * (the heaviest media decode path: 16 frames in, 8 decoded per video)
     * and the (slot, band)-sharded dedup. Verdict exact: every planted
-    * twin drops onto its base, zero spurious pairs. */
+    * twin drops onto its base, zero spurious pairs.
+    *
+    * ~17 KB AVI payloads × the default 4096-row columnar batch = ~70 MB
+    * of contiguous bytes per task — 32 concurrent vectorized readers
+    * exhaust the executor share. 256-row batches keep the scan streaming
+    * (the knob a real cluster sets for wide binary columns). */
   def videoPhashProbe(spark: SparkSession, n: Int, nTwin: Int): Unit = {
-    import spark.implicits._
     import graft.operators.VideoPhash
     require(3 * nTwin <= n, "twin ranges must be disjoint within the base set")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-videophash").toString
     // id = off + base-index; offsets spaced so the three twin id RANGES
     // stay disjoint (off+range must not overlap the next family's floor)
-    val rqOff = n.toLong                // requal ids [n, n+nTwin)
-    val fpsOff = n.toLong + nTwin       // half-rate ids [n+2·nTwin, n+3·nTwin)
-    val mp4Off = n.toLong + 3L * nTwin  // MP4 ids [n+5·nTwin, n+6·nTwin)
-    val gen = spark.range(n).map { id =>
-      (id.longValue, VideoPhash.baseVideo(id))
-    }.union(spark.range(nTwin).map { i =>
-      (rqOff + i, VideoPhash.requalTwin(i))
-    }).union(spark.range(nTwin, 2L * nTwin).map { i =>
-      (fpsOff + i, VideoPhash.fpsTwin(i))
-    }).union(spark.range(2L * nTwin, 3L * nTwin).map { i =>
-      (mp4Off + i, VideoPhash.mp4Twin(i))
-    }).toDF("media_id", "payload")
-    timed(s"videophash corpus write ($n base AVI + $nTwin requal + $nTwin half-rate + $nTwin MP4 twins)") {
-      gen.repartition(32).write.mode("overwrite").parquet(tmp)
+    val twins = Seq(
+      Twins(n.toLong, 0, nTwin, VideoPhash.requalTwin),                   // [n, n+nTwin)
+      Twins(n.toLong + nTwin, nTwin, 2L * nTwin, VideoPhash.fpsTwin),      // [n+2·nTwin, n+3·nTwin)
+      Twins(n.toLong + 3L * nTwin, 2L * nTwin, 3L * nTwin, VideoPhash.mp4Twin)) // [n+5·nTwin, n+6·nTwin)
+    withConfs(spark, "spark.sql.parquet.columnarReaderBatchSize" -> "256") {
+      plantedTwinDedup(spark, "videophash",
+        s"$n base AVI + $nTwin requal + $nTwin half-rate + $nTwin MP4 twins", n,
+        VideoPhash.baseVideo, twins,
+        stage = "decode+fingerprint", unit = "videos",
+        payload = "mixed AVI+MP4, 8 frame decodes per video",
+        frame = VideoPhash.videoPhashFrame,
+        dedupLabel = "(slot, band)-sharded Hamming dedup",
+        dedup = VideoPhash.videoPhashDedup(_))
+        .unpersist(blocking = false)
     }
-    // ~17 KB AVI payloads × the default 4096-row columnar batch = ~70 MB
-    // of contiguous bytes per task — 32 concurrent vectorized readers
-    // exhaust the executor share. 256-row batches keep the scan streaming
-    // (the knob a real cluster sets for wide binary columns).
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", 256)
-    val df = spark.read.parquet(tmp)
-    val mb = df.agg(sum(length(col("payload")))).head.getLong(0) / 1e6
-    val hashes = VideoPhash.videoPhashFrame(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val decoded = hashes.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] videophash decode+fingerprint: $decoded videos in $sec%.2f s " +
-      f"(${decoded / sec}%.0f videos/s, ${8 * decoded / sec}%.0f frame decodes/s, " +
-      f"${mb / sec}%.1f MB/s of mixed AVI+MP4)")
-    assert(decoded == n.toLong + 3 * nTwin)
-    val verdicts = timed(s"(slot, band)-sharded Hamming dedup over $decoded fingerprints") {
-      VideoPhash.videoPhashDedup(hashes)
-        .filter(!col("keep"))
-        .select(col("media_id"), col("dup_of")).collect()
-    }
-    hashes.unpersist(blocking = false)
-    val exact = verdicts.count { r =>
-      val id = r.getLong(0)
-      (id >= mp4Off + 2L * nTwin && id - mp4Off == r.getLong(1)) ||
-        (id >= fpsOff + nTwin && id < mp4Off + 2L * nTwin && id - fpsOff == r.getLong(1)) ||
-        (id >= rqOff && id < fpsOff + nTwin && id - rqOff == r.getLong(1))
-    }
-    println(s"[probe] videophash verdicts: ${verdicts.length} drops, $exact onto " +
-      s"their planted base (expect ${3 * nTwin}/${3 * nTwin}, zero spurious)")
-    assert(verdicts.length == 3 * nTwin && exact == 3 * nTwin)
   }
 
   /** [[graft.operators.VideoEmbed]] at planted-verdict scale — the
@@ -912,81 +886,28 @@ object Probe {
     * caught must stay closed for video descriptors too — and (3) the
     * persisted IVFADC serving path (`video_ann`'s composition) over the
     * same embeddings. Verdicts exact: every planted twin drops onto /
-    * serves its base. */
+    * serves its base. Reads with the videophash probe's wide-binary-scan
+    * batch size. */
   def videoEmbedProbe(spark: SparkSession, n: Int, nTwin: Int, c: Int = 64): Unit = {
-    import spark.implicits._
-    import graft.operators.{ImageEmbed, ProductQuant, VideoEmbed, VideoPhash}
+    import graft.operators.{ImageEmbed, VideoEmbed, VideoPhash}
     require(4 * nTwin <= n, "twin ranges must be disjoint within the base set")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-videoembed").toString
-    val nT = 4L * nTwin
-    val gen = spark.range(n).map { id =>
-      (id.longValue, VideoPhash.baseVideo(id))
-    }.union(spark.range(nTwin).map { i =>
-      (n + i, VideoPhash.requalTwin(i))
-    }).union(spark.range(nTwin, 2L * nTwin).map { i =>
-      (n + i, VideoPhash.fpsTwin(i))
-    }).union(spark.range(2L * nTwin, 3L * nTwin).map { i =>
-      (n + i, VideoPhash.brightTwin(i))
-    }).union(spark.range(3L * nTwin, 4L * nTwin).map { i =>
-      (n + i, VideoPhash.mp4Twin(i))
-    }).toDF("media_id", "payload")
-    timed(s"videoembed corpus write ($n base AVI + $nTwin × {requal, half-rate, bright, MP4} twins)") {
-      gen.repartition(32).write.mode("overwrite").parquet(tmp)
+    val twins = Seq[Long => Array[Byte]](VideoPhash.requalTwin, VideoPhash.fpsTwin,
+        VideoPhash.brightTwin, VideoPhash.mp4Twin).zipWithIndex
+      .map { case (enc, f) => Twins(n.toLong, f.toLong * nTwin, (f + 1L) * nTwin, enc) }
+    withConfs(spark, "spark.sql.parquet.columnarReaderBatchSize" -> "256") {
+      val emb = plantedTwinDedup(spark, "videoembed",
+        s"$n base AVI + $nTwin × {requal, half-rate, bright, MP4} twins", n,
+        VideoPhash.baseVideo, twins,
+        stage = "decode+descriptor", unit = "videos",
+        payload = "mixed AVI+MP4, 8 frame decodes per video",
+        frame = VideoEmbed.videoEmbedFrame,
+        dedupLabel = "vec-simhash banded near-dup",
+        dedup = ImageEmbed.embedNearDup(_, threshold = VideoEmbed.CosThreshold))
+      serveTwins(spark, "videoembed", emb.filter(col("media_id") < n.toLong), n,
+        VideoEmbed.Dim, VideoEmbed.AnnSubspaces,
+        emb.filter(col("media_id") >= n.toLong), twins, c)
+      emb.unpersist(blocking = false)
     }
-    // wide-binary-scan knob, as in videoPhashProbe: ~17 KB payloads ×
-    // 4096-row default batches OOM 32 concurrent vectorized readers
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", 256)
-    val df = spark.read.parquet(tmp)
-    val mb = df.agg(sum(length(col("payload")))).head.getLong(0) / 1e6
-    val emb = VideoEmbed.videoEmbedFrame(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val nEmb = emb.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] videoembed decode+descriptor: $nEmb videos in $sec%.2f s " +
-      f"(${nEmb / sec}%.0f videos/s, ${8 * nEmb / sec}%.0f frame decodes/s, " +
-      f"${mb / sec}%.1f MB/s of mixed AVI+MP4)")
-    assert(nEmb == n + nT)
-    // (1) near-dup through the shared two-table vector stack
-    val verdicts = timed(s"vec-simhash banded near-dup over $nEmb descriptors") {
-      ImageEmbed.embedNearDup(emb, threshold = VideoEmbed.CosThreshold)
-        .filter(!col("keep"))
-        .select(col("media_id"), col("dup_of")).collect()
-    }
-    val exact = verdicts.count(r => r.getLong(0) - n == r.getLong(1))
-    println(s"[probe] videoembed verdicts: ${verdicts.length} drops, $exact onto " +
-      s"their planted base (expect $nT/$nT, zero spurious)")
-    assert(verdicts.length == nT && exact == nT)
-    // (2) serving: base descriptors → persisted IVFADC index → twin queries
-    val baseEmb = ProductQuant.normalized(
-      emb.filter(col("media_id") < n.toLong).withColumnRenamed("media_id", "vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timed(s"IVFADC index build+persist: $n × dim${VideoEmbed.Dim}, c=$c lists + PQ codes") {
-      ProductQuant.writeIvfPqIndex(spark, s"$tmp/idx", baseEmb, c,
-        lloydIters = 1, m = VideoEmbed.AnnSubspaces)
-    }
-    baseEmb.unpersist(blocking = false)
-    val (assigned, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, s"$tmp/idx")
-    val queries = ProductQuant.normalized(
-      emb.filter(col("media_id") >= n.toLong).withColumnRenamed("media_id", "vec_id"))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    emb.unpersist(blocking = false)
-    val shortlist = math.max(ProductQuant.Shortlist, n / c + 100)
-    val served = timed(s"serve $nT twin queries from the persisted index (nProbe=2)") {
-      val r = ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
-          queries, centroids, cbs, k = 1, nProbe = 2, shortlist = shortlist)
-        .select(col("q_id"), col("vec_id").as("top1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count(); r
-    }
-    val plantedHits = served.filter(col("top1") === col("q_id") - n).count()
-    println(f"[probe] videoembed serving: planted-base top-1 $plantedHits/$nT " +
-      f"(${plantedHits.toDouble / nT}%.3f) at candidate fraction " +
-      f"${2.0 / c}%.4f of rows × codes-only bytes")
-    served.unpersist(); queries.unpersist()
-    assert(plantedHits >= nT * 9 / 10,
-      s"planted-base top-1 must hold >=0.9 at this scale, got $plantedHits/$nT")
   }
 
   /** [[graft.streaming.StreamingOps.streamingPhashPairsSeeded]] at
@@ -1006,7 +927,7 @@ object Probe {
     import spark.implicits._
     import graft.operators.{ImagePhash, PhashIncremental}
     require(nTwin <= nIdx && nTwin <= nArrive)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-streamphash").toString
+    val tmp = tmpDir("graft-streamphash")
     val sm = ImagePhash.splitmix64 _
     timed(s"phash index build+persist: $nIdx images") {
       PhashIncremental.writePhashIndex(
@@ -1017,7 +938,6 @@ object Probe {
     val (idxBands, idxHashes) = PhashIncremental.readPhashIndex(spark, tmp)
     val crossOff = nIdx.toLong + nArrive   // twins of index ids [0, nTwin)
     val inOff = crossOff + nTwin           // twins of arrivals [nIdx, nIdx+nTwin)
-    val (src, out, ck) = (s"$tmp/src", s"$tmp/out", s"$tmp/ck")
     spark.range(nIdx, nIdx.toLong + nArrive)
       .map(id => (id.longValue, sm(id)))
       .union(spark.range(nTwin).map(i =>
@@ -1025,19 +945,13 @@ object Probe {
       .union(spark.range(nTwin).map(i =>
         (inOff + i, sm(nIdx + i) ^ ((1L << 9) | (1L << 51)))))
       .toDF("media_id", "phash")
-      .repartition(32).write.json(src)
-    val q = graft.streaming.StreamingOps.foreachBatchParquetSink(
-      graft.streaming.StreamingOps.streamingPhashPairsSeeded(
-        graft.streaming.StreamingOps.fileDropSource(
-          spark, src, "media_id LONG, phash LONG", maxFilesPerTrigger = 8),
-        idxBands, idxHashes).toDF(),
-      out, ck)
-    timed(s"seeded streaming drain: ${nArrive + 2 * nTwin} arrivals vs the " +
-        s"$nIdx-image seed (8-file micro-batches)") {
-      q.processAllAvailable()
-    }
-    q.stop()
-    val pairs = spark.read.parquet(out)
+      .repartition(32).write.json(s"$tmp/src")
+    val pairs = drain(spark, tmp, "media_id LONG, phash LONG",
+        s"seeded streaming drain: ${nArrive + 2 * nTwin} arrivals vs the " +
+          s"$nIdx-image seed (8-file micro-batches)") { src =>
+        graft.streaming.StreamingOps
+          .streamingPhashPairsSeeded(src, idxBands, idxHashes).toDF()
+      }
       .select("media_a", "media_b").distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantCross = (0L until nTwin).map(i => (i, crossOff + i)).toSet
@@ -1063,7 +977,7 @@ object Probe {
     import spark.implicits._
     import graft.operators.{ImagePhash, VideoPhash, VideoPhashIncremental}
     require(nTwin <= nIdx && nTwin <= nBatch)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incvphash").toString
+    val tmp = tmpDir("graft-incvphash")
     val sm = ImagePhash.splitmix64 _
     def arr(seed: Long): Array[Long] =
       Array.tabulate(VideoPhash.Slots)(s => sm(seed * VideoPhash.Slots + s))
@@ -1081,35 +995,34 @@ object Probe {
       .union(spark.range(nTwin).map(i => (crossOff + i, twin(i, (2, 22)))))
       .union(spark.range(nTwin).map(i => (inOff + i, twin(nIdx + i, (7, 41)))))
       .toDF("media_id", "phashes")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // generator artifact, not engine behavior: a typed map over range
     // carries range's 8 B/row size estimate, so Catalyst broadcasts the
     // ~100 MB array frame and blows the driver. Real corpora enter the
     // operator as parquet payload scans whose (much larger) stats keep
     // the planner honest; here we disable the estimate-driven broadcast.
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    val (idxBands, idxH) = VideoPhashIncremental.readVideoIndex(spark, tmp)
-    val drops = timed(s"probe+verify: ${nBatch + 2 * nTwin}-video batch vs the $nIdx-video index") {
-      VideoPhashIncremental.nearDupDrops(batch, idxBands, idxH).collect()
+    val total = withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (idxBands, idxH) = VideoPhashIncremental.readVideoIndex(spark, tmp)
+      val drops = timed(s"probe+verify: ${nBatch + 2 * nTwin}-video batch vs the $nIdx-video index") {
+        VideoPhashIncremental.nearDupDrops(batch, idxBands, idxH).collect()
+      }
+      val dropSet = drops.map(_.getLong(0)).toSet
+      val exact = dropSet.count(id => id >= crossOff)
+      println(s"[probe] incvphash verdicts: ${drops.length} drops, $exact planted " +
+        s"(expect ${2 * nTwin}/${2 * nTwin}, zero spurious)")
+      assert(drops.length == 2 * nTwin && exact == 2 * nTwin)
+      val dropFrame = dropSet.toSeq.toDF("media_id")
+      timed(s"append $nBatch survivors' postings+arrays to the index") {
+        VideoPhashIncremental.writeVideoIndex(
+          batch.join(broadcast(dropFrame), Seq("media_id"), "left_anti"),
+          tmp, append = true)
+      }
+      val (_, grown) = VideoPhashIncremental.readVideoIndex(spark, tmp)
+      grown.select("media_id").distinct().count()
     }
-    val dropSet = drops.map(_.getLong(0)).toSet
-    val exact = dropSet.count(id => id >= crossOff)
-    println(s"[probe] incvphash verdicts: ${drops.length} drops, $exact planted " +
-      s"(expect ${2 * nTwin}/${2 * nTwin}, zero spurious)")
-    assert(drops.length == 2 * nTwin && exact == 2 * nTwin)
-    val dropFrame = dropSet.toSeq.toDF("media_id")
-    timed(s"append $nBatch survivors' postings+arrays to the index") {
-      VideoPhashIncremental.writeVideoIndex(
-        batch.join(broadcast(dropFrame), Seq("media_id"), "left_anti"),
-        tmp, append = true)
-    }
-    val (_, grown) = VideoPhashIncremental.readVideoIndex(spark, tmp)
-    val total = grown.select("media_id").distinct().count()
     println(s"[probe] incvphash index after append: $total distinct videos " +
       s"(expect ${nIdx.toLong + nBatch})")
     batch.unpersist(blocking = false)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     assert(total == nIdx.toLong + nBatch)
   }
 
@@ -1131,7 +1044,7 @@ object Probe {
     import spark.implicits._
     import graft.operators.{ImagePhash, PhashIncremental}
     require(nTwin <= nIdx && nTwin <= nBatch)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incphash").toString
+    val tmp = tmpDir("graft-incphash")
     val sm = ImagePhash.splitmix64 _
     val idxHashes = spark.range(nIdx).map(id => (id.longValue, sm(id)))
       .toDF("media_id", "phash")
@@ -1147,7 +1060,7 @@ object Probe {
       .union(spark.range(nTwin).map(i =>
         (inOff + i, sm(nIdx + i) ^ ((1L << 5) | (1L << 45)))))
       .toDF("media_id", "phash")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val (idxBands, idxH) = PhashIncremental.readPhashIndex(spark, tmp)
     val drops = timed(s"probe+verify: ${nBatch + 2 * nTwin}-image batch vs the $nIdx-image index") {
       PhashIncremental.nearDupDrops(batch, idxBands, idxH).collect()
@@ -1171,6 +1084,17 @@ object Probe {
     assert(total == nIdx.toLong + nBatch)
   }
 
+  /** `nDocs` docs of 40 random-vocab tokens plus the `planted` terms,
+    * written as the `documents.parquet` table the BM25 keys read. */
+  private def writeBm25Corpus(spark: SparkSession, dir: String, nDocs: Int,
+      planted: Seq[Column]): Unit =
+    spark.range(nDocs).select(
+        col("id").as("doc_id"),
+        concat(hashedToks(col("id"), 40, 53, 50000) +: planted: _*).as("text"),
+        lit("en").as("lang"), lit("probe").as("source"))
+      .withColumn("n_chars", length(col("text")))
+      .repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+
   /** [[graft.operators.Ranking.bm25Serve]]'s value claim, measured: at
     * corpus scale the SCAN form re-tokenizes every document per query
     * while the SERVED form reads only the query terms' posting buckets
@@ -1182,37 +1106,22 @@ object Probe {
     * build is the amortized cost. */
   def bm25ServeProbe(spark: SparkSession, nDocs: Int, reps: Int): Unit = {
     import graft.operators.Ranking
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bm25serve").toString
+    val tmp = tmpDir("graft-bm25serve")
     timed(s"corpus write: $nDocs docs × ~40 tokens, terms at ~2/5/10% df") {
-      val base = concat_ws(" ", transform(sequence(lit(0), lit(39)),
-        j => concat(lit("t"), pmod(xxhash64(col("id") * 53 + j), lit(50000)))))
-      spark.range(nDocs).select(
-          col("id").as("doc_id"),
-          concat(base,
-            when(pmod(xxhash64(col("id") * 3), lit(100)) < 2, lit(" spark")).otherwise(lit("")),
-            when(pmod(xxhash64(col("id") * 5), lit(100)) < 5, lit(" window")).otherwise(lit("")),
-            when(pmod(xxhash64(col("id") * 7), lit(100)) < 10, lit(" merge")).otherwise(lit("")))
-            .as("text"),
-          lit("en").as("lang"), lit("probe").as("source"))
-        .withColumn("n_chars", length(col("text")))
-        .repartition(32).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      writeBm25Corpus(spark, tmp, nDocs, Seq(3 -> 2 -> "spark", 5 -> 5 -> "window",
+          7 -> 10 -> "merge").map { case ((mult, pct), term) =>
+        when(pmod(xxhash64(col("id") * mult), lit(100)) < pct, lit(" " + term))
+          .otherwise(lit(""))
+      })
     }
     val scanRows = Ranking.bm25Topk(spark, tmp).collect()
-    val tBuild = { val t0 = System.nanoTime()
-      Ranking.ensureBm25Index(spark, tmp); (System.nanoTime() - t0) / 1e9 }
+    val (_, tBuild) = clock(Ranking.ensureBm25Index(spark, tmp))
     println(f"[probe] bm25 index build+persist (postings + doclen + stats): $tBuild%.2f s")
     val servedRows = Ranking.bm25Serve(spark, tmp).collect()
     assert(servedRows.toSeq == scanRows.toSeq,
       "served ranking must be row-equal to the scan ranking")
-    def sec(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    val tScan = (1 to reps).map(_ => sec {
-      Ranking.bm25Topk(spark, tmp).collect(): Unit
-    }).min
-    val tServe = (1 to reps).map(_ => sec {
-      Ranking.bm25Serve(spark, tmp).collect(): Unit
-    }).min
+    val tScan = minOver(reps)(Ranking.bm25Topk(spark, tmp).collect())
+    val tServe = minOver(reps)(Ranking.bm25Serve(spark, tmp).collect())
     println(f"[probe] bm25serve: top-10 over $nDocs docs — full scan $tScan%.2f s/query " +
       f"vs served $tServe%.2f s/query (${tScan / tServe}%.1f×; index build $tBuild%.2f s " +
       f"amortizes after ${tBuild / math.max(tScan - tServe, 1e-9)}%.1f queries; " +
@@ -1232,38 +1141,24 @@ object Probe {
   def bm25ServeBatchProbe(spark: SparkSession, nDocs: Int, reps: Int): Unit = {
     import graft.operators.Ranking
     val terms = (0 until 12).map(i => s"qt$i")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bm25batch").toString
+    val tmp = tmpDir("graft-bm25batch")
     timed(s"corpus write: $nDocs docs × ~40 tokens, 12 query terms at 2-10% df") {
-      val base = concat_ws(" ", transform(sequence(lit(0), lit(39)),
-        j => concat(lit("t"), pmod(xxhash64(col("id") * 53 + j), lit(50000)))))
-      val planted = terms.zipWithIndex.map { case (t, i) =>
+      writeBm25Corpus(spark, tmp, nDocs, terms.zipWithIndex.map { case (t, i) =>
         when(pmod(xxhash64(col("id") * (3 + 2 * i)), lit(100)) < 2 + (i % 5) * 2,
           lit(" " + t)).otherwise(lit(""))
-      }
-      spark.range(nDocs).select(
-          col("id").as("doc_id"),
-          concat(base +: planted: _*).as("text"),
-          lit("en").as("lang"), lit("probe").as("source"))
-        .withColumn("n_chars", length(col("text")))
-        .repartition(32).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      })
     }
-    val tBuild = { val t0 = System.nanoTime()
-      Ranking.ensureBm25Index(spark, tmp); (System.nanoTime() - t0) / 1e9 }
+    val (_, tBuild) = clock(Ranking.ensureBm25Index(spark, tmp))
     println(f"[probe] bm25 index build+persist: $tBuild%.2f s")
     val queries = (0 until 12).map(i =>
       (f"q$i%02d", Seq(terms(i), terms((i + 5) % 12), terms((i + 9) % 12))))
-    def sec(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     val batch12 = Ranking.bm25ServeBatch(spark, tmp, 10, queries).collect()
     val solo = Ranking.bm25ServeBatch(spark, tmp, 10, queries.take(1)).collect()
     assert(batch12.filter(_.getString(0) == "q00").toSeq == solo.toSeq,
       "a query's rows must be identical alone and inside the batch")
     val perQ = Seq(1, 3, 6, 12).map { n =>
       val qs = queries.take(n)
-      val t = (1 to reps).map(_ => sec {
-        Ranking.bm25ServeBatch(spark, tmp, 10, qs).collect(): Unit
-      }).min
+      val t = minOver(reps)(Ranking.bm25ServeBatch(spark, tmp, 10, qs).collect())
       println(f"[probe] bm25batch: N=$n%2d  total $t%.2f s  per-query ${t / n}%.3f s")
       (n, t / n)
     }
@@ -1291,12 +1186,12 @@ object Probe {
     * armed for the real case, a multi-GB hot partition on a cluster
     * where one straggler task IS the job's wall clock. */
   def skewJoinProbe(spark: SparkSession, nFact: Int, nDim: Int, reps: Int): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-skewjoin").toString
+    val tmp = tmpDir("graft-skewjoin")
     timed(s"ingest: $nFact-row fact (~30% on one key) + $nDim-row fact-sized dim") {
       spark.range(nFact).select(
           when(pmod(col("id"), lit(10)) < 3, 0L)
             .otherwise(pmod(xxhash64(col("id")), lit(nDim))).as("k"),
-          pmod(xxhash64(col("id") * 13), lit(1000)).as("v"))
+          pmod(xxhash64(col("id") * 13), lit(1000000000L)).as("v"))
         .repartition(32).write.mode("overwrite").parquet(s"$tmp/fact")
       spark.range(nDim).select(col("id").as("k"),
           pmod(xxhash64(col("id")), lit(100)).as("dv"))
@@ -1306,41 +1201,32 @@ object Probe {
       .join(spark.read.parquet(s"$tmp/dim"), Seq("k"))
       .groupBy("dv")
       .agg(count(lit(1)).as("n"), sum("v").as("sv"))
-    def sec(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    val prev = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    def setConfs(enabled: Boolean): Unit = {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", enabled)
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
+    // 32 shuffle partitions, as recorded (BASELINE's pinned local[32]),
+    // whatever the host's core count. Shuffle sizes are COMPRESSED bytes,
+    // which is also why `v` spans 30 bits: with a 10-bit `v` the hot
+    // key's rows compressed to ~0.5 B each, and on local[4] the hot
+    // partition measured 1.6× the median (8.0 vs 4.9 MB at 20M rows), so
+    // detection never fired
+    def skewConfs(enabled: Boolean) = Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.skewJoin.enabled" -> enabled.toString,
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4m",
       // coalescing pulls the MEDIAN partition up toward the advisory
       // size, so the default 5× factor compares hot vs ~advisory-sized
       // medians; 2× keeps the detection meaningful at probe volumes
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m")
+    val (withRows, skewStamped, tOn) = withConfs(spark, skewConfs(enabled = true): _*) {
+      val rows = q().orderBy("dv").collect()
+      val dfSkew = q(); dfSkew.collect()
+      val stamped = dfSkew.queryExecution.executedPlan.toString.contains("skew=true")
+      noop(q()) // warm
+      (rows, stamped, minOver(reps)(noop(q())))
     }
-    setConfs(enabled = true)
-    val withRows = q().orderBy("dv").collect()
-    val dfSkew = q(); dfSkew.collect()
-    val skewStamped = dfSkew.queryExecution.executedPlan.toString.contains("skew=true")
-    q().write.format("noop").mode("overwrite").save() // warm
-    val tOn = (1 to reps).map(_ => sec {
-      q().write.format("noop").mode("overwrite").save()
-    }).min
-    setConfs(enabled = false)
-    val withoutRows = q().orderBy("dv").collect()
-    q().write.format("noop").mode("overwrite").save()
-    val tOff = (1 to reps).map(_ => sec {
-      q().write.format("noop").mode("overwrite").save()
-    }).min
-    prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    val (withoutRows, tOff) = withConfs(spark, skewConfs(enabled = false): _*) {
+      val rows = q().orderBy("dv").collect()
+      noop(q())
+      (rows, minOver(reps)(noop(q())))
     }
     assert(withRows.toSeq == withoutRows.toSeq,
       "skew splitting must never change the answer")
@@ -1363,7 +1249,7 @@ object Probe {
     * turns every time-ranged scan from a corpus read into a slice
     * read — the standard log/event-table layout decision, measured. */
   def sortLayoutProbe(spark: SparkSession, n: Int, reps: Int): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sortlayout").toString
+    val tmp = tmpDir("graft-sortlayout")
     val base = spark.range(n).select(
       pmod(xxhash64(col("id") * 31), lit(100000)).as("user"),
       // ts uniform over [0, n): the scramble decorrelates it from row order
@@ -1387,17 +1273,10 @@ object Probe {
     val a = q(s"$tmp/scrambled").collect()(0)
     val b = q(s"$tmp/sorted").collect()(0)
     assert(a == b, "layout must never change the answer")
-    def sec(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    def run(path: String): Double =
-      (1 to reps).map(_ => sec {
-        q(path).write.format("noop").mode("overwrite").save()
-      }).min
-    q(s"$tmp/scrambled").write.format("noop").mode("overwrite").save() // warm
-    q(s"$tmp/sorted").write.format("noop").mode("overwrite").save()
-    val tScr = run(s"$tmp/scrambled")
-    val tSrt = run(s"$tmp/sorted")
+    noop(q(s"$tmp/scrambled")) // warm
+    noop(q(s"$tmp/sorted"))
+    val tScr = minOver(reps)(noop(q(s"$tmp/scrambled")))
+    val tSrt = minOver(reps)(noop(q(s"$tmp/sorted")))
     // the pushed filter is identical on both; only the statistics differ
     val plan = q(s"$tmp/sorted").queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"),
@@ -1446,7 +1325,7 @@ object Probe {
   def bucketJoinProbe(spark: SparkSession, nOrders: Int, liPerOrder: Int,
       reps: Int): Unit = {
     import graft.operators.BucketedJoin
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucketjoin").toString
+    val tmp = tmpDir("graft-bucketjoin")
     val nLi = nOrders.toLong * liPerOrder
     timed(s"plain ingest: $nOrders orders + $nLi lineitem rows") {
       spark.range(nOrders)
@@ -1461,11 +1340,7 @@ object Probe {
             .cast("decimal(18,2)").as("l_discount"))
         .repartition(32).write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     }
-    def sec[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (names, tBkt) = sec {
+    val (names, tBkt) = clock {
       (BucketedJoin.ensureBucketed(spark, tmp, "lineitem", "l_orderkey"),
         BucketedJoin.ensureBucketed(spark, tmp, "orders", "o_orderkey"))
     }
@@ -1480,15 +1355,13 @@ object Probe {
     def plain = q(spark.read.parquet(s"$tmp/lineitem.parquet"),
       spark.read.parquet(s"$tmp/orders.parquet"))
     def bucketed = q(spark.table(names._1), spark.table(names._2))
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // correctness first: the layout must never be a semantics choice
     val a = plain.orderBy("o_orderpriority").collect().toSeq
     val b = bucketed.orderBy("o_orderpriority").collect().toSeq
     assert(a == b, "bucketed and plain layouts must agree row-for-row")
     noop(plain); noop(bucketed) // warm (JIT, codegen, file listing)
-    val tPlain = (1 to reps).map(_ => sec(noop(plain))._2)
-    val tBuck = (1 to reps).map(_ => sec(noop(bucketed))._2)
+    val tPlain = (1 to reps).map(_ => clock(noop(plain))._2)
+    val tBuck = (1 to reps).map(_ => clock(noop(bucketed))._2)
     println(("[probe] plain join reps:    " +
       tPlain.map(t => f"$t%.2f").mkString(" ")) + " s")
     println(("[probe] bucketed join reps: " +
@@ -1509,13 +1382,13 @@ object Probe {
     // plan claim 2: groupBy on the bucket key skips its exchange
     val g = spark.table(names._1).groupBy("l_orderkey")
       .agg(sum(dec("l_extendedprice")).as("s"))
-    val (_, tG) = sec(noop(g))
+    val (_, tG) = clock(noop(g))
     val gp = g.queryExecution.executedPlan.toString
     assert(!gp.contains("Exchange"),
       "groupBy(bucket key) over the bucketed fact must plan zero exchanges:\n" + gp)
     val gPlain = spark.read.parquet(s"$tmp/lineitem.parquet")
       .groupBy("l_orderkey").agg(sum(dec("l_extendedprice")).as("s"))
-    val (_, tGPlain) = sec(noop(gPlain))
+    val (_, tGPlain) = clock(noop(gPlain))
     println(f"[probe] groupBy(l_orderkey) over $nLi rows: bucketed $tG%.2f s " +
       f"(zero exchanges, plan-asserted) vs plain $tGPlain%.2f s")
   }
@@ -1531,24 +1404,14 @@ object Probe {
   def streamDedupProbe(spark: SparkSession, nDocs: Int): Unit = {
     require(nDocs % 2 == 0, "nDocs must be even (half originals, half dups)")
     val half = nDocs / 2
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sdedup").toString
-    val (src, out, ck) = (s"$tmp/src", s"$tmp/out", s"$tmp/ck")
+    val tmp = tmpDir("graft-sdedup")
     spark.range(nDocs)
       .select(col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(59)),
-          j => concat(lit("t"), pmod(xxhash64(pmod(col("id"), lit(half)) * 61 + j), lit(50000)))))
-          .as("text"))
-      .repartition(32).write.json(src)
-    val q = graft.streaming.StreamingOps.foreachBatchParquetSink(
-      graft.streaming.StreamingOps.streamingDocDedup(
-        graft.streaming.StreamingOps.fileDropSource(
-          spark, src, "doc_id LONG, text STRING", maxFilesPerTrigger = 8)),
-      out, ck)
-    timed(s"streamingDocDedup drain of $nDocs docs (50% duplicates, 8-file batches)") {
-      q.processAllAvailable()
-    }
-    q.stop()
-    val result = spark.read.parquet(out)
+        hashedToks(pmod(col("id"), lit(half)), 60, 61, 50000).as("text"))
+      .repartition(32).write.json(s"$tmp/src")
+    val result = drain(spark, tmp, "doc_id LONG, text STRING",
+      s"streamingDocDedup drain of $nDocs docs (50% duplicates, 8-file batches)")(
+      graft.streaming.StreamingOps.streamingDocDedup(_))
     val kept = result.count()
     val distinctFps = result.select("fp").distinct().count()
     println(s"[probe] streamdedup: kept $kept (expect $half), " +
@@ -1565,14 +1428,13 @@ object Probe {
     * equivalence the spec pins at 5k rows, revalidated at scale) plus the
     * budget invariants recomputed from scratch. */
   def domainMixProbe(spark: SparkSession, nDocs: Int): Unit = {
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.DomainMix
     val doms = Seq("web", "code", "books", "wiki", "junkdom")
     val docs = spark.range(nDocs)
       .select(col("id").as("doc_id"),
         element_at(typedLit(doms), (pmod(col("id"), lit(doms.size)) + 1).cast("int")).as("dom"),
         (pmod(xxhash64(col("id")), lit(400)) + 1).as("n_tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     docs.count() // materialize so neither form pays generation
     // budgets ≈ 1/4 of web's supply, tiny for code, over-supply for books,
     // mid for wiki; junkdom unbudgeted (dropped)
@@ -1582,7 +1444,7 @@ object Probe {
     val twoPhase = timed(s"two-phase mix over $nDocs docs / ${doms.size} domains") {
       val r = DomainMix.mix(docs, "dom", "n_tok", budgets)
         .select("dom", "doc_id", "n_tok", "tok_start")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       r.count(); r
     }
     val naive = timed("naive per-domain window (the #domains-partition funnel)") {
@@ -1594,7 +1456,7 @@ object Probe {
         .withColumn("tok_start", sum("n_tok").over(w) - col("n_tok"))
         .filter(col("tok_start") < col("budget"))
         .select("dom", "doc_id", "n_tok", "tok_start")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       r.count(); r
     }
     val diff = twoPhase.exceptAll(naive).count() + naive.exceptAll(twoPhase).count()
@@ -1621,48 +1483,31 @@ object Probe {
     * the exact artifact a production search serves, not asserted from an
     * in-memory rebuild.
     *
-    * Corpus: `n` vectors (dim 64) drawn as `c` natural clusters — center
-    * component + 0.25-amplitude noise, all deterministic hash arithmetic —
-    * the clustered geometry real embedding corpora have (on UNIFORM random
-    * vectors no partition of space can beat scanning everything; BASELINE
-    * records hyperplane LSH collapsing to 0.18 recall there). Ground truth
-    * is the exact top-10 per query, computed through the SAME ivfSearch
-    * path with nProbe = c (probing every list ≡ brute force — so the
-    * recall curve cannot be flattered by a scoring-path discrepancy). */
+    * Corpus: `n` vectors (dim 64) drawn as `c` natural clusters
+    * ([[clustered]]). Ground truth is the exact top-10 per query,
+    * computed through the SAME ivfSearch path with nProbe = c (probing
+    * every list ≡ brute force — so the recall curve cannot be flattered
+    * by a scoring-path discrepancy). */
   def ivfProbe(spark: SparkSession, n: Int, c: Int,
       dim: Int = 64, nQ: Int = 20, k: Int = 10): Unit = {
     import graft.operators.Similarity
-    // uniform [-1, 1) component keyed by a hash — centers keyed by
-    // (cluster, dim index), noise keyed by (vec, dim index)
-    def comp(key: org.apache.spark.sql.Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
-    val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong))
-    val emb = spark.range(n).select(col("id").as("vec_id"))
-      .select(col("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          j => comp(cluster * dim + j) + comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25)
-          .as("v"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val emb = clustered(vecIds(spark, 0, n), c, dim)
+    val dir = tmpDir("graft-ivf")
     timed(s"IVF index build+persist: $n × dim$dim, c=$c, 1 Lloyd iter") {
       Similarity.writeIvfIndex(spark, dir, emb, c, lloydIters = 1)
     }
     val (assigned, centroids) = Similarity.readIvfIndex(spark, dir)
-    val queries = emb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val queries = firstQueries(emb, nQ)
     val exact = timed(s"exact baseline (nProbe=c: all $c lists scanned)") {
       val e = Similarity.ivfSearch(assigned, queries, centroids, k, nProbe = c)
         .select("q_id", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       e.count(); e
     }
     val curve = Seq(1, 2, 4, 8, 16).map { nProbe =>
-      val (hits, sec) = {
-        val t0 = System.nanoTime()
-        val h = exact.intersect(
-          Similarity.ivfSearch(assigned, queries, centroids, k, nProbe)
-            .select("q_id", "vec_id")).count()
-        (h, (System.nanoTime() - t0) / 1e9)
-      }
+      val (hits, sec) = clock(exact.intersect(
+        Similarity.ivfSearch(assigned, queries, centroids, k, nProbe)
+          .select("q_id", "vec_id")).count())
       val recall = hits.toDouble / (nQ.toLong * k)
       println(f"[probe] ivf: nProbe=$nProbe%2d recall@$k=$recall%.3f " +
         f"(${hits}/${nQ * k} hits, $sec%.2f s, ~${nProbe * (n / c)} candidates/query)")
@@ -1694,48 +1539,22 @@ object Probe {
     * 100 recovered 0.165 there; the default here is n/c rounded up. */
   def ivfpqProbe(spark: SparkSession, n: Int, c: Int,
       dim: Int = 64, nQ: Int = 20, k: Int = 10): Unit = {
-    val shortlist = math.max(graft.operators.ProductQuant.Shortlist, n / c + 100)
-    import graft.operators.{ProductQuant, Similarity}
-    def comp(key: org.apache.spark.sql.Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
-    val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong))
-    val emb = ProductQuant.normalized(
-      spark.range(n).select(col("id").as("vec_id"))
-        .select(col("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => comp(cluster * dim + j) + comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25)
-            .as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import graft.operators.ProductQuant
+    val shortlist = math.max(ProductQuant.Shortlist, n / c + 100)
+    val emb = ProductQuant.normalized(clustered(vecIds(spark, 0, n), c, dim))
+      .persist(MEMORY_AND_DISK)
     emb.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    timed(s"IVFADC index build+persist: $n × dim$dim, c=$c lists + PQ codes") {
-      ProductQuant.writeIvfPqIndex(spark, dir, emb, c, lloydIters = 1)
-    }
-    val (assigned, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, dir)
-    val queries = emb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
-    val wE = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val exact = timed(s"exact baseline: $nQ queries × $n brute force") {
-      val e = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", dotQ)
-        .withColumn("rn", row_number().over(wE))
-        .filter(col("rn") <= k)
-        .select("q_id", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
-    }
+    val (assigned, centroids, cbs) =
+      ivfPqIndex(spark, tmpDir("graft-ivfpq"), emb, n, dim, c)
+    val queries = firstQueries(emb, nQ)
+    val exact = timed(s"exact baseline: $nQ queries × $n brute force")(
+      exactTopK(emb, queries, k))
     emb.unpersist(blocking = false) // serving reads the INDEX, not the source
     val curve = Seq(1, 2, 4).map { nProbe =>
-      val t0 = System.nanoTime()
-      val hits = exact.intersect(
+      val (hits, sec) = clock(exact.intersect(
         ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
           queries, centroids, cbs, k, nProbe, shortlist)
-          .select("q_id", "vec_id")).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+          .select("q_id", "vec_id")).count())
       val recall = hits.toDouble / (nQ.toLong * k)
       println(f"[probe] ivfpq: nProbe=$nProbe%2d recall@$k=$recall%.3f " +
         f"(${hits}/${nQ * k} hits, $sec%.2f s, candidate fraction " +
@@ -1762,76 +1581,22 @@ object Probe {
     * 20-dim descriptor's id-margin at this corpus size, reported for
     * the BASELINE record). */
   def mediaAnnProbe(spark: SparkSession, n: Int, nTwin: Int, c: Int = 64): Unit = {
-    import spark.implicits._
-    import graft.operators.{ImageEmbed, ImagePhash, Jpeg, ProductQuant}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mediaann").toString
-    val gen = spark.range(n).map { id =>
+    import graft.operators.{ImageEmbed, ImagePhash, Jpeg}
+    def jpeg(quality: Int)(id: Long): Array[Byte] = {
       val (w, h, px) = ImagePhash.smoothPixels(id)
-      (id.longValue, Jpeg.encode(w, h, px, quality = 90))
-    }.toDF("media_id", "payload")
-    timed(s"mediaann corpus write ($n base JPEGs)") {
-      gen.repartition(32).write.mode("overwrite").parquet(s"$tmp/imgs")
+      Jpeg.encode(w, h, px, quality = quality)
     }
-    val emb = ProductQuant.normalized(
-      ImageEmbed.embedFrame(spark.read.parquet(s"$tmp/imgs"))
-        .withColumnRenamed("media_id", "vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val nEmb = emb.count()
-    val sec = (System.nanoTime() - t0) / 1e9
+    val twins = Seq(Twins(n.toLong, 0, nTwin, jpeg(70)))
+    val imgs = writeTwinCorpus(spark, "mediaann", s"$n base JPEGs", n, jpeg(90), Nil)
+    val emb = ImageEmbed.embedFrame(spark.read.parquet(imgs)).persist(MEMORY_AND_DISK)
+    val (nEmb, sec) = clock(emb.count())
     println(f"[probe] mediaann decode+embed: $nEmb imgs in $sec%.2f s " +
       f"(${nEmb / sec}%.0f imgs/s)")
     assert(nEmb == n.toLong)
-    timed(s"IVFADC index build+persist: $n × dim${ImageEmbed.NCoef}, c=$c lists + PQ codes") {
-      ProductQuant.writeIvfPqIndex(spark, s"$tmp/idx", emb, c,
-        lloydIters = 1, m = ImageEmbed.AnnSubspaces)
-    }
-    emb.unpersist(blocking = false) // serving reads the INDEX, not the source
-    val (assigned, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, s"$tmp/idx")
-    val twins = spark.range(nTwin).map { i =>
-      val (w, h, px) = ImagePhash.smoothPixels(i)
-      (n.toLong + i, Jpeg.encode(w, h, px, quality = 70))
-    }.toDF("media_id", "payload")
-    val queries = ProductQuant.normalized(
-      ImageEmbed.embedFrame(twins).withColumnRenamed("media_id", "vec_id"))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shortlist = math.max(ProductQuant.Shortlist, n / c + 100)
-    val served = timed(s"serve $nTwin twin queries from the persisted index (nProbe=2)") {
-      val r = ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
-          queries, centroids, cbs, k = 1, nProbe = 2, shortlist = shortlist)
-        .select(col("q_id"), col("vec_id").as("top1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count(); r
-    }
-    val plantedHits = served
-      .filter(col("top1") === col("q_id") - n.toLong).count()
-    // serving-path verdict on a sample: exact brute-force top-1
-    val nSample = math.min(1000, nTwin)
-    val qs = queries.filter(col("q_id") < n.toLong + nSample)
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
-    val wE = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val agree = timed(s"exact baseline: $nSample queries × $n brute force") {
-      spark.read.parquet(s"$tmp/idx/assigned").select("vec_id", "v")
-        .crossJoin(broadcast(qs))
-        .withColumn("cos", dotQ)
-        .withColumn("rn", row_number().over(wE))
-        .filter(col("rn") === 1)
-        .select(col("q_id"), col("vec_id").as("exact1"))
-        .join(served, "q_id")
-        .filter(col("top1") === col("exact1")).count()
-    }
-    println(f"[probe] mediaann: planted-base top-1 $plantedHits/$nTwin " +
-      f"(${plantedHits.toDouble / nTwin}%.3f); served-vs-exact agreement " +
-      f"$agree/$nSample (${agree.toDouble / nSample}%.3f) at candidate " +
-      f"fraction ${2.0 / c}%.4f of rows × codes-only bytes")
-    served.unpersist(); queries.unpersist()
-    assert(agree >= (nSample * 95) / 100,
-      s"IVFADC top-1 must agree with exact top-1 on >=95% of queries, got $agree/$nSample")
-    assert(plantedHits >= (nTwin.toLong * 9) / 10,
-      s"planted-base top-1 must hold >=0.9 at this scale, got $plantedHits/$nTwin")
+    serveTwins(spark, "mediaann", emb, n, ImageEmbed.NCoef, ImageEmbed.AnnSubspaces,
+      ImageEmbed.embedFrame(twinPayloads(spark, twins)), twins, c,
+      agreeSample = math.min(1000, nTwin))
+    emb.unpersist(blocking = false)
   }
 
   /** `ivfpq_append` at scale: the arriving-batch mode of the ANN index.
@@ -1845,20 +1610,12 @@ object Probe {
     * appended vectors would hide inside the blended number). */
   def ivfpqAppendProbe(spark: SparkSession, n: Int, c: Int,
       dim: Int = 64, nQ: Int = 20, k: Int = 10): Unit = {
-    val shortlist = math.max(graft.operators.ProductQuant.Shortlist, n / c + 100)
     import graft.operators.ProductQuant
-    def comp(key: org.apache.spark.sql.Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
-    val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong))
-    val emb = ProductQuant.normalized(
-      spark.range(n).select(col("id").as("vec_id"))
-        .select(col("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => comp(cluster * dim + j) + comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25)
-            .as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shortlist = math.max(ProductQuant.Shortlist, n / c + 100)
+    val emb = ProductQuant.normalized(clustered(vecIds(spark, 0, n), c, dim))
+      .persist(MEMORY_AND_DISK)
     emb.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqapp").toString
+    val dir = tmpDir("graft-ivfpqapp")
     timed(s"index build+persist over the EVEN half (${n / 2} × dim$dim, c=$c)") {
       ProductQuant.writeIvfPqIndex(spark, dir,
         emb.filter(col("vec_id") % 2 === 0), c, lloydIters = 1)
@@ -1868,34 +1625,22 @@ object Probe {
     }
     val (assigned, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, dir)
     assert(assigned.count() == n.toLong, "append must grow the inverted file to the full corpus")
-    val queries = emb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
-    val wE = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val exact = timed(s"exact baseline: $nQ queries × $n brute force (full corpus)") {
-      val e = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", dotQ)
-        .withColumn("rn", row_number().over(wE))
-        .filter(col("rn") <= k)
-        .select("q_id", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
-    }
+    val queries = firstQueries(emb, nQ)
+    val exact = timed(s"exact baseline: $nQ queries × $n brute force (full corpus)")(
+      exactTopK(emb, queries, k))
     val nExactOdd = exact.filter(col("vec_id") % 2 === 1).count()
     emb.unpersist(blocking = false)
     val curve = Seq(1, 2, 4).map { nProbe =>
-      val t0 = System.nanoTime()
-      val served = ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
-          queries, centroids, cbs, k, nProbe, shortlist)
-        .select("q_id", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val hits = exact.intersect(served).count()
-      val oddHits = exact.intersect(served).filter(col("vec_id") % 2 === 1).count()
-      served.unpersist(blocking = false)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val ((hits, oddHits), sec) = clock {
+        val served = ProductQuant.ivfPqSearch(assigned, assigned.select("vec_id", "v"),
+            queries, centroids, cbs, k, nProbe, shortlist)
+          .select("q_id", "vec_id")
+          .persist(MEMORY_AND_DISK)
+        val r = (exact.intersect(served).count(),
+          exact.intersect(served).filter(col("vec_id") % 2 === 1).count())
+        served.unpersist(blocking = false)
+        r
+      }
       val recall = hits.toDouble / (nQ.toLong * k)
       val oddRecall = if (nExactOdd == 0) 1.0 else oddHits.toDouble / nExactOdd
       println(f"[probe] ivfpqappend: nProbe=$nProbe%2d recall@$k=$recall%.3f " +
@@ -1910,44 +1655,38 @@ object Probe {
   }
 
   /** [[graft.streaming.StreamingOps.streamingLineDedupSeeded]] drain at
-    * scale: `nDocs` NDJSON docs of [[linesPerDoc]] lines each, drawn from
-    * a pool of nDocs/2 distinct lines (each line recurs ~2·linesPerDoc
-    * times — the boilerplate shape), with a QUARTER of the pool pre-seeded
-    * into a persisted line-hash index (the already-curated corpus). The
-    * drain must emit exactly the un-seeded distinct lines, once each —
-    * index hits, cross-batch recurrences, and within-batch recurrences
-    * all suppressed by the one seeded state set. */
+    * scale: `nDocs` NDJSON docs of 8 lines each, drawn from a pool of
+    * nDocs/2 distinct lines (each line recurs ~16 times — the
+    * boilerplate shape), with a QUARTER of the pool pre-seeded into a
+    * persisted line-hash index (the already-curated corpus). The drain
+    * must emit exactly the un-seeded distinct lines, once each — index
+    * hits, cross-batch recurrences, and within-batch recurrences all
+    * suppressed by the one seeded state set. */
   def streamLineDedupProbe(spark: SparkSession, nDocs: Int): Unit = {
+    import graft.operators.IncrementalDedup
     val linesPerDoc = 8
     val nDistinct = nDocs / 2
     val nSeed = nDistinct / 4
-    val tmp = java.nio.file.Files.createTempDirectory("graft-slines").toString
-    val (idx, src, out, ck) = (s"$tmp/idx", s"$tmp/src", s"$tmp/out", s"$tmp/ck")
-    def lineText(lid: org.apache.spark.sql.Column) =
+    val tmp = tmpDir("graft-slines")
+    def lineText(lid: Column) =
       concat(lit("ln "), lid, lit(" t"), pmod(xxhash64(lid * 31), lit(50000)),
         lit(" t"), pmod(xxhash64(lid * 37), lit(50000)))
     // the curated corpus's index: fps of the first nSeed pool lines
-    graft.operators.IncrementalDedup.writeFpIndex(
+    IncrementalDedup.writeFpIndex(
       spark.range(nSeed).select(md5(lineText(col("id"))).as("fp")),
-      idx, nBuckets = 32)
+      s"$tmp/idx", nBuckets = 32)
     spark.range(nDocs)
       .select(col("id").as("doc_id"),
         concat_ws("\n", transform(sequence(lit(0), lit(linesPerDoc - 1)),
           k => lineText(pmod(col("id") * linesPerDoc + k, lit(nDistinct.toLong)))))
           .as("text"))
-      .repartition(32).write.json(src)
-    val q = graft.streaming.StreamingOps.foreachBatchParquetSink(
-      graft.streaming.StreamingOps.streamingLineDedupSeeded(
-        graft.streaming.StreamingOps.fileDropSource(
-          spark, src, "doc_id LONG, text STRING", maxFilesPerTrigger = 8),
-        graft.operators.IncrementalDedup.readFpIndex(spark, idx)),
-      out, ck)
-    timed(s"streamingLineDedupSeeded drain of $nDocs docs × $linesPerDoc lines " +
-        s"($nDistinct distinct, $nSeed pre-seeded, 8-file batches)") {
-      q.processAllAvailable()
+      .repartition(32).write.json(s"$tmp/src")
+    val kept = drain(spark, tmp, "doc_id LONG, text STRING",
+        s"streamingLineDedupSeeded drain of $nDocs docs × $linesPerDoc lines " +
+          s"($nDistinct distinct, $nSeed pre-seeded, 8-file batches)") {
+      graft.streaming.StreamingOps.streamingLineDedupSeeded(_,
+        IncrementalDedup.readFpIndex(spark, s"$tmp/idx"))
     }
-    q.stop()
-    val kept = spark.read.parquet(out)
     val n = kept.count()
     val nd = kept.select("line").distinct().count()
     println(s"[probe] streamlines: $n kept lines, $nd distinct " +
@@ -1965,31 +1704,20 @@ object Probe {
     require(nDocs % 4 == 0, "nDocs must divide by 4 (half good, quarter dup, quarter junk)")
     val nGood = nDocs / 2
     val nDup = nDocs / 4
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scurate").toString
-    val (src, out, ck) = (s"$tmp/src", s"$tmp/out", s"$tmp/ck")
+    val tmp = tmpDir("graft-scurate")
     // good docs lead with a stopword so the quality gate keeps them (the
     // curationProbe corpus shape); clones repeat original (id − nGood)'s
     // text exactly; junk is the gate-dropped zz run
-    def body(key: org.apache.spark.sql.Column) = concat_ws(" ", lit("the"),
-      concat_ws(" ", transform(sequence(lit(0), lit(38)),
-        j => concat(lit("t"), pmod(xxhash64(key * 53 + j), lit(200000))))))
     spark.range(nDocs)
       .select(col("id").as("doc_id"),
-        when(col("id") < nGood, body(col("id")))
-          .when(col("id") < nGood + nDup, body(col("id") - nGood))
+        when(col("id") < nGood, keeperText(col("id")))
+          .when(col("id") < nGood + nDup, keeperText(col("id") - nGood))
           .otherwise(concat_ws(" ", (0 until 40).map(_ => lit("zz")): _*))
           .as("text"))
-      .repartition(32).write.json(src)
-    val q = graft.streaming.StreamingOps.foreachBatchParquetSink(
-      graft.streaming.StreamingOps.streamingCuration(
-        graft.streaming.StreamingOps.fileDropSource(
-          spark, src, "doc_id LONG, text STRING", maxFilesPerTrigger = 8)),
-      out, ck)
-    timed(s"streamingCuration drain of $nDocs docs (25% dups, 25% junk, 8-file batches)") {
-      q.processAllAvailable()
-    }
-    q.stop()
-    val result = spark.read.parquet(out)
+      .repartition(32).write.json(s"$tmp/src")
+    val result = drain(spark, tmp, "doc_id LONG, text STRING",
+      s"streamingCuration drain of $nDocs docs (25% dups, 25% junk, 8-file batches)")(
+      graft.streaming.StreamingOps.streamingCuration(_))
     val kept = result.count()
     // streaming dedup keeps the FIRST ARRIVAL per fingerprint — arrival
     // order across micro-batches is not doc_id order, so either member of
@@ -2014,8 +1742,7 @@ object Probe {
   def ccProbe(spark: SparkSession, nChains: Int, chainLen: Int, longPath: Int): Unit = {
     val mask = 0x5A5A5AL // XOR with a constant: injective id scramble
     val L = chainLen.toLong
-    def scramble(c: org.apache.spark.sql.Column) =
-      c.bitwiseXOR(lit(mask))
+    def scramble(c: Column) = c.bitwiseXOR(lit(mask))
     val chainEdges = spark.range(nChains * (L - 1))
       .select((col("id") / (L - 1)).cast("long").as("c"),
         (col("id") % (L - 1)).as("p"))
@@ -2077,12 +1804,9 @@ object Probe {
     * re-budgets the whole pipeline on learned-tokenizer units. */
   def bpePackProbe(spark: SparkSession, nDocs: Int): Unit = {
     import graft.operators.Bpe
-    val trainBody = concat_ws(" ", lit("the"),
-      concat_ws(" ", transform(sequence(lit(0), lit(38)),
-        j => concat(lit("t"), pmod(xxhash64(col("id") * 53 + j), lit(200000))))))
     val merges = timed(s"BPE train over ${nDocs / 10} docs") {
       Bpe.train(spark.range(nDocs / 10)
-        .select(col("id").as("doc_id"), trainBody.as("text")))
+        .select(col("id").as("doc_id"), keeperText(col("id")).as("text")))
     }
     curationProbeWith(spark, nDocs, nDocs / 20, nDocs / 20, "bpepack",
       t => Bpe.encodeSymCount(t, merges).cast("long"))
@@ -2091,18 +1815,11 @@ object Probe {
   private def curationProbeWith(spark: SparkSession, nDocs: Int, nDup: Int,
       nJunk: Int, label: String,
       tokenCounter: Column => Column): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val body = concat_ws(" ", lit("the"),
-      concat_ws(" ", transform(sequence(lit(0), lit(38)),
-        j => concat(lit("t"), pmod(xxhash64(col("doc_id") * 53 + j), lit(200000))))))
     val base = spark.range(nDocs).select(col("id").as("doc_id"))
-      .select(col("doc_id"), body.as("text"))
+      .select(col("doc_id"), keeperText(col("doc_id")).as("text"))
     // clone i duplicates base doc i's text exactly, at a strictly higher id
-    val clones = spark.range(nDup).select(col("id").as("src"))
-      .select((col("src") + nDocs).as("doc_id"),
-        concat_ws(" ", lit("the"),
-          concat_ws(" ", transform(sequence(lit(0), lit(38)),
-            j => concat(lit("t"), pmod(xxhash64(col("src") * 53 + j), lit(200000)))))).as("text"))
+    val clones = spark.range(nDup)
+      .select((col("id") + nDocs).as("doc_id"), keeperText(col("id")).as("text"))
     val junk = spark.range(nJunk)
       .select((col("id") + nDocs + nDup).as("doc_id"),
         concat_ws(" ", (0 until 40).map(_ => lit("zz")): _*).as("text"))
@@ -2162,15 +1879,12 @@ object Probe {
     import graft.operators.SubstringDedup
     val L = SubstringDedup.SpanL
     require(nDocs >= 2 * nPlant)
-    val uniq = (lo: Int, hi: Int) => transform(sequence(lit(lo), lit(hi)),
-      j => concat(lit("d"), col("doc_id"), lit("x"), j))
-    val passage = transform(sequence(lit(21), lit(40)),
-      j => concat(lit("p"), expr("doc_id div 2"), lit("q"), j))
     val docs = spark.range(nDocs).select(col("id").as("doc_id"))
       .select(col("doc_id"),
         when(col("doc_id") < 2L * nPlant,
-          concat_ws(" ", concat(uniq(1, 20), passage, uniq(41, 60))))
-          .otherwise(concat_ws(" ", uniq(1, 60)))
+          concat_ws(" ", concat(spanToks("d", 1, 20),
+            passage("p", expr("doc_id div 2")), spanToks("d", 41, 60))))
+          .otherwise(concat_ws(" ", spanToks("d", 1, 60)))
           .as("text"))
     val out = timed(s"substring_dedup over $nDocs docs") {
       val o = SubstringDedup.duplicatedSpans(docs)
@@ -2188,32 +1902,32 @@ object Probe {
       "planted spans must be recovered exactly — one (21,40) span per planted doc, nothing else")
   }
 
-  /** Isolated per-key timing — the floor-adjudication diagnostic: run the
-    * named declared keys through the exact Bench harness (noop-format
-    * write, warmup pass, clearCache between passes) in a FRESH session
-    * with nothing else competing, `reps` passes each, and print min /
-    * median. Distinguishes "the old FLOOR is attainable on a quiet box"
-    * (min ≈ floor → fleet noise) from "a constant overhead moved" (min
-    * stays above floor even isolated → investigate the plan/session). */
-  def keyTimeProbe(spark: SparkSession, keys: Seq[String], reps: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    def runOnce(k: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(k)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    keys.foreach(runOnce) // warmup (JIT + codegen)
-    spark.catalog.clearCache()
-    val times = (1 to reps).flatMap { _ =>
-      val t = keys.map(k => k -> runOnce(k))
-      spark.catalog.clearCache()
-      t
-    }.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    keys.foreach { k =>
-      val s = times(k)
-      println(f"[probe] keytime $k%-24s min ${s.head}%.3f s  median ${s(s.length / 2)}%.3f s  ($reps reps)")
-    }
+  /** Batch ids nIdx…nIdx+nBatch (b = id − nIdx): [0, nDup) duplicate
+    * night-1 text, [nDup, nDup+nJunk) junk, the rest fresh. */
+  private def dupJunkBatch(spark: SparkSession, nIdx: Int, nBatch: Int,
+      nDup: Int, nJunk: Int): DataFrame = {
+    val bid = col("doc_id") - nIdx
+    spark.range(nIdx, nIdx.toLong + nBatch)
+      .select(col("id").as("doc_id"))
+      .select(col("doc_id"),
+        when(bid < nDup, freshText(bid))
+          .when(bid < nDup + nJunk,
+            concat_ws(" ", transform(sequence(lit(1), lit(30)), _ => lit("x"))))
+          .otherwise(freshText(col("doc_id")))
+          .as("text"))
+  }
+
+  /** The packed output of a [[dupJunkBatch]] step: (survivors, expected
+    * survivors — the fresh train-shard docs —, first offset, Σ n_tok,
+    * last offset end). */
+  private def packedStats(spark: SparkSession, out: DataFrame, nIdx: Int,
+      nBatch: Int, nDup: Int, nJunk: Int): (Long, Long, Long, Long, Long) = {
+    import graft.operators.Sampling
+    val expected = spark.range(nIdx.toLong + nDup + nJunk, nIdx.toLong + nBatch)
+      .filter(Sampling.hashBucket(col("id")) < Sampling.TrainUpper).count()
+    val r = out.agg(count(lit(1)), min("start_tok"), sum("n_tok"),
+      max(col("start_tok") + col("n_tok"))).head()
+    (r.getLong(0), expected, r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
   /** `curation_incremental` at scale: night 1 curates an `nIdx`-doc
@@ -2228,13 +1942,9 @@ object Probe {
     * 32 B/doc fingerprint index. */
   def incCurationProbe(spark: SparkSession, nIdx: Int, nBatch: Int,
       nDup: Int, nJunk: Int): Unit = {
-    import graft.operators.{CurationIncremental, Sampling}
+    import graft.operators.CurationIncremental
     require(nBatch > nDup + nJunk)
-    val dir = java.nio.file.Files.createTempDirectory("graft-inccur").toString
-    def freshText(idc: Column) = concat_ws(" ",
-      concat(lit("a the "),
-        concat_ws(" ", transform(sequence(lit(1), lit(30)),
-          j => concat(lit("d"), idc, lit("x"), j)))))
+    val dir = tmpDir("graft-inccur")
     val night1 = spark.range(nIdx).select(col("id").as("doc_id"),
       freshText(col("id")).as("text"))
     val t1 = timed(s"night 1 (init): curate $nIdx docs into fresh state") {
@@ -2243,30 +1953,16 @@ object Probe {
     }
     val cur1 = CurationIncremental.readCtl(spark, dir)._1
     assert(cur1 == t1, "cursor must equal night 1's packed total")
-    // batch ids nIdx…: [0, nDup) duplicate night-1 text, [nDup,
-    // nDup+nJunk) junk, rest fresh
-    val bid = col("doc_id") - nIdx
-    val night2 = spark.range(nIdx, nIdx.toLong + nBatch)
-      .select(col("id").as("doc_id"))
-      .select(col("doc_id"),
-        when(bid < nDup, freshText(bid))
-          .when(bid < nDup + nJunk,
-            concat_ws(" ", transform(sequence(lit(1), lit(30)), _ => lit("x"))))
-          .otherwise(freshText(col("doc_id")))
-          .as("text"))
     val out2 = timed(s"night 2: $nBatch-doc batch vs $nIdx-doc state " +
         s"($nDup dups, $nJunk junk)") {
-      val o = CurationIncremental.step(spark, night2, dir)
+      val o = CurationIncremental.step(spark,
+        dupJunkBatch(spark, nIdx, nBatch, nDup, nJunk), dir)
       o.cache().count()
       o
     }
-    val expected = spark.range(nIdx.toLong + nDup + nJunk, nIdx.toLong + nBatch)
-      .filter(Sampling.hashBucket(col("id")) < Sampling.TrainUpper).count()
-    val got = out2.count()
-    val minStart = out2.agg(min("start_tok")).head().getLong(0)
-    val sumTok = out2.agg(sum("n_tok")).head().getLong(0)
-    val maxEnd = out2.agg(max(col("start_tok") + col("n_tok"))).head().getLong(0)
-    val cur2 = spark.read.parquet(s"$dir/cursor").head().getLong(0)
+    val (got, expected, minStart, sumTok, maxEnd) =
+      packedStats(spark, out2, nIdx, nBatch, nDup, nJunk)
+    val cur2 = CurationIncremental.readCtl(spark, dir)._1
     println(s"[probe] inccuration: night-2 survivors $got (expected $expected), " +
       s"first offset $minStart (night-1 total $cur1), " +
       s"gap-free ${maxEnd == cur1 + sumTok}, cursor $cur2")
@@ -2294,42 +1990,31 @@ object Probe {
     * O(batch output), not O(state). */
   def streamExactlyOnceProbe(spark: SparkSession, nIdx: Int, nBatch: Int,
       nDup: Int, nJunk: Int): Unit = {
-    import graft.operators.{CurationIncremental, Sampling}
+    import graft.operators.{CurationIncremental, IncrementalDedup}
     require(nBatch > nDup + nJunk)
-    val state = java.nio.file.Files.createTempDirectory("graft-streameo").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-streameo-out").toString
-    val plain = java.nio.file.Files.createTempDirectory("graft-streameo-plain").toString
-    def freshText(idc: Column) = concat_ws(" ",
-      concat(lit("a the "),
-        concat_ws(" ", transform(sequence(lit(1), lit(30)),
-          j => concat(lit("d"), idc, lit("x"), j)))))
+    val state = tmpDir("graft-streameo")
+    val out = tmpDir("graft-streameo-out")
+    val plain = tmpDir("graft-streameo-plain")
+    def cursor() = CurationIncremental.readCtl(spark, state)._1
     val chop0 = spark.range(nIdx).select(col("id").as("doc_id"),
       freshText(col("id")).as("text"))
     timed(s"chop 0 (first): curate $nIdx docs, output committed, state committed") {
       assert(CurationIncremental.stepExactlyOnce(spark, chop0, state, out, 0L))
     }
-    val cur1 = spark.read.parquet(s"$state/cursor").head().getLong(0)
+    val cur1 = cursor()
     // the at-least-once case: chop 0 re-delivered — must skip in ~0 work
     timed("chop 0 REPLAYED: must no-op off the committed batch id") {
       assert(!CurationIncremental.stepExactlyOnce(spark, chop0, state, out, 0L))
     }
-    assert(spark.read.parquet(s"$state/cursor").head().getLong(0) == cur1,
-      "a replayed chop must not move the cursor")
-    val bid = col("doc_id") - nIdx
-    val chop1 = spark.range(nIdx, nIdx.toLong + nBatch)
-      .select(col("id").as("doc_id"))
-      .select(col("doc_id"),
-        when(bid < nDup, freshText(bid))
-          .when(bid < nDup + nJunk,
-            concat_ws(" ", transform(sequence(lit(1), lit(30)), _ => lit("x"))))
-          .otherwise(freshText(col("doc_id")))
-          .as("text"))
+    assert(cursor() == cur1, "a replayed chop must not move the cursor")
+    val chop1 = dupJunkBatch(spark, nIdx, nBatch, nDup, nJunk)
     // a crashed attempt at chop 1: delta staged, never committed
     CurationIncremental.stageAndCommit(spark,
       CurationIncremental.accepted(
         spark.range(3).select(col("id").as("doc_id"),
           freshText(col("id") + 7777777).as("text")),
-        spark.read.parquet(s"$state/fps").select("fp")).localCheckpoint(true),
+        IncrementalDedup.readFpIndex(spark, s"$state/fps").select("fp"))
+        .localCheckpoint(true),
       999999999L, state, commit = false, metaRow = Some(1L))
     timed(s"chop 1: $nBatch-doc batch vs $nIdx-doc state " +
         s"($nDup dups, $nJunk junk), rollback of the crashed stage first") {
@@ -2341,14 +2026,9 @@ object Probe {
       CurationIncremental.step(spark, chop1, plain)
         .agg(coalesce(sum("n_tok"), lit(0L))).head().getLong(0): Unit
     }
-    val out1 = spark.read.parquet(s"$out/batch=1")
-    val expected = spark.range(nIdx.toLong + nDup + nJunk, nIdx.toLong + nBatch)
-      .filter(Sampling.hashBucket(col("id")) < Sampling.TrainUpper).count()
-    val got = out1.count()
-    val minStart = out1.agg(min("start_tok")).head().getLong(0)
-    val sumTok = out1.agg(sum("n_tok")).head().getLong(0)
-    val maxEnd = out1.agg(max(col("start_tok") + col("n_tok"))).head().getLong(0)
-    val cur2 = spark.read.parquet(s"$state/cursor").head().getLong(0)
+    val (got, expected, minStart, sumTok, maxEnd) = packedStats(spark,
+      spark.read.parquet(s"$out/batch=1"), nIdx, nBatch, nDup, nJunk)
+    val cur2 = cursor()
     println(s"[probe] streameo: chop-1 survivors $got (expected $expected), " +
       s"first offset $minStart (chop-0 total $cur1), " +
       s"gap-free ${maxEnd == cur1 + sumTok}, cursor $cur2, " +
@@ -2370,13 +2050,9 @@ object Probe {
     * continue the pack cursor seam-free — all asserted exactly. */
   def incBudgetProbe(spark: SparkSession, nIdx: Int, nBatch: Int): Unit = {
     import graft.operators.CurationIncremental
-    val dir = java.nio.file.Files.createTempDirectory("graft-incbud").toString
+    val dir = tmpDir("graft-incbud")
     val budgets = (0 until 8).map(d =>
       s"L$d" -> (if (d < 4) 50000L else 1000000000000L))
-    def freshText(idc: Column) = concat_ws(" ",
-      concat(lit("a the "),
-        concat_ws(" ", transform(sequence(lit(1), lit(30)),
-          j => concat(lit("d"), idc, lit("x"), j)))))
     def docsOf(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(col("id").as("doc_id"),
         concat(lit("L"), pmod(col("id"), lit(8L))).as("lang"),
@@ -2386,9 +2062,7 @@ object Probe {
         budgets, init = true)
       o.cache().count(); o
     }
-    val cons1 = spark.read.parquet(s"$dir/budgets").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val cur1 = CurationIncremental.readCtl(spark, dir)._1
+    val (cur1, _, cons1) = CurationIncremental.readCtl(spark, dir)
     (0 until 4).foreach(d => assert(cons1(s"L$d") >= 50000L,
       s"night 1 must exhaust L$d: ${cons1(s"L$d")}"))
     val out2 = timed(s"night 2: full macro over $nBatch docs vs persisted state") {
@@ -2401,8 +2075,7 @@ object Probe {
       .count()
     // counters equal the selected sums across both nights, and every
     // domain's fills tile [0, counter) gap-free
-    val cons2 = spark.read.parquet(s"$dir/budgets").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (cur2, _, cons2) = CurationIncremental.readCtl(spark, dir)
     val fills = out1.select("lang", "n_tok", "mix_start")
       .union(out2.select("lang", "n_tok", "mix_start"))
       .groupBy("lang").agg(sum("n_tok").as("tot"), min("mix_start").as("lo"),
@@ -2414,10 +2087,9 @@ object Probe {
       cons2(d) == tot && lo == 0L && hi == tot
     }
     // pack cursor seam
-    val minStart2 = out2.agg(min("start_tok")).head().getLong(0)
-    val sum2 = out2.agg(sum("n_tok")).head().getLong(0)
-    val maxEnd2 = out2.agg(max(col("start_tok") + col("n_tok"))).head().getLong(0)
-    val cur2 = spark.read.parquet(s"$dir/cursor").head().getLong(0)
+    val seam = out2.agg(min("start_tok"), sum("n_tok"),
+      max(col("start_tok") + col("n_tok"))).head()
+    val (minStart2, sum2, maxEnd2) = (seam.getLong(0), seam.getLong(1), seam.getLong(2))
     println(s"[probe] incbudget: night-2 exhausted-domain selections " +
       s"$exhausted2 (must be 0); counters ${cons2.toSeq.sorted.map(_._2).mkString(",")}; " +
       s"tiling-exact $tilingOk; night-2 first offset $minStart2 " +
@@ -2444,19 +2116,14 @@ object Probe {
       nPlant: Int): Unit = {
     import graft.operators.{SubstringDedup, SubstringIncremental}
     require(nIdx >= nPlant && nArrive >= nPlant)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssubstr").toString
-    val (idx, src, out, ck) = (s"$tmp/idx", s"$tmp/src", s"$tmp/out", s"$tmp/ck")
-    val uniq = (tag: String, lo: Int, hi: Int) =>
-      transform(sequence(lit(lo), lit(hi)),
-        j => concat(lit(tag), col("doc_id"), lit("x"), j))
-    val passage = (pref: Column) => transform(sequence(lit(21), lit(40)),
-      j => concat(lit("c"), pref, lit("q"), j))
+    val tmp = tmpDir("graft-ssubstr")
+    val idx = s"$tmp/idx"
     val idxDocs = spark.range(nIdx).select(col("id").as("doc_id"))
       .select(col("doc_id"),
         when(col("doc_id") < nPlant,
-          concat_ws(" ", concat(uniq("i", 1, 20), passage(col("doc_id")),
-            uniq("i", 41, 60))))
-          .otherwise(concat_ws(" ", uniq("i", 1, 60)))
+          concat_ws(" ", concat(spanToks("i", 1, 20), passage("c", col("doc_id")),
+            spanToks("i", 41, 60))))
+          .otherwise(concat_ws(" ", spanToks("i", 1, 60)))
           .as("text"))
     timed(s"seed digest index: $nIdx docs") {
       SubstringIncremental.writeDigestIndex(
@@ -2467,24 +2134,18 @@ object Probe {
       .select(col("id").as("doc_id"))
       .select(col("doc_id"),
         when(bid < nPlant,
-          concat_ws(" ", concat(uniq("s", 1, 20), passage(bid),
-            uniq("s", 41, 60))))
-          .otherwise(concat_ws(" ", uniq("s", 1, 60)))
+          concat_ws(" ", concat(spanToks("s", 1, 20), passage("c", bid),
+            spanToks("s", 41, 60))))
+          .otherwise(concat_ws(" ", spanToks("s", 1, 60)))
           .as("text"))
-      .repartition(32).write.json(src)
-    val q = graft.streaming.StreamingOps.foreachBatchParquetSink(
-      graft.streaming.StreamingOps.streamingSubstringMarksSeeded(
-        graft.streaming.StreamingOps.fileDropSource(
-          spark, src, "doc_id LONG, text STRING", maxFilesPerTrigger = 8),
-        SubstringIncremental.readDigestIndex(spark, idx)),
-      out, ck)
-    timed(s"streamingSubstringMarksSeeded drain of $nArrive docs " +
-        s"($nPlant seeded-passage hits, 8-file batches)") {
-      q.processAllAvailable()
+      .repartition(32).write.json(s"$tmp/src")
+    val marks = drain(spark, tmp, "doc_id LONG, text STRING",
+        s"streamingSubstringMarksSeeded drain of $nArrive docs " +
+          s"($nPlant seeded-passage hits, 8-file batches)") {
+      graft.streaming.StreamingOps.streamingSubstringMarksSeeded(_,
+        SubstringIncremental.readDigestIndex(spark, idx))
     }
-    q.stop()
-    val spans = SubstringDedup.mergeRegions(
-      spark.read.parquet(out).select("doc_id", "pos"))
+    val spans = SubstringDedup.mergeRegions(marks.select("doc_id", "pos"))
     val n = spans.count()
     val exact = spans.filter(col("start_tok") === 21 && col("end_tok") === 40
       && col("doc_id") - nIdx < nPlant).count()
@@ -2509,19 +2170,14 @@ object Probe {
       nPlant: Int): Unit = {
     import graft.operators.{SubstringDedup, SubstringIncremental}
     require(nBatch >= 2 * nPlant && nIdx >= nPlant)
-    val dir = java.nio.file.Files.createTempDirectory("graft-incsubstr").toString
-    val uniq = (tag: String, lo: Int, hi: Int) =>
-      transform(sequence(lit(lo), lit(hi)),
-        j => concat(lit(tag), col("doc_id"), lit("x"), j))
+    val dir = tmpDir("graft-incsubstr")
     // index docs 0..nIdx-1: docs < nPlant carry cross passage c<k>
-    val crossPassage = (pref: Column) => transform(sequence(lit(21), lit(40)),
-      j => concat(lit("c"), pref, lit("q"), j))
     val idxDocs = spark.range(nIdx).select(col("id").as("doc_id"))
       .select(col("doc_id"),
         when(col("doc_id") < nPlant,
-          concat_ws(" ", concat(uniq("i", 1, 20), crossPassage(col("doc_id")),
-            uniq("i", 41, 60))))
-          .otherwise(concat_ws(" ", uniq("i", 1, 60)))
+          concat_ws(" ", concat(spanToks("i", 1, 20), passage("c", col("doc_id")),
+            spanToks("i", 41, 60))))
+          .otherwise(concat_ws(" ", spanToks("i", 1, 60)))
           .as("text"))
     timed(s"digest index build: $nIdx docs (~53 windows/doc)") {
       SubstringIncremental.writeDigestIndex(
@@ -2532,18 +2188,17 @@ object Probe {
     //   nPlant ≤ b < 2*nPlant → in-batch passage p<(b-nPlant)/2>, pairwise
     //   else                  → unique noise
     val bid = col("doc_id") - nIdx
-    val inBatchPassage = transform(sequence(lit(21), lit(40)),
-      j => concat(lit("p"), expr(s"(doc_id - $nIdx - $nPlant) div 2"), lit("q"), j))
+    val inBatchPassage = passage("p", expr(s"(doc_id - $nIdx - $nPlant) div 2"))
     val batch = spark.range(nIdx, nIdx.toLong + nBatch)
       .select(col("id").as("doc_id"))
       .select(col("doc_id"),
         when(bid < nPlant,
-          concat_ws(" ", concat(uniq("b", 1, 20), crossPassage(bid),
-            uniq("b", 41, 60))))
+          concat_ws(" ", concat(spanToks("b", 1, 20), passage("c", bid),
+            spanToks("b", 41, 60))))
           .when(bid < 2L * nPlant,
-            concat_ws(" ", concat(uniq("b", 1, 20), inBatchPassage,
-              uniq("b", 41, 60))))
-          .otherwise(concat_ws(" ", uniq("b", 1, 60)))
+            concat_ws(" ", concat(spanToks("b", 1, 20), inBatchPassage,
+              spanToks("b", 41, 60))))
+          .otherwise(concat_ws(" ", spanToks("b", 1, 60)))
           .as("text"))
     val spans = timed(s"incremental step: $nBatch-doc batch vs $nIdx-doc index") {
       val s = SubstringIncremental.step(spark, batch, dir)
@@ -2563,8 +2218,7 @@ object Probe {
     // text must fully mark from the updated index
     val resent = spark.range(1).select(
       lit(nIdx + nBatch + 1L).as("doc_id"),
-      concat_ws(" ", transform(sequence(lit(1), lit(60)),
-        j => concat(lit("b"), lit(nIdx.toLong + nBatch - 1), lit("x"), j))).as("text"))
+      uniqueToks("b", lit(nIdx.toLong + nBatch - 1), 1, 60).as("text"))
     val spans2 = SubstringIncremental.step(spark, resent, dir).collect()
     assert(spans2.map(r => (r.getLong(1), r.getLong(2))).toSeq == Seq((1L, 60L)),
       "a re-sent batch-1 doc must fully mark against the appended index")
@@ -2580,50 +2234,27 @@ object Probe {
     * scan + rerank time, and recall@10 for shortlist ∈ {100, 1000}. */
   def pqProbe(spark: SparkSession, n: Int, c: Int,
       dim: Int = 64, nQ: Int = 20, k: Int = 10): Unit = {
-    import graft.operators.{ProductQuant, Similarity}
-    def comp(key: org.apache.spark.sql.Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
-    val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong))
-    val emb = ProductQuant.normalized(
-      spark.range(n).select(col("id").as("vec_id"))
-        .select(col("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => comp(cluster * dim + j) + comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25)
-            .as("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import graft.operators.ProductQuant
+    val emb = ProductQuant.normalized(clustered(vecIds(spark, 0, n), c, dim))
+      .persist(MEMORY_AND_DISK)
     emb.count()
     val cbs = timed(s"train codebooks on a ${n / 10}-vector sample") {
       ProductQuant.trainCodebooks(spark, emb.filter(col("vec_id") % 10 === 0))
     }
     val coded = timed(s"encode $n vectors to ${ProductQuant.M}×4-bit codes") {
       val cd = ProductQuant.encode(emb, cbs).select("vec_id", "codes")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       cd.count(); cd
     }
-    val queries = emb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
-    val wE = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val exact = timed(s"exact baseline: $nQ queries × $n vectors brute force") {
-      val e = emb.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", dotQ)
-        .withColumn("rn", row_number().over(wE))
-        .filter(col("rn") <= k)
-        .select("q_id", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
-    }
+    val queries = firstQueries(emb, nQ)
+    val exact = timed(s"exact baseline: $nQ queries × $n vectors brute force")(
+      exactTopK(emb, queries, k))
     val recalls = Seq(100, 1000).map { sl =>
-      val t0 = System.nanoTime()
       // coded is pre-persisted, so this times the ADC scan + rerank only
       // (encode cost was measured above) — the serving-path shape
-      val approx = ProductQuant.pqSearch(emb, queries, cbs, k, shortlist = sl)
-        .select("q_id", "vec_id")
-      val hits = exact.intersect(approx).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (hits, sec) = clock(exact.intersect(
+        ProductQuant.pqSearch(emb, queries, cbs, k, shortlist = sl)
+          .select("q_id", "vec_id")).count())
       val recall = hits.toDouble / (nQ.toLong * k)
       println(f"[probe] pq: shortlist=$sl%4d recall@$k=$recall%.3f " +
         f"($hits/${nQ * k} hits, $sec%.2f s)")
@@ -2650,8 +2281,6 @@ object Probe {
   def ivfRetrainProbe(spark: SparkSession, n: Int, c: Int, nQ: Int,
       dim: Int = 64, k: Int = 10): Unit = {
     import graft.operators.ProductQuant
-    def comp(key: Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
     // corpus A: c clusters over the hash cube; corpus B: c NEW clusters
     // at centers the A-trained models never saw (id-space offset changes
     // every center hash). The drift effect under frozen models is that
@@ -2660,19 +2289,13 @@ object Probe {
     // model defects at once, which is why the gate below is PARITY WITH
     // A FRESH BUILD over the same vectors (the strongest result any
     // retrain can deliver), with the before/after delta reported.
-    def corpus(ids: org.apache.spark.sql.DataFrame, centerSalt: Long) = {
-      val cluster = pmod(xxhash64(col("vec_id")), lit(c.toLong)) + centerSalt
-      ProductQuant.normalized(ids.select(col("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          j => comp(cluster * dim + j) +
-            comp(col("vec_id") * dim + j + lit(7777777L)) * 0.25).as("v")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val a = corpus(spark.range(n).select(col("id").as("vec_id")), 0L)
-    val b = corpus(spark.range(n, 2L * n).select(col("id").as("vec_id")),
-      1000000L)
+    def corpus(lo: Long, centerSalt: Long) =
+      ProductQuant.normalized(clustered(vecIds(spark, lo, lo + n), c, dim, centerSalt))
+        .persist(MEMORY_AND_DISK)
+    val a = corpus(0L, 0L)
+    val b = corpus(n.toLong, 1000000L)
     a.count(); b.count()
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfrt").toString
+    val path = tmpDir("graft-ivfrt")
     timed(s"build IVFADC on corpus A ($n vectors, $c lists)") {
       ProductQuant.writeIvfPqIndex(spark, path, a, c): Unit
     }
@@ -2682,22 +2305,9 @@ object Probe {
     val queries = b.filter(col("vec_id") < n + nQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
       .localCheckpoint(true)
-    val all = a.unionByName(b)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dotQ = aggregate(zip_with(col("v"), col("qv"), (x, y) => x * y),
-      lit(0d), (s, x) => s + x)
-    val wE = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val exact = timed(s"exact baseline: $nQ drifted queries × ${2 * n} brute") {
-      val e = all.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", dotQ)
-        .withColumn("rn", row_number().over(wE))
-        .filter(col("rn") <= k)
-        .select("q_id", "vec_id")
-        .localCheckpoint(true)
-      e.count(); e
-    }
+    val all = a.unionByName(b).persist(MEMORY_AND_DISK)
+    val exact = timed(s"exact baseline: $nQ drifted queries × ${2 * n} brute")(
+      exactTopK(all, queries, k))
     def servedRecall(dir: String, label: String): Double = {
       val (assigned, cent, cbs) = ProductQuant.readIvfPqIndex(spark, dir)
       val approx = ProductQuant.ivfPqSearch(assigned,
@@ -2709,17 +2319,17 @@ object Probe {
       println(f"[probe] ivfretrain: recall@$k $label = $r%.3f ($hits/${nQ * k})")
       r
     }
+    def indexed() = ProductQuant.readIvfPqIndex(spark, path)._1.count()
     val before = servedRecall(path, "BEFORE retrain (frozen A models)")
-    val nBefore = spark.read.parquet(s"$path/assigned").count()
+    val nBefore = indexed()
     timed(s"ivfpqRetrain over the ${2 * n}-vector index (4 Lloyd iters)") {
       ProductQuant.ivfpqRetrain(spark, path, c, lloydIters = 4): Unit
     }
-    val nAfter = spark.read.parquet(s"$path/assigned").count()
+    val nAfter = indexed()
     val after = servedRecall(path, "AFTER retrain (models over A ∪ B)")
     // the reference any retrain is honestly judged against: a
     // from-scratch build over the identical vector set and parameters
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("graft-ivfrt-fresh").toString
+    val freshDir = tmpDir("graft-ivfrt-fresh")
     timed(s"fresh-build reference over the same ${2 * n} vectors") {
       ProductQuant.writeIvfPqIndex(spark, freshDir, all, c,
         lloydIters = 4): Unit
@@ -2727,7 +2337,7 @@ object Probe {
     val fresh = servedRecall(freshDir, "FRESH BUILD reference (A ∪ B)")
     println(f"[probe] ivfretrain: drift delta after-before = ${after - before}%+.3f, " +
       f"retrain-vs-fresh gap = ${after - fresh}%+.3f")
-    all.unpersist(); a.unpersist(); b.unpersist()
+    all.unpersist(); a.unpersist(); b.unpersist(); exact.unpersist()
     assert(nAfter == nBefore, "retrain must preserve membership exactly")
     assert(after >= fresh - 0.05,
       f"retrained models must match a from-scratch build: after=$after%.3f fresh=$fresh%.3f")
@@ -2741,13 +2351,9 @@ object Probe {
     * — and the post-append index cardinality is checked too. */
   def incDedupProbe(spark: SparkSession, nIdx: Int, nBatch: Int): Unit = {
     import graft.operators.IncrementalDedup
-    val dir = java.nio.file.Files.createTempDirectory("incdedup").toString
-    // 30 unique tokens per doc keyed by (prefix, seed)
-    def body(prefix: String, seed: Column) = concat_ws(" ",
-      transform(sequence(lit(0), lit(29)),
-        j => concat(lit(prefix), seed, lit("x"), j)))
+    val dir = tmpDir("incdedup")
     val idxDocs = spark.range(nIdx)
-      .select(col("id").as("doc_id"), body("i", col("id")).as("text"))
+      .select(col("id").as("doc_id"), uniqueToks("i", col("id")).as("text"))
     timed(s"build fp index over $nIdx docs") {
       IncrementalDedup.writeFpIndex(
         IncrementalDedup.fingerprints(idxDocs).select("fp"), dir)
@@ -2758,12 +2364,12 @@ object Probe {
     val batch = spark.range(nBatch).select((col("id") + base).as("doc_id"))
       .select(col("doc_id"),
         when(col("doc_id") < base + nClone,
-          body("i", col("doc_id") - base))                // index clone
+          uniqueToks("i", col("doc_id") - base))          // index clone
         .when(col("doc_id") < base + nClone + nPairDocs,
           // Spark `/` is float division — floor it so both pair members
           // share one integer seed
-          body("p", floor((col("doc_id") - base - nClone) / 2).cast("long")))
-        .otherwise(body("f", col("doc_id")))              // fresh
+          uniqueToks("p", floor((col("doc_id") - base - nClone) / 2).cast("long")))
+        .otherwise(uniqueToks("f", col("doc_id")))        // fresh
         .as("text"))
     val out = timed(s"incremental step over $nBatch docs vs $nIdx-doc index") {
       val o = IncrementalDedup.step(spark, batch, dir)
@@ -2789,6 +2395,20 @@ object Probe {
       "append must add exactly the survivor fingerprints")
   }
 
+  /** 60 topical tokens of doc `docId`: j < 20 from the doc's topic core
+    * (40 types per topic of `nTopics`), the rest from a 1M-type broad pool
+    * — topical reuse is what gives embedding space the cluster structure
+    * IVF recall depends on. `swap(j)` marks the tokens a paraphrase
+    * replaces by `s<j>`. */
+  private def topicalText(docId: Column, nTopics: Int, swap: Column => Column): Column =
+    concat_ws(" ", transform(sequence(lit(0), lit(59)), j => {
+      val core = concat(lit("t"), pmod(docId, lit(nTopics.toLong)),
+        lit("c"), pmod(xxhash64(docId, j), lit(40L)))
+      val broad = concat(lit("w"), pmod(xxhash64(docId, j, lit("b")), lit(1000000L)))
+      when(swap(j), concat(lit("s"), j))
+        .otherwise(when(j < 20, core).otherwise(broad))
+    }))
+
   /** `text_embed_incremental` at scale — the E14 probe shape on the text
     * embedding, at the geometry the corpus size calls for (the fixture's
     * 8-bit × 4-table bands are the ≤10k geometry; here 16-bit × 12-table
@@ -2806,20 +2426,13 @@ object Probe {
       nTwin: Int): Unit = {
     import graft.operators.TextEmbed
     require(nBatch >= nTwin && nIdx >= nTwin / 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-textinc").toString
+    val dir = tmpDir("graft-textinc")
     val nTopics = 1024
     val (bandBits, nTables, threshold) = (16, 12, 0.85)
-    // the textann topical corpus shape; swapIdx < 0 → no edit
-    def toksOf(docId: Column, swapAt: Column): Column =
-      concat_ws(" ", transform(sequence(lit(0), lit(59)), j => {
-        val core = concat(lit("t"), pmod(docId, lit(nTopics.toLong)),
-          lit("c"), pmod(xxhash64(docId, j), lit(40L)))
-        val broad = concat(lit("w"), pmod(xxhash64(docId, j, lit("b")), lit(1000000L)))
-        when(j === swapAt, concat(lit("s"), j))
-          .otherwise(when(j < 20, core).otherwise(broad))
-      }))
+    def toksOf(docId: Column, edited: Boolean): Column =
+      topicalText(docId, nTopics, j => if (edited) j === 37 else lit(false))
     val idxDocs = spark.range(nIdx).select(col("id").as("doc_id"),
-      toksOf(col("id"), lit(-1)).as("text"))
+      toksOf(col("id"), edited = false).as("text"))
     timed(s"text-embed index build: $nIdx docs, ${bandBits}-bit × $nTables tables") {
       TextEmbed.writeTextEmbedIndex(
         TextEmbed.embedText(idxDocs), dir,
@@ -2837,11 +2450,11 @@ object Probe {
     val batch = spark.range(nIdx, nIdx.toLong + nBatch)
       .select(col("id").as("doc_id"))
       .select(col("doc_id"),
-        when(bid < half, toksOf(bid, lit(37)))
+        when(bid < half, toksOf(bid, edited = true))
           .when(bid < nTwin,
-            when(pmod(bid, lit(2)) === 0, toksOf(pairSeed, lit(-1)))
-              .otherwise(toksOf(pairSeed, lit(37))))
-          .otherwise(toksOf(col("doc_id") + 7000000L, lit(-1)))
+            when(pmod(bid, lit(2)) === 0, toksOf(pairSeed, edited = false))
+              .otherwise(toksOf(pairSeed, edited = true)))
+          .otherwise(toksOf(col("doc_id") + 7000000L, edited = false))
           .as("text"))
     val (idxBands, idxVecs) = TextEmbed.readTextEmbedIndex(spark, dir,
       bandBits, nTables)
@@ -2864,50 +2477,33 @@ object Probe {
         "pair winners keep, fresh survive, zero spurious kills")
   }
 
-  /** `text_ann` at scale: 1M topical documents embedded by
-    * `graft_hash_embed` and served through the persisted IVFADC index,
-    * with `nTwin` paraphrase twins (every 20th token swapped — a ~10%
-    * edit, HARSHER than the fixture's 2.5%) as the query batch. Corpus
-    * structure mirrors real text: 1024 topics, each doc drawing a third
-    * of its tokens from its topic's 40-word core vocabulary and the rest
-    * from a 1M-type broad pool — topical reuse is what gives embedding
-    * space the cluster structure IVF recall depends on. Ground truth is
-    * the twin construction itself: every twin's exact nearest neighbor
-    * is its base by a wide margin (recorded: min twin→base cosine vs
-    * max twin→runner-up cosine), so rank-1 identity is assertable
-    * without a brute-force pass per query. */
+  /** `text_ann` at scale: 1M topical documents ([[topicalText]], 1024
+    * topics) embedded by `graft_hash_embed` and served through the
+    * persisted IVFADC index, with `nTwin` paraphrase twins (every 20th
+    * token swapped — a ~10% edit, HARSHER than the fixture's 2.5%) as
+    * the query batch. Ground truth is the twin construction itself:
+    * every twin's exact nearest neighbor is its base by a wide margin
+    * (recorded: min twin→base cosine vs max twin→runner-up cosine), so
+    * rank-1 identity is assertable without a brute-force pass per query.
+    * Unlike the media serving arm, the gate is a recall curve over
+    * nProbe. */
   def textAnnProbe(spark: SparkSession, n: Int, nTwin: Int): Unit = {
     import graft.operators.{ProductQuant, TextEmbed}
     val nTopics = 1024
-    // deterministic topical token stream, expression-built: j<20 → topic
-    // core (40 types per topic), else broad pool (1M types)
-    def toksOf(docId: Column, swap: Boolean): Column =
-      concat_ws(" ", transform(sequence(lit(0), lit(59)), j => {
-        val core = concat(lit("t"), pmod(docId, lit(nTopics.toLong)),
-          lit("c"), pmod(xxhash64(docId, j), lit(40L)))
-        val broad = concat(lit("w"), pmod(xxhash64(docId, j, lit("b")), lit(1000000L)))
-        val tok = when(j < 20, core).otherwise(broad)
-        if (swap) when(pmod(j, lit(20)) === 7, concat(lit("s"), j)).otherwise(tok)
-        else tok
-      }))
     val docs = spark.range(n).select(col("id").as("vec_id"),
-      toksOf(col("id"), swap = false).as("text"))
+      topicalText(col("id"), nTopics, _ => lit(false)).as("text"))
     val emb = timed(s"graft_hash_embed over $n docs (60 tokens each)") {
       val e = ProductQuant.normalized(TextEmbed.embedText(docs, "vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       e.count(); e
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-textann").toString
-    timed(s"IVFADC index build+persist: $n × dim${TextEmbed.Dim}, c=$nTopics lists") {
-      ProductQuant.writeIvfPqIndex(spark, dir, emb, c = nTopics,
-        lloydIters = 2, m = 8)
-    }
+    val (assigned, centroids, cbs) = ivfPqIndex(spark, tmpDir("graft-textann"),
+      emb, n, TextEmbed.Dim, c = nTopics, lloydIters = 2, m = 8)
     emb.unpersist(blocking = false)
-    val (assigned, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, dir)
     // twins of bases 0..nTwin-1, query ids offset clear of the corpus
     val twins = spark.range(nTwin).select(
       (col("id") + 2L * n).as("vec_id"),
-      toksOf(col("id"), swap = true).as("text"))
+      topicalText(col("id"), nTopics, j => pmod(j, lit(20)) === 7).as("text"))
     val queries = ProductQuant.normalized(TextEmbed.embedText(twins, "vec_id"))
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
       .localCheckpoint(true)
@@ -2956,12 +2552,9 @@ object Probe {
   def indexMaintProbe(spark: SparkSession, nIdx: Int, nAppend: Int,
       perAppend: Int): Unit = {
     import graft.operators.{IncrementalDedup, IndexMaintenance}
-    val dir = java.nio.file.Files.createTempDirectory("indexmaint").toString
-    def body(prefix: String, seed: Column) = concat_ws(" ",
-      transform(sequence(lit(0), lit(29)),
-        j => concat(lit(prefix), seed, lit("x"), j)))
+    val dir = tmpDir("indexmaint")
     val idxDocs = spark.range(nIdx)
-      .select(col("id").as("doc_id"), body("i", col("id")).as("text"))
+      .select(col("id").as("doc_id"), uniqueToks("i", col("id")).as("text"))
     timed(s"build fp index over $nIdx docs") {
       IncrementalDedup.writeFpIndex(
         IncrementalDedup.fingerprints(idxDocs).select("fp"), dir)
@@ -2970,7 +2563,7 @@ object Probe {
       (0 until nAppend).foreach { k =>
         val night = spark.range(perAppend)
           .select(col("id").as("doc_id"),
-            body(s"a${k}_", col("id")).as("text"))
+            uniqueToks(s"a${k}_", col("id")).as("text"))
         IncrementalDedup.writeFpIndex(
           IncrementalDedup.fingerprints(night).select("fp"), dir,
           append = true)
@@ -2983,8 +2576,8 @@ object Probe {
     // probe join: 100k batch, 10% clones of index docs
     val nBatch = 100000; val nClone = nBatch / 10
     val batch = spark.range(nBatch).select(col("id").as("doc_id"),
-      when(col("id") < nClone, body("i", col("id")))
-        .otherwise(body("q", col("id"))).as("text"))
+      when(col("id") < nClone, uniqueToks("i", col("id")))
+        .otherwise(uniqueToks("q", col("id"))).as("text"))
     def probe(): Long = IncrementalDedup.dedupAgainst(
       batch, IncrementalDedup.readFpIndex(spark, dir).select("fp")).count()
     val expect = (nBatch - nClone).toLong
@@ -3010,7 +2603,7 @@ object Probe {
       IndexMaintenance.retractKeys(spark, dir, "fp", doomed))
     assert(removed == 1000L, s"takedown must remove exactly the keys: $removed")
     val twins = spark.range(1000).select(
-      (col("id") + 90000000L).as("doc_id"), body("i", col("id")).as("text"))
+      (col("id") + 90000000L).as("doc_id"), uniqueToks("i", col("id")).as("text"))
     val accepted = IncrementalDedup.dedupAgainst(
       twins, IncrementalDedup.readFpIndex(spark, dir).select("fp")).count()
     println(s"[probe] indexmaint: removed $removed fps, " +
@@ -3031,12 +2624,9 @@ object Probe {
     * count. */
   def incMinhashProbe(spark: SparkSession, nIdx: Int, nBatch: Int): Unit = {
     import graft.operators.MinHashIncremental
-    val dir = java.nio.file.Files.createTempDirectory("incminhash").toString
-    def body(prefix: String, seed: Column) = concat_ws(" ",
-      transform(sequence(lit(0), lit(29)),
-        j => concat(lit(prefix), seed, lit("x"), j)))
+    val dir = tmpDir("incminhash")
     val idxDocs = spark.range(nIdx)
-      .select(col("id").as("doc_id"), body("i", col("id")).as("text"))
+      .select(col("id").as("doc_id"), uniqueToks("i", col("id")).as("text"))
     timed(s"build band index over $nIdx docs") {
       MinHashIncremental.writeBandIndex(
         MinHashIncremental.prepared(idxDocs), dir)
@@ -3048,14 +2638,14 @@ object Probe {
       .select(col("doc_id"),
         when(col("doc_id") < base + nClone,
           // index near-clone: the index body plus ONE appended token
-          concat(body("i", col("doc_id") - base), lit(" extra"),
+          concat(uniqueToks("i", col("doc_id") - base), lit(" extra"),
             col("doc_id") - base))
         .when(col("doc_id") < base + nClone + nPairDocs,
           // in-batch near-pair: shared base body + a member-distinct tail
           concat(
-            body("p", floor((col("doc_id") - base - nClone) / 2).cast("long")),
+            uniqueToks("p", floor((col("doc_id") - base - nClone) / 2).cast("long")),
             lit(" tail"), col("doc_id")))
-        .otherwise(body("f", col("doc_id")))              // fresh
+        .otherwise(uniqueToks("f", col("doc_id")))        // fresh
         .as("text"))
     val out = timed(s"incremental near-dup step over $nBatch docs vs $nIdx-doc index") {
       val o = MinHashIncremental.step(spark, batch, dir)
@@ -3122,13 +2712,12 @@ object Probe {
     // DuckDB oracle's plan shape, here at probe scale
     val entries = modelRow.select(explode(map_entries(col("model"))).as("e"))
       .select(col("e.key").as("t"), col("e.value").as("lp"))
-    val oov = oovLp
     val rowSum = scored
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"),
         size(split(col("text"), " ")).as("n_tok"))
       .join(entries, Seq("t"), "left")
       .groupBy("doc_id", "n_tok")
-      .agg(sum(coalesce(col("lp"), lit(oov))).as("lpsum"))
+      .agg(sum(coalesce(col("lp"), lit(oovLp))).as("lpsum"))
       .select(col("doc_id"),
         round(col("lpsum").cast("double") / LmScore.Micro / col("n_tok"), 6)
           .as("want"))
@@ -3161,9 +2750,7 @@ object Probe {
     val dim = 64
     val nSingle = n - 4 * nGroups
     require(nSingle > c, "need more singletons than seed centroids")
-    def comp(key: Column) =
-      pmod(xxhash64(key), lit(1000)).cast("double") / 500.0 - 1.0
-    val singles = spark.range(nSingle).select(col("id").as("vec_id"))
+    val singles = vecIds(spark, 0, nSingle)
       .select(col("vec_id"), transform(sequence(lit(0), lit(dim - 1)),
         j => comp(col("vec_id") * dim + j)).as("v"))
     // group member m of group g = the group base vector, bit-identical
@@ -3174,7 +2761,7 @@ object Probe {
       .select(col("vec_id"), transform(sequence(lit(0), lit(dim - 1)),
         j => comp(col("g") * dim + j + lit(333333333L))).as("v"))
     val emb = singles.unionByName(members.select("vec_id", "v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // assignment via the math-expanded scale form (assignCids — the
     // 1M×1024 BASELINE discipline; the declared key's zip_with diff form
     // exists for oracle IEEE parity, not for n×c probe volumes), then the
@@ -3186,9 +2773,9 @@ object Probe {
         .select(col("vec_id"), col("v"),
           sqrt(Similarity.dot(col("v"), col("v"))).as("nrm"))
         .join(Similarity.assignCids(spark, emb, centroids), "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       val o = SemDedup.pruneAssigned(assigned)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       o.count(); o
     }
     val drops = out.filter(!col("keep"))
@@ -3235,7 +2822,7 @@ object Probe {
         concat_ws("\n", linesOf(col("id"))).as("text"))
     val out = timed(s"line_dedup: $nDocs base + $nClone clones (~${nDocs * 5L} lines)") {
       val o = LineDedup.dedupLines(base.unionByName(clones))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       o.count(); o
     }
     val sums = out.agg(sum("n_kept").as("k"), sum("n_lines").as("t")).collect()(0)
@@ -3274,7 +2861,7 @@ object Probe {
       .select(col("doc_id"), col("cls"), concat_ws(" ",
         transform(sequence(lit(0), lit(39)),
           j => tok(col("cls"), col("doc_id") * 47 + j))).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     docs.count()
     val (model, oov) = timed(s"dsir train: $nDocs docs, one corpus pass") {
       Dsir.trainWeights(docs.select((col("cls") === 0).as("is_target"), col("text")))
@@ -3282,7 +2869,7 @@ object Probe {
     val scored = timed(s"dsir score: $nDocs docs through the kernel") {
       val s = Dsir.score(docs, model, oov)
         .select("doc_id", "cls", "lw_mean", "selected")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       s.count(); s
     }
     val means = scored.groupBy("cls").agg(avg("lw_mean").as("m"))
@@ -3324,7 +2911,7 @@ object Probe {
       .select(col("doc_id"), concat_ws(" ",
         (0 until 30).map(j => word(pmod(xxhash64(col("doc_id") * 31 + j),
           lit(vocab.toLong)))): _*).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     docs.count()
     val t0 = System.nanoTime()
     val table = timed(s"bpe train: $nDocs docs, ~$vocab-word vocab, $merges rounds") {
@@ -3337,8 +2924,7 @@ object Probe {
       .groupBy("w").agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val t1 = System.nanoTime()
-    val tableLoop = Bpe.trainFromDictionary(dict, merges)
-    val loopSec = (System.nanoTime() - t1) / 1e9
+    val (tableLoop, loopSec) = clock(Bpe.trainFromDictionary(dict, merges))
     assert(table == tableLoop, "loop-only retrain must reproduce the table")
     println(f"[probe] bpe: ${table.size} merges learned; merge loop alone " +
       f"$loopSec%.2f s = ${1000 * loopSec / table.size}%.2f ms/merge " +
@@ -3357,7 +2943,7 @@ object Probe {
     val encTable = table.take(64)
     val enc = timed(s"bpe encode: $nDocs docs through ${encTable.size} chained replaces") {
       docs.select(col("doc_id"),
-        org.apache.spark.sql.functions.length(col("text")).as("n_chars"),
+        length(col("text")).as("n_chars"),
         size(split(col("text"), " ")).as("n_ws"),
         Bpe.encodeSymCount(col("text"), encTable).as("n_sym"))
         .agg(sum("n_chars").as("chars"), sum("n_sym").as("syms"),
@@ -3413,16 +2999,15 @@ object Probe {
     * rows through ONE partition's sort while the two-phase form keeps
     * every exchange keyed. */
   def rankProbe(spark: SparkSession, n: Int): Unit = {
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.GlobalRank
     val df = spark.range(n).select(col("id"),
       (pmod(xxhash64(col("id")), lit(700)).cast("double") / -100.0).as("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     df.count()
     val two = timed(s"two-phase bucketed rank over $n rows") {
       val t = GlobalRank.rankByScore(df, col("score"), col("id"))
         .select(col("id"), col("rank"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       t.count(); t
     }
     val naive = timed(s"naive single-partition row_number over $n rows") {
@@ -3430,7 +3015,7 @@ object Probe {
         row_number().over(Window.partitionBy(pmod(col("id"), lit(1)))
           .orderBy(col("score").desc, col("id"))).cast("long"))
         .select(col("id"), col("rank").as("want"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       nv.count(); nv
     }
     val bad = two.join(naive, "id").filter(col("rank") =!= col("want")).count()

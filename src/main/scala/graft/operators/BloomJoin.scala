@@ -45,11 +45,15 @@ object BloomJoin {
     * the true count"): the 1-arg default sizes for 1 M items — an
     * 8 M-bit array that rode EVERY fact-side task binary as a 1-3 MiB
     * literal at any SF (the r21 driver log's "large task binary" WARNs,
-    * previously misattributed to the PQ codebooks) while UNDERSIZING at
-    * 100 TB, where the filtered dim side is billions of keys and a 1 M
-    * sizing saturates to fpp ≈ 1 (the filter prunes nothing). One tiny
-    * count over the already-filtered dim side makes the bit count follow
-    * the data on both ends. */
+    * previously misattributed to the PQ codebooks). One tiny count over
+    * the already-filtered dim side makes the bit count follow the data on
+    * the small end. It does NOT fix the large end: Spark clamps the item
+    * count to `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`
+    * (default 4 M) and the bit count to `…bloomFilter.maxNumBits`
+    * (default 64 Mbit), so a dim side of billions of keys still
+    * saturates the filter (fpp → 1, nothing pruned) unless those confs
+    * are raised. Answers stay exact either way — the join itself removes
+    * false positives. */
   private def sql(nItems: Long): String =
     s"""WITH pruned AS (
        |  SELECT l_orderkey, l_returnflag, l_extendedprice, l_discount

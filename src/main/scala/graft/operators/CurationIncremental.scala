@@ -134,12 +134,22 @@ object CurationIncremental {
     * to three tiny write JOBS staging them and up to three read jobs
     * loading them back; fused, each side is one job. batch_id = -1 means
     * "no streaming driver has committed" (exactly the old meta-absent
-    * state); consumed is empty outside the full macro. */
+    * state); consumed is empty outside the full macro. A state dir in the
+    * pre-r22 layout (no `ctl/` data, but `cursor/` or `budgets/` data)
+    * fails loudly instead of reading as fresh state — a resumed run would
+    * otherwise re-pack from token 0 and re-apply replayed batches. */
   private[graft] def readCtl(spark: SparkSession, path: String)
       : (Long, Long, Map[String, Long]) =
     if (IndexMaintenance.dataFiles(
-        java.nio.file.Paths.get(path, "ctl")).isEmpty) (0L, -1L, Map.empty)
-    else {
+        java.nio.file.Paths.get(path, "ctl")).isEmpty) {
+      val legacy = Seq("cursor", "budgets").filter(d =>
+        IndexMaintenance.dataFiles(java.nio.file.Paths.get(path, d)).nonEmpty)
+      if (legacy.nonEmpty) throw new IllegalStateException(
+        s"legacy curation state layout at $path: ${legacy.mkString("/, ")}/ " +
+          "without ctl/ (written before cursor, budgets and meta were fused " +
+          "into ctl/); migrate or rebuild the state")
+      (0L, -1L, Map.empty)
+    } else {
       // max over rows, like the old meta read (r20 ADVICE): a crash in
       // the fold's copy-first/delete-stale window can leave the stale
       // file beside the staged one; the staged row is the one with the

@@ -190,4 +190,21 @@ class CurationIncrementalSpec extends SparkSpec {
     val declared = rows(CurationIncremental.curationIncremental(spark, sf0001))
     assert(declared.nonEmpty && persisted === declared)
   }
+
+  test("a pre-fusion state dir (cursor/ without ctl/) fails loudly, by name") {
+    import spark.implicits._
+    val dir = tmpDir("curinc-legacy")
+    Seq(Tuple1("00ff")).toDF("fp").write.parquet(s"$dir/fps")
+    Seq(Tuple1(42L)).toDF("next_tok").write.parquet(s"$dir/cursor")
+    val e = intercept[IllegalStateException](CurationIncremental.readCtl(spark, dir))
+    assert(e.getMessage.contains("legacy curation state layout") &&
+      e.getMessage.contains(dir) && e.getMessage.contains("cursor/"), e.getMessage)
+    // the incremental step refuses it too, instead of re-packing from 0
+    val batch = Seq((1L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    intercept[IllegalStateException](CurationIncremental.step(spark, batch, dir))
+    // an empty dir is still fresh state
+    assert(CurationIncremental.readCtl(spark, tmpDir("curinc-fresh")) ===
+      ((0L, -1L, Map.empty[String, Long])))
+  }
 }

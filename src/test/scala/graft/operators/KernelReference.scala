@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * registers. Production code calls the kernels only; these exist so the
   * kernel≡reference specs can assert bit-equality. Each `hof*` form is
   * built from Spark built-ins and higher-order functions (interpreted
-  * lambdas, no extensions needed); [[winnowRef]] is plain Scala. */
+  * lambdas, no extensions needed); [[winnowRef]], [[pqEncodeRef]] and
+  * [[adcTableRef]] are plain Scala. */
 object KernelReference {
 
   // ------------------------------------------------------------ vectors
@@ -77,6 +78,38 @@ object KernelReference {
             element_at(element_at(cb, mi + 1), k + 1), (x, y) => x * y),
           lit(0d), (s, x) => s + x))))
   }
+
+  /** Subspace `mi`'s `dsub`-long slice of `v` — None when `v` is NULL,
+    * too short, or holds a NULL inside the slice (where the HOF fold
+    * NULL-poisons). */
+  private def subSlice(v: Seq[java.lang.Double], mi: Int, dsub: Int): Option[Seq[Double]] =
+    Option(v).map(_.slice(mi * dsub, (mi + 1) * dsub))
+      .filter(s => s.size == dsub && !s.contains(null)).map(_.map(_.doubleValue))
+
+  /** `graft_pq_encode` in plain Scala, from the HOF's definition: per
+    * subspace the squared L2 to each codeword as a left fold in slice
+    * order, the argmin by `java.lang.Double.compare` (the first, lowest
+    * code on ties — `array_min` over (d2, code) structs); an unusable
+    * slice ([[subSlice]]) encodes as 0. */
+  def pqEncodeRef(v: Seq[java.lang.Double], codebooks: Seq[Seq[Seq[Double]]]): Seq[Int] =
+    codebooks.zipWithIndex.map { case (cws, mi) =>
+      subSlice(v, mi, cws.head.size).fold(0) { sub =>
+        cws.indices.minBy(k => sub.zip(cws(k))
+          .foldLeft(0.0) { case (s, (x, y)) => s + (x - y) * (x - y) })(
+          Ordering.Double.TotalOrdering)
+      }
+    }
+
+  /** `graft_adc_table` in plain Scala: entry mi·Ks + k is the left-fold
+    * inner product of query slice mi with codeword k; an unusable slice
+    * makes all of its subspace's entries NULL. */
+  def adcTableRef(qv: Seq[java.lang.Double], codebooks: Seq[Seq[Seq[Double]]])
+      : Seq[java.lang.Double] =
+    codebooks.zipWithIndex.flatMap { case (cws, mi) =>
+      val sub = subSlice(qv, mi, cws.head.size)
+      cws.map(cw => sub.map(s => java.lang.Double.valueOf(
+        s.zip(cw).foldLeft(0.0) { case (a, (x, y)) => a + x * y })).orNull)
+    }
 
   /** `graft_adc_score`: Σ_m table[m·Ks + codes(m)]. */
   def hofAdcScore(codes: Column, table: Column, ks: Int): Column =

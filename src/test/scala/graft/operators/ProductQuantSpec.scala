@@ -340,23 +340,12 @@ class ProductQuantSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("pq encode kernel ≡ HOF fold, bit-equal incl. short/null-element vectors") {
+  /** The four edge vectors of a codebook's dimension: clean, short
+    * tail, a NULL element, and a NULL vector. */
+  private def edgeVecs(d: Int) = {
     val spark0 = spark
     import spark0.implicits._
-    val emb = normEmb
-    val cbs = ProductQuant.trainCodebooks(spark, emb)
-    // real corpus: identical codes row for row
-    val k = ProductQuant.encode(emb, cbs)
-      .select("vec_id", "codes")
-    val h = emb.withColumn("codes", KernelReference.hofPqEncode(col("v"), cbs))
-      .select("vec_id", "codes")
-    assert(k.exceptAll(h).count() === 0)
-    assert(h.exceptAll(k).count() === 0)
-    // edge shapes the HOF defines implicitly: a short vector and a
-    // null-element vector must yield code 0 in the affected subspaces
-    // on BOTH formulations
-    val d = cbs.size * cbs.head.head.size
-    val edge = Seq(
+    Seq(
       (1L, Some(Seq.fill(d)(Option(0.25)))),             // full, clean
       (2L, Some(Seq.fill(d - 3)(Option(0.5)))),          // short tail
       (3L, Some(Seq.tabulate(d)(i =>
@@ -364,11 +353,34 @@ class ProductQuantSpec extends SparkSpec {
       (4L, None))                                        // null vector
       .toDF("vec_id", "v")
       .select(col("vec_id"), col("v").cast("array<double>").as("v"))
+  }
+
+  private def vecOf(r: org.apache.spark.sql.Row): Seq[java.lang.Double] =
+    if (r.isNullAt(1)) null else r.getSeq[java.lang.Double](1)
+
+  test("pq encode kernel ≡ HOF fold, bit-equal incl. short/null-element vectors") {
+    val emb = normEmb
+    val cbs = ProductQuant.trainCodebooks(spark, emb)
+    // real corpus: the kernel's codes ≡ the plain-Scala reference, row for row
+    val rows = ProductQuant.encode(emb, cbs).select("vec_id", "v", "codes").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getSeq[Int](2) === KernelReference.pqEncodeRef(vecOf(r), cbs),
+        s"vec ${r.getLong(0)}")
+    }
+    // edge shapes the HOF defines implicitly: a short vector and a
+    // null-element vector must yield code 0 in the affected subspaces
+    // on ALL THREE formulations
+    val edge = edgeVecs(cbs.size * cbs.head.head.size)
     val ek = ProductQuant.encode(edge, cbs)
       .select("vec_id", "codes").collect().map(r => (r.getLong(0), r.get(1))).toMap
     val eh = edge.select(col("vec_id"), KernelReference.hofPqEncode(col("v"), cbs).as("codes"))
       .collect().map(r => (r.getLong(0), r.get(1))).toMap
-    Seq(1L, 2L, 3L, 4L).foreach { id => assert(ek(id) === eh(id), s"vec $id") }
+    val ep = edge.collect().map(r => (r.getLong(0), KernelReference.pqEncodeRef(vecOf(r), cbs))).toMap
+    Seq(1L, 2L, 3L, 4L).foreach { id =>
+      assert(ek(id) === eh(id), s"vec $id")
+      assert(eh(id) === ep(id), s"vec $id")
+    }
   }
 
   test("adc score kernel ≡ HOF fold, bit-equal incl. null/OOB shapes") {
@@ -401,37 +413,35 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("adc table kernel ≡ HOF fold, bit-equal incl. short/null-element vectors") {
-    val spark0 = spark
-    import spark0.implicits._
     val emb = normEmb
     val cbs = ProductQuant.trainCodebooks(spark, emb)
-    // real corpus: identical M·Ks table row for row
-    val k = emb.select(col("vec_id"),
-      ProductQuant.adcTable(col("v"), cbs).as("tbl"))
-    val h = emb.select(col("vec_id"),
-      KernelReference.hofAdcTable(col("v"), cbs).as("tbl"))
-    assert(k.exceptAll(h).count() === 0)
-    assert(h.exceptAll(k).count() === 0)
+    // real corpus: the kernel's M·Ks table ≡ the plain-Scala reference,
+    // bit for bit
+    def bits(t: Seq[java.lang.Double]) =
+      t.map(d => if (d == null) None else Some(java.lang.Double.doubleToRawLongBits(d)))
+    val rows = emb.select(col("vec_id"), col("v"),
+      ProductQuant.adcTable(col("v"), cbs).as("tbl")).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(bits(r.getSeq[java.lang.Double](2)) ===
+        bits(KernelReference.adcTableRef(vecOf(r), cbs)), s"vec ${r.getLong(0)}")
+    }
     // edge shapes the HOF defines implicitly: a short vector NULLs the
     // truncated subspaces' entries (zip_with pads, the fold poisons), a
     // null element NULLs its subspace, a NULL vector yields all-NULL
-    // entries (NOT a null array) — on BOTH formulations
-    val d = cbs.size * cbs.head.head.size
-    val edge = Seq(
-      (1L, Some(Seq.fill(d)(Option(0.25)))),             // full, clean
-      (2L, Some(Seq.fill(d - 3)(Option(0.5)))),          // short tail
-      (3L, Some(Seq.tabulate(d)(i =>
-        if (i == 5) None else Option(1.0)))),            // null element
-      (4L, None))                                        // null vector
-      .toDF("vec_id", "v")
-      .select(col("vec_id"), col("v").cast("array<double>").as("v"))
+    // entries (NOT a null array) — on ALL THREE formulations
+    val edge = edgeVecs(cbs.size * cbs.head.head.size)
     val ek = edge.select(col("vec_id"),
         ProductQuant.adcTable(col("v"), cbs).as("tbl"))
       .collect().map(r => (r.getLong(0), r.get(1))).toMap
     val eh = edge.select(col("vec_id"),
         KernelReference.hofAdcTable(col("v"), cbs).as("tbl"))
       .collect().map(r => (r.getLong(0), r.get(1))).toMap
-    Seq(1L, 2L, 3L, 4L).foreach { id => assert(ek(id) === eh(id), s"vec $id") }
+    val ep = edge.collect().map(r => (r.getLong(0), KernelReference.adcTableRef(vecOf(r), cbs))).toMap
+    Seq(1L, 2L, 3L, 4L).foreach { id =>
+      assert(ek(id) === eh(id), s"vec $id")
+      assert(eh(id) === ep(id), s"vec $id")
+    }
   }
 
   test("pq_encode and adc_table reject malformed codebooks at analysis, by name") {
