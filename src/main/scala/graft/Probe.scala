@@ -487,7 +487,7 @@ object Probe {
     * generation). */
   def streamingIvfPqProbe(spark: SparkSession, n: Int, nArrive: Int,
       c: Int, dim: Int = 64): Unit = {
-    import graft.operators.ProductQuant
+    import graft.operators.{ProductQuant, StagedCommit}
     import graft.streaming.StreamingOps
     val emb = ProductQuant.normalized(clustered(vecIds(spark, 0, n), c, dim))
       .persist(MEMORY_AND_DISK)
@@ -523,7 +523,7 @@ object Probe {
     val newRows = assigned.filter(col("vec_id") >= n).count()
     val dupIds = assigned.groupBy("vec_id").count()
       .filter(col("count") > 1).count()
-    val committed = ProductQuant.committedIvfPqBatchId(spark, dir)
+    val committed = StagedCommit.committedBatchId(spark, dir)
     println(s"[probe] streamivf: $newRows arrivals indexed " +
       s"(expect $nArrive), $dupIds duplicated ids (expect 0), " +
       s"committed batch id $committed, models untouched: " +
@@ -628,17 +628,17 @@ object Probe {
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val fpOk = same(IncrementalDedup.readFpIndex(spark, s"$root/fp").select("fp"),
       IncrementalDedup.fingerprints(rem2).select("fp").distinct())
-    // the line and bm25 families have no reader; Takedown reads them raw too
-    val lineOk = same(spark.read.parquet(s"$root/line").select("fp"),
+    val lineOk = same(
+      IncrementalDedup.readFpIndex(spark, s"$root/line").select("fp"),
       LineDedup.lineFps(rem2))
     val subOk = same(
       SubstringIncremental.readDigestIndex(spark, s"$root/substring").select("g"),
       SubstringDedup.windowDigests(rem2).select("g").distinct())
-    val postOk = same(
-      spark.read.parquet(s"$root/bm25/postings").select("term", "doc_id", "tf"),
+    val (postings, _, statsTbl) = Ranking.readBm25Index(spark, s"$root/bm25")
+    val postOk = same(postings.select("term", "doc_id", "tf"),
       rem2.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .groupBy("term", "doc_id").agg(count(lit(1)).as("tf")))
-    val stats = spark.read.parquet(s"$root/bm25/stats").head()
+    val stats = statsTbl.head()
     val statsRef = rem2.agg(count(lit(1)),
       sum(size(split(col("text"), " ")))).head()
     val statsOk = stats.getLong(0) == statsRef.getLong(0) &&

@@ -67,63 +67,25 @@ object CurationIncremental {
 
   // ---------------------------------------------------- persisted state
 
-  private def pendingDir(path: String) =
-    java.nio.file.Paths.get(path, "_pending")
+  /** One night's state delta, staged under `_pending`: accepted fps
+    * append into their live bucket dirs, and the fused control row
+    * (cursor + per-domain budget counters + the streaming driver's
+    * committed batch id — ONE staged parquet, r22) swaps in. */
+  private def pending(path: String) = new StagedCommit(path, "_pending",
+    Seq(StagedCommit.Append("fps", "bucket"), StagedCommit.Swap("ctl")))
 
-  /** Converge possibly-crashed state at `path` (the [[IndexMaintenance
-    * .recoverIndex]] discipline for this operator's TWO-piece state):
-    * a committed-but-unfolded pending night rolls forward; an
-    * uncommitted one rolls back, so the retried night REPRODUCES its
-    * batch instead of swallowing it (fps would already contain the
-    * batch) or double-reserving offsets. */
-  def recoverState(spark: SparkSession, path: String): Unit = {
-    val pend = pendingDir(path)
-    if (java.nio.file.Files.exists(pend)) {
-      if (Tables.artifactComplete(pend.toString)) foldPending(path)
-      else IndexMaintenance.deleteRecursively(pend)
-      spark.catalog.refreshByPath(s"$path/fps")
-    }
-  }
+  /** Converge possibly-crashed state at `path` ([[StagedCommit.recover]]
+    * for this operator's TWO-piece state): a committed-but-unfolded
+    * pending night rolls forward; an uncommitted one rolls back, so the
+    * retried night REPRODUCES its batch instead of swallowing it (fps
+    * would already contain the batch) or double-reserving offsets. */
+  def recoverState(spark: SparkSession, path: String): Unit =
+    if (pending(path).recover()) spark.catalog.refreshByPath(s"$path/fps")
 
-  /** Fold a COMMITTED pending night into the live state: append the
-    * staged fp files into `fps/` (atomic per-file copy, skip files a
-    * prior fold attempt already moved — staged part names are
-    * write-fresh UUIDs, collision-free), then swap `ctl/` to the
-    * staged control row (copy staged in first, delete old after — never
-    * a moment with no control file), then delete the marker FIRST and the
-    * pending tree. Every action is idempotent, so a crash at any point
-    * re-folds cleanly. */
-  private def foldPending(path: String): Unit = {
-    val pend = pendingDir(path)
-    // fps: staged bucket dirs append into the live bucket dirs
-    val fpsStaged = pend.resolve("fps")
-    IndexMaintenance.listDir(fpsStaged)
-      .filter(d => java.nio.file.Files.isDirectory(d) &&
-        d.getFileName.toString.startsWith("bucket="))
-      .foreach { d =>
-        IndexMaintenance.dataFiles(d).foreach(
-          IndexMaintenance.copyInto(_,
-            java.nio.file.Paths.get(path, "fps", d.getFileName.toString)))
-      }
-    // the fused control row (cursor + per-domain budget counters + the
-    // streaming driver's committed batch id — ONE staged parquet, r22):
-    // staged files in, stale files out (by name difference) — copy-first
-    // so there is never a moment with no live file
-    Seq("ctl").foreach { piece =>
-      val staged = pend.resolve(piece)
-      if (java.nio.file.Files.isDirectory(staged)) {
-        val live = java.nio.file.Paths.get(path, piece)
-        val stagedNames =
-          IndexMaintenance.dataFiles(staged).map(_.getFileName.toString).toSet
-        IndexMaintenance.dataFiles(staged)
-          .foreach(IndexMaintenance.copyInto(_, live))
-        IndexMaintenance.dataFiles(live)
-          .filterNot(f => stagedNames.contains(f.getFileName.toString))
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    java.nio.file.Files.deleteIfExists(pend.resolve("_GRAFT_COMPLETE"))
-    IndexMaintenance.deleteRecursively(pend)
+  /** Fold the committed night staged by [[stageAndCommit]]. */
+  private def foldState(spark: SparkSession, path: String): Unit = {
+    pending(path).fold()
+    spark.catalog.refreshByPath(s"$path/fps")
   }
 
   /** The fused control row (r22, guide §5 driver round-trips): what used
@@ -140,10 +102,10 @@ object CurationIncremental {
     * otherwise re-pack from token 0 and re-apply replayed batches. */
   private[graft] def readCtl(spark: SparkSession, path: String)
       : (Long, Long, Map[String, Long]) =
-    if (IndexMaintenance.dataFiles(
+    if (StagedCommit.dataFiles(
         java.nio.file.Paths.get(path, "ctl")).isEmpty) {
       val legacy = Seq("cursor", "budgets").filter(d =>
-        IndexMaintenance.dataFiles(java.nio.file.Paths.get(path, d)).nonEmpty)
+        StagedCommit.dataFiles(java.nio.file.Paths.get(path, d)).nonEmpty)
       if (legacy.nonEmpty) throw new IllegalStateException(
         s"legacy curation state layout at $path: ${legacy.mkString("/, ")}/ " +
           "without ctl/ (written before cursor, budgets and meta were fused " +
@@ -178,13 +140,13 @@ object CurationIncremental {
       budgetRows: Option[Seq[(String, Long)]] = None,
       metaRow: Option[Long] = None,
       nBuckets: Int = IncrementalDedup.IndexBuckets): Unit = {
-    val pend = pendingDir(path)
-    IndexMaintenance.deleteRecursively(pend)
+    val sc = pending(path)
+    val pend = sc.stage()
     IncrementalDedup.writeFpIndex(acc.select("fp"),
       pend.resolve("fps").toString, nBuckets)
     writeCtl(spark, pend.resolve("ctl"), nextCursor,
       metaRow.getOrElse(-1L), budgetRows.map(_.toMap).getOrElse(Map.empty))
-    if (commit) Tables.markArtifactComplete(pend.toString)
+    if (commit) sc.commit()
   }
 
   /** One nightly step against the state at `path`: returns the batch's
@@ -225,8 +187,7 @@ object CurationIncremental {
         cursor + total, -1L, Map.empty)
     } else {
       stageAndCommit(spark, acc, cursor + total, path)
-      foldPending(path)
-      spark.catalog.refreshByPath(s"$path/fps")
+      foldState(spark, path)
     }
     // self-maintenance AFTER the committed fold: compaction has its own
     // crash protocol and never interleaves with the night's state commit
@@ -335,8 +296,7 @@ object CurationIncremental {
     Tables.markArtifactComplete(batchOut)
     stageAndCommit(spark, acc, cursor + total, path,
       metaRow = Some(batchId), nBuckets = nBuckets)
-    foldPending(path)
-    spark.catalog.refreshByPath(s"$path/fps")
+    foldState(spark, path)
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/fps" -> "bucket"))
     true
@@ -509,8 +469,7 @@ object CurationIncremental {
     } else {
       stageAndCommit(spark, acc, cursor + total, path,
         budgetRows = Some(newConsumed))
-      foldPending(path)
-      spark.catalog.refreshByPath(s"$path/fps")
+      foldState(spark, path)
     }
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/fps" -> "bucket"))
@@ -570,8 +529,7 @@ object CurationIncremental {
     stageAndCommit(spark, acc, cursor + total, path,
       budgetRows = Some(newConsumed), metaRow = Some(batchId),
       nBuckets = nBuckets)
-    foldPending(path)
-    spark.catalog.refreshByPath(s"$path/fps")
+    foldState(spark, path)
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/fps" -> "bucket"))
     true

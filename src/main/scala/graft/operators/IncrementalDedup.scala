@@ -65,20 +65,13 @@ object IncrementalDedup {
     * buckets over a 3 TB index → ~750 MB/bucket). */
   val IndexBuckets = 64
 
-  private def bucketed(fps: DataFrame, nBuckets: Int): DataFrame =
-    fps.select(col("fp"),
-      pmod(xxhash64(col("fp")), lit(nBuckets)).cast("int").as("bucket"))
-
-  /** Persist (or append) fingerprints into a bucket-partitioned index.
-    * The repartition aligns write tasks to buckets so each append lands
-    * ONE file per touched bucket instead of one per (task × bucket) —
-    * nightly fragment accretion is what [[IndexMaintenance.compactIndex]]
-    * cleans up, but 32× slower accretion means 32× rarer compactions. */
+  /** Persist (or append) fingerprints into a bucket-partitioned index
+    * ([[StagedCommit.writeBucketed]]: one file per touched bucket per
+    * append). */
   def writeFpIndex(fps: DataFrame, path: String,
       nBuckets: Int = IndexBuckets, append: Boolean = false): Unit =
-    bucketed(fps, nBuckets).repartition(col("bucket")).write
-      .mode(if (append) "append" else "overwrite")
-      .partitionBy("bucket").parquet(path)
+    StagedCommit.writeBucketed(fps.select("fp"), xxhash64(col("fp")),
+      nBuckets, path, append)
 
   /** Load the fingerprint index. The parquet `bucket` partition column
     * survives into the frame so bucket-pruned probes can filter on it —

@@ -4,8 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
 
 /** Lifecycle maintenance for the persisted incremental indexes
   * (SURVEY.md §2.7 E14 operational layer): every arrival-mode operator
@@ -18,44 +17,18 @@ import scala.jdk.CollectionConverters._
   *
   *   - [[compactIndex]]: crash-safe per-bucket rewrite of every bucket
   *     whose fragment count crossed a threshold — write-new-then-swap
-  *     under a completion marker (the [[Tables.markArtifactComplete]]
-  *     discipline), so a crash at ANY point leaves the index readable
-  *     and a re-run converges;
+  *     under a completion marker;
   *   - [[retractKeys]]: the takedown path — delete all rows carrying a
   *     retracted key (doc/media id, fingerprint, digest) by anti-join
   *     rewrite of ONLY the buckets that contain it, same swap protocol.
   *
   * Both are layout-generic: they operate on any `bucket=N`-partitioned
   * parquet directory, which is the one layout every graft index uses
-  * (fp, digest, band, hash, posting). File primitives are java.nio over
-  * the local filesystem the test/bench environment runs on; on HDFS/S3
-  * the identical staging protocol runs through the Hadoop FileSystem API
-  * (create-staging → marker → copy/delete → cleanup — every step below
-  * maps 1:1; object stores make the per-file copy atomic by PUT).
-  *
-  * Crash-safety protocol (shared, and reused by [[CurationIncremental]]'s
-  * state commit):
-  *
-  *   1. rewrite the affected buckets into `<path>/_staged/` (Spark write;
-  *      `_`-prefixed directories are invisible to Spark parquet readers,
-  *      so concurrent readers of the live index are unaffected);
-  *   2. write a `_BUCKETS` manifest (the affected bucket values — needed
-  *      because a retraction can empty a bucket, leaving no staged dir);
-  *   3. `_GRAFT_COMPLETE` marker — THE COMMIT POINT;
-  *   4. fold: per affected bucket, copy staged files into the live bucket
-  *      dir (each via hidden `.tmp-` name + atomic rename, so a partial
-  *      copy can never be mistaken for a complete file), then delete live
-  *      files not in the staged name set (staged part names are
-  *      write-UUID-fresh, never colliding with live names), or delete the
-  *      live bucket dir when the bucket emptied;
-  *   5. cleanup: delete the marker FIRST, then the staging tree.
-  *
-  * Recovery ([[recoverIndex]], called at every compact/retract entry and
-  * by resuming step() callers): staging with a marker → re-fold (every
-  * fold action is idempotent); staging without a marker → roll back by
-  * deleting the staging tree (either the rewrite never committed, or the
-  * fold + marker delete completed and only the tree delete was cut short
-  * — in both cases deleting staging is correct).
+  * (fp, digest, band, hash, posting). Both rewrite the affected buckets
+  * under `<path>/_staged/` with a `_BUCKETS` manifest (the affected
+  * bucket values — a retraction can empty a bucket, leaving no staged
+  * dir) and swap them in under [[StagedCommit]]'s protocol, so a crash at
+  * ANY point leaves the index readable and a re-run converges.
   */
 object IndexMaintenance {
 
@@ -65,132 +38,28 @@ object IndexMaintenance {
     * appends per bucket). */
   val MaxFragments = 8
 
-  // ------------------------------------------------------ file primitives
-
-  /** Children of a directory, with the listing stream CLOSED (a bare
-    * `Files.list` leaks one fd per call until GC). */
-  private[operators] def listDir(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-
-  private[operators] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-      Files.deleteIfExists(p)
-    }
-
-  /** Parquet data files directly under `dir` (no recursion — bucket dirs
-    * are leaf dirs), hidden/marker files excluded. */
-  private[operators] def dataFiles(dir: Path): Seq[Path] =
-    listDir(dir).filter(f => Files.isRegularFile(f) && {
-      val n = f.getFileName.toString
-      !n.startsWith("_") && !n.startsWith(".")
-    })
-
-  /** Copy `src` into directory `dstDir` under its own name, via a hidden
-    * temp name + atomic rename; a file already present under the final
-    * name is COMPLETE by construction (renames are atomic) and skipped —
-    * the idempotence the re-fold path relies on. */
-  private[operators] def copyInto(src: Path, dstDir: Path): Unit = {
-    val dst = dstDir.resolve(src.getFileName.toString)
-    if (!Files.exists(dst)) {
-      Files.createDirectories(dstDir)
-      val tmp = dstDir.resolve(".tmp-" + src.getFileName.toString)
-      try {
-        Files.copy(src, tmp, StandardCopyOption.REPLACE_EXISTING)
-        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        // Two idempotent finishers can race the same committed staging
-        // (a serve-path forward-only recovery vs the writer's own fold —
-        // r20 ADVICE): the one that finishes first deletes the staged
-        // tree, and the loser's copy sees the source vanish. That is
-        // "already folded", not an error — but ONLY when the source is
-        // in fact gone; any other NoSuchFileException must surface.
-        case _: java.nio.file.NoSuchFileException
-          if !Files.exists(src) => ()
-      }
-    }
-  }
-
   // ------------------------------------------------------ staging commit
 
-  private[operators] def stagingDir(path: String): Path = Paths.get(path, "_staged")
-  private def manifest(path: String): Path =
-    stagingDir(path).resolve("_BUCKETS")
+  /** The bucket swap: the staged partition dirs replace their live
+    * twins; the manifest names the buckets the swap owns. */
+  private[operators] def swap(path: String): StagedCommit =
+    new StagedCommit(path, "_staged", Seq(StagedCommit.Replace("")))
 
   /** Partition dir names (`<partCol>=N`) under the live index — the
     * hash-bucketed indexes use `bucket`; the IVF inverted file is the
     * same layout under `cid` (every operator here takes the column). */
   private def liveBucketDirs(path: String, partCol: String): Seq[Path] =
-    listDir(Paths.get(path)).filter(d => Files.isDirectory(d) &&
-      d.getFileName.toString.startsWith(partCol + "="))
+    StagedCommit.partitionDirs(Paths.get(path), partCol)
 
   /** Fragment (data file) count per live partition dir name. */
   def fragmentCounts(path: String, partCol: String = "bucket"): Map[String, Int] =
     liveBucketDirs(path, partCol)
-      .map(d => d.getFileName.toString -> dataFiles(d).size).toMap
+      .map(d => d.getFileName.toString -> StagedCommit.dataFiles(d).size).toMap
 
-  /** Steps 2-3: manifest + marker. The staged bucket dirs must already
-    * be written (Spark `partitionBy("bucket")` under the staging dir). */
-  private[operators] def commitStaging(path: String, buckets: Seq[String]): Unit = {
-    Files.createDirectories(stagingDir(path))
-    Files.write(manifest(path), buckets.mkString("\n").getBytes("UTF-8"))
-    Tables.markArtifactComplete(stagingDir(path).toString)
-  }
-
-  /** Step 4-5: fold the committed staging into the live tree, then clean
-    * up. Idempotent — safe to re-run from any crash point past the
-    * marker. */
-  private[operators] def foldStaging(path: String): Unit = {
-    val staged = stagingDir(path)
-    val buckets: Seq[String] =
-      if (Files.exists(manifest(path)))
-        new String(Files.readAllBytes(manifest(path)), "UTF-8")
-          .split("\n").toSeq.filter(_.nonEmpty)
-      else // manifest lost mid-cleanup: staged dirs are the remaining work
-        listDir(staged).filter(d => Files.isDirectory(d) &&
-            d.getFileName.toString.contains("="))
-          .map(_.getFileName.toString)
-    buckets.foreach { b =>
-      val src = staged.resolve(b)
-      val dst = Paths.get(path, b)
-      if (Files.isDirectory(src)) {
-        // swap: copy staged files in (atomic per file), then delete every
-        // live file NOT in the staged name set. Orphaned .tmp- partials
-        // from a crashed copy go first (dataFiles hides dot-files, so
-        // list raw).
-        listDir(dst).filter(_.getFileName.toString.startsWith(".tmp-"))
-          .foreach(Files.deleteIfExists(_))
-        val stagedNames = dataFiles(src).map(_.getFileName.toString).toSet
-        dataFiles(src).foreach(copyInto(_, dst))
-        dataFiles(dst)
-          .filterNot(f => stagedNames.contains(f.getFileName.toString))
-          .foreach(Files.deleteIfExists(_))
-      } else {
-        // retraction emptied the bucket: the live dir goes away entirely
-        deleteRecursively(dst)
-      }
-    }
-    // marker FIRST: once it is gone, recovery classifies any leftover
-    // staging as roll-back-able, which is correct because the fold is done
-    Files.deleteIfExists(staged.resolve("_GRAFT_COMPLETE"))
-    deleteRecursively(staged)
-  }
-
-  /** Converge a possibly-crashed index at `path`: roll a committed
-    * staging forward, roll an uncommitted one back. No-op on a clean
-    * index. Callers resuming incremental step() loops after a crash run
-    * this before the first read. */
-  def recoverIndex(path: String): Unit = {
-    val staged = stagingDir(path)
-    if (Files.exists(staged)) {
-      if (Tables.artifactComplete(staged.toString)) foldStaging(path)
-      else deleteRecursively(staged)
-    }
-  }
+  /** Converge a possibly-crashed index at `path` ([[StagedCommit
+    * .recover]]). No-op on a clean index. Callers resuming incremental
+    * step() loops after a crash run this before the first read. */
+  def recoverIndex(path: String): Unit = swap(path).recover()
 
   /** Rewrite staged bucket contents and swap them in, crash-safe. The
     * caller provides `rewritten` — the full replacement ROWS for exactly
@@ -198,16 +67,18 @@ object IndexMaintenance {
     * from `rewritten` but named in `affected` is deleted). */
   private def replaceBuckets(spark: SparkSession, path: String,
       rewritten: DataFrame, affected: Seq[Int], partCol: String): Unit = {
-    recoverIndex(path)
+    val sc = swap(path)
+    sc.recover()
     if (affected.isEmpty) return
     // one job, one output file per bucket dir: hash-repartition on the
     // bucket value co-locates each bucket's rows in one task
     rewritten
       .repartition(math.max(1, affected.size), col(partCol))
       .write.mode("overwrite").partitionBy(partCol)
-      .parquet(stagingDir(path).toString)
-    commitStaging(path, affected.map(b => s"$partCol=$b"))
-    foldStaging(path)
+      .parquet(sc.dir.toString)
+    StagedCommit.writeManifest(sc.dir, affected.map(b => s"$partCol=$b"))
+    sc.commit()
+    sc.fold()
     spark.catalog.refreshByPath(path)
   }
 
@@ -253,7 +124,7 @@ object IndexMaintenance {
     import spark.implicits._
     recoverIndex(path)
     val fs = liveBucketDirs(path, partCol).map { d =>
-      val files = dataFiles(d)
+      val files = StagedCommit.dataFiles(d)
       (d.getFileName.toString.stripPrefix(partCol + "="),
         files.size, files.map(Files.size(_)).sum)
     }.toDF(partCol, "files", "bytes")

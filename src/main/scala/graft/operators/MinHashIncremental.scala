@@ -198,19 +198,12 @@ object MinHashIncremental {
     * splits across layouts. */
   def writeBandIndex(prep: DataFrame, path: String,
       nBuckets: Int = IndexBuckets, append: Boolean = false): Unit = {
-    val mode = if (append) "append" else "overwrite"
     if (append && legacyBandsDir(path).exists)
       migrateLegacyBands(prep.sparkSession, path)
-    // one file per touched bucket per append — the IncrementalDedup
-    // .writeFpIndex fragment-accretion rationale
-    bandRows(prep)
-      .withColumn("bucket", pmod(col("sig"), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(bandsSubPath(path))
-    prep.select(col("doc_id"), col("hset"))
-      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/sets")
+    StagedCommit.writeBucketed(bandRows(prep), col("sig"), nBuckets,
+      bandsSubPath(path), append)
+    StagedCommit.writeBucketed(prep.select(col("doc_id"), col("hset")),
+      xxhash64(col("doc_id")), nBuckets, s"$path/sets", append)
   }
 
   /** Reads the CURRENT kernel's band sub-table, plus the unversioned

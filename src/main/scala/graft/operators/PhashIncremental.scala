@@ -139,18 +139,10 @@ object PhashIncremental {
     * batch's probe/verify joins can prune to matching buckets. */
   def writePhashIndex(hashes: DataFrame, path: String,
       nBuckets: Int = IndexBuckets, append: Boolean = false): Unit = {
-    val mode = if (append) "append" else "overwrite"
-    // repartition by bucket: each append lands one file per touched
-    // bucket, not one per (task x bucket) — the IncrementalDedup
-    // .writeFpIndex fragment-accretion rationale
-    bandRows(hashes)
-      .withColumn("bucket", pmod(col("v"), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/bands")
-    hashes.select(col("media_id"), col("phash"))
-      .withColumn("bucket", pmod(xxhash64(col("media_id")), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/hashes")
+    StagedCommit.writeBucketed(bandRows(hashes), col("v"), nBuckets,
+      s"$path/bands", append)
+    StagedCommit.writeBucketed(hashes.select(col("media_id"), col("phash")),
+      xxhash64(col("media_id")), nBuckets, s"$path/hashes", append)
   }
 
   def readPhashIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =

@@ -266,13 +266,12 @@ object ProductQuant {
     val (_, centroids, cbs) = readIvfPqIndex(spark, path)
     val emb = normalized(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    encode(emb, cbs)
-      .join(Similarity.assignCids(spark, emb, centroids), "vec_id")
-      // one file per touched list per append (the IncrementalDedup
-      // .writeFpIndex fragment-accretion rationale); nightly cadences
-      // sweep via autoCompact below (cid plays the bucket role)
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(s"$path/assigned")
+    // one file per touched list per append; nightly cadences sweep via
+    // autoCompact below (cid plays the bucket role)
+    StagedCommit.writePartitioned(
+      encode(emb, cbs)
+        .join(Similarity.assignCids(spark, emb, centroids), "vec_id"),
+      "cid", s"$path/assigned", append = true)
     emb.unpersist(blocking = false)
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/assigned" -> "cid"))
@@ -280,67 +279,17 @@ object ProductQuant {
 
   // ------------------------------------ streaming ingest (exactly-once)
 
-  private def ingestPending(path: String) =
-    java.nio.file.Paths.get(path, "_ingest")
+  /** One exactly-once append, staged under `_ingest`: the encoded
+    * cid-partitioned rows append into the live inverted lists, and the
+    * `meta/` batch id swaps in. */
+  private def ingest(path: String) = new StagedCommit(path, "_ingest",
+    Seq(StagedCommit.Append("assigned", "cid"), StagedCommit.Swap("meta")))
 
-  /** Converge a possibly-crashed [[ivfpqAppendExactlyOnce]] at `path`:
-    * a committed pending batch rolls forward (idempotent per-file
-    * copies), an uncommitted one rolls back. `rollBack = false` (the
-    * read path) only rolls committed state forward — an uncommitted
-    * `_ingest` tree may be an in-flight append's, and a reader deleting
-    * it would race the writer (the [[recoverIvfPq]] rationale). */
-  def recoverIvfPqIngest(path: String, rollBack: Boolean = true): Unit = {
-    val pend = ingestPending(path)
-    if (java.nio.file.Files.exists(pend)) {
-      if (graft.Tables.artifactComplete(pend.toString)) foldIvfPqIngest(path)
-      else if (rollBack) IndexMaintenance.deleteRecursively(pend)
-    }
-  }
-
-  /** Fold a COMMITTED ingest staging: staged cid dirs APPEND into the
-    * live inverted lists (atomic per-file copy; staged part names are
-    * write-fresh UUIDs, so a re-fold skips already-copied files), then
-    * `meta/` swaps to the staged batch id (copy-first, delete-stale-by-
-    * name-difference), then marker first, pending tree last. Every
-    * action idempotent; a crash at any point re-folds cleanly. */
-  private def foldIvfPqIngest(path: String): Unit = {
-    val pend = ingestPending(path)
-    IndexMaintenance.listDir(pend.resolve("assigned"))
-      .filter(d => java.nio.file.Files.isDirectory(d) &&
-        d.getFileName.toString.startsWith("cid="))
-      .foreach { d =>
-        IndexMaintenance.dataFiles(d).foreach(
-          IndexMaintenance.copyInto(_, java.nio.file.Paths.get(
-            path, "assigned", d.getFileName.toString)))
-      }
-    val stagedM = pend.resolve("meta")
-    if (java.nio.file.Files.isDirectory(stagedM)) {
-      val live = java.nio.file.Paths.get(path, "meta")
-      val names = IndexMaintenance.dataFiles(stagedM)
-        .map(_.getFileName.toString).toSet
-      IndexMaintenance.dataFiles(stagedM)
-        .foreach(IndexMaintenance.copyInto(_, live))
-      IndexMaintenance.dataFiles(live)
-        .filterNot(f => names.contains(f.getFileName.toString))
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    java.nio.file.Files.deleteIfExists(pend.resolve("_GRAFT_COMPLETE"))
-    IndexMaintenance.deleteRecursively(pend)
-  }
-
-  /** Micro-batch id the index at `path` last committed through
-    * [[ivfpqAppendExactlyOnce]], or -1 when none has. Lives in `meta/`
-    * and commits ATOMICALLY with the appended codes (one `_ingest`
-    * pending marker), the [[CurationIncremental.committedBatchId]]
-    * discipline; data-file presence, not directory presence, detects
-    * fresh state. */
-  def committedIvfPqBatchId(spark: SparkSession, path: String): Long =
-    if (IndexMaintenance.dataFiles(
-        java.nio.file.Paths.get(path, "meta")).nonEmpty)
-      // max, not head(): see Ranking.committedBm25BatchId (r20 ADVICE)
-      spark.read.parquet(s"$path/meta")
-        .agg(max("batch_id")).head().getLong(0)
-    else -1L
+  /** Converge a possibly-crashed [[ivfpqAppendExactlyOnce]] at `path`
+    * ([[StagedCommit.recover]]); [[readIvfPqIndex]] runs the
+    * forward-only `rollBack = false` form. */
+  def recoverIvfPqIngest(path: String, rollBack: Boolean = true): Unit =
+    ingest(path).recover(rollBack)
 
   /** [[ivfpqAppend]] for a streaming driver whose engine may RE-DELIVER
     * a micro-batch after a restart (foreachBatch is at-least-once) —
@@ -359,9 +308,9 @@ object ProductQuant {
   def ivfpqAppendExactlyOnce(spark: SparkSession, path: String,
       batch: DataFrame, batchId: Long, autoCompact: Int = 0): Boolean = {
     recoverIvfPqIngest(path)
-    if (batchId <= committedIvfPqBatchId(spark, path)) return false
+    if (batchId <= StagedCommit.committedBatchId(spark, path)) return false
     stageIvfPqAppend(spark, path, batch, batchId)
-    foldIvfPqIngest(path)
+    ingest(path).fold()
     spark.catalog.refreshByPath(s"$path/assigned")
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/assigned" -> "cid"))
@@ -377,19 +326,18 @@ object ProductQuant {
       batch: DataFrame, batchId: Long, commit: Boolean = true): Unit = {
     import spark.implicits._
     val (_, centroids, cbs) = readIvfPqIndex(spark, path)
-    val pend = ingestPending(path)
-    IndexMaintenance.deleteRecursively(pend)
+    val sc = ingest(path)
+    val pend = sc.stage()
     val emb = normalized(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    encode(emb, cbs)
-      .join(Similarity.assignCids(spark, emb, centroids), "vec_id")
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(pend.resolve("assigned").toString)
+    StagedCommit.writePartitioned(
+      encode(emb, cbs)
+        .join(Similarity.assignCids(spark, emb, centroids), "vec_id"),
+      "cid", pend.resolve("assigned").toString, append = false)
     emb.unpersist(blocking = false)
     Seq(batchId).toDF("batch_id").coalesce(1).write.mode("overwrite")
       .parquet(pend.resolve("meta").toString)
-    if (commit) graft.Tables.markArtifactComplete(pend.toString)
+    if (commit) sc.commit()
   }
 
   /** Takedown for the IVFADC serving artifact WITHOUT a retrain
@@ -418,97 +366,38 @@ object ProductQuant {
 
   // ------------------------------------------------ retrain (drift path)
 
-  private def retrainStaging(path: String) =
-    java.nio.file.Paths.get(path, "_retrain")
-
-  /** Converge a possibly-crashed [[ivfpqRetrain]] at `path`: committed
-    * staging rolls forward (the fold is idempotent), uncommitted rolls
-    * back — the [[IndexMaintenance.recoverIndex]] discipline for this
-    * operator's three-sub-table swap. Called at every retrain entry;
-    * [[readIvfPqIndex]] calls the `rollBack = false` form, which ONLY
-    * rolls a committed staging forward: an uncommitted `_retrain` tree
-    * is invisible to readers (the live sub-tables still serve), and a
-    * read-path delete would RACE an in-flight retrain — a reader
-    * deleting the staging between [[writeIvfPqIndex]] finishing and the
-    * completion marker would leave the marker stamped on an empty tree,
-    * which the fold must then treat as data loss (r18 ADVICE). Rollback
-    * of a genuinely dead staging is the next retrain entry's job, where
-    * no writer can be in flight by contract (retrain is a single-owner
-    * maintenance pass). */
-  def recoverIvfPq(path: String, rollBack: Boolean = true): Unit = {
-    val pend = retrainStaging(path)
-    if (java.nio.file.Files.exists(pend)) {
-      if (graft.Tables.artifactComplete(pend.toString)) foldRetrain(path)
-      else if (rollBack) IndexMaintenance.deleteRecursively(pend)
-    }
-  }
-
-  /** Fold a COMMITTED retrain staging into the live index: per flat
-    * model sub-table (centroids, codebooks), copy the staged files in
-    * and delete stale ones by name difference (staged part names are
-    * write-fresh UUIDs — copy-first, so there is never a moment with no
-    * live model); for `assigned/`, swap per cid directory and delete
-    * cid directories the new assignment no longer populates. Every
-    * action is idempotent, so a crash mid-fold re-folds cleanly.
+  /** A full new index generation, staged under `_retrain`: the flat
+    * model sub-tables (centroids, codebooks) swap in, and `assigned/`
+    * replaces every live cid dir — cid dirs the new assignment no
+    * longer populates go away.
     *
-    * Refuses to fold a staging that is not a COMPLETE index — all three
-    * sub-tables present, `assigned/` with at least one cid directory —
-    * and rolls it back instead: [[writeIvfPqIndex]] writes every
-    * sub-table before the marker, so a committed-but-empty staging can
-    * only be a spurious marker (or one stamped on a tree a racing
-    * reader emptied — the r18 ADVICE scenario), and folding it would
-    * delete every live cid directory: total index loss from a recovery
-    * path. */
-  private def foldRetrain(path: String): Unit = {
-    val pend = retrainStaging(path)
-    val stagedComplete =
+    * Refuses to fold a staging that is not a COMPLETE index — both
+    * model sub-tables with data, `assigned/` with at least one cid
+    * directory — and rolls it back instead: [[writeIvfPqIndex]] writes
+    * every sub-table before the marker, so a committed-but-empty
+    * staging can only be a spurious marker (or one stamped on a tree a
+    * racing reader emptied — the r18 ADVICE scenario), and folding it
+    * would delete every live cid directory: total index loss from a
+    * recovery path. */
+  private def retrain(path: String) = new StagedCommit(path, "_retrain",
+    Seq(StagedCommit.Swap("centroids"), StagedCommit.Swap("codebooks"),
+      StagedCommit.Replace("assigned", allLiveOf = Some("cid"))),
+    precondition = staged =>
       Seq("centroids", "codebooks")
-        .forall(p => IndexMaintenance.dataFiles(pend.resolve(p)).nonEmpty) &&
-        IndexMaintenance.listDir(pend.resolve("assigned"))
-          .exists(d => java.nio.file.Files.isDirectory(d) &&
-            d.getFileName.toString.startsWith("cid="))
-    if (!stagedComplete) {
-      IndexMaintenance.deleteRecursively(pend)
-      return
-    }
-    Seq("centroids", "codebooks").foreach { piece =>
-      val staged = pend.resolve(piece)
-      if (java.nio.file.Files.isDirectory(staged)) {
-        val live = java.nio.file.Paths.get(path, piece)
-        val names =
-          IndexMaintenance.dataFiles(staged).map(_.getFileName.toString).toSet
-        IndexMaintenance.dataFiles(staged)
-          .foreach(IndexMaintenance.copyInto(_, live))
-        IndexMaintenance.dataFiles(live)
-          .filterNot(f => names.contains(f.getFileName.toString))
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    val stagedA = pend.resolve("assigned")
-    val liveA = java.nio.file.Paths.get(path, "assigned")
-    val stagedCids = IndexMaintenance.listDir(stagedA)
-      .filter(d => java.nio.file.Files.isDirectory(d) &&
-        d.getFileName.toString.startsWith("cid="))
-      .map(_.getFileName.toString).toSet
-    stagedCids.foreach { cd =>
-      val sdir = stagedA.resolve(cd)
-      val ldir = liveA.resolve(cd)
-      val names =
-        IndexMaintenance.dataFiles(sdir).map(_.getFileName.toString).toSet
-      IndexMaintenance.dataFiles(sdir)
-        .foreach(IndexMaintenance.copyInto(_, ldir))
-      IndexMaintenance.dataFiles(ldir)
-        .filterNot(f => names.contains(f.getFileName.toString))
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    IndexMaintenance.listDir(liveA)
-      .filter(d => java.nio.file.Files.isDirectory(d) &&
-        d.getFileName.toString.startsWith("cid=") &&
-        !stagedCids.contains(d.getFileName.toString))
-      .foreach(IndexMaintenance.deleteRecursively)
-    java.nio.file.Files.deleteIfExists(pend.resolve("_GRAFT_COMPLETE"))
-    IndexMaintenance.deleteRecursively(pend)
-  }
+        .forall(p => StagedCommit.dataFiles(staged.resolve(p)).nonEmpty) &&
+        StagedCommit.partitionDirs(staged.resolve("assigned"), "cid").nonEmpty)
+
+  /** Converge a possibly-crashed [[ivfpqRetrain]] at `path`
+    * ([[StagedCommit.recover]]). Called at every retrain entry;
+    * [[readIvfPqIndex]] calls the `rollBack = false` form: a read-path
+    * delete would RACE an in-flight retrain — a reader deleting the
+    * staging between [[writeIvfPqIndex]] finishing and the completion
+    * marker would leave the marker stamped on an empty tree (r18
+    * ADVICE). Rollback of a genuinely dead staging is the next retrain
+    * entry's job, where no writer can be in flight by contract (retrain
+    * is a single-owner maintenance pass). */
+  def recoverIvfPq(path: String, rollBack: Boolean = true): Unit =
+    retrain(path).recover(rollBack)
 
   /** Drift maintenance for the IVFADC serving artifact — the lifecycle
     * piece [[ivfpqAppend]] deliberately defers: appends assign and
@@ -520,14 +409,11 @@ object ProductQuant {
     * artifact is SELF-CONTAINED: no external embedding source needed,
     * exactly like compaction.
     *
-    * Crash-safe under the staging discipline shared with
-    * [[IndexMaintenance.compactIndex]] and the curation state commit:
-    * the full new index (models + re-encoded inverted file) is built
-    * under `<path>/_retrain/` (invisible to readers of the live
-    * sub-tables), committed with the completion marker, then folded by
-    * the idempotent three-sub-table swap — a crash at ANY point leaves
-    * the index serving ONE model generation, never a mix, and the next
-    * entry converges it ([[recoverIvfPq]]). Like compaction, retrain is
+    * Crash-safe under [[StagedCommit]]: the full new index (models +
+    * re-encoded inverted file) is staged under `<path>/_retrain/`,
+    * committed, then folded by the three-sub-table swap — a crash at
+    * ANY point leaves the index serving ONE model generation, never a
+    * mix, and the next entry converges it ([[recoverIvfPq]]). Like compaction, retrain is
     * an offline maintenance pass: run it when append-era recall probes
     * sag, not nightly.
     *
@@ -554,15 +440,14 @@ object ProductQuant {
     val ksEff = if (ks > 0) ks else liveCbs.head.size
     val emb = spark.read.parquet(s"$path/assigned").select("vec_id", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pend = retrainStaging(path)
-    IndexMaintenance.deleteRecursively(pend)
+    val sc = retrain(path)
     // vectors in assigned/ are already normalized (build + append both
     // normalize), so they re-enter training as-is
-    val res = writeIvfPqIndex(spark, pend.toString, emb, cEff, lloydIters,
-      mEff, ksEff)
+    val res = writeIvfPqIndex(spark, sc.stage().toString, emb, cEff,
+      lloydIters, mEff, ksEff)
     emb.unpersist(blocking = false)
-    graft.Tables.markArtifactComplete(pend.toString)
-    foldRetrain(path)
+    sc.commit()
+    sc.fold()
     spark.catalog.refreshByPath(s"$path/assigned")
     res
   }

@@ -176,69 +176,46 @@ object Ranking {
 
   // ------------------------------------------- arrival mode (E14 for E6)
 
-  private def pendingDir(path: String) =
-    java.nio.file.Paths.get(path, "_pending")
+  /** One append's deltas, staged under `_pending`: postings and doclen
+    * bucket files append into the live bucket dirs, and the `stats/` row
+    * (plus, for the exactly-once driver, the `meta/` batch id) swaps in. */
+  private def pending(path: String) = new StagedCommit(path, "_pending",
+    Seq(StagedCommit.Append("postings", "bucket"),
+      StagedCommit.Append("doclen", "bucket"),
+      StagedCommit.Swap("stats"), StagedCommit.Swap("meta")))
 
-  /** Converge a possibly-crashed [[appendToBm25]] at `path`: a committed
-    * pending batch rolls forward (the fold is idempotent), an
-    * uncommitted one rolls back — the [[CurationIncremental
-    * .recoverState]] discipline for this artifact's sub-tables. Run at
-    * every append entry and before retraction. `rollBack = false` (the
-    * SERVE paths) only rolls committed state forward: an uncommitted
-    * `_pending` tree may be an in-flight append's, and a reader
-    * deleting it mid-write would let the writer commit a staging
-    * missing the deleted pieces — silently lost postings (the
-    * [[ProductQuant.recoverIvfPq]] reader/writer race, same fix). The
-    * forward-only form still closes the two-stats-files window the
-    * serve contract cares about: live stats mutate ONLY while folding a
-    * COMMITTED batch, which this converges. */
+  /** Converge a possibly-crashed [[appendToBm25]] at `path`
+    * ([[StagedCommit.recover]]). Run at every append entry and before
+    * retraction; the serve paths run the forward-only `rollBack = false`
+    * form through [[readBm25Index]], which still closes the
+    * two-stats-files window the serve contract cares about: live stats
+    * mutate ONLY while folding a COMMITTED batch, which this converges. */
   def recoverBm25(spark: SparkSession, path: String,
-      rollBack: Boolean = true): Unit = {
-    val pend = pendingDir(path)
-    if (java.nio.file.Files.exists(pend)) {
-      if (Tables.artifactComplete(pend.toString)) foldBm25Pending(path)
-      else if (rollBack) IndexMaintenance.deleteRecursively(pend)
+      rollBack: Boolean = true): Unit =
+    if (pending(path).recover(rollBack))
       Seq("postings", "doclen", "stats", "meta").foreach(p =>
         spark.catalog.refreshByPath(s"$path/$p"))
-    }
+
+  /** Fold the committed append staged by [[stageBm25Append]]. */
+  private def foldAppend(spark: SparkSession, path: String): Unit = {
+    pending(path).fold()
+    Seq("postings", "doclen", "stats").foreach(p =>
+      spark.catalog.refreshByPath(s"$path/$p"))
   }
 
-  /** Fold a COMMITTED pending batch into the live index: staged
-    * postings/doclen bucket files APPEND into the live bucket dirs
-    * (atomic per-file copy; staged part names are write-fresh UUIDs, so
-    * a re-fold skips already-copied files), then `stats/` (and, for the
-    * exactly-once driver, `meta/`) SWAPS to the staged row (copy-first,
-    * delete-stale-by-name-difference — never a moment with no live
-    * file), then marker first, pending tree last. Every action
-    * idempotent; a crash at any point re-folds cleanly. */
-  private def foldBm25Pending(path: String): Unit = {
-    val pend = pendingDir(path)
-    Seq("postings", "doclen").foreach { piece =>
-      IndexMaintenance.listDir(pend.resolve(piece))
-        .filter(d => java.nio.file.Files.isDirectory(d) &&
-          d.getFileName.toString.startsWith("bucket="))
-        .foreach { d =>
-          IndexMaintenance.dataFiles(d).foreach(
-            IndexMaintenance.copyInto(_, java.nio.file.Paths.get(
-              path, piece, d.getFileName.toString)))
-        }
-    }
-    Seq("stats", "meta").foreach { piece =>
-      val staged = pend.resolve(piece)
-      if (java.nio.file.Files.isDirectory(staged)) {
-        val live = java.nio.file.Paths.get(path, piece)
-        val names = IndexMaintenance.dataFiles(staged)
-          .map(_.getFileName.toString).toSet
-        IndexMaintenance.dataFiles(staged)
-          .foreach(IndexMaintenance.copyInto(_, live))
-        IndexMaintenance.dataFiles(live)
-          .filterNot(f => names.contains(f.getFileName.toString))
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    java.nio.file.Files.deleteIfExists(pend.resolve("_GRAFT_COMPLETE"))
-    IndexMaintenance.deleteRecursively(pend)
+  /** The three serving sub-tables — (postings, doclen, stats) — after
+    * the forward-only recovery (a read path must never delete an
+    * in-flight writer's uncommitted staging). Lazy plain scans, so a
+    * caller's bucket filter still prunes the posting read. */
+  def readBm25Index(spark: SparkSession, path: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    recoverBm25(spark, path, rollBack = false)
+    (subTable(spark, path, "postings"), subTable(spark, path, "doclen"),
+      subTable(spark, path, "stats"))
   }
+
+  private def subTable(spark: SparkSession, path: String, name: String) =
+    spark.read.parquet(s"$path/$name")
 
   /** Append an arriving batch of NEW documents to a persisted BM25
     * index — the [[IncrementalDedup]] arrival discipline for the
@@ -272,30 +249,10 @@ object Ranking {
       autoCompact: Int = 0): Unit = {
     recoverBm25(spark, path)
     stageBm25Append(spark, path, newDocs)
-    foldBm25Pending(path)
-    Seq("postings", "doclen", "stats").foreach(p =>
-      spark.catalog.refreshByPath(s"$path/$p"))
+    foldAppend(spark, path)
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/postings" -> "bucket", s"$path/doclen" -> "bucket"))
   }
-
-  /** Micro-batch id the index at `path` last committed, or -1 when no
-    * exactly-once append has landed yet. Lives in `meta/` and commits
-    * ATOMICALLY with the posting/doclen/stats deltas (one more piece
-    * under the `_pending` marker — the [[CurationIncremental
-    * .committedBatchId]] discipline), so the id can never say "applied"
-    * while the postings say otherwise. Data-file presence, not
-    * directory presence, detects fresh state (the r18 first-batch
-    * lesson: an empty meta/ dir must read as fresh, not throw). */
-  def committedBm25BatchId(spark: SparkSession, path: String): Long =
-    if (IndexMaintenance.dataFiles(
-        java.nio.file.Paths.get(path, "meta")).nonEmpty)
-      // max, not head(): mid-swap after a crash meta/ transiently holds
-      // the old AND new row; ids are monotonic so max is the committed
-      // one either way (r20 ADVICE — head() was nondeterministic there)
-      spark.read.parquet(s"$path/meta")
-        .agg(max("batch_id")).head().getLong(0)
-    else -1L
 
   /** [[appendToBm25]] for a streaming driver whose engine may RE-DELIVER
     * a micro-batch after a restart (Structured Streaming's foreachBatch
@@ -319,11 +276,9 @@ object Ranking {
   def appendToBm25ExactlyOnce(spark: SparkSession, path: String,
       newDocs: DataFrame, batchId: Long, autoCompact: Int = 0): Boolean = {
     recoverBm25(spark, path)
-    if (batchId <= committedBm25BatchId(spark, path)) return false
+    if (batchId <= StagedCommit.committedBatchId(spark, path)) return false
     stageBm25Append(spark, path, newDocs, metaRow = Some(batchId))
-    foldBm25Pending(path)
-    Seq("postings", "doclen", "stats").foreach(p =>
-      spark.catalog.refreshByPath(s"$path/$p"))
+    foldAppend(spark, path)
     IndexMaintenance.autoCompact(spark, autoCompact,
       Seq(s"$path/postings" -> "bucket", s"$path/doclen" -> "bucket"))
     true
@@ -338,8 +293,8 @@ object Ranking {
       newDocs: DataFrame, commit: Boolean = true,
       metaRow: Option[Long] = None): Unit = {
     import spark.implicits._
-    val pend = pendingDir(path)
-    IndexMaintenance.deleteRecursively(pend)
+    val sc = pending(path)
+    val pend = sc.stage()
     metaRow.foreach(id => Seq(id).toDF("batch_id")
       .coalesce(1).write.mode("overwrite")
       .parquet(pend.resolve("meta").toString))
@@ -352,28 +307,25 @@ object Ranking {
     val toks = newDocs.select(col("doc_id"),
       split(col("text"), " ").as("toks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    toks.select(col("doc_id"), explode(col("toks")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", termBucket(col("term")))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(pend.resolve("postings").toString)
-    toks.select(col("doc_id"), size(col("toks")).as("dl"))
-      .withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(PostingBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(pend.resolve("doclen").toString)
+    StagedCommit.writeBucketed(
+      toks.select(col("doc_id"), explode(col("toks")).as("term"))
+        .groupBy("term", "doc_id").agg(count(lit(1)).as("tf")),
+      xxhash64(col("term")), PostingBuckets,
+      pend.resolve("postings").toString, append = false)
+    StagedCommit.writeBucketed(
+      toks.select(col("doc_id"), size(col("toks")).as("dl")),
+      xxhash64(col("doc_id")), PostingBuckets,
+      pend.resolve("doclen").toString, append = false)
     val delta = toks.agg(count(lit(1)).as("dn"),
       coalesce(sum(size(col("toks"))), lit(0L)).as("ddl")).head()
     toks.unpersist(blocking = false) // all three consumers have run
-    val live = spark.read.parquet(s"$path/stats").head()
+    val live = subTable(spark, path, "stats").head()
     spark.range(1).select(
         (lit(live.getLong(0)) + lit(delta.getLong(0))).as("n"),
         (lit(live.getLong(1)) + lit(delta.getLong(1))).as("dlsum"))
       .coalesce(1).write.mode("overwrite")
       .parquet(pend.resolve("stats").toString)
-    if (commit) Tables.markArtifactComplete(pend.toString)
+    if (commit) sc.commit()
   }
 
   /** Serving location for the APPENDED-index declared key (separate
@@ -446,10 +398,8 @@ object Ranking {
   private[operators] def recomputeBm25Stats(spark: SparkSession,
       path: String): Unit = {
     val dlPath = java.nio.file.Paths.get(path, "doclen")
-    val dlEmpty = IndexMaintenance.listDir(dlPath)
-      .filter(d => java.nio.file.Files.isDirectory(d) &&
-        d.getFileName.toString.startsWith("bucket="))
-      .forall(d => IndexMaintenance.dataFiles(d).isEmpty)
+    val dlEmpty = StagedCommit.partitionDirs(dlPath, "bucket")
+      .forall(d => StagedCommit.dataFiles(d).isEmpty)
     val stats =
       if (dlEmpty) spark.range(1).select(lit(0L).as("n"), lit(0L).as("dlsum"))
       else spark.read.parquet(dlPath.toString)
@@ -479,18 +429,17 @@ object Ranking {
   private[operators] def serveFromIndex(spark: SparkSession, path: String,
       k: Int): DataFrame = {
     // converge a crashed append before reading ANY sub-table (r19
-    // ADVICE: foldBm25Pending's stats swap has a window where stats/
+    // ADVICE: the append fold's stats swap has a window where stats/
     // holds two rows — a reader that skipped the documented
     // recover-before-serving contract would head() a nondeterministic
-    // one). Forward-only: a read path must never delete an in-flight
-    // writer's uncommitted staging. Cheap no-op on a clean index.
-    recoverBm25(spark, path, rollBack = false)
+    // one). Cheap no-op on a clean index.
+    val (postings, doclen, statsTbl) = readBm25Index(spark, path)
     // Deliberately NOT cached: the per-doc tf aggregation and the df row
     // each read the postings once, but both reads are bucket-pruned to the
     // query terms' partitions — two pruned scans of a few-bucket slice are
     // cheaper than a persist whose lifetime would have to outlive this
     // (lazy) plan, and the returned frame stays audit-visible end to end.
-    val post = spark.read.parquet(s"$path/postings")
+    val post = postings
       .filter(col("bucket").isin(bucketsOf(QueryTerms): _*) &&
         col("term").isin(QueryTerms: _*))
     // per-doc tf columns for the matched docs (absent posting → tf 0)
@@ -498,12 +447,12 @@ object Ranking {
       coalesce(sum(when(col("term") === t, col("tf"))), lit(0L)).as(s"tf_$t"))
     val perDoc = post.groupBy("doc_id")
       .agg(tfCols.head, tfCols.tail: _*)
-      .join(spark.read.parquet(s"$path/doclen"), Seq("doc_id"))
+      .join(doclen, Seq("doc_id"))
     // corpus stats + per-term dfs: one tiny row, broadcast back
     val dfCols = QueryTerms.map(t =>
       sum((col("term") === t).cast("long")).as(s"df_$t"))
     val dfsRow = post.agg(dfCols.head, dfCols.tail: _*)
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = statsTbl
       .withColumn("avgdl", col("dlsum").cast("double") / col("n"))
       .crossJoin(dfsRow)
     val score = QueryTerms.map(t =>
@@ -569,14 +518,13 @@ object Ranking {
       "query terms must be case-insensitively distinct (df_<term> columns " +
         "resolve case-insensitively): " +
         caseClash.values.map(_.mkString("/")).mkString(", "))
-    // converge a crashed append before reading — forward-only, the
-    // serve-path contract (see recoverBm25's reader/writer race note)
-    recoverBm25(spark, path, rollBack = false)
+    // converge a crashed append before reading (forward-only)
+    val (postings, doclen, statsTbl) = readBm25Index(spark, path)
     val allTerms = queries.flatMap(_._2).distinct
     // ONE pruned read feeds both aggregations (tf's and df's) — the
     // bm25Serve double-read note applies: both passes prune to the same
     // few buckets, nothing corpus-sized is ever touched
-    val post = spark.read.parquet(s"$path/postings")
+    val post = postings
       .filter(col("bucket").isin(bucketsOf(allTerms): _*) &&
         col("term").isin(allTerms: _*))
     val qt = queries.flatMap { case (q, ts) => ts.map((q, _)) }
@@ -585,11 +533,11 @@ object Ranking {
       .groupBy("qid", "doc_id")
       .agg(map_from_entries(collect_list(struct(col("term"), col("tf"))))
         .as("tfm"))
-      .join(spark.read.parquet(s"$path/doclen"), Seq("doc_id"))
+      .join(doclen, Seq("doc_id"))
     val dfCols = allTerms.map(t =>
       sum((col("term") === t).cast("long")).as(s"df_$t"))
     val dfsRow = post.agg(dfCols.head, dfCols.tail: _*)
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = statsTbl
       .withColumn("avgdl", col("dlsum").cast("double") / col("n"))
       .crossJoin(dfsRow)
     // per-query score: tf 0 for query terms the doc lacks (absent map

@@ -93,19 +93,17 @@ object SubstringIncremental {
     * construction ([[step]]'s anti-join of a distinct frame) — the
     * redundant exchange was ~10% of the step at the 200k probe.
     *
-    * The write repartitions by bucket first: a dynamic-partition write
-    * from hash-on-g partitioning opens every bucket dir in every task
-    * (32 tasks × 64 buckets ≈ 2k files PER APPEND — the fragment
-    * accretion [[IndexMaintenance.compactIndex]] exists to fight);
-    * aligning tasks to buckets appends ONE file per touched bucket. */
+    * The write repartitions by bucket first
+    * ([[StagedCommit.writeBucketed]]): a dynamic-partition write from
+    * hash-on-g partitioning opens every bucket dir in every task (32
+    * tasks × 64 buckets ≈ 2k files PER APPEND); aligning tasks to
+    * buckets appends ONE file per touched bucket. */
   def writeDigestIndex(digests: DataFrame, path: String,
       nBuckets: Int = IndexBuckets, append: Boolean = false,
       dedupe: Boolean = true): Unit = {
-    val mode = if (append) "append" else "overwrite"
     val d = if (dedupe) digests.select("g").distinct() else digests.select("g")
-    d.withColumn("bucket", pmod(xxhash64(col("g")), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/digests")
+    StagedCommit.writeBucketed(d, xxhash64(col("g")), nBuckets,
+      s"$path/digests", append)
   }
 
   def readDigestIndex(spark: SparkSession, path: String): DataFrame =

@@ -36,14 +36,14 @@ import java.nio.file.{Files, Paths}
   *   3. stage the journal under `<root>/_takedown/`: one parquet of
   *      keys per family plus a plan table (family, sub-table path, key
   *      column, partition column) — NOTHING live has been touched yet;
-  *   4. `_GRAFT_COMPLETE` on the journal — THE COMMIT POINT;
-  *   5. execute: per plan row, [[IndexMaintenance.retractKeys]] (anti-
-  *      join rewrite of only the buckets containing a key, each under
-  *      its own staged swap), then the family post-steps (BM25's stats
-  *      row re-derives from surviving doclen); delete the marker, then
-  *      the journal.
+  *   4. commit the journal ([[StagedCommit]]);
+  *   5. execute — the journal's fold: per plan row,
+  *      [[IndexMaintenance.retractKeys]] (anti-join rewrite of only the
+  *      buckets containing a key, each under its own staged swap), then
+  *      the family post-steps (BM25's stats row re-derives from
+  *      surviving doclen); then finish the journal.
   *
-  * Crash anywhere BEFORE the marker: no index changed; the journal
+  * Crash anywhere BEFORE the commit: no index changed; the journal
   * rolls back and the retry re-derives from live state. Crash anywhere
   * AFTER: [[recoverTakedown]] (run at every entry, and callable from a
   * resuming pipeline) re-executes the journal — retractKeys is
@@ -86,27 +86,23 @@ object Takedown {
     def needsRemaining: Boolean = lineIndex.nonEmpty || substring.nonEmpty
   }
 
-  private def journalDir(root: String) = Paths.get(root, "_takedown")
+  /** The journal: no piece folds into a live path — [[executeJournal]]
+    * is its fold. */
+  private def journal(root: String) = new StagedCommit(root, "_takedown", Nil)
 
   /** Converge a possibly-crashed [[retractEverywhere]] at `root`: a
     * committed journal re-executes to completion (idempotent), an
     * uncommitted one rolls back untouched. Run at every entry; a
     * pipeline resuming after a crash should call it before serving. */
-  def recoverTakedown(spark: SparkSession, root: String): Unit = {
-    val jd = journalDir(root)
-    if (Files.exists(jd)) {
-      if (Tables.artifactComplete(jd.toString)) { executeJournal(spark, root); () }
-      else IndexMaintenance.deleteRecursively(jd)
-    }
-  }
+  def recoverTakedown(spark: SparkSession, root: String): Unit =
+    journal(root).recover(rollForward = () => executeJournal(spark, root))
 
   /** Execute a COMMITTED journal: every plan row's bucket-pruned
-    * anti-join rewrite, then the family post-steps, then cleanup
-    * (marker first — once it is gone, recovery classifies any leftover
-    * journal as roll-back-able, which is correct because the work is
-    * done). Returns removed-row counts per family. */
+    * anti-join rewrite, then the family post-steps, then finish the
+    * journal. Returns removed-row counts per family. */
   private def executeJournal(spark: SparkSession, root: String): Map[String, Long] = {
-    val jd = journalDir(root)
+    val sc = journal(root)
+    val jd = sc.dir
     val plan = spark.read.parquet(jd.resolve("plan").toString)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
@@ -129,8 +125,7 @@ object Takedown {
     val missing = plan.filterNot { case (_, path, _, _, _) =>
       Files.isDirectory(Paths.get(path)) }
     if (missing.nonEmpty) {
-      Files.deleteIfExists(jd.resolve("_GRAFT_COMPLETE"))
-      IndexMaintenance.deleteRecursively(jd)
+      sc.finish()
       throw new IllegalStateException(
         "takedown journal discarded: plan rows name missing sub-tables " +
           missing.map(m => s"${m._1}=${m._2}").mkString(", ") +
@@ -151,8 +146,7 @@ object Takedown {
     plan.find(_._1 == "bm25_doclen").foreach { case (_, dlPath, _, _, _) =>
       Ranking.recomputeBm25Stats(spark, dlPath.stripSuffix("/doclen"))
     }
-    Files.deleteIfExists(jd.resolve("_GRAFT_COMPLETE"))
-    IndexMaintenance.deleteRecursively(jd)
+    sc.finish()
     removed
   }
 
@@ -193,8 +187,8 @@ object Takedown {
       targets: TakedownTargets, docs: DataFrame,
       remaining: Option[DataFrame] = None, commit: Boolean = true): Unit = {
     import spark.implicits._
-    val jd = journalDir(root)
-    IndexMaintenance.deleteRecursively(jd)
+    val sc = journal(root)
+    val jd = sc.stage()
     // four DISTINCT key derivations, each staged ONCE and shared by
     // every plan row that retracts on it (families keyed by the raw id
     // all reference the single `ids` parquet)
@@ -269,7 +263,7 @@ object Takedown {
     entries.toDF("family", "path", "key_col", "part_col", "keys_name")
       .coalesce(1).write.mode("overwrite")
       .parquet(jd.resolve("plan").toString)
-    if (commit) Tables.markArtifactComplete(jd.toString)
+    if (commit) sc.commit()
   }
 
   // --------------------------------------------------------- declared key
@@ -359,16 +353,6 @@ object Takedown {
     }
     val removed = spark.read.parquet(s"$root/removed").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // in-query parity arm: each surviving index vs its contract, as ONE
-    // aggregation job — every (family, side) pair reduces to (row count,
-    // Σ xxhash64(row) as decimal(38,0)), the driver gate's own
-    // hash-compare methodology (multiset equality ⟺ equal count + equal
-    // hash sum; the decimal sum cannot overflow — 2⁶⁴-bounded terms with
-    // 10³⁸ headroom). One DAG scans all seven indexes and recomputes all
-    // seven references in parallel, instead of ~21 sequential jobs.
-    def tagged(family: String, side: String, df: DataFrame): DataFrame =
-      df.select(lit(family).as("family"), lit(side).as("side"),
-        xxhash64(struct(df.columns.map(col): _*)).as("h"))
     // prepared() is the MinHash signature kernel — it feeds BOTH the
     // bands and sets reference branches of the fused parity DAG, so
     // persist it or the kernel runs twice per call.
@@ -380,27 +364,56 @@ object Takedown {
     val postRef = rem
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    val pairs: Seq[(String, DataFrame, DataFrame)] = Seq(
-      ("fp", spark.read.parquet(s"$root/fp").select("fp"), fpRef),
-      ("minhash_bands",
-        spark.read.parquet(MinHashIncremental.bandsSubPath(s"$root/minhash"))
-          .select("doc_id", "band", "sig"),
+    val (mhBands, mhSets) = MinHashIncremental.readBandIndex(spark, s"$root/minhash")
+    val (postings, doclen, stats) = Ranking.readBm25Index(spark, s"$root/bm25")
+    val parity = parityArm(Seq(
+      ("fp", IncrementalDedup.readFpIndex(spark, s"$root/fp").select("fp"), fpRef),
+      ("minhash_bands", mhBands.select("doc_id", "band", "sig"),
         MinHashIncremental.bandRows(prepRem)),
-      ("minhash_sets",
-        spark.read.parquet(s"$root/minhash/sets").select("doc_id", "hset"),
+      ("minhash_sets", mhSets.select("doc_id", "hset"),
         prepRem.select("doc_id", "hset")),
-      ("line", spark.read.parquet(s"$root/line").select("fp"),
+      ("line", IncrementalDedup.readFpIndex(spark, s"$root/line").select("fp"),
         LineDedup.lineFps(rem)),
       ("substring",
-        spark.read.parquet(s"$root/substring/digests").select("g"),
+        SubstringIncremental.readDigestIndex(spark, s"$root/substring").select("g"),
         SubstringDedup.windowDigests(rem).select("g").distinct()),
-      ("bm25_postings",
-        spark.read.parquet(s"$root/bm25/postings")
-          .select("term", "doc_id", "tf"),
-        postRef),
-      ("bm25_doclen",
-        spark.read.parquet(s"$root/bm25/doclen").select("doc_id", "dl"),
-        rem.select(col("doc_id"), size(split(col("text"), " ")).as("dl"))))
+      ("bm25_postings", postings.select("term", "doc_id", "tf"), postRef),
+      ("bm25_doclen", doclen.select("doc_id", "dl"),
+        rem.select(col("doc_id"), size(split(col("text"), " ")).as("dl")))))
+    // stats row: one tiny direct compare on top of the doclen parity
+    val statsRow = stats.head()
+    val statsRef = rem.agg(count(lit(1)),
+      coalesce(sum(size(split(col("text"), " "))), lit(0L))).head()
+    val statsOk = statsRow.getLong(0) == statsRef.getLong(0) &&
+      statsRow.getLong(1) == statsRef.getLong(1)
+    val out = Seq("bm25_doclen", "bm25_postings", "fp", "line",
+      "minhash_bands", "minhash_sets", "substring")
+      .map(f => (f, removed(f), parity(f)._1,
+        parity(f)._2 && (f != "bm25_doclen" || statsOk)))
+      .toDF("family", "removed", "survivors", "parity_ok")
+      .orderBy("family")
+    // the parity aggregates are already collected — both kernel caches
+    // release here (r22 cache-contract enforcement; CacheHygieneSpec
+    // pins the takedown key)
+    docsL.unpersist(blocking = false)
+    prepRem.unpersist(blocking = false)
+    out
+  }
+
+  /** The in-query parity arm both declared keys share: each surviving
+    * index vs its contract reference, as ONE aggregation job — every
+    * (family, side) pair reduces to (row count, Σ xxhash64(row) as
+    * decimal(38,0)), the driver gate's own hash-compare methodology
+    * (multiset equality ⟺ equal count + equal hash sum; the decimal sum
+    * cannot overflow — 2⁶⁴-bounded terms with 10³⁸ headroom). One DAG
+    * scans every index and recomputes every reference in parallel,
+    * instead of ~3 sequential jobs per family. Returns, per family, the
+    * index's surviving row count and whether it matches its reference. */
+  private def parityArm(pairs: Seq[(String, DataFrame, DataFrame)])
+      : Map[String, (Long, Boolean)] = {
+    def tagged(family: String, side: String, df: DataFrame): DataFrame =
+      df.select(lit(family).as("family"), lit(side).as("side"),
+        xxhash64(struct(df.columns.map(col): _*)).as("h"))
     val agged = pairs
       .flatMap { case (f, idx, ref) =>
         Seq(tagged(f, "idx", idx), tagged(f, "ref", ref)) }
@@ -414,28 +427,10 @@ object Takedown {
       .toMap
     // an empty side produces no group row; None == None keeps
     // empty-vs-empty equal and empty-vs-nonempty unequal, as required
-    def parity(f: String): Boolean =
-      agged.get((f, "idx")) == agged.get((f, "ref"))
-    def survivors(f: String): Long =
-      agged.get((f, "idx")).map(_._1).getOrElse(0L)
-    // stats row: one tiny direct compare on top of the doclen parity
-    val statsRow = spark.read.parquet(s"$root/bm25/stats").head()
-    val statsRef = rem.agg(count(lit(1)),
-      coalesce(sum(size(split(col("text"), " "))), lit(0L))).head()
-    val statsOk = statsRow.getLong(0) == statsRef.getLong(0) &&
-      statsRow.getLong(1) == statsRef.getLong(1)
-    val out = Seq("bm25_doclen", "bm25_postings", "fp", "line",
-      "minhash_bands", "minhash_sets", "substring")
-      .map(f => (f, removed(f), survivors(f),
-        parity(f) && (f != "bm25_doclen" || statsOk)))
-      .toDF("family", "removed", "survivors", "parity_ok")
-      .orderBy("family")
-    // the parity aggregates are already collected — both kernel caches
-    // release here (r22 cache-contract enforcement; CacheHygieneSpec
-    // pins the takedown key)
-    docsL.unpersist(blocking = false)
-    prepRem.unpersist(blocking = false)
-    out
+    pairs.map { case (f, _, _) =>
+      val idx = agged.get((f, "idx"))
+      f -> (idx.map(_._1).getOrElse(0L), idx == agged.get((f, "ref")))
+    }.toMap
   }
 
   // ------------------------------------------- declared key: vector estate
@@ -544,11 +539,6 @@ object Takedown {
     }
     val removed = spark.read.parquet(s"$root/removed").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // parity arm: one fused aggregation (the takedownQuery methodology —
-    // multiset equality ⟺ equal count + equal xxhash64 sum per side)
-    def tagged(family: String, side: String, df: DataFrame): DataFrame =
-      df.select(lit(family).as("family"), lit(side).as("side"),
-        xxhash64(struct(df.columns.map(col): _*)).as("h"))
     val imgRem = remOf(spark.read.parquet(s"$root/truth/img_hashes"), "media_id")
     val vidRem = remOf(spark.read.parquet(s"$root/truth/video_hashes"), "media_id")
     // embedText feeds both the bands and vecs reference branches, and the
@@ -556,59 +546,38 @@ object Takedown {
     // persist each so its kernel runs once inside the fused parity DAG.
     val txtEmbRem = TextEmbed.embedText(remOf(txtFix, "doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (_, centroids, cbs) = ProductQuant.readIvfPqIndex(spark, s"$root/ivfpq")
+    val (assigned, centroids, cbs) =
+      ProductQuant.readIvfPqIndex(spark, s"$root/ivfpq")
     val embRem = ProductQuant.normalized(remOf(embAll, "vec_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ivfRef = ProductQuant.encode(embRem, cbs)
       .join(Similarity.assignCids(spark, embRem, centroids), "vec_id")
       .select("vec_id", "v", "codes", "cid")
-    val pairs: Seq[(String, DataFrame, DataFrame)] = Seq(
-      ("phash_bands",
-        spark.read.parquet(s"$root/phash/bands").select("media_id", "b", "v"),
+    val (phBands, phHashes) = PhashIncremental.readPhashIndex(spark, s"$root/phash")
+    val (vidBands, vidHashes) =
+      VideoPhashIncremental.readVideoIndex(spark, s"$root/video")
+    val (teBands, teVecs) = TextEmbed.readTextEmbedIndex(spark, s"$root/textembed")
+    val parity = parityArm(Seq(
+      ("phash_bands", phBands.select("media_id", "b", "v"),
         PhashIncremental.bandRows(imgRem)),
-      ("phash_hashes",
-        spark.read.parquet(s"$root/phash/hashes").select("media_id", "phash"),
+      ("phash_hashes", phHashes.select("media_id", "phash"),
         imgRem.select("media_id", "phash")),
-      ("video_bands",
-        spark.read.parquet(s"$root/video/bands").select("media_id", "sb", "v"),
+      ("video_bands", vidBands.select("media_id", "sb", "v"),
         VideoPhashIncremental.bandRows(vidRem)),
-      ("video_hashes",
-        spark.read.parquet(s"$root/video/hashes").select("media_id", "phashes"),
+      ("video_hashes", vidHashes.select("media_id", "phashes"),
         vidRem.select("media_id", "phashes")),
-      ("text_embed_bands",
-        spark.read.parquet(
-            TextEmbed.bandsPath(s"$root/textembed", TextEmbed.BandBits, 4))
-          .select("doc_id", "tbl", "b", "bv"),
+      ("text_embed_bands", teBands.select("doc_id", "tbl", "b", "bv"),
         TextEmbed.bandRowsAll(txtEmbRem)),
-      ("text_embed_vecs",
-        spark.read.parquet(s"$root/textembed/vecs").select("doc_id", "v"),
+      ("text_embed_vecs", teVecs.select("doc_id", "v"),
         txtEmbRem.select("doc_id", "v")),
-      ("ivfpq",
-        spark.read.parquet(s"$root/ivfpq/assigned")
-          .select("vec_id", "v", "codes", "cid"),
-        ivfRef))
-    val agged = pairs
-      .flatMap { case (f, idx, ref) =>
-        Seq(tagged(f, "idx", idx), tagged(f, "ref", ref)) }
-      .reduce(_ unionByName _)
-      .groupBy("family", "side")
-      .agg(count(lit(1)).as("n"),
-        sum(col("h").cast("decimal(38,0)")).as("hs"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getDecimal(3).toBigInteger.toString)))
-      .toMap
-    def parity(f: String): Boolean =
-      agged.get((f, "idx")) == agged.get((f, "ref"))
-    def survivors(f: String): Long =
-      agged.get((f, "idx")).map(_._1).getOrElse(0L)
+      ("ivfpq", assigned.select("vec_id", "v", "codes", "cid"), ivfRef)))
     // the parity aggregates are already collected — both embedding
     // caches release here (r22 cache-contract enforcement;
     // CacheHygieneSpec pins the takedown_vectors key)
     txtEmbRem.unpersist(blocking = false)
     embRem.unpersist(blocking = false)
-    pairs.map(_._1)
-      .map(f => (f, removed(f), survivors(f), parity(f)))
+    parity.toSeq
+      .map { case (f, (n, ok)) => (f, removed(f), n, ok) }
       .toDF("family", "removed", "survivors", "parity_ok")
       .orderBy("family")
   }

@@ -332,16 +332,10 @@ object TextEmbed {
   def writeTextEmbedIndex(emb: DataFrame, path: String,
       nBuckets: Int = 64, append: Boolean = false,
       bandBits: Int = BandBits, nTables: Int = 4): Unit = {
-    val mode = if (append) "append" else "overwrite"
-    bandRowsAll(emb, bandBits, nTables)
-      .withColumn("bucket", pmod(col("bv"), lit(nBuckets.toLong)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket")
-      .parquet(bandsPath(path, bandBits, nTables))
-    emb.select(col("doc_id"), col("v"))
-      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/vecs")
+    StagedCommit.writeBucketed(bandRowsAll(emb, bandBits, nTables), col("bv"),
+      nBuckets, bandsPath(path, bandBits, nTables), append)
+    StagedCommit.writeBucketed(emb.select(col("doc_id"), col("v")),
+      xxhash64(col("doc_id")), nBuckets, s"$path/vecs", append)
   }
 
   def readTextEmbedIndex(spark: SparkSession, path: String,

@@ -121,17 +121,10 @@ object VideoPhashIncremental {
     * verification surface. */
   def writeVideoIndex(hashes: DataFrame, path: String,
       nBuckets: Int = PhashIncremental.IndexBuckets, append: Boolean = false): Unit = {
-    val mode = if (append) "append" else "overwrite"
-    // one file per touched bucket per append — the IncrementalDedup
-    // .writeFpIndex fragment-accretion rationale
-    bandRows(hashes)
-      .withColumn("bucket", pmod(col("v"), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/bands")
-    hashes.select(col("media_id"), col("phashes"))
-      .withColumn("bucket", pmod(xxhash64(col("media_id")), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/hashes")
+    StagedCommit.writeBucketed(bandRows(hashes), col("v"), nBuckets,
+      s"$path/bands", append)
+    StagedCommit.writeBucketed(hashes.select(col("media_id"), col("phashes")),
+      xxhash64(col("media_id")), nBuckets, s"$path/hashes", append)
   }
 
   def readVideoIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests: the physical properties that make the
@@ -381,21 +383,38 @@ class PlanAuditSpec extends SparkSpec {
       }
   }
 
+  /** The served BM25 forms' plan contract, read off the executed plan's
+    * file scans (AQE stages included) by their root paths — not off the
+    * plan string, whose `Location` Spark truncates at
+    * `spark.sql.maxMetadataStringLength`: every posting scan carries a
+    * partition filter on `bucket`, and no scan is rooted at the corpus. */
+  private def assertServedPlan(key: String): Unit = {
+    val df = SparkEntry.queries(key)(spark, sf)
+    df.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    val scans = Plans.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    def roots(s: FileSourceScanExec) = s.relation.location.rootPaths
+    val postingScans = scans.filter(roots(_).exists(_.getName == "postings"))
+    assert(postingScans.nonEmpty,
+      s"$key: expected a posting scan in:\n" + df.queryExecution.executedPlan)
+    postingScans.foreach { s =>
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "bucket")),
+        s"$key: bucket pruning must reach the posting scan's partition " +
+          "filters: " + s.partitionFilters)
+    }
+    val corpus = scans.flatMap(roots).filter(_.getName == "documents.parquet")
+    assert(corpus.isEmpty, s"$key: the served form must never scan the " +
+      "corpus text: " + corpus)
+  }
+
   test("bm25_serve: the posting read is pruned to the query terms' buckets") {
     // the serving claim at 100 TB: a query touches nProbe-like slices of
     // the index, not the corpus — the bucket partition column must reach
     // the scan as a PartitionFilter (whole directories skipped at
     // listing), and the corpus text is never read at all
-    val df = SparkEntry.queries("bm25_serve")(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val postingScan = p.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("/postings")).getOrElse("")
-    assert(postingScan.contains("PartitionFilters: [bucket") ||
-      postingScan.contains("PartitionFilters: [cast(bucket"),
-      "bucket pruning must reach the posting scan's PartitionFilters:\n" + postingScan)
-    assert(!p.contains("documents.parquet"),
-      "the served form must never scan the corpus text")
+    assertServedPlan("bm25_serve")
   }
 
   test("bm25_serve_batch: one pruned posting read answers every query; no corpus scan") {
@@ -403,19 +422,7 @@ class PlanAuditSpec extends SparkSpec {
     // buckets, not N corpus scans — bucket pruning must reach every
     // posting scan's PartitionFilters, and documents.parquet never
     // appears in the plan
-    val df = SparkEntry.queries("bm25_serve_batch")(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val postingScans = p.linesIterator.filter(l =>
-      l.contains("FileScan parquet") && l.contains("/postings")).toList
-    assert(postingScans.nonEmpty, "expected a posting scan in:\n" + p)
-    postingScans.foreach { s =>
-      assert(s.contains("PartitionFilters: [bucket") ||
-        s.contains("PartitionFilters: [cast(bucket"),
-        "bucket pruning must reach the posting scan's PartitionFilters:\n" + s)
-    }
-    assert(!p.contains("documents.parquet"),
-      "the batch served form must never scan the corpus text")
+    assertServedPlan("bm25_serve_batch")
   }
 
   test("bm25_serve_incremental: the appended artifact serves with the same pruned plan") {
@@ -423,16 +430,7 @@ class PlanAuditSpec extends SparkSpec {
     // appended index's posting read is bucket-pruned exactly like the
     // full-build artifact's, and the corpus text never enters the plan
     // (the append's work happened at ingest time, once)
-    val df = SparkEntry.queries("bm25_serve_incremental")(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val postingScan = p.linesIterator.find(l =>
-      l.contains("FileScan parquet") && l.contains("/postings")).getOrElse("")
-    assert(postingScan.contains("PartitionFilters: [bucket") ||
-      postingScan.contains("PartitionFilters: [cast(bucket"),
-      "bucket pruning must reach the appended posting scan:\n" + postingScan)
-    assert(!p.contains("documents.parquet"),
-      "the appended served form must never scan the corpus text")
+    assertServedPlan("bm25_serve_incremental")
   }
 
   test("large_order: fact pre-agg is the only wide shuffle; HAVING survivors broadcast") {

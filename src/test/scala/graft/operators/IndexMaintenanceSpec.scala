@@ -31,6 +31,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     }
   }
 
+  /** Manifest + marker over an already-written `_staged` rewrite. */
+  private def commitStaging(dir: String, buckets: Seq[String]): Unit = {
+    StagedCommit.writeManifest(IndexMaintenance.swap(dir).dir, buckets)
+    IndexMaintenance.swap(dir).commit()
+  }
+
   private def fpSet(dir: String): Set[String] =
     spark.read.parquet(dir).select("fp").collect().map(_.getString(0)).toSet
 
@@ -89,7 +95,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val dir = tmpDir("crash")
     grownIndex(dir, 20, 12)
     val before = fpSet(dir)
-    val staged = IndexMaintenance.stagingDir(dir)
+    val staged = IndexMaintenance.swap(dir).dir
 
     // pre-commit crash: staged rewrite exists, NO marker → rollback
     spark.read.parquet(dir).filter(col("bucket") === 0)
@@ -104,7 +110,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     spark.read.parquet(dir).filter(col("bucket") === 0)
       .repartition(1).write.mode("overwrite").partitionBy("bucket")
       .parquet(staged.toString)
-    IndexMaintenance.commitStaging(dir, Seq("bucket=0"))
+    commitStaging(dir, Seq("bucket=0"))
     IndexMaintenance.recoverIndex(dir)
     assert(!Files.exists(staged), "committed staging must fold and clean up")
     assert(IndexMaintenance.fragmentCounts(dir)("bucket=0") === 1)
@@ -115,9 +121,9 @@ class IndexMaintenanceSpec extends SparkSpec {
     spark.read.parquet(dir).filter(col("bucket") === 1)
       .repartition(1).write.mode("overwrite").partitionBy("bucket")
       .parquet(staged.toString)
-    IndexMaintenance.commitStaging(dir, Seq("bucket=1"))
-    IndexMaintenance.dataFiles(staged.resolve("bucket=1")).foreach(
-      IndexMaintenance.copyInto(_, Paths.get(dir, "bucket=1")))
+    commitStaging(dir, Seq("bucket=1"))
+    StagedCommit.dataFiles(staged.resolve("bucket=1")).foreach(
+      StagedCommit.copyInto(_, Paths.get(dir, "bucket=1")))
     // (crash here: live bucket now has staged file + old fragments)
     IndexMaintenance.recoverIndex(dir)
     assert(IndexMaintenance.fragmentCounts(dir)("bucket=1") === 1)

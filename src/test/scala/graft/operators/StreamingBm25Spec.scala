@@ -45,7 +45,7 @@ class StreamingBm25Spec extends SparkSpec {
     try {
       in.addData(chop1.toSeq: _*); q1.processAllAvailable()
     } finally q1.stop()
-    assert(Ranking.committedBm25BatchId(spark, idx) === 0L)
+    assert(StagedCommit.committedBatchId(spark, idx) === 0L)
     val statsAfter0 = spark.read.parquet(s"$idx/stats").head()
     // RESTART from the same checkpoint: only the new chop processes —
     // a re-applied batch 0 would double its postings and stats delta
@@ -54,7 +54,7 @@ class StreamingBm25Spec extends SparkSpec {
     try {
       in.addData(chop2.toSeq: _*); q2.processAllAvailable()
     } finally q2.stop()
-    assert(Ranking.committedBm25BatchId(spark, idx) === 1L)
+    assert(StagedCommit.committedBatchId(spark, idx) === 1L)
     assert(statsAfter0.getLong(0) < spark.read.parquet(s"$idx/stats")
       .head().getLong(0), "batch 1 must have applied")
     // the grown index is content-identical to one full build
@@ -138,7 +138,7 @@ class StreamingBm25Spec extends SparkSpec {
     Ranking.stageBm25Append(spark, a, odd, commit = false, metaRow = Some(0L))
     Ranking.recoverBm25(spark, a)
     assert(java.nio.file.Files.notExists(java.nio.file.Paths.get(a, "_pending")))
-    assert(Ranking.committedBm25BatchId(spark, a) === -1L,
+    assert(StagedCommit.committedBatchId(spark, a) === -1L,
       "an uncommitted batch id must roll back with its delta")
     assert(Ranking.appendToBm25ExactlyOnce(spark, a, odd, 0L))
     assertContentEqual(a, ref)
@@ -150,7 +150,7 @@ class StreamingBm25Spec extends SparkSpec {
     assert(!Ranking.appendToBm25ExactlyOnce(spark, b, odd, 0L),
       "the redelivery must roll the committed batch forward, then skip")
     assert(java.nio.file.Files.notExists(java.nio.file.Paths.get(b, "_pending")))
-    assert(Ranking.committedBm25BatchId(spark, b) === 0L)
+    assert(StagedCommit.committedBatchId(spark, b) === 0L)
     assertContentEqual(b, ref)
   }
 }

@@ -52,14 +52,14 @@ class StreamingIvfPqIngestSpec extends SparkSpec {
     try {
       in.addData(chop1.toSeq: _*); q1.processAllAvailable()
     } finally q1.stop()
-    assert(ProductQuant.committedIvfPqBatchId(spark, idx) === 0L)
+    assert(StagedCommit.committedBatchId(spark, idx) === 0L)
     // RESTART from the same checkpoint: only the new chop processes
     val q2 = StreamingOps.streamingIvfPqAppend(
       in.toDF().toDF("vec_id", "v"), idx, ck)
     try {
       in.addData(chop2.toSeq: _*); q2.processAllAvailable()
     } finally q2.stop()
-    assert(ProductQuant.committedIvfPqBatchId(spark, idx) === 1L)
+    assert(StagedCommit.committedBatchId(spark, idx) === 1L)
     assert(modelBytes(idx) === models0,
       "an append must never touch the model sub-tables")
     // reference: the same chops through the raw batch append
@@ -102,7 +102,7 @@ class StreamingIvfPqIngestSpec extends SparkSpec {
     ProductQuant.stageIvfPqAppend(spark, a, odd, 0L, commit = false)
     ProductQuant.recoverIvfPqIngest(a)
     assert(java.nio.file.Files.notExists(java.nio.file.Paths.get(a, "_ingest")))
-    assert(ProductQuant.committedIvfPqBatchId(spark, a) === -1L)
+    assert(StagedCommit.committedBatchId(spark, a) === -1L)
     assert(ProductQuant.ivfpqAppendExactlyOnce(spark, a, odd, 0L))
     assignedEqual(a, ref)
     // crash after the marker, before the fold: roll-forward + skip
@@ -112,7 +112,7 @@ class StreamingIvfPqIngestSpec extends SparkSpec {
     assert(!ProductQuant.ivfpqAppendExactlyOnce(spark, b, odd, 0L),
       "the redelivery must roll the committed batch forward, then skip")
     assert(java.nio.file.Files.notExists(java.nio.file.Paths.get(b, "_ingest")))
-    assert(ProductQuant.committedIvfPqBatchId(spark, b) === 0L)
+    assert(StagedCommit.committedBatchId(spark, b) === 0L)
     assignedEqual(b, ref)
   }
 }
