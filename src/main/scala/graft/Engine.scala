@@ -23,6 +23,15 @@ import org.apache.spark.sql.SparkSession
   *    payoff is SortMergeJoins over bucketed facts eliding their Sorts
   *    entirely. Set HERE at session build, not per query — no declared key
   *    mutates session state.
+  *  - `spark.hadoop.fs.file.impl` / `fs.AbstractFileSystem.file.impl` —
+  *    the `file:` scheme is [[NioLocalFileSystem]] / [[NioLocalFs]]. With
+  *    no libhadoop present, Hadoop's stock local filesystem shells out:
+  *    `chmod` for every file and dir it creates, `readlink` for each end
+  *    of every FileContext rename. One `stream_windows` benchmark run
+  *    on 4 vCPUs (checkpoint and offset/commit logs, state store, parquet
+  *    commits) started about 10,000 processes that way, and its state
+  *    commit was half of each micro-batch. The java.nio overrides write the same files
+  *    with the same modes, `.crc` sidecars included.
   */
 object Engine {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -65,6 +74,9 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

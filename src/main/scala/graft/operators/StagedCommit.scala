@@ -163,7 +163,11 @@ object StagedCommit {
     val names = dataFiles(staged).map(_.getFileName.toString).toSet
     dataFiles(staged).foreach(copyInto(_, live))
     dataFiles(live).filterNot(f => names.contains(f.getFileName.toString))
-      .foreach(Files.deleteIfExists(_))
+      .foreach { f =>
+        Files.deleteIfExists(f)
+        // its Hadoop checksum sidecar, which dataFiles hides
+        Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+      }
   }
 
   // ------------------------------------------------------ file primitives

@@ -86,7 +86,7 @@ class ProductQuantSpec extends SparkSpec {
 
   test("ivfpq index round-trips: read-back centroids/codebooks/codes equal what was written") {
     val emb = normEmb.persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val tmp = tmpDir("graft-ivfpq")
     val (centroids, cbs) = ProductQuant.writeIvfPqIndex(spark, tmp, emb, c = 4)
     val (assigned, rc, rcbs) = ProductQuant.readIvfPqIndex(spark, tmp)
     // read-back is cid-sorted; training emission order is not
@@ -117,7 +117,7 @@ class ProductQuantSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val emb = normEmb.persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-app").toString
+    val tmp = tmpDir("graft-ivfpq-app")
     val (centroids, cbs) = ProductQuant.writeIvfPqIndex(spark, tmp,
       emb.filter(col("vec_id") % 2 === 0), c = 4)
     val before = spark.read.parquet(s"$tmp/assigned").count()
@@ -153,7 +153,7 @@ class ProductQuantSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val emb = normEmb.persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-rt").toString
+    val tmp = tmpDir("graft-ivfpq-rt")
     // the drift shape: build on the even half, append the odd half
     // under the frozen even-trained models
     ProductQuant.writeIvfPqIndex(spark, tmp,
@@ -201,7 +201,7 @@ class ProductQuantSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val emb = normEmb.persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-ret").toString
+    val tmp = tmpDir("graft-ivfpq-ret")
     val (cent0, cbs0) = ProductQuant.writeIvfPqIndex(spark, tmp, emb, c = 4)
     // pin the PRE-retract inverted file in memory so the reference
     // search below runs over original-rows-minus-retracted, independent
@@ -246,7 +246,7 @@ class ProductQuantSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val emb = normEmb.persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-life").toString
+    val tmp = tmpDir("graft-ivfpq-life")
     // build on the even half, append the odd half under frozen models
     ProductQuant.writeIvfPqIndex(spark, tmp,
       emb.filter(col("vec_id") % 2 === 0), c = 4)
@@ -287,7 +287,7 @@ class ProductQuantSpec extends SparkSpec {
     val spark0 = spark
     import spark0.implicits._
     val emb = normEmb.persist()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-rtc").toString
+    val tmp = tmpDir("graft-ivfpq-rtc")
     val (cent0, cbs0) = ProductQuant.writeIvfPqIndex(spark, tmp,
       emb.filter(col("vec_id") % 2 === 0), c = 4)
     // uncommitted crash: a staging tree with no marker is INVISIBLE to

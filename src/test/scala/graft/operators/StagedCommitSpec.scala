@@ -97,6 +97,18 @@ class StagedCommitSpec extends SparkSpec {
       .map(f => r.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
   }
 
+  /** Hadoop `.<name>.crc` sidecars in the live tree whose data file is
+    * gone, the staging tree excluded. */
+  private def orphanCrcs(k: Kind, root: String): Seq[String] = {
+    val r = Paths.get(root)
+    Files.walk(r).iterator().asScala.toList.filter { f =>
+      val n = f.getFileName.toString
+      !r.relativize(f).toString.startsWith(k.dirName) &&
+        n.startsWith(".") && n.endsWith(".crc") &&
+        !Files.exists(f.resolveSibling(n.stripPrefix(".").stripSuffix(".crc")))
+    }.map(r.relativize(_).toString)
+  }
+
   private def tmpLeft(root: String): Boolean =
     Files.walk(Paths.get(root)).iterator().asScala
       .exists(_.getFileName.toString.startsWith(".tmp-"))
@@ -121,6 +133,7 @@ class StagedCommitSpec extends SparkSpec {
         sc.commit()
         sc.fold()
         assert(!Files.exists(sc.dir))
+        assert(orphanCrcs(k, root) === Nil, "a fold must not orphan a .crc")
         live(k, root)
       }
       assert(expected !== before, "the fixture's fold must change the live tree")
@@ -139,6 +152,7 @@ class StagedCommitSpec extends SparkSpec {
         assert(commitOf(k, b).recover(rollBack))
         assert(!Files.exists(commitOf(k, b).dir), s"(b) rollBack=$rollBack")
         assert(live(k, b) === expected, s"(b) rollBack=$rollBack")
+        assert(orphanCrcs(k, b) === Nil, s"(b) rollBack=$rollBack")
       }
 
       // (c) marker, fold stopped after the first file copy, with a partial
@@ -159,6 +173,7 @@ class StagedCommitSpec extends SparkSpec {
       assert(!Files.exists(sc.dir), "(c) re-fold must finish")
       assert(live(k, c) === expected, "(c) re-fold must converge")
       assert(!tmpLeft(c), "(c) no partial copy may survive the re-fold")
+      assert(orphanCrcs(k, c) === Nil, "(c) re-fold must not orphan a .crc")
 
       // (d) fold done, marker deleted, tree delete cut short
       val d = fresh(k)
@@ -170,6 +185,7 @@ class StagedCommitSpec extends SparkSpec {
       assert(sd.recover())
       assert(!Files.exists(sd.dir), "(d) leftover tree must be deleted")
       assert(live(k, d) === expected, "(d) live must stay folded")
+      assert(orphanCrcs(k, d) === Nil, "(d) no .crc may be orphaned")
 
       // (e) a reader never deletes an uncommitted staging
       val e = fresh(k)
