@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import java.nio.file.{Files, Path}
+
 /** One home for SparkSession construction so every entry point (Verify,
   * Bench, tests) runs with identical semantics-critical config:
   *
@@ -81,5 +83,31 @@ object Engine {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** A fresh temp dir, deleted with everything under it at JVM exit —
+    * for scratch trees whose DataFrames read them lazily (probes, specs,
+    * the macro keys that read their results back from disk), so they
+    * stay readable for the JVM's whole life. */
+  def tmpDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    TmpDirs.made.add(d)
+    d.toString
+  }
+
+  /** Deletes `root` and everything under it, ignoring failures (it runs
+    * from the shutdown hook). The walk does not follow symlinks: a link is
+    * deleted, not its target. */
+  def deleteTree(root: Path): Unit =
+    scala.util.Try {
+      val s = Files.walk(root)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
+      finally s.close()
+    }
+
+  private object TmpDirs {
+    val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+    sys.addShutdownHook(made.forEach(d => deleteTree(d)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import graft.Engine.tmpDir
 
 /** Reproducible scale probes behind the BASELINE.md experiment log.
   *
@@ -155,9 +156,6 @@ object Probe {
   /** The fastest of `reps` runs of `body`, in seconds. */
   private def minOver(reps: Int)(body: => Any): Double =
     (1 to reps).map(_ => clock(body)._2).min
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

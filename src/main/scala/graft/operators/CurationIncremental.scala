@@ -318,10 +318,8 @@ object CurationIncremental {
     * ways. */
   def curationStream(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-curstream-state").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-curstream-out").toString
+    val state = graft.Engine.tmpDir("graft-curstream-state")
+    val out = graft.Engine.tmpDir("graft-curstream-out")
     val even = docs.filter(col("doc_id") % 2 === 0)
     val odd = docs.filter(col("doc_id") % 2 === 1)
     // 8 index buckets at declared-key scale (the dedupIndexLifecycle

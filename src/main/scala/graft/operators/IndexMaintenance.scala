@@ -189,8 +189,7 @@ object IndexMaintenance {
     val docs = Tables.documents(spark, dir)
       .select("doc_id", "text", "lang", "n_chars")
     val even = docs.filter(col("doc_id") % 2 === 0)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-lifecycle").toString
+    val path = graft.Engine.tmpDir("graft-lifecycle")
     // ONE fingerprint pass over the even half, persisted: the four
     // nightly appends and the retraction list are SLICES of it — the
     // lifecycle being demonstrated is the four separate append/compact/

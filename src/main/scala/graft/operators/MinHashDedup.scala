@@ -38,8 +38,10 @@ object MinHashDedup {
     * streaming (pure stateless column expressions; docs shorter than 3
     * tokens are dropped — they have no 3-gram and `sequence(0, negative)`
     * would count DOWN in Spark). Shared by the batch pipeline below and
-    * [[graft.streaming.StreamingOps.streamingNearDupPairs]], so the
-    * streaming twin cannot drift from the batch shingling.
+    * both streaming MinHash forms ([[graft.streaming.StreamingOps
+    * .streamingNearDupPairs]] and its bounded variant, which feed the
+    * streaming near-dup family's one bucket fold), so the streaming twins
+    * cannot drift from the batch shingling.
     *
     * `carry` names extra input columns to pass through untouched — the
     * bounded streaming variant carries its event-time column this way

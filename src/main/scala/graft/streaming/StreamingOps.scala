@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming layer (SURVEY.md §2.1 S2/S3, §2.3 W1–W5, §2.2
   * K2–K4, §2.6 T1–T3).
@@ -28,60 +30,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * directory in overwrite mode, so a replayed batch overwrites itself
   * rather than duplicating (verified by restart in StreamingSpec).
   */
-/** Rows/state for [[StreamingOps.streamingNearDupPairs]]. */
-case class BandedDoc(band: Int, sig: Long, doc_id: Long, mh: Seq[Long])
+/** Result rows of the streaming near-dup family, one per modality:
+  * (lower id, higher id, the verify score that cleared the threshold). */
 case class NearDupPair(doc_a: Long, doc_b: Long, est_jac: Double)
-case class BucketDocs(docs: List[(Long, Seq[Long])])
-
-/** Rows/state for [[StreamingOps.streamingMediaPhashPairs]] — the media
-  * modality's streaming near-dup: banded 16-bit keys over the 64-bit
-  * perceptual hash, bucket state holds (media_id, phash). */
-case class BandedMedia(band: Int, v: Long, media_id: Long, phash: Long)
-
-/** Rows/state for [[StreamingOps.streamingVideoPhashPairs]] — the video
-  * modality's streaming near-dup: (slot × band, 16-bit value) keys over
-  * the slot-hash ARRAY, bucket state holds (media_id, phashes). */
-case class BandedVideo(sb: Int, v: Long, media_id: Long, phashes: Seq[Long])
-case class VideoBucket(items: List[(Long, Seq[Long])])
-case class VideoDupPair(media_a: Long, media_b: Long, slots_within: Int)
 case class MediaDupPair(media_a: Long, media_b: Long, hamming: Int)
-case class MediaBucket(items: List[(Long, Long)])
-
-/** Rows/state for [[StreamingOps.streamingPhashPairsBounded]] — the
-  * bounded media twin: stored fingerprints carry event-time millis for
-  * horizon eviction. */
-case class BandedMediaTs(band: Int, v: Long, media_id: Long, phash: Long,
-    ts: java.sql.Timestamp)
-case class TimedMediaBucket(items: List[(Long, Long, Long)])
-
-/** Rows/state for [[StreamingOps.streamingVideoPhashPairsBounded]] — the
-  * video bucket rows/state with the event-time instant carried. */
-case class BandedVideoTs(sb: Int, v: Long, media_id: Long, phashes: Seq[Long],
-    ts: java.sql.Timestamp)
-case class TimedVideoBucket(items: List[(Long, Seq[Long], Long)])
-
-/** Rows/state for [[StreamingOps.streamingNearDupPairsBounded]] — the
-  * timed twin: each stored doc carries its event-time millis so the
-  * horizon can evict per-doc, and the whole bucket dies by timeout. */
-case class BandedDocTs(band: Int, sig: Long, doc_id: Long, mh: Seq[Long],
-    ts: java.sql.Timestamp)
-case class TimedBucketDocs(docs: List[(Long, Seq[Long], Long)])
-
-/** Rows/state for [[StreamingOps.streamingTextEmbedPairs]] — the text
-  * EMBEDDING modality's streaming near-dup: (table, band, value) keys
-  * over the hashed n-gram vector's hyperplane signatures, bucket state
-  * holds (doc_id, v) — the vector IS the exact-verify surface (~0.5 KB),
-  * like the minhash twin's shingle sets. */
-case class BandedTextVec(tbl: Int, b: Int, bv: Long, doc_id: Long,
-    v: Seq[Double])
-case class TextVecBucket(items: List[(Long, Seq[Double])])
+case class VideoDupPair(media_a: Long, media_b: Long, slots_within: Int)
 case class TextDupPair(doc_a: Long, doc_b: Long, cos: Double)
 
-/** The bounded twin's rows/state — vectors carry event-time millis for
-  * per-item horizon eviction. */
-case class BandedTextVecTs(tbl: Int, b: Int, bv: Long, doc_id: Long,
-    v: Seq[Double], ts: java.sql.Timestamp)
-case class TimedTextVecBucket(items: List[(Long, Seq[Double], Long)])
+/** One arrival into the near-dup family's banded-bucket fold
+  * (`StreamingOps.bucketPairs`): its bucket key, item id, verify surface
+  * `v`, and event time (the epoch in the untimed forms). */
+case class BandArrival[K, V](key: K, id: Long, v: V, ts: java.sql.Timestamp)
+
+/** One bucket's state in that fold: every stored (id, v, event-time
+  * millis). */
+case class Bucket[V](items: List[(Long, V, Long)])
 
 /** Rows/state for [[StreamingOps.streamingWeightedSample]] — the A-ES
   * reservoir: per stratum, the current k largest keys; `version` counts
@@ -181,7 +144,6 @@ object StreamingOps {
   def streamingDocDedupSeeded(docs: DataFrame, indexFps: DataFrame,
       textCol: String = "text"): DataFrame = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val initial = indexFps.select(col("fp")).as[String]
       .groupByKey(identity).mapValues(_ => true)
     docs.withColumn("fp", graft.operators.TextOps.fingerprint(col(textCol)))
@@ -218,7 +180,6 @@ object StreamingOps {
     * inside foreachBatch) sees every kept line of a document together. */
   def streamingLineDedupSeeded(docs: DataFrame, indexFps: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val initial = indexFps.select(col("fp")).as[String]
       .groupByKey(identity).mapValues(_ => true)
     docs
@@ -315,7 +276,6 @@ object StreamingOps {
   def streamingWeightedSample(docs: DataFrame, k: Int)
       : org.apache.spark.sql.Dataset[WeightedSampleOut] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.operators.Sampling
     docs
       .withColumn("h", md5(concat(col("doc_id").cast("string"),
@@ -381,7 +341,7 @@ object StreamingOps {
     *    this one in the same query) — consumers dedupe on (doc_a, doc_b),
     *    as the spec does;
     *  - state is the per-bucket doc list — each entry carries the FULL
-    *    64-value signature, so ≈ #docs × bands × (8 + 8·64) B total
+    *    64-value signature, so ≈ #docs × bands × (16 + 8·64) B total
     *    (~8 KB/doc at 16 bands, NOT the 32 B/doc of the exact-dedup
     *    seen-set) and grows with the corpus; the "near-dup of anything
     *    EVER" contract requires it — back it with RocksDB at scale, or use
@@ -397,39 +357,30 @@ object StreamingOps {
     */
   def streamingNearDupPairs(docs: DataFrame, estThreshold: Double = 0.8,
       bands: Int = 16, rows: Int = 4)
+      : org.apache.spark.sql.Dataset[NearDupPair] =
+    minhashPairs(docs, None, estThreshold, bands, rows)
+
+  /** The MinHash members' fan-out and verify: the SAME shingle/signature/
+    * banding stages as the batch pipeline (shared helpers, so a batch-side
+    * retune retunes the streaming twins), keyed by (band, band-signature);
+    * a stored doc pairs when ≥ `estThreshold` of the arrival's signature
+    * positions agree. The bounded form carries its watermarked `ts`
+    * through those stages. */
+  private def minhashPairs(docs: DataFrame, horizonMs: Option[Long],
+      estThreshold: Double, bands: Int, rows: Int)
       : org.apache.spark.sql.Dataset[NearDupPair] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.operators.MinHashDedup
-    // the SAME shingle/signature/banding stages as the batch pipeline —
-    // shared helpers, so a batch-side retune retunes the streaming twin
-    MinHashDedup.signatures(MinHashDedup.shingled(docs))
-      .select(col("doc_id"), col("mh"),
-        explode(array(MinHashDedup.bandStructCols(bands, rows): _*)).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.sig").as("sig"),
-        col("doc_id"), col("mh"))
-      .as[BandedDoc]
-      .groupByKey(d => (d.band, d.sig))
-      .flatMapGroupsWithState[BucketDocs, NearDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, Long), arrivals: Iterator[BandedDoc], state: GroupState[BucketDocs]) =>
-          var seen = state.getOption.map(_.docs).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer[NearDupPair]()
-          arrivals.toSeq.sortBy(_.doc_id).foreach { d =>
-            if (!seen.exists(_._1 == d.doc_id)) { // replay-safe: ignore re-arrivals
-              seen.foreach { case (oid, omh) =>
-                val agree = omh.iterator.zip(d.mh.iterator)
-                  .count { case (a, b) => a == b }.toDouble / d.mh.length
-                if (agree >= estThreshold)
-                  out += NearDupPair(math.min(oid, d.doc_id),
-                    math.max(oid, d.doc_id), agree)
-              }
-              seen = (d.doc_id, d.mh) :: seen
-            }
-          }
-          state.update(BucketDocs(seen))
-          out.iterator
-      }
+    val carry = horizonMs.map(_ => "ts").toSeq
+    val banded = MinHashDedup.signatures(MinHashDedup.shingled(docs, carry), carry)
+      .select(Seq(col("doc_id"), col("mh"),
+        inline(array(MinHashDedup.bandStructCols(bands, rows): _*))) ++
+        carry.map(col): _*)
+    bucketPairs[(Int, Long), Seq[Long], Double, NearDupPair](banded,
+        Seq(col("band"), col("sig")), col("doc_id"), col("mh"), horizonMs,
+        None, NearDupPair) { (stored, mh) =>
+      Some(stored.iterator.zip(mh.iterator).count { case (a, b) => a == b }
+        .toDouble / mh.length).filter(_ >= estThreshold)
+    }
   }
 
   /** [EXT] streaming CONTENT-level media near-dup — the media modality's
@@ -444,15 +395,15 @@ object StreamingOps {
     * ([[graft.operators.ImagePhash.phashFrame]] — stateless narrow
     * mapPartitions, legal in streaming; undecodable payloads drop, so a
     * mixed-modality stream is safe). Stage 2 is the banded-Hamming
-    * candidate join turned BUCKET STATE, exactly the
-    * [[streamingNearDupPairs]] shape: `flatMapGroupsWithState` keyed by
-    * (band, 16-bit band value) stores each bucket's (media_id, phash)
+    * candidate join turned BUCKET STATE by the family's shared fold
+    * (as in [[streamingNearDupPairs]]): keyed by
+    * (band, 16-bit band value), it stores each bucket's (media_id, phash)
     * and emits a pair when a new arrival is within Hamming ≤ `radius`
     * of a stored hash — recall is the pigeonhole guarantee (a pair
     * within radius 3 shares at least one of 4 exact band values), the
     * same exactness the batch key certifies.
     *
-    * Costs, stated plainly: state is 16 B/image × 4 bands (~64 B/image —
+    * Costs, stated plainly: state is 24 B/image × 4 bands (~96 B/image —
     * far lighter than the text twin's 8 KB/doc signatures) and grows
     * with the corpus (the "near-dup of anything EVER" contract; back
     * with RocksDB at scale). A pair within radius in k bands is emitted
@@ -471,15 +422,8 @@ object StreamingOps {
     * .ImagePhash.phashDedup]]. */
   def streamingPhashPairs(hashes: DataFrame,
       radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[MediaDupPair] = {
-    import hashes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    bandedMediaArrivals(hashes)
-      .groupByKey(m => (m.band, m.v))
-      .flatMapGroupsWithState[MediaBucket, MediaDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        phashBucketFunc(radius))
-  }
+      : org.apache.spark.sql.Dataset[MediaDupPair] =
+    phashPairs(hashes, None, None, radius)
 
   /** [EXT] streaming perceptual near-dup SEEDED from the persisted band
     * index ([[graft.operators.PhashIncremental]]) — the media modality's
@@ -497,45 +441,26 @@ object StreamingOps {
   def streamingPhashPairsSeeded(hashes: DataFrame, idxBands: DataFrame,
       idxHashes: DataFrame,
       radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[MediaDupPair] = {
-    import hashes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // one MediaBucket per (band, v): fold the index's per-member rows —
-    // reduceGroups gives one row per key, the shape initial state needs
-    val initial = idxBands
-      .join(idxHashes.select("media_id", "phash"), Seq("media_id"))
-      .select(col("b").cast("int"), col("v").cast("long"),
-        col("media_id").cast("long"), col("phash").cast("long"))
-      .as[(Int, Long, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .mapValues(r => MediaBucket(List((r._3, r._4))))
-      .reduceGroups((a, b) => MediaBucket(a.items ::: b.items))
-      .groupByKey(_._1)
-      .mapValues(_._2)
-    bandedMediaArrivals(hashes)
-      .groupByKey(m => (m.band, m.v))
-      .flatMapGroupsWithState[MediaBucket, MediaDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial)(
-        phashBucketFunc(radius))
-  }
+      : org.apache.spark.sql.Dataset[MediaDupPair] =
+    phashPairs(hashes, None,
+      Some(idxBands.join(idxHashes.select("media_id", "phash"), Seq("media_id"))),
+      radius)
 
-  /** The shared banded fan-out of a (media_id, phash) frame — 4 rows of
-    * (band, 16-bit value) per image, [[graft.operators.PhashIncremental
-    * .bandRows]]'s shape with the hash carried for the verify. */
-  private def bandedMediaArrivals(hashes: DataFrame)
-      : org.apache.spark.sql.Dataset[BandedMedia] = {
-    import hashes.sparkSession.implicits._
-    import graft.operators.ImagePhash
-    hashes
-      .select(col("media_id"), col("phash"),
-        explode(array((0 until ImagePhash.Bands).map(b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("phash"), 16 * b)
-              .bitwiseAND(lit(0xffffL)).as("v"))): _*)).as("bv"))
-      .select(col("bv.band").as("band"), col("bv.v").as("v"),
-        col("media_id"), col("phash"))
-      .as[BandedMedia]
-  }
+  /** The 64-bit fingerprint members' fan-out and verify: 4 rows of
+    * (band `b`, 16-bit value `v`) per hash, [[graft.operators
+    * .PhashIncremental.bandRows]]'s shape with the hash carried; a stored
+    * hash pairs within Hamming ≤ `radius`. `seed` is the index's band rows
+    * joined with its hashes. */
+  private def phashPairs(hashes: DataFrame, horizonMs: Option[Long],
+      seed: Option[DataFrame], radius: Int)
+      : org.apache.spark.sql.Dataset[MediaDupPair] =
+    bucketPairs[(Int, Long), Long, Int, MediaDupPair](
+        hashBands(hashes, Seq(col("phash")), "b"),
+        Seq(col("b").cast("int"), col("v").cast("long")),
+        col("media_id").cast("long"), col("phash").cast("long"), horizonMs,
+        seed, MediaDupPair) { (stored, phash) =>
+      Some(java.lang.Long.bitCount(stored ^ phash)).filter(_ <= radius)
+    }
 
   /** [EXT] streaming VIDEO near-dup — the slot-array modality's streaming
     * form ([[streamingPhashPairs]] one level up, exactly as the batch
@@ -545,8 +470,8 @@ object StreamingOps {
     * holds (media_id, 8-slot hash array), and an arrival pairs against a
     * stored video when ≥ [[graft.operators.VideoPhash.SlotsMin]] slots
     * are within Hamming ≤ `radius` — the slot-majority verify, computed
-    * against BOTH arrays in state. ~2.3 KB/video of state (32 buckets ×
-    * 72 B); pairs may emit once per agreeing (slot, band) — consumers
+    * against BOTH arrays in state. ~2.6 KB/video of state (32 buckets ×
+    * 80 B); pairs may emit once per agreeing (slot, band) — consumers
     * dedupe on (media_a, media_b), as with the image form. (The batch /
     * incremental forms add the ≥ [[graft.operators.VideoPhash
     * .MinSharedKeys]] candidate cut across buckets; per-bucket state
@@ -555,16 +480,9 @@ object StreamingOps {
     * still kills every random collision.) */
   def streamingVideoPhashPairs(videos: DataFrame,
       radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[VideoDupPair] = {
-    val hashes = graft.operators.VideoPhash.videoPhashFrame(videos)
-    import hashes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    bandedVideoArrivals(hashes)
-      .groupByKey(m => (m.sb, m.v))
-      .flatMapGroupsWithState[VideoBucket, VideoDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        videoBucketFunc(radius))
-  }
+      : org.apache.spark.sql.Dataset[VideoDupPair] =
+    videoPairs(graft.operators.VideoPhash.videoPhashFrame(videos), None, None,
+      radius)
 
   /** Seeded form: bucket state loaded at query start from the persisted
     * (slot, band) index ([[graft.operators.VideoPhashIncremental]]'s
@@ -573,50 +491,27 @@ object StreamingOps {
   def streamingVideoPhashPairsSeeded(videos: DataFrame, idxBands: DataFrame,
       idxHashes: DataFrame,
       radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[VideoDupPair] = {
-    val hashes = graft.operators.VideoPhash.videoPhashFrame(videos)
-    import hashes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val initial = idxBands
-      .join(idxHashes.select("media_id", "phashes"), Seq("media_id"))
-      .select(col("sb").cast("int"), col("v").cast("long"),
-        col("media_id").cast("long"), col("phashes"))
-      .as[(Int, Long, Long, Seq[Long])]
-      .groupByKey(r => (r._1, r._2))
-      .mapValues(r => VideoBucket(List((r._3, r._4))))
-      .reduceGroups((a, b) => VideoBucket(a.items ::: b.items))
-      .groupByKey(_._1)
-      .mapValues(_._2)
-    bandedVideoArrivals(hashes)
-      .groupByKey(m => (m.sb, m.v))
-      .flatMapGroupsWithState[VideoBucket, VideoDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial)(
-        videoBucketFunc(radius))
-  }
+      : org.apache.spark.sql.Dataset[VideoDupPair] =
+    videoPairs(graft.operators.VideoPhash.videoPhashFrame(videos), None,
+      Some(idxBands.join(idxHashes.select("media_id", "phashes"), Seq("media_id"))),
+      radius)
 
   /** Bounded-state variant of [[streamingVideoPhashPairs]] — the video
-    * twin of [[streamingPhashPairsBounded]], closing the one unbounded
+    * twin of [[streamingMediaPhashPairsBounded]], closing the one unbounded
     * hole left in the streaming layer (the NoTimeout video forms grow
-    * ~2.3 KB/video of bucket state with the corpus on an endless crawl):
+    * ~2.6 KB/video of bucket state with the corpus on an endless crawl):
     * slot-majority pairs are only sought within an EVENT-TIME horizon,
     * and bucket state is evicted once the watermark passes it. The
     * container walk carries the timestamp through the typed decode pass
-    * (a mapPartitions emits fresh attributes, so the watermark is
-    * applied to the OUTPUT frame's `ts` — the image twin's note,
-    * verbatim). Contract: a pair is emitted iff ≥ [[graft.operators
-    * .VideoPhash.SlotsMin]] slots are within Hamming ≤ `radius` AND the
-    * event times differ by ≤ `horizonMs`. */
+    * and the watermark is applied to the decoded frame's `ts`. Contract:
+    * a pair is emitted iff ≥ [[graft.operators.VideoPhash.SlotsMin]]
+    * slots are within Hamming ≤ `radius` AND the event times differ by
+    * ≤ `horizonMs`. */
   def streamingVideoPhashPairsBounded(videos: DataFrame, tsCol: String,
       horizonMs: Long, radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[VideoDupPair] = {
-    import videos.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    timedVideoArrivals(videos, tsCol, horizonMs)
-      .groupByKey(m => (m.sb, m.v))
-      .flatMapGroupsWithState[TimedVideoBucket, VideoDupPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        timedVideoBucketFunc(horizonMs, radius))
-  }
+      : org.apache.spark.sql.Dataset[VideoDupPair] =
+    videoPairs(timedVideos(videos, tsCol, horizonMs), Some(horizonMs), None,
+      radius)
 
   /** Seeded + bounded: bucket state loaded at query start from the
     * persisted (slot, band) index, every seed stamped with `seedTsMs` as
@@ -629,184 +524,39 @@ object StreamingOps {
   def streamingVideoPhashPairsSeededBounded(videos: DataFrame, tsCol: String,
       horizonMs: Long, idxBands: DataFrame, idxHashes: DataFrame,
       seedTsMs: Long, radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[VideoDupPair] = {
-    import videos.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val initial = idxBands
-      .join(idxHashes.select("media_id", "phashes"), Seq("media_id"))
-      .select(col("sb").cast("int"), col("v").cast("long"),
-        col("media_id").cast("long"), col("phashes"))
-      .as[(Int, Long, Long, Seq[Long])]
-      .groupByKey(r => (r._1, r._2))
-      .mapValues(r => TimedVideoBucket(List((r._3, r._4, seedTsMs))))
-      .reduceGroups((a, b) => TimedVideoBucket(a.items ::: b.items))
-      .groupByKey(_._1)
-      .mapValues(_._2)
-    timedVideoArrivals(videos, tsCol, horizonMs)
-      .groupByKey(m => (m.sb, m.v))
-      .flatMapGroupsWithState[TimedVideoBucket, VideoDupPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout(), initial)(
-        timedVideoBucketFunc(horizonMs, radius))
-  }
+      : org.apache.spark.sql.Dataset[VideoDupPair] =
+    videoPairs(timedVideos(videos, tsCol, horizonMs), Some(horizonMs),
+      Some(idxBands.join(idxHashes.select("media_id", "phashes"), Seq("media_id"))
+        .withColumn("ts", lit(new java.sql.Timestamp(seedTsMs)))),
+      radius)
 
-  /** Decode + watermark + (slot × band) fan-out with the event time
-    * carried — the bounded forms' shared input stage. The watermark
-    * (delay = the horizon) is applied to the DECODED frame's `ts`: the
-    * typed container-walk pass emits fresh attributes, so tagging the
-    * input column would not survive it ([[streamingMediaPhashPairsBounded]]'s
-    * note, verbatim), and the fan-out projection below preserves the
-    * watermarked attribute itself. */
-  private def timedVideoArrivals(videos: DataFrame, tsCol: String,
-      horizonMs: Long): org.apache.spark.sql.Dataset[BandedVideoTs] = {
-    import videos.sparkSession.implicits._
-    import graft.operators.{ImagePhash, VideoPhash}
-    val hashed = videos
-      .select(col("media_id").cast("long"), col("payload"),
-        col(tsCol).cast("timestamp").as("ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, payload, t) =>
-        VideoPhash.videoPhash(payload).map(hs => (id, hs, t))
-      })
-      .toDF("media_id", "phashes", "ts")
-      .withWatermark("ts", s"$horizonMs milliseconds")
-    val keys = for (s <- 0 until VideoPhash.Slots; b <- 0 until ImagePhash.Bands)
-      yield struct(lit(s * ImagePhash.Bands + b).as("sb"),
-        shiftrightunsigned(element_at(col("phashes"), s + 1), 16 * b)
-          .bitwiseAND(lit(0xffffL)).as("v"))
-    hashed
-      .select(col("media_id"), col("phashes"), col("ts"),
-        explode(array(keys: _*)).as("bv"))
-      .select(col("bv.sb").as("sb"), col("bv.v").as("v"),
-        col("media_id"), col("phashes"), col("ts"))
-      .as[BandedVideoTs]
-  }
+  /** The container walk with the event time carried, watermarked with
+    * the horizon as its delay. */
+  private def timedVideos(videos: DataFrame, tsCol: String,
+      horizonMs: Long): DataFrame =
+    withHorizon(decodedWithTs(videos, tsCol, "phashes")(
+      graft.operators.VideoPhash.videoPhash), "ts", horizonMs)
 
-  /** The timed bucket-state transition shared by the bounded video forms:
-    * [[videoBucketFunc]]'s slot-majority verify gated by the horizon,
-    * plus the two eviction moves of [[streamingPhashPairsBounded]] —
-    * per-item watermark filtering and whole-bucket EventTimeTimeout. */
-  private def timedVideoBucketFunc(horizonMs: Long, radius: Int)
-      : ((Int, Long), Iterator[BandedVideoTs],
-          org.apache.spark.sql.streaming.GroupState[TimedVideoBucket])
-        => Iterator[VideoDupPair] =
-    (_, arrivals, state) => {
-      import graft.operators.VideoPhash
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val wmMs = state.getCurrentWatermarkMs()
-        // evict videos that can never again pair in-horizon: future
-        // arrivals have event time ≥ watermark
-        var seen = state.getOption.map(_.items).getOrElse(Nil)
-          .filter(_._3 + horizonMs >= wmMs)
-        val out = scala.collection.mutable.ArrayBuffer[VideoDupPair]()
-        arrivals.toSeq.sortBy(m => (m.ts.getTime, m.media_id)).foreach { m =>
-          if (!seen.exists(_._1 == m.media_id)) { // replay-safe
-            val tMs = m.ts.getTime
-            seen.foreach { case (oid, oph, oMs) =>
-              if (math.abs(tMs - oMs) <= horizonMs) {
-                var within = 0
-                var s = 0
-                while (s < oph.length && s < m.phashes.length) {
-                  if (java.lang.Long.bitCount(oph(s) ^ m.phashes(s)) <= radius)
-                    within += 1
-                  s += 1
-                }
-                if (within >= VideoPhash.SlotsMin)
-                  out += VideoDupPair(math.min(oid, m.media_id),
-                    math.max(oid, m.media_id), within)
-              }
-            }
-            seen = (m.media_id, m.phashes, tMs) :: seen
-          }
-        }
-        if (seen.isEmpty) state.remove()
-        else {
-          state.update(TimedVideoBucket(seen))
-          state.setTimeoutTimestamp(
-            math.max(seen.map(_._3).max + horizonMs, wmMs + 1))
-        }
-        out.iterator
-      }
-    }
-
-  /** The (slot × band) fan-out of a (media_id, phashes) frame —
+  /** The video members' fan-out and verify: (slot × band `sb`, 16-bit
+    * value `v`) keys over the slot-hash array,
     * [[graft.operators.VideoPhashIncremental.bandRows]]'s shape with the
-    * array carried for the slot-majority verify. */
-  private def bandedVideoArrivals(hashes: DataFrame)
-      : org.apache.spark.sql.Dataset[BandedVideo] = {
-    import hashes.sparkSession.implicits._
-    import graft.operators.{ImagePhash, VideoPhash}
-    val keys = for (s <- 0 until VideoPhash.Slots; b <- 0 until ImagePhash.Bands)
-      yield struct(lit(s * ImagePhash.Bands + b).as("sb"),
-        shiftrightunsigned(element_at(col("phashes"), s + 1), 16 * b)
-          .bitwiseAND(lit(0xffffL)).as("v"))
-    hashes
-      .select(col("media_id"), col("phashes"),
-        explode(array(keys: _*)).as("bv"))
-      .select(col("bv.sb").as("sb"), col("bv.v").as("v"),
-        col("media_id"), col("phashes"))
-      .as[BandedVideo]
+    * array carried; a stored array pairs when ≥ [[graft.operators
+    * .VideoPhash.SlotsMin]] slots are within Hamming ≤ `radius`. */
+  private def videoPairs(hashes: DataFrame, horizonMs: Option[Long],
+      seed: Option[DataFrame], radius: Int)
+      : org.apache.spark.sql.Dataset[VideoDupPair] = {
+    import graft.operators.VideoPhash
+    bucketPairs[(Int, Long), Seq[Long], Int, VideoDupPair](
+        hashBands(hashes,
+          (1 to VideoPhash.Slots).map(s => element_at(col("phashes"), s)), "sb"),
+        Seq(col("sb").cast("int"), col("v").cast("long")),
+        col("media_id").cast("long"), col("phashes"), horizonMs, seed,
+        VideoDupPair) { (stored, phashes) =>
+      Some(stored.iterator.zip(phashes.iterator)
+        .count { case (a, b) => java.lang.Long.bitCount(a ^ b) <= radius })
+        .filter(_ >= VideoPhash.SlotsMin)
+    }
   }
-
-  /** The bucket-state transition shared by the seeded and unseeded
-    * streaming VIDEO forms: slot-majority verify against every stored
-    * array, then store the arrival. Replay-safe. */
-  private def videoBucketFunc(radius: Int)
-      : ((Int, Long), Iterator[BandedVideo],
-          org.apache.spark.sql.streaming.GroupState[VideoBucket])
-        => Iterator[VideoDupPair] =
-    (_, arrivals, state) => {
-      import graft.operators.VideoPhash
-      var seen = state.getOption.map(_.items).getOrElse(Nil)
-      val out = scala.collection.mutable.ArrayBuffer[VideoDupPair]()
-      arrivals.toSeq.sortBy(_.media_id).foreach { m =>
-        if (!seen.exists(_._1 == m.media_id)) { // replay-safe
-          seen.foreach { case (oid, oph) =>
-            var within = 0
-            var s = 0
-            while (s < oph.length && s < m.phashes.length) {
-              if (java.lang.Long.bitCount(oph(s) ^ m.phashes(s)) <= radius)
-                within += 1
-              s += 1
-            }
-            if (within >= VideoPhash.SlotsMin)
-              out += VideoDupPair(math.min(oid, m.media_id),
-                math.max(oid, m.media_id), within)
-          }
-          seen = (m.media_id, m.phashes) :: seen
-        }
-      }
-      state.update(VideoBucket(seen))
-      out.iterator
-    }
-
-  /** The bucket-state transition shared by the seeded and unseeded
-    * streaming phash forms: pair each NEW arrival against every stored
-    * (media_id, phash) within Hamming ≤ `radius`, then store it.
-    * Replay-safe — re-arrivals of a stored id are ignored. */
-  private def phashBucketFunc(radius: Int)
-      : ((Int, Long), Iterator[BandedMedia],
-          org.apache.spark.sql.streaming.GroupState[MediaBucket])
-        => Iterator[MediaDupPair] =
-    (_, arrivals, state) => {
-      var seen = state.getOption.map(_.items).getOrElse(Nil)
-      val out = scala.collection.mutable.ArrayBuffer[MediaDupPair]()
-      arrivals.toSeq.sortBy(_.media_id).foreach { m =>
-        if (!seen.exists(_._1 == m.media_id)) { // replay-safe
-          seen.foreach { case (oid, oph) =>
-            val d = java.lang.Long.bitCount(oph ^ m.phash)
-            if (d <= radius)
-              out += MediaDupPair(math.min(oid, m.media_id),
-                math.max(oid, m.media_id), d)
-          }
-          seen = (m.media_id, m.phash) :: seen
-        }
-      }
-      state.update(MediaBucket(seen))
-      out.iterator
-    }
 
   /** [EXT] streaming exact substring dedup — E13's STREAMING arrival
     * mode, completing that family's batch/incremental/streaming triple
@@ -861,11 +611,8 @@ object StreamingOps {
       horizonMs: Long,
       spanL: Int = graft.operators.SubstringDedup.SpanL): DataFrame = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val withWm = docs
-      .withColumn("ts", col(tsCol).cast("timestamp"))
-      .withWatermark("ts", s"$horizonMs milliseconds")
-    graft.operators.SubstringDedup.windowDigests(withWm, spanL, Seq("ts"))
+    graft.operators.SubstringDedup.windowDigests(
+        withHorizon(docs, tsCol, horizonMs), spanL, Seq("ts"))
       .select(col("g"), col("doc_id"), col("pos"), col("ts"))
       .as[(String, Long, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
@@ -902,7 +649,6 @@ object StreamingOps {
   private def substringMarks(docs: DataFrame, spanL: Int,
       seed: Option[DataFrame]): DataFrame = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val keyed = graft.operators.SubstringDedup.windowDigests(docs, spanL)
       .select(col("g"), col("doc_id"), col("pos"))
       .as[(String, Long, Long)]
@@ -952,10 +698,7 @@ object StreamingOps {
   def streamingLineDedupBounded(docs: DataFrame, tsCol: String,
       horizonMs: Long): DataFrame = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    docs
-      .withColumn("ts", col(tsCol).cast("timestamp"))
-      .withWatermark("ts", s"$horizonMs milliseconds")
+    withHorizon(docs, tsCol, horizonMs)
       .select(col("doc_id"), col("ts"),
         posexplode(split(col("text"), "\n")).as(Seq("idx", "line")))
       .select(md5(col("line")).as("fp"), col("doc_id"),
@@ -1002,25 +745,16 @@ object StreamingOps {
     * family across every streaming dedup member (doc, line, near-dup,
     * image, audio, video, substring): the WAV chunk-walk decode carries
     * the timestamp through the typed pass, then the generic
-    * [[streamingPhashPairsBounded]] bucket state applies unchanged (the
+    * `streamingPhashPairsBounded` bucket state applies unchanged (the
     * fingerprint index is modality-blind — the audio_phash_incremental
     * witness, in streaming form). */
   def streamingAudioPhashPairsBounded(audio: DataFrame, tsCol: String,
       horizonMs: Long, radius: Int = graft.operators.ImagePhash.HammingMax)
       : org.apache.spark.sql.Dataset[MediaDupPair] = {
-    import audio.sparkSession.implicits._
     import graft.operators.{AudioPhash, Wav}
-    val hashed = audio
-      .select(col("media_id").cast("long"), col("payload"),
-        col(tsCol).cast("timestamp").as("ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, payload, t) =>
-        Wav.decode(payload).map { case (rate, samples) =>
-          (id, AudioPhash.audioPhash(rate, samples), t)
-        }
-      })
-      .toDF("media_id", "phash", "ts")
-    streamingPhashPairsBounded(hashed, horizonMs, radius)
+    streamingPhashPairsBounded(decodedWithTs(audio, tsCol, "phash")(p =>
+      Wav.decode(p).map { case (rate, samples) =>
+        AudioPhash.audioPhash(rate, samples) }), horizonMs, radius)
   }
 
   /** Bounded-state variant of the media fingerprint dedup — the media
@@ -1028,87 +762,28 @@ object StreamingOps {
     * sought within an EVENT-TIME horizon, and bucket state is evicted
     * once the watermark passes it (crawl refetch storms cluster in time;
     * state bounded by the horizon's arrival volume instead of growing
-    * ~64 B/image with the corpus). Decode carries the timestamp through
+    * ~96 B/image with the corpus). Decode carries the timestamp through
     * the typed pass and the watermark is applied to the OUTPUT frame's
     * `ts` (a typed mapPartitions emits fresh attributes, so tagging the
-    * input column would not survive it). Eviction mechanics are the text
-    * twin's verbatim: per-item `ts + horizon < watermark` filtering plus
-    * whole-bucket `EventTimeTimeout`. Contract: a pair is emitted iff
+    * input column would not survive it). Contract: a pair is emitted iff
     * the hashes share a 16-bit band, are within Hamming ≤ `radius`, AND
     * their event times differ by ≤ `horizonMs`. */
   def streamingMediaPhashPairsBounded(media: DataFrame, tsCol: String,
       horizonMs: Long, radius: Int = graft.operators.ImagePhash.HammingMax)
       : org.apache.spark.sql.Dataset[MediaDupPair] = {
-    import media.sparkSession.implicits._
     import graft.operators.ImagePhash
-    val hashed = media
-      .select(col("media_id").cast("long"), col("payload"),
-        col(tsCol).cast("timestamp").as("ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, payload, t) =>
-        ImagePhash.decodeImage(payload).map { case (w, h, px) =>
-          (id, ImagePhash.dHash(w, h, px), t)
-        }
-      })
-      .toDF("media_id", "phash", "ts")
-    streamingPhashPairsBounded(hashed, horizonMs, radius)
+    streamingPhashPairsBounded(decodedWithTs(media, tsCol, "phash")(p =>
+      ImagePhash.decodeImage(p).map { case (w, h, px) =>
+        ImagePhash.dHash(w, h, px) }), horizonMs, radius)
   }
 
   /** The bounded bucket-state half over ANY (media_id, phash, ts) frame
     * (the [[streamingPhashPairs]] generality, timed). Applies the
     * watermark itself on `ts` with the horizon as the delay. */
-  def streamingPhashPairsBounded(hashes: DataFrame, horizonMs: Long,
-      radius: Int = graft.operators.ImagePhash.HammingMax)
-      : org.apache.spark.sql.Dataset[MediaDupPair] = {
-    import hashes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.operators.ImagePhash
-    hashes.withWatermark("ts", s"$horizonMs milliseconds")
-      .select(col("media_id"), col("phash"), col("ts"),
-        explode(array((0 until ImagePhash.Bands).map(b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("phash"), 16 * b)
-              .bitwiseAND(lit(0xffffL)).as("v"))): _*)).as("bv"))
-      .select(col("bv.band").as("band"), col("bv.v").as("v"),
-        col("media_id"), col("phash"), col("ts"))
-      .as[BandedMediaTs]
-      .groupByKey(m => (m.band, m.v))
-      .flatMapGroupsWithState[TimedMediaBucket, MediaDupPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: (Int, Long), arrivals: Iterator[BandedMediaTs],
-            state: GroupState[TimedMediaBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val wmMs = state.getCurrentWatermarkMs()
-            var seen = state.getOption.map(_.items).getOrElse(Nil)
-              .filter(_._3 + horizonMs >= wmMs) // unpairable with any future arrival
-            val out = scala.collection.mutable.ArrayBuffer[MediaDupPair]()
-            arrivals.toSeq.sortBy(m => (m.ts.getTime, m.media_id)).foreach { m =>
-              if (!seen.exists(_._1 == m.media_id)) { // replay-safe
-                val tMs = m.ts.getTime
-                seen.foreach { case (oid, oph, oMs) =>
-                  if (math.abs(tMs - oMs) <= horizonMs) {
-                    val d = java.lang.Long.bitCount(oph ^ m.phash)
-                    if (d <= radius)
-                      out += MediaDupPair(math.min(oid, m.media_id),
-                        math.max(oid, m.media_id), d)
-                  }
-                }
-                seen = (m.media_id, m.phash, tMs) :: seen
-              }
-            }
-            if (seen.isEmpty) state.remove()
-            else {
-              state.update(TimedMediaBucket(seen))
-              state.setTimeoutTimestamp(
-                math.max(seen.map(_._3).max + horizonMs, wmMs + 1))
-            }
-            out.iterator
-          }
-      }
-  }
+  private def streamingPhashPairsBounded(hashes: DataFrame, horizonMs: Long,
+      radius: Int): org.apache.spark.sql.Dataset[MediaDupPair] =
+    phashPairs(withHorizon(hashes, "ts", horizonMs), Some(horizonMs), None,
+      radius)
 
   /** Bounded-state variant of [[streamingNearDupPairs]] — the fuzzy twin of
     * [[streamingDocDedupBounded]]: near-dup pairs are only sought within an
@@ -1118,20 +793,12 @@ object StreamingOps {
     * state is bounded by the horizon's document arrival volume instead of
     * growing ~8 KB/doc with the whole corpus.
     *
-    * Mechanics: the watermark is applied to `tsCol` with the horizon as its
-    * delay BEFORE the shared shingle/signature/banding stages (watermarks
+    * The watermark is applied to `tsCol` with the horizon as its delay
+    * BEFORE the shared shingle/signature/banding stages (watermarks
     * survive projections, so the batch-shared helpers stay one code path —
-    * their `carry` parameter threads the timestamp through). The bucket
-    * fold is [[streamingNearDupPairs]]'s with two changes, both
-    * eviction-only:
-    *  - per-doc: a stored doc with `ts + horizon < watermark` can never
-    *    again form an in-horizon pair with a future arrival (the watermark
-    *    bounds future event times from below), so it is dropped at each
-    *    bucket invocation;
-    *  - per-bucket: `EventTimeTimeout` set to `max(ts)+horizon` removes the
-    *    whole bucket's state once every member is past eviction, so idle
-    *    buckets cost nothing — without this, a bucket that stops receiving
-    *    arrivals would pin its (empty-after-filter) state row forever.
+    * their `carry` parameter threads the timestamp through). Eviction is
+    * the shared bucket fold's: per-doc once `ts + horizon < watermark`,
+    * per-bucket by `EventTimeTimeout`.
     *
     * Contract: a pair is emitted iff both docs land in a shared LSH bucket,
     * their signatures agree on ≥ `estThreshold` positions, AND their event
@@ -1142,66 +809,9 @@ object StreamingOps {
     * fold (standard W5 semantics). */
   def streamingNearDupPairsBounded(docs: DataFrame, tsCol: String, horizonMs: Long,
       estThreshold: Double = 0.8, bands: Int = 16, rows: Int = 4)
-      : org.apache.spark.sql.Dataset[NearDupPair] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.operators.MinHashDedup
-    // normalize to TimestampType BEFORE the watermark: downstream
-    // projections must carry the watermarked ATTRIBUTE itself (a cast
-    // after the watermark strips the delay metadata and the stateful op
-    // rejects EventTimeTimeout as "no watermark")
-    val withWm = docs
-      .withColumn("ts", col(tsCol).cast("timestamp"))
-      .withWatermark("ts", s"$horizonMs milliseconds")
-    MinHashDedup.signatures(MinHashDedup.shingled(withWm, Seq("ts")), Seq("ts"))
-      .select(col("doc_id"), col("mh"), col("ts"),
-        explode(array(MinHashDedup.bandStructCols(bands, rows): _*)).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.sig").as("sig"),
-        col("doc_id"), col("mh"), col("ts"))
-      .as[BandedDocTs]
-      .groupByKey(d => (d.band, d.sig))
-      .flatMapGroupsWithState[TimedBucketDocs, NearDupPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: (Int, Long), arrivals: Iterator[BandedDocTs],
-            state: GroupState[TimedBucketDocs]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val wmMs = state.getCurrentWatermarkMs()
-            // evict docs that can never again pair in-horizon: future
-            // arrivals have event time ≥ watermark, so ts + horizon < wm
-            // is unpairable
-            var seen = state.getOption.map(_.docs).getOrElse(Nil)
-              .filter(_._3 + horizonMs >= wmMs)
-            val out = scala.collection.mutable.ArrayBuffer[NearDupPair]()
-            arrivals.toSeq.sortBy(d => (d.ts.getTime, d.doc_id)).foreach { d =>
-              if (!seen.exists(_._1 == d.doc_id)) { // replay-safe
-                val tMs = d.ts.getTime
-                seen.foreach { case (oid, omh, oMs) =>
-                  if (math.abs(tMs - oMs) <= horizonMs) {
-                    val agree = omh.iterator.zip(d.mh.iterator)
-                      .count { case (a, b) => a == b }.toDouble / d.mh.length
-                    if (agree >= estThreshold)
-                      out += NearDupPair(math.min(oid, d.doc_id),
-                        math.max(oid, d.doc_id), agree)
-                  }
-                }
-                seen = (d.doc_id, d.mh, tMs) :: seen
-              }
-            }
-            if (seen.isEmpty) state.remove()
-            else {
-              state.update(TimedBucketDocs(seen))
-              // whole-bucket eviction once every member is past horizon;
-              // must exceed the current watermark or Spark rejects it
-              state.setTimeoutTimestamp(
-                math.max(seen.map(_._3).max + horizonMs, wmMs + 1))
-            }
-            out.iterator
-          }
-      }
-  }
+      : org.apache.spark.sql.Dataset[NearDupPair] =
+    minhashPairs(withHorizon(docs, tsCol, horizonMs), Some(horizonMs),
+      estThreshold, bands, rows)
 
   /** [EXT] streaming TEXT-EMBEDDING near-dup — the embedding family's
     * streaming cell, completing its batch ([[graft.operators.TextEmbed
@@ -1212,11 +822,11 @@ object StreamingOps {
     *
     * Stage 1 is the batch embedding verbatim (`graft_hash_embed`, a
     * stateless codegen'd projection — legal in streaming); stage 2 is
-    * [[streamingNearDupPairs]]' bucket-state shape keyed by the
-    * (table, band, value) signature keys, with the stored VECTOR as the
-    * exact-verify surface (a pair is emitted iff true cosine clears the
-    * threshold — precision exact by construction; recall is the banding
-    * geometry's, measured per geometry in the textinc probe record).
+    * the family's bucket fold keyed by the (table, band, value)
+    * signature keys, with the stored VECTOR as the exact-verify surface
+    * (a pair is emitted iff true cosine clears the threshold — precision
+    * exact by construction; recall is the banding geometry's, measured
+    * per geometry in the textinc probe record).
     *
     * Costs, stated plainly: state is ~0.5 KB/doc per (table, band) slot
     * (64 doubles), the minhash twin's weight class, and the geometry
@@ -1227,45 +837,8 @@ object StreamingOps {
   def streamingTextEmbedPairs(docs: DataFrame,
       threshold: Double = graft.operators.TextEmbed.CosThreshold,
       bandBits: Int = graft.operators.TextEmbed.BandBits, nTables: Int = 4)
-      : org.apache.spark.sql.Dataset[TextDupPair] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.operators.TextEmbed
-    val emb = docs.select(col("doc_id"),
-      TextEmbed.embedColumn(col("text")).as("v"))
-    TextEmbed.bandRowsWithVec(emb, bandBits, nTables)
-      .as[BandedTextVec]
-      .groupByKey(d => (d.tbl, d.b, d.bv))
-      .flatMapGroupsWithState[TextVecBucket, TextDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        textEmbedBucketFunc(threshold))
-  }
-
-  /** The bucket fold shared by [[streamingTextEmbedPairs]] and its
-    * seeded form: exact-cosine verify of each arrival against the
-    * bucket's stored vectors, lowest-ids-first, replay-safe. */
-  private def textEmbedBucketFunc(threshold: Double)
-      : ((Int, Int, Long), Iterator[BandedTextVec],
-          org.apache.spark.sql.streaming.GroupState[TextVecBucket])
-        => Iterator[TextDupPair] =
-    (_, arrivals, state) => {
-      var seen = state.getOption.map(_.items).getOrElse(Nil)
-      val out = scala.collection.mutable.ArrayBuffer[TextDupPair]()
-      arrivals.toSeq.sortBy(_.doc_id).foreach { d =>
-        if (!seen.exists(_._1 == d.doc_id)) { // replay-safe
-          seen.foreach { case (oid, ov) =>
-            val cos = ov.iterator.zip(d.v.iterator)
-              .map { case (a, b) => a * b }.sum
-            if (cos >= threshold)
-              out += TextDupPair(math.min(oid, d.doc_id),
-                math.max(oid, d.doc_id), cos)
-          }
-          seen = (d.doc_id, d.v) :: seen
-        }
-      }
-      state.update(TextVecBucket(seen))
-      out.iterator
-    }
+      : org.apache.spark.sql.Dataset[TextDupPair] =
+    textEmbedPairs(docs, None, None, threshold, bandBits, nTables)
 
   /** Seeded form: the bucket state loaded at query start from the
     * PERSISTED text-embed index ([[graft.operators.TextEmbed
@@ -1277,93 +850,170 @@ object StreamingOps {
       idxVecs: DataFrame,
       threshold: Double = graft.operators.TextEmbed.CosThreshold,
       bandBits: Int = graft.operators.TextEmbed.BandBits, nTables: Int = 4)
-      : org.apache.spark.sql.Dataset[TextDupPair] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import graft.operators.TextEmbed
-    // one TextVecBucket per (tbl, b, bv): fold the index's per-member
-    // rows — reduceGroups gives the one-row-per-key shape initial state
-    // needs (the streamingPhashPairsSeeded discipline)
-    val initial = idxBands
-      .join(idxVecs.select("doc_id", "v"), Seq("doc_id"))
-      .select(col("tbl").cast("int"), col("b").cast("int"),
-        col("bv").cast("long"), col("doc_id").cast("long"), col("v"))
-      .as[(Int, Int, Long, Long, Seq[Double])]
-      .groupByKey(r => (r._1, r._2, r._3))
-      .mapValues(r => TextVecBucket(List((r._4, r._5))))
-      .reduceGroups((a, b) => TextVecBucket(a.items ::: b.items))
-      .groupByKey(_._1)
-      .mapValues(_._2)
-    val emb = docs.select(col("doc_id"),
-      TextEmbed.embedColumn(col("text")).as("v"))
-    TextEmbed.bandRowsWithVec(emb, bandBits, nTables)
-      .as[BandedTextVec]
-      .groupByKey(d => (d.tbl, d.b, d.bv))
-      .flatMapGroupsWithState[TextVecBucket, TextDupPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial)(
-        textEmbedBucketFunc(threshold))
-  }
+      : org.apache.spark.sql.Dataset[TextDupPair] =
+    textEmbedPairs(docs, None,
+      Some(idxBands.join(idxVecs.select("doc_id", "v"), Seq("doc_id"))),
+      threshold, bandBits, nTables)
 
   /** Bounded-state variant of [[streamingTextEmbedPairs]] — the text
     * embedding's member of the event-time-horizon family: a pair is
     * emitted iff the cosine clears the threshold AND the event times
     * differ by ≤ `horizonMs`; stored vectors are evicted per-item once
     * the watermark passes their horizon and whole buckets die by
-    * EventTimeTimeout ([[streamingNearDupPairsBounded]]'s mechanics,
-    * verbatim, over the vector verify surface). */
+    * EventTimeTimeout (the shared bucket fold's eviction). */
   def streamingTextEmbedPairsBounded(docs: DataFrame, tsCol: String,
       horizonMs: Long,
       threshold: Double = graft.operators.TextEmbed.CosThreshold,
       bandBits: Int = graft.operators.TextEmbed.BandBits, nTables: Int = 4)
+      : org.apache.spark.sql.Dataset[TextDupPair] =
+    textEmbedPairs(withHorizon(docs, tsCol, horizonMs), Some(horizonMs), None,
+      threshold, bandBits, nTables)
+
+  /** The text-embedding members' fan-out and verify: (table, band,
+    * value) keys over the embedding's hyperplane signatures
+    * ([[graft.operators.TextEmbed.bandRowsWithVec]]); a stored vector
+    * pairs when the exact cosine (dot product of unit vectors) clears
+    * `threshold`. `seed` is the index's band rows joined with its
+    * vectors. */
+  private def textEmbedPairs(docs: DataFrame, horizonMs: Option[Long],
+      seed: Option[DataFrame], threshold: Double, bandBits: Int, nTables: Int)
       : org.apache.spark.sql.Dataset[TextDupPair] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.operators.TextEmbed
-    val withWm = docs
-      .withColumn("ts", col(tsCol).cast("timestamp"))
-      .withWatermark("ts", s"$horizonMs milliseconds")
-    val emb = withWm.select(col("doc_id"),
-      TextEmbed.embedColumn(col("text")).as("v"), col("ts"))
-    TextEmbed.bandRowsWithVec(emb, bandBits, nTables, carry = Seq("ts"))
-      .as[BandedTextVecTs]
-      .groupByKey(d => (d.tbl, d.b, d.bv))
-      .flatMapGroupsWithState[TimedTextVecBucket, TextDupPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: (Int, Int, Long), arrivals: Iterator[BandedTextVecTs],
-            state: GroupState[TimedTextVecBucket]) =>
+    val carry = horizonMs.map(_ => "ts").toSeq
+    val emb = docs.select(Seq(col("doc_id"),
+      TextEmbed.embedColumn(col("text")).as("v")) ++ carry.map(col): _*)
+    bucketPairs[(Int, Int, Long), Seq[Double], Double, TextDupPair](
+        TextEmbed.bandRowsWithVec(emb, bandBits, nTables, carry),
+        Seq(col("tbl").cast("int"), col("b").cast("int"), col("bv").cast("long")),
+        col("doc_id").cast("long"), col("v"), horizonMs, seed, TextDupPair) {
+      (stored, v) =>
+        Some(stored.iterator.zip(v.iterator).map { case (a, b) => a * b }.sum)
+          .filter(_ >= threshold)
+    }
+  }
+
+  // ------------------------------------------- the near-dup family's fold
+
+  private val Epoch = new java.sql.Timestamp(0L)
+
+  /** The banded-bucket fold every streaming near-dup member runs — the
+    * windowed streaming similarity join of EDBT 2019 ("Time Series
+    * Similarity Search for Streaming Data in Distributed Systems") with
+    * `horizonMs` as its window; `None` is its infinite-horizon case.
+    *
+    * `banded` has one row per (item, bucket); `key`, `id` and `v` pick an
+    * item's bucket key, id and verify surface out of it (and out of
+    * `seed`, the initial bucket state, whose rows have the same shape).
+    * Per bucket, arrivals fold into state one at a time in (event time,
+    * id) order (by id in the untimed forms); a re-arrival of a stored id
+    * is ignored (replay safety); every other arrival is checked against
+    * every stored item — `verify(stored, arrival)` — and each score it
+    * returns emits `pair(lower id, higher id, score)`. So a pair is
+    * emitted once per bucket it collides in.
+    *
+    * With a horizon, `banded` (and `seed`) carry a watermarked `ts`:
+    *  - only items whose event times differ by ≤ the horizon pair;
+    *  - a stored item with `ts + horizon < watermark` can never again pair
+    *    with a future arrival (the watermark bounds future event times from
+    *    below), so it is dropped at each bucket invocation;
+    *  - `EventTimeTimeout` at `max(max ts + horizon, watermark + 1)`
+    *    removes the whole bucket once every member is past eviction, so
+    *    idle buckets cost nothing (the timeout must exceed the current
+    *    watermark or Spark rejects it).
+    * Without one, state is `NoTimeout` and grows with the corpus. */
+  private def bucketPairs[K <: Product : TypeTag, V: TypeTag, M,
+      P <: Product : TypeTag](banded: DataFrame, key: Seq[Column], id: Column,
+      v: Column, horizonMs: Option[Long], seed: Option[DataFrame],
+      pair: (Long, Long, M) => P)(verify: (V, V) => Option[M]): Dataset[P] = {
+    val spark = banded.sparkSession
+    import spark.implicits._
+    def arrivals(df: DataFrame): Dataset[BandArrival[K, V]] =
+      df.select(
+        struct(key.zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }: _*)
+          .as("key"),
+        id.as("id"), v.as("v"),
+        if (horizonMs.isEmpty) lit(Epoch).as("ts") else col("ts"))
+        .as[BandArrival[K, V]]
+    // initial state needs one row per key: fold each key's seed rows
+    val initial = seed.fold(spark.emptyDataset[BandArrival[K, V]])(arrivals)
+      .groupByKey(_.key)
+      .mapGroups((k, rows) =>
+        (k, Bucket(rows.map(a => (a.id, a.v, a.ts.getTime)).toList)))
+      .groupByKey(_._1)
+      .mapValues(_._2)
+    val timeout =
+      if (horizonMs.isEmpty) GroupStateTimeout.NoTimeout()
+      else GroupStateTimeout.EventTimeTimeout()
+    arrivals(banded)
+      .groupByKey(_.key)
+      .flatMapGroupsWithState[Bucket[V], P](OutputMode.Append(), timeout, initial) {
+        (_: K, in: Iterator[BandArrival[K, V]], state: GroupState[Bucket[V]]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            val wmMs = state.getCurrentWatermarkMs()
-            var seen = state.getOption.map(_.items).getOrElse(Nil)
-              .filter(_._3 + horizonMs >= wmMs)
-            val out = scala.collection.mutable.ArrayBuffer[TextDupPair]()
-            arrivals.toSeq.sortBy(d => (d.ts.getTime, d.doc_id)).foreach { d =>
-              if (!seen.exists(_._1 == d.doc_id)) { // replay-safe
-                val tMs = d.ts.getTime
+            val wmMs = if (horizonMs.isEmpty) 0L else state.getCurrentWatermarkMs()
+            var seen = state.getOption.fold(List.empty[(Long, V, Long)])(_.items)
+              .filter(s => horizonMs.forall(s._3 + _ >= wmMs))
+            val out = scala.collection.mutable.ArrayBuffer[P]()
+            in.toSeq.sortBy(a => (a.ts.getTime, a.id)).foreach { a =>
+              if (!seen.exists(_._1 == a.id)) { // replay-safe: ignore re-arrivals
+                val tMs = a.ts.getTime
                 seen.foreach { case (oid, ov, oMs) =>
-                  if (math.abs(tMs - oMs) <= horizonMs) {
-                    val cos = ov.iterator.zip(d.v.iterator)
-                      .map { case (a, b) => a * b }.sum
-                    if (cos >= threshold)
-                      out += TextDupPair(math.min(oid, d.doc_id),
-                        math.max(oid, d.doc_id), cos)
-                  }
+                  if (horizonMs.forall(math.abs(tMs - oMs) <= _))
+                    verify(ov, a.v).foreach(m =>
+                      out += pair(math.min(oid, a.id), math.max(oid, a.id), m))
                 }
-                seen = (d.doc_id, d.v, tMs) :: seen
+                seen = (a.id, a.v, tMs) :: seen
               }
             }
             if (seen.isEmpty) state.remove()
             else {
-              state.update(TimedTextVecBucket(seen))
-              state.setTimeoutTimestamp(
-                math.max(seen.map(_._3).max + horizonMs, wmMs + 1))
+              state.update(Bucket(seen))
+              horizonMs.foreach(h => state.setTimeoutTimestamp(
+                math.max(seen.map(_._3).max + h, wmMs + 1)))
             }
             out.iterator
           }
       }
   }
+
+  /** The 16-bit band fan-out of 64-bit hash columns: one row per band of
+    * each hash, keyed (`bandCol`, `v`) with band ids numbered across the
+    * hashes in order, every input column carried. */
+  private def hashBands(df: DataFrame, hashes: Seq[Column],
+      bandCol: String): DataFrame = {
+    import graft.operators.ImagePhash.Bands
+    val keys = for ((h, s) <- hashes.zipWithIndex; b <- 0 until Bands)
+      yield struct(lit(s * Bands + b).as(bandCol),
+        shiftrightunsigned(h, 16 * b).bitwiseAND(lit(0xffffL)).as("v"))
+    df.select(col("*"), inline(array(keys: _*)))
+  }
+
+  /** A (media_id, payload, `tsCol`) frame decoded to (media_id, `hashCol`,
+    * ts) by `hash`, undecodable payloads dropped — the typed pass carries
+    * the event time, because its output attributes are fresh: a
+    * watermark goes on the OUTPUT frame's `ts`. */
+  private def decodedWithTs[H: TypeTag](df: DataFrame, tsCol: String,
+      hashCol: String)(hash: Array[Byte] => Option[H]): DataFrame = {
+    import df.sparkSession.implicits._
+    df.select(col("media_id").cast("long"), col("payload"),
+        col(tsCol).cast("timestamp").as("ts"))
+      .as[(Long, Array[Byte], java.sql.Timestamp)]
+      .mapPartitions(_.flatMap { case (id, payload, t) =>
+        hash(payload).map(h => (id, h, t)) })
+      .toDF("media_id", hashCol, "ts")
+  }
+
+  /** `tsCol` as a TimestampType `ts`, watermarked with the horizon as its
+    * delay. The cast comes BEFORE the watermark: downstream projections
+    * must carry the watermarked ATTRIBUTE itself (a cast after the
+    * watermark strips the delay metadata and the stateful op rejects
+    * EventTimeTimeout as "no watermark"). */
+  private def withHorizon(df: DataFrame, tsCol: String,
+      horizonMs: Long): DataFrame =
+    df.withColumn("ts", col(tsCol).cast("timestamp"))
+      .withWatermark("ts", s"$horizonMs milliseconds")
 
   /** W3/W4 — bounded out-of-orderness watermark. */
   def withEventWatermark(df: DataFrame, tsCol: String, delay: String): DataFrame =
@@ -1411,7 +1061,6 @@ object StreamingOps {
   def statefulSessions(events: org.apache.spark.sql.Dataset[KeyedEvent], gapMs: Long)
       : org.apache.spark.sql.Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     events
       .withWatermark("ts", "2 seconds")
       .groupByKey(_.key)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -12,6 +13,12 @@ import java.sql.Timestamp
 class StreamingSpec extends SparkSpec {
 
   def ts(s: Long) = new Timestamp(s * 1000L)
+
+  /** Total state rows of the first stateful operator in the query's
+    * latest progress that has one (-1 before any). */
+  def stateRows(q: StreamingQuery): Long = q.recentProgress.reverse
+    .find(_.stateOperators.nonEmpty)
+    .map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
 
   test("W2/W5: streaming tumbling sum emits on watermark and drops late rows") {
     implicit val ctx = spark.sqlContext
@@ -607,9 +614,6 @@ class StreamingSpec extends SparkSpec {
       .toDF()
       .writeStream.format("memory").queryName("bndvideo_out")
       .outputMode("append").start()
-    def stateRows: Long = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
     try {
       in.addData((ts(1), 1L, VideoPhash.baseVideo(100L)),
         (ts(1), 2L, VideoPhash.baseVideo(101L)))
@@ -619,13 +623,13 @@ class StreamingSpec extends SparkSpec {
       in.addData((ts(2), 3L, VideoPhash.fpsTwin(100L)),
         (ts(2), 4L, "not a video".getBytes))
       q.processAllAvailable()
-      val before = stateRows
+      val before = stateRows(q)
       assert(before >= 32L, s"three videos should hold >=32 bucket rows, got $before")
       // sentinel far ahead: watermark passes, stored state past horizon
       in.addData((ts(100), 5L, VideoPhash.baseVideo(102L)))
       q.processAllAvailable()
       q.processAllAvailable() // no-data batch fires the timeouts
-      val after = stateRows
+      val after = stateRows(q)
       assert(after < before,
         s"bucket state must shrink after the horizon passes ($before -> $after)")
       // the SAME content as video 1 again, 100 s later: PAST horizon → no pair
@@ -704,6 +708,66 @@ class StreamingSpec extends SparkSpec {
       assert(pairs === Set((7L, 10L)),
         s"expected only the in-horizon seeded pair, got $pairs")
     } finally q.stop()
+  }
+
+  test("near-dup bucket state in the earlier per-modality layout is rejected by name") {
+    // a checkpoint written by the earlier media bucket fold (state holds
+    // (media_id, phash) pairs) must fail the state schema check on
+    // restart under the shared fold, whose items also carry event time —
+    // not resume as if its buckets were empty
+    import graft.operators.ImagePhash
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode, StreamingQueryException}
+    import StreamingSpec.MediaBucket
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val ckDir = tmpDir("oldbucket-ck")
+    val in = MemoryStream[(Long, Long)]
+    val hashes = in.toDF().toDF("media_id", "phash")
+    val earlier = hashes
+      .select(col("media_id"), col("phash"),
+        explode(array((0 until ImagePhash.Bands).map(b =>
+          struct(lit(b).as("band"),
+            shiftrightunsigned(col("phash"), 16 * b)
+              .bitwiseAND(lit(0xffffL)).as("v"))): _*)).as("bv"))
+      .select(col("bv.band"), col("bv.v"), col("media_id"), col("phash"))
+      .as[(Int, Long, Long, Long)]
+      .groupByKey(m => (m._1, m._2))
+      .flatMapGroupsWithState[MediaBucket, MediaDupPair](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (_: (Int, Long), arrivals: Iterator[(Int, Long, Long, Long)],
+            state: GroupState[MediaBucket]) =>
+          var seen = state.getOption.map(_.items).getOrElse(Nil)
+          val out = scala.collection.mutable.ArrayBuffer[MediaDupPair]()
+          arrivals.toSeq.sortBy(_._3).foreach { case (_, _, id, ph) =>
+            if (!seen.exists(_._1 == id)) {
+              seen.foreach { case (oid, oph) =>
+                val d = java.lang.Long.bitCount(oph ^ ph)
+                if (d <= ImagePhash.HammingMax)
+                  out += MediaDupPair(math.min(oid, id), math.max(oid, id), d)
+              }
+              seen = (id, ph) :: seen
+            }
+          }
+          state.update(MediaBucket(seen))
+          out.iterator
+      }
+    val h = 0x0123456789abcdefL
+    in.addData((1L, h))
+    val q1 = StreamingOps.noopSink(earlier.toDF(), ckDir)
+    try q1.processAllAvailable() finally q1.stop()
+    // a twin of media 1 within radius, read by the shared fold
+    in.addData((2L, h ^ 1L))
+    val q2 = StreamingOps.noopSink(StreamingOps.streamingPhashPairs(hashes).toDF(), ckDir)
+    val e = intercept[StreamingQueryException] {
+      try q2.processAllAvailable() finally q2.stop()
+    }
+    val conditions = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null)
+      .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }
+      .toList
+    assert(conditions.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+      s"expected the state schema check to name the layout change, got $conditions: $e")
   }
 
   test("streaming substring dedup: cross-batch and in-batch windows mark, spans recover") {
@@ -879,11 +943,16 @@ class StreamingSpec extends SparkSpec {
       // in-horizon paraphrase of doc 1 pairs
       in.addData((ts(2), 3L, para("a")))
       q.processAllAvailable()
+      val before = stateRows(q)
+      assert(before >= 32L, s"three banded docs should hold >=32 bucket rows, got $before")
       // sentinel advances the watermark past every stored vector; the
       // same content again past the horizon finds nothing
       in.addData((ts(100), 4L, doc("e")))
       q.processAllAvailable()
       q.processAllAvailable()
+      val after = stateRows(q)
+      assert(after < before,
+        s"bucket state must shrink after the horizon passes ($before -> $after)")
       in.addData((ts(101), 5L, para("b")))
       q.processAllAvailable()
       val pairs = spark.table("btextemb_pairs").collect()
@@ -913,11 +982,16 @@ class StreamingSpec extends SparkSpec {
       in.addData((ts(2), 3L, wav(AudioPhash.scaleTwin(AudioPhash.gridCodeSamples(5L)))),
         (ts(2), 4L, "not audio".getBytes))
       q.processAllAvailable()
+      val before = stateRows(q)
+      assert(before >= 8L, s"three hashed clips should hold >=8 bucket rows, got $before")
       // sentinel far ahead, then the same clip content past the horizon:
       // no pair — its stored fingerprint was evicted
       in.addData((ts(100), 5L, wav(AudioPhash.gridCodeSamples(7L))))
       q.processAllAvailable()
       q.processAllAvailable()
+      val after = stateRows(q)
+      assert(after < before,
+        s"bucket state must shrink after the horizon passes ($before -> $after)")
       in.addData((ts(101), 6L, wav(AudioPhash.gridCodeSamples(5L))))
       q.processAllAvailable()
       val pairs = spark.table("bndaudio_out").collect()
@@ -937,9 +1011,6 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("ts", "doc_id", "text"), "ts", horizonMs = 5000L)
       .writeStream.format("memory").queryName("bsubstr_marks")
       .outputMode("append").start()
-    def stateRows: Long = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
     try {
       in.addData((ts(1), 1L, s"a1 a2 a3 a4 a5 $s10 b1 b2 b3 b4 b5"))
       q.processAllAvailable()
@@ -947,13 +1018,13 @@ class StreamingSpec extends SparkSpec {
       // in-horizon repeat of doc 1's passage → doc 2's windows mark
       in.addData((ts(2), 2L, s"u1 u2 u3 u4 u5 $s10 v1 v2 v3 v4 v5"))
       q.processAllAvailable()
-      val before = stateRows
+      val before = stateRows(q)
       assert(before > 20L, s"two docs' distinct windows should hold state, got $before")
       // sentinel far ahead: watermark passes every stored digest's horizon
       in.addData((ts(100), 3L, (1 to 20).map(j => s"n$j").mkString(" ")))
       q.processAllAvailable()
       q.processAllAvailable() // no-data batch fires the timeouts
-      val after = stateRows
+      val after = stateRows(q)
       assert(after < before,
         s"digest state must shrink after the horizon passes ($before -> $after)")
       // the SAME passage again, past the horizon: silent (a fresh first)
@@ -1016,22 +1087,19 @@ class StreamingSpec extends SparkSpec {
       .toDF()
       .writeStream.format("memory").queryName("bndmedia_out")
       .outputMode("append").start()
-    def stateRows: Long = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
     try {
       in.addData((ts(1), 1L, png((wA, hA, pxA))), (ts(1), 2L, png((wB, hB, pxB))))
       q.processAllAvailable()
       // in-horizon RE-ENCODED twin of image 1 (different filters → bytes)
       in.addData((ts(2), 3L, png((wA, hA, pxA), filt = 2)))
       q.processAllAvailable()
-      val before = stateRows
+      val before = stateRows(q)
       assert(before >= 8L, s"three hashed images should hold >=8 bucket rows, got $before")
       // sentinel far ahead: watermark passes, stored state past horizon
       in.addData((ts(100), 4L, png((wC, hC, pxC))))
       q.processAllAvailable()
       q.processAllAvailable() // no-data batch fires the timeouts
-      val after = stateRows
+      val after = stateRows(q)
       assert(after < before,
         s"bucket state must shrink after the horizon passes ($before -> $after)")
       // the SAME content as image 1 again, 100 s later: PAST horizon → no pair
@@ -1078,21 +1146,18 @@ class StreamingSpec extends SparkSpec {
         in.toDF().toDF("ts", "doc_id", "text"), "ts", horizonMs = 5000L)
       .toDF()
       .writeStream.format("memory").queryName("bnd_out").outputMode("append").start()
-    def stateRows: Long = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
     try {
       in.addData((ts(1), 1L, baseA), (ts(1), 2L, textB))
       q.processAllAvailable()
       in.addData((ts(2), 3L, editA)) // in-horizon near-dup of doc 1
       q.processAllAvailable()
-      val before = stateRows
+      val before = stateRows(q)
       assert(before >= 32L, s"three banded docs should hold >=32 bucket rows, got $before")
       // sentinel 98 s ahead: watermark 95 s, every stored doc is > horizon old
       in.addData((ts(100), 4L, textC))
       q.processAllAvailable()
       q.processAllAvailable() // let the no-data batch fire the timeouts
-      val after = stateRows
+      val after = stateRows(q)
       assert(after < before,
         s"bucket state must shrink after the horizon passes ($before -> $after)")
       // same text as doc 1 again, but 100 s later: PAST the horizon -> no pair
@@ -1392,4 +1457,10 @@ class StreamingSpec extends SparkSpec {
     assert(late.isStreaming)
     assert(late.schema.fieldNames.toSeq === Seq("id", "ts"))
   }
+}
+
+object StreamingSpec {
+  /** The media bucket state of the earlier per-modality fold: (media_id,
+    * phash) per stored image, no event time. */
+  case class MediaBucket(items: List[(Long, Long)])
 }
