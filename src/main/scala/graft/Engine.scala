@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import java.nio.file.{Files, Path}
+import java.io.IOException
+import java.nio.file.FileVisitResult.CONTINUE
+import java.nio.file.attribute.BasicFileAttributes
+import java.nio.file.{Files, NoSuchFileException, Path, SimpleFileVisitor}
 
 /** One home for SparkSession construction so every entry point (Verify,
   * Bench, tests) runs with identical semantics-critical config:
@@ -95,19 +98,27 @@ object Engine {
     d.toString
   }
 
-  /** Deletes `root` and everything under it, ignoring failures (it runs
-    * from the shutdown hook). The walk does not follow symlinks: a link is
-    * deleted, not its target. */
+  /** Deletes `root` and everything under it. The walk does not follow
+    * symlinks: a link is deleted, not its target. An entry that is already
+    * gone is skipped (a missing `root`, or a concurrent finisher of the
+    * same [[graft.operators.StagedCommit]] staging); any other failure
+    * throws, because StagedCommit must see a staging it could not remove. */
   def deleteTree(root: Path): Unit =
-    scala.util.Try {
-      val s = Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
-      finally s.close()
-    }
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      private def skipGone(e: IOException) =
+        if (e == null || e.isInstanceOf[NoSuchFileException]) CONTINUE
+        else throw e
+      override def visitFile(f: Path, a: BasicFileAttributes) = {
+        Files.deleteIfExists(f); CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: IOException) = skipGone(e)
+      override def postVisitDirectory(d: Path, e: IOException) = {
+        skipGone(e); Files.deleteIfExists(d); CONTINUE
+      }
+    })
 
   private object TmpDirs {
     val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
-    sys.addShutdownHook(made.forEach(d => deleteTree(d)))
+    sys.addShutdownHook(made.forEach(d => scala.util.Try(deleteTree(d))))
   }
 }

@@ -72,10 +72,7 @@ object BucketedJoin {
         val loc = new java.io.File(
           if (wh.getScheme == null) wh.getPath else new java.io.File(wh).getPath,
           name)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(loc)
+        graft.Engine.deleteTree(loc.toPath)
         Tables.table(spark, dir, table)
           .repartition(NumBuckets, col(key))
           .write

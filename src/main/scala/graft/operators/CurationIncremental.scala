@@ -139,7 +139,7 @@ object CurationIncremental {
       nextCursor: Long, path: String, commit: Boolean = true,
       budgetRows: Option[Seq[(String, Long)]] = None,
       metaRow: Option[Long] = None,
-      nBuckets: Int = IncrementalDedup.IndexBuckets): Unit = {
+      nBuckets: Int = BandedIndex.IndexBuckets): Unit = {
     val sc = pending(path)
     val pend = sc.stage()
     IncrementalDedup.writeFpIndex(acc.select("fp"),
@@ -276,7 +276,7 @@ object CurationIncremental {
       budget: Int = Packing.SeqBudget,
       bucketWidth: Long = Packing.BucketWidth,
       autoCompact: Int = 0,
-      nBuckets: Int = IncrementalDedup.IndexBuckets): Boolean = {
+      nBuckets: Int = BandedIndex.IndexBuckets): Boolean = {
     import spark.implicits._
     recoverState(spark, path)
     // ONE control read answers the replay check AND the cursor (the
@@ -492,7 +492,7 @@ object CurationIncremental {
       budget: Int = Packing.SeqBudget,
       bucketWidth: Long = Packing.BucketWidth,
       autoCompact: Int = 0,
-      nBuckets: Int = IncrementalDedup.IndexBuckets): Boolean = {
+      nBuckets: Int = BandedIndex.IndexBuckets): Boolean = {
     import spark.implicits._
     recoverState(spark, path)
     // ONE control read answers the replay check, the cursor AND the

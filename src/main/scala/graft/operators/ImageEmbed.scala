@@ -130,8 +130,7 @@ object ImageEmbed {
       explode(array((0 until 2).flatMap(ti =>
         (0 until ImagePhash.Bands).map(b =>
           struct(lit(ti * ImagePhash.Bands + b).as("tb"),
-            shiftrightunsigned(col(s"_sig$ti"), 16 * b)
-              .bitwiseAND(lit(0xffffL)).as("bv"),
+            BandedIndex.band16(col(s"_sig$ti"), b).as("bv"),
             col(s"_sig$ti").as("sig")))): _*)).as("band"))
       .select(col("media_id"), col("band.tb").as("tb"),
         col("band.bv").as("bv"), col("band.sig").as("sig"))

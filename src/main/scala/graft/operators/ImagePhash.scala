@@ -386,9 +386,7 @@ object ImagePhash {
     // dedupClusters convention).
     val h = hashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = h.select(col("media_id"), col("phash"),
-      explode(array((0 until Bands).map(b =>
-        struct(lit(b).as("b"),
-          shiftrightunsigned(col("phash"), 16 * b).bitwiseAND(lit(0xffffL)).as("v"))): _*)).as("band"))
+      explode(array(BandedIndex.hashBands(Seq(col("phash")), "b"): _*)).as("band"))
       .select(col("media_id"), col("phash"),
         col("band.b").as("b"), col("band.v").as("v"))
     // candidates shard by (band idx, band value); the same pair can match

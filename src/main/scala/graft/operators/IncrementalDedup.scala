@@ -39,6 +39,8 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDedup {
 
+  import BandedIndex.IndexBuckets
+
   /** Narrow (doc_id, fp) projection — the only columns dedup state needs. */
   def fingerprints(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
@@ -59,11 +61,6 @@ object IncrementalDedup {
       .drop("rn", "text")
       .join(indexFps.select("fp"), Seq("fp"), "left_anti")
   }
-
-  /** Default index bucket count — at 100 TB this is sized so one bucket's
-    * fingerprints fit an executor's hash-join build side (e.g. 4096
-    * buckets over a 3 TB index → ~750 MB/bucket). */
-  val IndexBuckets = 64
 
   /** Persist (or append) fingerprints into a bucket-partitioned index
     * ([[StagedCommit.writeBucketed]]: one file per touched bucket per

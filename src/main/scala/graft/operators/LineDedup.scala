@@ -167,7 +167,7 @@ object LineDedup {
     * refreshByPath invalidating the lazy survivor plan). Returns the
     * per-document survivors frame. */
   def stepLines(spark: SparkSession, batch: DataFrame, path: String,
-      nBuckets: Int = IncrementalDedup.IndexBuckets,
+      nBuckets: Int = BandedIndex.IndexBuckets,
       autoCompact: Int = 0): DataFrame = {
     val out = dedupLinesAgainst(batch,
         IncrementalDedup.readFpIndex(spark, path).select("fp"))

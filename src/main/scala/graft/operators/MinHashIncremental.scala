@@ -63,6 +63,10 @@ object MinHashIncremental {
         transform(col("shingles"), s => xxhash64(s)).as("hset"))
       .withColumn("mh", call_function("graft_minhash64", col("hset")))
 
+  /** [[prepared]] of a (doc_id, text, carry…) batch. */
+  private def preparedBatch(batch: DataFrame): DataFrame =
+    prepared(batch.select("doc_id", "text"))
+
   /** The banded probe surface of a prepared frame: one (doc_id, band,
     * sig) row per band — [[MinHashDedup.bandStructCols]], so a banding
     * retune changes batch, streaming, and incremental at once. */
@@ -73,69 +77,57 @@ object MinHashIncremental {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
 
   /** Exact Jaccard over hashed shingle sets. */
-  def jac(a: Column, b: Column): Column =
+  private def jac(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+
+  /** The family's [[BandedIndex]] descriptor: (band, sig) postings under
+    * the kernel-versioned [[bandsSubPath]], exact-Jaccard verify over
+    * `sets/`, and the pre-r15 unversioned `bands/` layout read as a union
+    * and migrated before an append. */
+  private[operators] val Index: BandedIndex.Family = new BandedIndex.Family(
+      "minhash", "doc_id", Seq("band", "sig"), bandRows(_), "hset",
+      (a, b) => jac(a, b) >= threshold, "sets",
+      bandsDir = s"bands_${graft.plans.MinHashSignatureExpr.KernelVersion}") {
+    /** The CURRENT kernel's band sub-table, plus the unversioned pre-r15
+      * layout when one is still present (same [[LegacyLayoutKernel]]
+      * constants — enforced loudly): a read-only index that was never
+      * append-migrated may hold BOTH layouts, and the probe surface is
+      * their UNION — reading only the versioned half would silently drop
+      * the legacy corpus's band rows. An index written under a FUTURE
+      * kernel bump won't be found (versioned miss) or refuses (legacy
+      * kernel mismatch) — the desired failure mode is rebuild, never a
+      * silent zero-candidate probe. */
+    override def readBands(spark: SparkSession, root: String): DataFrame = {
+      val versioned = new java.io.File(bandsPath(root)).exists
+      val legacy = legacyBandsDir(root).exists
+      if (legacy) requireLegacyCompatible(root)
+      if (versioned && legacy)
+        spark.read.parquet(bandsPath(root))
+          .unionByName(spark.read.parquet(s"$root/bands"))
+      else if (versioned) spark.read.parquet(bandsPath(root))
+      else spark.read.parquet(s"$root/bands")
+    }
+    override def beforeAppend(spark: SparkSession, root: String): Unit =
+      if (legacyBandsDir(root).exists) migrateLegacyBands(spark, root)
+  }
 
   /** Doc_ids of `batch` docs that near-dup (exact Jaccard ≥ [[MinHashDedup
     * .threshold]]) a LOWER-id batch doc or ANY index doc. `prep` must be
-    * [[prepared]] of the batch (caller owns its persist lifecycle — it is
-    * consumed by both self-join sides and both verify joins). */
+    * [[prepared]] of the batch ([[BandedIndex.drops]]). */
   def nearDupDrops(prep: DataFrame, idxBands: DataFrame,
-      idxSets: DataFrame): DataFrame = {
-    val bb = bandRows(prep)
-    // within-batch: candidates from the banding self-join, verified exact
-    val inCand = bb.as("x").join(bb.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val inDrops = inCand
-      .join(prep.select(col("doc_id").as("doc_a"), col("hset").as("h_a")), Seq("doc_a"))
-      .join(prep.select(col("doc_id").as("doc_b"), col("hset").as("h_b")), Seq("doc_b"))
-      .filter(jac(col("h_a"), col("h_b")) >= threshold)
-      .select(col("doc_b").as("doc_id"))
-    // cross-index: probe the persisted postings on (band, sig) — narrow
-    // rows both sides; hsets re-join by id only for surviving candidates
-    val crossCand = bb.as("x").join(idxBands.as("i"),
-        col("x.band") === col("i.band") && col("x.sig") === col("i.sig"))
-      .select(col("x.doc_id").as("doc_id"), col("i.doc_id").as("idx_id"))
-      .distinct()
-    val crossDrops = crossCand
-      .join(prep.select(col("doc_id"), col("hset").as("h_b")), Seq("doc_id"))
-      .join(idxSets.select(col("doc_id").as("idx_id"), col("hset").as("h_i")), Seq("idx_id"))
-      .filter(jac(col("h_b"), col("h_i")) >= threshold)
-      .select("doc_id")
-    inDrops.union(crossDrops).distinct()
-  }
+      idxSets: DataFrame): DataFrame =
+    BandedIndex.drops(Index, prep, idxBands, idxSets)
 
   /** Dedup `batch` (doc_id, text, carry…) within itself and against an
     * index given as frames. Returns batch survivors with original columns
-    * (short docs — no shingles — survive by construction).
-    *
-    * `materialize = true` eagerly localCheckpoints the survivors and
-    * releases the internal prepared-batch cache before returning (the
-    * [[SemDedup]] in-operator release discipline — long-lived sessions
-    * and composed pipelines don't accumulate stale caches); the lazy
-    * default keeps the full plan visible for audits. */
+    * (short docs — no shingles — survive by construction);
+    * `materialize` as in [[BandedIndex.survivors]]. */
   def dedupNearAgainst(batch: DataFrame, idxBands: DataFrame,
-      idxSets: DataFrame, materialize: Boolean = false): DataFrame = {
-    val prep = prepared(batch.select("doc_id", "text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = batch.join(nearDupDrops(prep, idxBands, idxSets),
-      Seq("doc_id"), "left_anti")
-    if (!materialize) out
-    else {
-      val m = out.localCheckpoint(true)
-      prep.unpersist(blocking = false)
-      m
-    }
-  }
+      idxSets: DataFrame, materialize: Boolean = false): DataFrame =
+    BandedIndex.survivors(Index, batch, preparedBatch(batch), idxBands, idxSets,
+      materialize)
 
   // ---------------------------------------------------- persisted index
-
-  /** Bucket count for both sub-tables ([[IncrementalDedup.IndexBuckets]]
-    * sizing rationale: one bucket's postings fit an executor build side). */
-  val IndexBuckets = 64
 
   /** Sub-path of the persisted probe surface, stamped with the minhash
     * KERNEL version ([[graft.plans.MinHashSignatureExpr.KernelVersion]]):
@@ -145,8 +137,7 @@ object MinHashIncremental {
     * invisible to [[readBandIndex]], so the caller's exists-check
     * rebuilds it instead. `sets/` (raw xxhash64 shingle sets) is
     * kernel-independent and stays unversioned. */
-  def bandsSubPath(path: String): String =
-    s"$path/bands_${graft.plans.MinHashSignatureExpr.KernelVersion}"
+  def bandsSubPath(path: String): String = Index.bandsPath(path)
 
   /** Kernel version of the pre-r15 UNVERSIONED `bands/` layout: it was
     * written with the "mh2" constants before the sub-path carried the
@@ -179,74 +170,35 @@ object MinHashIncremental {
     * silently. Copy-then-delete rather than rename: correct even when
     * both layouts already coexist, and a crash between the copy and the
     * delete leaves only DUPLICATE band rows, which the probe's candidate
-    * `distinct()` absorbs. */
+    * aggregate absorbs. */
   def migrateLegacyBands(spark: SparkSession, path: String): Unit = {
     requireLegacyCompatible(path)
     spark.read.parquet(s"$path/bands")
       .write.mode("append").partitionBy("bucket").parquet(bandsSubPath(path))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(legacyBandsDir(path))
+    graft.Engine.deleteTree(legacyBandsDir(path).toPath)
   }
 
-  /** Persist (or append) a prepared frame's band rows + shingle sets.
-    * Both sub-tables bucket by a stable hash so a batch's probe/verify
-    * joins can prune to matching buckets. An append onto a pre-r15
-    * unversioned index first folds the legacy rows into the versioned
-    * sub-path ([[migrateLegacyBands]]) so the probe surface never
-    * splits across layouts. */
+  /** Persist (or append) a prepared frame's band rows + shingle sets
+    * ([[BandedIndex.write]]). An append onto a pre-r15 unversioned index
+    * first folds the legacy rows into the versioned sub-path
+    * ([[migrateLegacyBands]]) so the probe surface never splits across
+    * layouts. */
   def writeBandIndex(prep: DataFrame, path: String,
-      nBuckets: Int = IndexBuckets, append: Boolean = false): Unit = {
-    if (append && legacyBandsDir(path).exists)
-      migrateLegacyBands(prep.sparkSession, path)
-    StagedCommit.writeBucketed(bandRows(prep), col("sig"), nBuckets,
-      bandsSubPath(path), append)
-    StagedCommit.writeBucketed(prep.select(col("doc_id"), col("hset")),
-      xxhash64(col("doc_id")), nBuckets, s"$path/sets", append)
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets, append: Boolean = false): Unit =
+    BandedIndex.write(Index, prep, path, nBuckets, append)
 
-  /** Reads the CURRENT kernel's band sub-table, plus the unversioned
-    * pre-r15 layout when one is still present (same [[LegacyLayoutKernel]]
-    * constants — enforced loudly): a read-only index that was never
-    * append-migrated may hold BOTH layouts, and the probe surface is
-    * their UNION — reading only the versioned half would silently drop
-    * the legacy corpus's band rows. An index written under a FUTURE
-    * kernel bump won't be found (versioned miss) or refuses (legacy
-    * kernel mismatch) — the desired failure mode is rebuild, never a
-    * silent zero-candidate probe. */
-  def readBandIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val versionedExists = new java.io.File(bandsSubPath(path)).exists
-    val legacyExists = legacyBandsDir(path).exists
-    if (legacyExists) requireLegacyCompatible(path)
-    val bands =
-      if (versionedExists && legacyExists)
-        spark.read.parquet(bandsSubPath(path))
-          .unionByName(spark.read.parquet(s"$path/bands"))
-      else if (versionedExists) spark.read.parquet(bandsSubPath(path))
-      else spark.read.parquet(s"$path/bands")
-    (bands, spark.read.parquet(s"$path/sets"))
-  }
+  /** (bands, sets) of the index at `path` ([[BandedIndex.read]]; the
+    * bands half is the legacy-aware union of [[Index]]). */
+  def readBandIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =
+    BandedIndex.read(Index, spark, path)
 
-  /** One full incremental step: near-dedup `batch` against the index at
-    * `path`, append the survivors' probe+verify surfaces, return the
-    * survivors. The survivors are eagerly `localCheckpoint`ed BEFORE the
-    * append — the [[IncrementalDedup.step]] guard, verbatim: the append
-    * invalidates cached plans scanning the index path, and a lazy
-    * survivor frame re-evaluated after it would see its own bands in the
-    * index and drop itself. */
+  /** One full incremental step ([[BandedIndex.step]]): near-dedup `batch`
+    * against the index at `path`, append the survivors' probe+verify
+    * surfaces, return the survivors. */
   def step(spark: SparkSession, batch: DataFrame, path: String,
-      nBuckets: Int = IndexBuckets, autoCompact: Int = 0): DataFrame = {
-    val (idxBands, idxSets) = readBandIndex(spark, path)
-    val survivors =
-      dedupNearAgainst(batch, idxBands, idxSets, materialize = true)
-    writeBandIndex(prepared(survivors.select("doc_id", "text")), path,
-      nBuckets, append = true)
-    // self-maintenance: both sub-tables sweep under the same threshold
-    IndexMaintenance.autoCompact(spark, autoCompact,
-      Seq(bandsSubPath(path) -> "bucket", s"$path/sets" -> "bucket"))
-    survivors
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets, autoCompact: Int = 0): DataFrame =
+    BandedIndex.step(Index, spark, batch, path, preparedBatch, nBuckets,
+      autoCompact)
 
   /** Declared key (`dedup_minhash_incremental`): even doc_ids play the
     * already-curated corpus (their band rows + shingle sets are the
@@ -257,14 +209,10 @@ object MinHashIncremental {
     * same verdict from brute-force trigram Jaccard over the parity
     * split; LSH recall is exactly 1 at this SF, asserted in
     * LlmOpsSpec). Deterministic and SF-independent. */
-  def dedupMinhashIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .select("doc_id", "text", "lang", "n_chars")
-    val idxPrep = prepared(docs.filter(col("doc_id") % 2 === 0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dedupNearAgainst(docs.filter(col("doc_id") % 2 === 1),
-        bandRows(idxPrep), idxPrep.select("doc_id", "hset"))
+  def dedupMinhashIncremental(spark: SparkSession, dir: String): DataFrame =
+    BandedIndex.paritySurvivors(Index,
+        Tables.documents(spark, dir).select("doc_id", "text", "lang", "n_chars"),
+        col("doc_id") % 2 === 0, preparedBatch)
       .select("doc_id", "lang", "n_chars")
       .orderBy("doc_id")
-  }
 }

@@ -37,61 +37,35 @@ import org.apache.spark.sql.functions._
   */
 object PhashIncremental {
 
-  import ImagePhash.{Bands, HammingMax}
+  import ImagePhash.HammingMax
 
   /** The banded probe surface of a (media_id, phash) frame: one
-    * (media_id, b, v) row per 16-bit band — [[ImagePhash.phashDedup]]'s
-    * fan-out, factored so batch and index build from the same shape. */
+    * (media_id, b, v) row per 16-bit band ([[BandedIndex.hashBands]]),
+    * so batch and index build from the same shape. */
   def bandRows(hashes: DataFrame): DataFrame =
     hashes.select(col("media_id"),
-      explode(array((0 until Bands).map(b =>
-        struct(lit(b).as("b"),
-          shiftrightunsigned(col("phash"), 16 * b)
-            .bitwiseAND(lit(0xffffL)).as("v"))): _*)).as("band"))
+        explode(array(BandedIndex.hashBands(Seq(col("phash")), "b"): _*)).as("band"))
       .select(col("media_id"), col("band.b").as("b"), col("band.v").as("v"))
 
+  /** The family's [[BandedIndex]] descriptor: (b, v) postings under
+    * `bands/`, the exact `bit_count(xor)` cut over `hashes/`. */
+  private[operators] val Index = new BandedIndex.Family("phash", "media_id",
+    Seq("b", "v"), bandRows, "phash",
+    (a, b) => bit_count(a.bitwiseXOR(b)) <= HammingMax, "hashes")
+
   /** Media_ids of `batchHashes` images within Hamming ≤ [[ImagePhash
-    * .HammingMax]] of a LOWER-id batch image or ANY index image. Banded
-    * rows carry only (media_id, b, v) through the exchanges — the 8 B
-    * hashes re-join by id after the candidate distinct, payloads never. */
+    * .HammingMax]] of a LOWER-id batch image or ANY index image
+    * ([[BandedIndex.drops]]): the 8 B hashes re-join by id after the
+    * candidate cut, payloads never. */
   def nearDupDrops(batchHashes: DataFrame, idxBands: DataFrame,
-      idxHashes: DataFrame): DataFrame = {
-    val bb = bandRows(batchHashes)
-    // within-batch: banded candidates, keep-first over the verified pairs
-    val inCand = bb.as("x").join(bb.as("y"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.media_id") < col("y.media_id"))
-      .select(col("x.media_id").as("id_a"), col("y.media_id").as("id_b"))
-      .distinct()
-    val inDrops = inCand
-      .join(batchHashes.select(col("media_id").as("id_a"), col("phash").as("h_a")), Seq("id_a"))
-      .join(batchHashes.select(col("media_id").as("id_b"), col("phash").as("h_b")), Seq("id_b"))
-      .filter(bit_count(col("h_a").bitwiseXOR(col("h_b"))) <= HammingMax)
-      .select(col("id_b").as("media_id"))
-    // cross-index: probe the persisted postings on (b, v) — narrow rows
-    // both sides; hashes re-join by id only for surviving candidates
-    val crossCand = bb.as("x").join(idxBands.as("i"),
-        col("x.b") === col("i.b") && col("x.v") === col("i.v"))
-      .select(col("x.media_id").as("media_id"), col("i.media_id").as("idx_id"))
-      .distinct()
-    val crossDrops = crossCand
-      .join(batchHashes.select(col("media_id"), col("phash").as("h_b")), Seq("media_id"))
-      .join(idxHashes.select(col("media_id").as("idx_id"), col("phash").as("h_i")), Seq("idx_id"))
-      .filter(bit_count(col("h_b").bitwiseXOR(col("h_i"))) <= HammingMax)
-      .select("media_id")
-    inDrops.union(crossDrops).distinct()
-  }
+      idxHashes: DataFrame): DataFrame =
+    BandedIndex.drops(Index, batchHashes, idxBands, idxHashes)
 
   /** Dedup `batch` (media_id, payload, carry…) within itself and against
     * an index given as frames. Returns batch survivors with original
     * columns. NON-DECODABLE payloads have no hash and survive by
-    * construction — the mixed-modality corpus contract ([[
-    * MinHashIncremental.dedupNearAgainst]]'s short-doc discipline).
-    *
-    * `materialize = true` eagerly localCheckpoints the survivors and
-    * releases the internal hash cache before returning (the [[SemDedup]]
-    * in-operator release discipline); the lazy default keeps the full
-    * plan visible for audits. */
+    * construction — the mixed-modality corpus contract;
+    * `materialize` as in [[BandedIndex.survivors]]. */
   def dedupAgainst(batch: DataFrame, idxBands: DataFrame,
       idxHashes: DataFrame, materialize: Boolean = false): DataFrame =
     dedupHashedAgainst(batch,
@@ -103,69 +77,32 @@ object PhashIncremental {
     * hash rides the same index — audio fingerprints are certified
     * machinery-identical (PhashIncrementalSpec), and [[
     * audioPhashIncremental]] is exactly this with [[AudioPhash
-    * .audioPhashFrame]] as the decode stage.
-    *
-    * Cache discipline: the hash frame is referenced ~4× by the
-    * probe/verify joins; persist it only on the materialize path, where
-    * the eager localCheckpoint bounds the cache's lifetime to this call
-    * ([[graft.Caching]]'s contract — the r16 lazy-path persist leaked
-    * into the session). The lazy path is the plan-audit hook: fully
-    * visible, nothing cached. */
+    * .audioPhashFrame]] as the decode stage. */
   def dedupHashedAgainst(batch: DataFrame, decoded: DataFrame,
       idxBands: DataFrame, idxHashes: DataFrame,
-      materialize: Boolean): DataFrame = {
-    if (!materialize)
-      batch.join(nearDupDrops(decoded, idxBands, idxHashes),
-        Seq("media_id"), "left_anti")
-    else {
-      val hashes = decoded
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.Caching.withCleanup(hashes) {
-        batch.join(nearDupDrops(hashes, idxBands, idxHashes),
-            Seq("media_id"), "left_anti")
-          .localCheckpoint(true)
-      }
-    }
-  }
+      materialize: Boolean): DataFrame =
+    BandedIndex.survivors(Index, batch, decoded, idxBands, idxHashes,
+      materialize)
 
   // ---------------------------------------------------- persisted index
 
-  /** Bucket count for both sub-tables ([[IncrementalDedup.IndexBuckets]]
-    * sizing rationale). */
-  val IndexBuckets = 64
-
-  /** Persist (or append) a hash frame's band rows + hashes. Both
-    * sub-tables bucket by a stable hash of their join column so a
-    * batch's probe/verify joins can prune to matching buckets. */
+  /** Persist (or append) a hash frame's band rows + hashes
+    * ([[BandedIndex.write]]). */
   def writePhashIndex(hashes: DataFrame, path: String,
-      nBuckets: Int = IndexBuckets, append: Boolean = false): Unit = {
-    StagedCommit.writeBucketed(bandRows(hashes), col("v"), nBuckets,
-      s"$path/bands", append)
-    StagedCommit.writeBucketed(hashes.select(col("media_id"), col("phash")),
-      xxhash64(col("media_id")), nBuckets, s"$path/hashes", append)
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets, append: Boolean = false): Unit =
+    BandedIndex.write(Index, hashes, path, nBuckets, append)
 
   def readPhashIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/bands"), spark.read.parquet(s"$path/hashes"))
+    BandedIndex.read(Index, spark, path)
 
-  /** One full incremental step: near-dedup `batch` against the index at
-    * `path`, append the survivors' probe+verify surfaces, return the
-    * survivors. Survivors are eagerly `localCheckpoint`ed BEFORE the
-    * append — the [[IncrementalDedup.step]] guard, verbatim: the append
-    * invalidates cached plans scanning the index path, and a lazy
-    * survivor frame re-evaluated after it would see its own bands in
-    * the index and drop itself. */
+  /** One full incremental step ([[BandedIndex.step]]): near-dedup `batch`
+    * against the index at `path`, append the survivors' probe+verify
+    * surfaces, return the survivors. */
   def step(spark: SparkSession, batch: DataFrame, path: String,
-      nBuckets: Int = IndexBuckets, autoCompact: Int = 0): DataFrame = {
-    val (idxBands, idxHashes) = readPhashIndex(spark, path)
-    val survivors = dedupAgainst(batch, idxBands, idxHashes, materialize = true)
-    writePhashIndex(
-      ImagePhash.phashFrame(survivors.select("media_id", "payload")), path,
-      nBuckets, append = true)
-    IndexMaintenance.autoCompact(spark, autoCompact,
-      Seq(s"$path/bands" -> "bucket", s"$path/hashes" -> "bucket"))
-    survivors
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets, autoCompact: Int = 0): DataFrame =
+    BandedIndex.step(Index, spark, batch, path,
+      b => ImagePhash.phashFrame(b.select("media_id", "payload")),
+      nBuckets, autoCompact)
 
   /** Declared key (`media_phash_incremental`): EVEN-id base images play
     * the already-curated corpus (their band rows + hashes are the
@@ -180,23 +117,8 @@ object PhashIncremental {
     * Spark plan never reads. Deterministic and SF-independent. */
   def mediaPhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     ImagePhash.ensurePhashFixture(spark)
-    val fix = spark.read.parquet(ImagePhash.fixturePath)
-    val idxHashes = ImagePhash.phashFrame(
-      fix.filter(col("kind") === "base" && col("media_id") % 2 === 0)
-        .select("media_id", "payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize=true bounds both caches to this call: the survivors are
-    // localCheckpointed inside dedupAgainst, so by the time we return the
-    // index hashes (probed 2×) are released too — no declared key leaves
-    // a cache in the session (CacheHygieneSpec pins this).
-    graft.Caching.withCleanup(idxHashes) {
-      dedupAgainst(
-        fix.filter(col("kind") =!= "base" || col("media_id") % 2 === 1)
-          .select("media_id", "payload"),
-        bandRows(idxHashes), idxHashes, materialize = true)
-    }
-      .select("media_id")
-      .orderBy("media_id")
+    parityKey(Index, spark.read.parquet(ImagePhash.fixturePath),
+      ImagePhash.phashFrame)
   }
 
   /** Declared key (`audio_phash_incremental`): the [[
@@ -208,25 +130,24 @@ object PhashIncremental {
     * bases die IN-BATCH against their base arriving with a lower id;
     * survivors ≡ exactly the odd bases. The decode stage is [[AudioPhash
     * .audioPhashFrame]] (WAV chunk walk → Goertzel → sign fingerprint);
-    * everything after it is [[dedupHashedAgainst]] unchanged — the
+    * everything after it is the image key's index unchanged — the
     * declared-key witness that the fingerprint index is modality-blind,
     * closing the last arrival-mode matrix cell (image/video landed in
     * r16). The oracle answers from planted kind/parity metadata the
     * Spark plan never reads. */
   def audioPhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     AudioPhash.ensureAudioPhashFixture(spark)
-    val fix = spark.read.parquet(AudioPhash.audioFixturePath)
-    val idxHashes = AudioPhash.audioPhashFrame(
-      fix.filter(col("kind") === "base" && col("media_id") % 2 === 0)
-        .select("media_id", "payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batch = fix.filter(col("kind") =!= "base" || col("media_id") % 2 === 1)
-      .select("media_id", "payload")
-    graft.Caching.withCleanup(idxHashes) {
-      dedupHashedAgainst(batch, AudioPhash.audioPhashFrame(batch),
-        bandRows(idxHashes), idxHashes, materialize = true)
-    }
+    parityKey(Index, spark.read.parquet(AudioPhash.audioFixturePath),
+      AudioPhash.audioPhashFrame)
+  }
+
+  /** Survivor ids of a media fixture's parity split: even-id bases are
+    * the index, odd bases and all twins the batch. */
+  private[operators] def parityKey(f: BandedIndex.Family, fix: DataFrame,
+      decode: DataFrame => DataFrame): DataFrame =
+    BandedIndex.paritySurvivors(f, fix,
+        col("kind") === "base" && col("media_id") % 2 === 0,
+        d => decode(d.select("media_id", "payload")))
       .select("media_id")
       .orderBy("media_id")
-  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Engine.deleteTree
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,7 +54,7 @@ final class StagedCommit(root: String, dirName: String,
   val dir: Path = Paths.get(root, dirName)
 
   /** Start a fresh staging: any leftover tree goes first. */
-  def stage(): Path = { deleteRecursively(dir); dir }
+  def stage(): Path = { deleteTree(dir); dir }
 
   def commit(): Unit = Tables.markArtifactComplete(dir.toString)
 
@@ -62,7 +63,7 @@ final class StagedCommit(root: String, dirName: String,
   /** Fold a COMMITTED staging into the live tree, then finish. A staging
     * that fails the artifact's `precondition` is rolled back instead. */
   def fold(): Unit =
-    if (!precondition(dir)) deleteRecursively(dir)
+    if (!precondition(dir)) deleteTree(dir)
     else {
       pieces.foreach(p => p.fold(dir.resolve(p.name), Paths.get(root, p.name)))
       finish()
@@ -71,7 +72,7 @@ final class StagedCommit(root: String, dirName: String,
   /** Marker first, then the tree. */
   def finish(): Unit = {
     Files.deleteIfExists(dir.resolve("_GRAFT_COMPLETE"))
-    deleteRecursively(dir)
+    deleteTree(dir)
   }
 
   /** Converge a possibly-crashed staging: roll a committed one forward
@@ -82,7 +83,7 @@ final class StagedCommit(root: String, dirName: String,
       rollForward: () => Unit = () => fold()): Boolean =
     Files.exists(dir) && {
       if (committed) rollForward()
-      else if (rollBack) deleteRecursively(dir)
+      else if (rollBack) deleteTree(dir)
       true
     }
 }
@@ -145,7 +146,7 @@ object StagedCommit {
           listDir(dst).filter(_.getFileName.toString.startsWith(".tmp-"))
             .foreach(Files.deleteIfExists(_))
           swapFiles(staged.resolve(p), dst)
-        } else deleteRecursively(dst)
+        } else deleteTree(dst)
       }
     }
   }
@@ -179,12 +180,6 @@ object StagedCommit {
     else {
       val s = Files.list(dir)
       try s.iterator().asScala.toSeq finally s.close()
-    }
-
-  private[operators] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-      Files.deleteIfExists(p)
     }
 
   /** Parquet data files directly under `dir` (no recursion — partition

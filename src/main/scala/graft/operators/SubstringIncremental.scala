@@ -81,9 +81,7 @@ object SubstringIncremental {
 
   // ---------------------------------------------------- persisted index
 
-  /** Bucket count for the digest table ([[IncrementalDedup.IndexBuckets]]
-    * sizing rationale). */
-  val IndexBuckets = 64
+  import BandedIndex.IndexBuckets
 
   /** Persist (or append) a digest frame's DISTINCT `g` values,
     * bucket-partitioned by a stable hash of the digest so probe joins

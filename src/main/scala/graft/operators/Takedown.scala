@@ -194,21 +194,19 @@ object Takedown {
     // all reference the single `ids` parquet)
     val ids = docs.select("doc_id").distinct()
     lazy val fps = docs.select(TextOps.fingerprint(col("text")).as("fp")).distinct()
+    // both tables of a banded index family, from its descriptor
+    def banded(root: Option[String], f: BandedIndex.Family) =
+      root.toSeq.flatMap(f.subTables(_).map { case (family, p) =>
+        (family, p, f.id, "bucket", "ids") })
     // (family, subTablePath, keyCol, partCol, keysName)
     val entries: Seq[(String, String, String, String, String)] =
       targets.fpIndex.map(p =>
         ("fp", p, "fp", "bucket", "fps")).toSeq ++
       targets.curation.map(p =>
         ("curation", s"$p/fps", "fp", "bucket", "fps")).toSeq ++
-      targets.minhash.toSeq.flatMap(p => Seq(
-        ("minhash_bands", MinHashIncremental.bandsSubPath(p), "doc_id", "bucket", "ids"),
-        ("minhash_sets", s"$p/sets", "doc_id", "bucket", "ids"))) ++
-      targets.phash.toSeq.flatMap(p => Seq(
-        ("phash_bands", s"$p/bands", "media_id", "bucket", "ids"),
-        ("phash_hashes", s"$p/hashes", "media_id", "bucket", "ids"))) ++
-      targets.videoPhash.toSeq.flatMap(p => Seq(
-        ("video_bands", s"$p/bands", "media_id", "bucket", "ids"),
-        ("video_hashes", s"$p/hashes", "media_id", "bucket", "ids"))) ++
+      banded(targets.minhash, MinHashIncremental.Index) ++
+      banded(targets.phash, PhashIncremental.Index) ++
+      banded(targets.videoPhash, VideoPhashIncremental.Index) ++
       targets.lineIndex.map(p =>
         ("line", p, "fp", "bucket", "line_fps")).toSeq ++
       targets.substring.map(p =>
@@ -220,11 +218,8 @@ object Takedown {
         ("ivfpq", s"$p/assigned", "vec_id", "cid", "ids")).toSeq ++
       targets.ivf.map(p =>
         ("ivf", s"$p/assigned", "vec_id", "cid", "ids")).toSeq ++
-      targets.textEmbed.toSeq.flatMap(p => Seq(
-        ("text_embed_bands",
-          TextEmbed.bandsPath(p, targets.textEmbedBandBits,
-            targets.textEmbedTables), "doc_id", "bucket", "ids"),
-        ("text_embed_vecs", s"$p/vecs", "doc_id", "bucket", "ids")))
+      banded(targets.textEmbed,
+        TextEmbed.index(targets.textEmbedBandBits, targets.textEmbedTables))
     // validate FIRST, before any key derivation: every plan row must
     // name an existing sub-table — a typo'd root or a band-geometry
     // default that doesn't match the deployed index layout must fail

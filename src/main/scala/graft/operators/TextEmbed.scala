@@ -257,115 +257,58 @@ object TextEmbed {
   def embedColumn(text: Column, dim: Int = Dim): Column =
     call_function("graft_hash_embed", split(text, " "), lit(dim))
 
-  /** Doc_ids of `batchEmb` documents within cosine ≥ `threshold` of a
-    * LOWER-id batch document or ANY index document — [[textNearDup]]'s
-    * mining against a persisted index: candidates from the (tbl, b, bv)
-    * equi-joins (narrow rows both sides), exact-cosine verify on
-    * candidates only, vectors re-joined by id. */
-  def nearDupDropsText(batchEmb: DataFrame, idxBands: DataFrame,
-      idxVecs: DataFrame, threshold: Double = CosThreshold,
-      bandBits: Int = BandBits, nTables: Int = 4): DataFrame = {
-    val bb = bandRowsAll(batchEmb, bandBits, nTables)
-    val inCand = bb.as("x").join(bb.as("y"),
-        col("x.tbl") === col("y.tbl") && col("x.b") === col("y.b") &&
-          col("x.bv") === col("y.bv") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("lo"), col("y.doc_id").as("hi"))
-      .distinct()
-    val inDrops = inCand
-      .join(batchEmb.select(col("doc_id").as("lo"), col("v").as("v_lo")), "lo")
-      .join(batchEmb.select(col("doc_id").as("hi"), col("v").as("v_hi")), "hi")
-      .filter(Similarity.cosine(col("v_lo"), col("v_hi")) >= threshold)
-      .select(col("hi").as("doc_id"))
-    val crossCand = bb.as("x").join(idxBands.as("i"),
-        col("x.tbl") === col("i.tbl") && col("x.b") === col("i.b") &&
-          col("x.bv") === col("i.bv"))
-      .select(col("x.doc_id").as("doc_id"), col("i.doc_id").as("idx_id"))
-      .distinct()
-    val crossDrops = crossCand
-      .join(batchEmb.select(col("doc_id"), col("v").as("v_b")), Seq("doc_id"))
-      .join(idxVecs.select(col("doc_id").as("idx_id"), col("v").as("v_i")),
-        Seq("idx_id"))
-      .filter(Similarity.cosine(col("v_b"), col("v_i")) >= threshold)
-      .select("doc_id")
-    inDrops.union(crossDrops).distinct()
-  }
+  /** The family's [[BandedIndex]] descriptor at one band geometry:
+    * (tbl, b, bv) postings under the geometry-stamped [[bandsPath]], the
+    * exact-cosine cut at `threshold` over `vecs/`. */
+  private[operators] def index(bandBits: Int, nTables: Int,
+      threshold: Double = CosThreshold): BandedIndex.Family =
+    new BandedIndex.Family("text_embed", "doc_id", Seq("tbl", "b", "bv"),
+      bandRowsAll(_, bandBits, nTables), "v",
+      (a, b) => Similarity.cosine(a, b) >= threshold, "vecs",
+      bandsDir = s"bands_b${bandBits}t$nTables")
 
   /** Dedup `batch` (doc_id, text, carry…) within itself and against an
-    * index given as frames — the [[PhashIncremental.dedupHashedAgainst]]
-    * shape on the text embedding: `materialize = true` persists the
-    * batch embedding for its ~5 probe/verify references and releases it
-    * before returning; the lazy default is the plan-audit hook. */
+    * index given as frames: documents within cosine ≥ `threshold` of a
+    * LOWER-id batch document or ANY index document drop
+    * ([[BandedIndex.survivors]] over the batch embedding; `materialize`
+    * as there). */
   def dedupEmbedAgainst(batch: DataFrame, idxBands: DataFrame,
       idxVecs: DataFrame, materialize: Boolean = false,
       threshold: Double = CosThreshold, bandBits: Int = BandBits,
-      nTables: Int = 4): DataFrame = {
-    if (!materialize)
-      batch.join(nearDupDropsText(embedText(batch), idxBands, idxVecs,
-          threshold, bandBits, nTables),
-        Seq("doc_id"), "left_anti")
-    else {
-      val emb = embedText(batch)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.Caching.withCleanup(emb) {
-        batch.join(nearDupDropsText(emb, idxBands, idxVecs,
-            threshold, bandBits, nTables),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint(true)
-      }
-    }
-  }
+      nTables: Int = 4): DataFrame =
+    BandedIndex.survivors(index(bandBits, nTables, threshold), batch,
+      embedText(batch), idxBands, idxVecs, materialize)
 
-  /** Persist (or append) an embedding frame's probe + verify surfaces:
-    * `bands/` (doc_id, tbl, b, bv) bucketed by bv and `vecs/`
-    * (doc_id, v) bucketed by doc_id hash — ~0.6 KB/doc total, one file
-    * per touched bucket per append ([[IncrementalDedup.writeFpIndex]]'s
-    * fragment-accretion discipline; [[IndexMaintenance]] compacts and
-    * retracts this layout like every other index). */
   /** Geometry-stamped band sub-path (the [[MinHashIncremental
     * .bandsSubPath]] discipline): bands built under one (bandBits,
     * nTables) probed under another find the wrong (tbl, b, bv) keys and
     * would leak near-dups SILENTLY — a stamped path makes the stale
     * geometry invisible instead. */
   def bandsPath(path: String, bandBits: Int, nTables: Int): String =
-    s"$path/bands_b${bandBits}t$nTables"
+    index(bandBits, nTables).bandsPath(path)
 
+  /** Persist (or append) an embedding frame's probe + verify surfaces
+    * ([[BandedIndex.write]]): `bands_b<bits>t<tables>/` (doc_id, tbl, b,
+    * bv) bucketed by bv and `vecs/` (doc_id, v) bucketed by doc_id hash
+    * — ~0.6 KB/doc total. */
   def writeTextEmbedIndex(emb: DataFrame, path: String,
-      nBuckets: Int = 64, append: Boolean = false,
-      bandBits: Int = BandBits, nTables: Int = 4): Unit = {
-    StagedCommit.writeBucketed(bandRowsAll(emb, bandBits, nTables), col("bv"),
-      nBuckets, bandsPath(path, bandBits, nTables), append)
-    StagedCommit.writeBucketed(emb.select(col("doc_id"), col("v")),
-      xxhash64(col("doc_id")), nBuckets, s"$path/vecs", append)
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets, append: Boolean = false,
+      bandBits: Int = BandBits, nTables: Int = 4): Unit =
+    BandedIndex.write(index(bandBits, nTables), emb, path, nBuckets, append)
 
   def readTextEmbedIndex(spark: SparkSession, path: String,
       bandBits: Int = BandBits, nTables: Int = 4): (DataFrame, DataFrame) =
-    (spark.read.parquet(bandsPath(path, bandBits, nTables)),
-      spark.read.parquet(s"$path/vecs"))
+    BandedIndex.read(index(bandBits, nTables), spark, path)
 
-  /** One full incremental step: near-dedup `batch` against the index at
-    * `path`, append the survivors' bands + vectors, return the
-    * survivors — survivors eagerly checkpointed BEFORE the append (the
-    * [[IncrementalDedup.step]] guard, verbatim). `init = true` starts
-    * fresh state. */
+  /** One full incremental step ([[BandedIndex.step]]): near-dedup `batch`
+    * against the index at `path`, append the survivors' bands + vectors,
+    * return the survivors. `init = true` starts fresh state. */
   def step(spark: SparkSession, batch: DataFrame, path: String,
-      nBuckets: Int = 64, init: Boolean = false,
+      nBuckets: Int = BandedIndex.IndexBuckets, init: Boolean = false,
       threshold: Double = CosThreshold, bandBits: Int = BandBits,
-      nTables: Int = 4, autoCompact: Int = 0): DataFrame = {
-    import spark.implicits._
-    val (idxBands, idxVecs) =
-      if (init) (Seq.empty[(Long, Int, Int, Long)].toDF("doc_id", "tbl", "b", "bv"),
-        Seq.empty[(Long, Array[Double])].toDF("doc_id", "v"))
-      else readTextEmbedIndex(spark, path, bandBits, nTables)
-    val survivors = dedupEmbedAgainst(batch, idxBands, idxVecs,
-      materialize = true, threshold, bandBits, nTables)
-    writeTextEmbedIndex(embedText(survivors), path, nBuckets,
-      append = !init, bandBits, nTables)
-    IndexMaintenance.autoCompact(spark, autoCompact,
-      Seq(bandsPath(path, bandBits, nTables) -> "bucket",
-        s"$path/vecs" -> "bucket"))
-    survivors
-  }
+      nTables: Int = 4, autoCompact: Int = 0): DataFrame =
+    BandedIndex.step(index(bandBits, nTables, threshold), spark, batch, path,
+      embedText(_), nBuckets, autoCompact, init)
 
   /** Declared key (`text_embed_incremental`): the [[PhashIncremental
     * .mediaPhashIncremental]] parity harness on the TEXT embedding —
@@ -380,16 +323,9 @@ object TextEmbed {
     * arrival discipline like every other dedup family member. */
   def textEmbedIncremental(spark: SparkSession, dir: String): DataFrame = {
     ensureTextFixture(spark)
-    val fix = spark.read.parquet(textFixturePath)
-    val idxEmb = embedText(
-      fix.filter(col("kind") === "base" && col("doc_id") % 2 === 0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batch = fix.filter(col("kind") =!= "base" || col("doc_id") % 2 === 1)
-      .select("doc_id", "text")
-    graft.Caching.withCleanup(idxEmb) {
-      dedupEmbedAgainst(batch, bandRowsAll(idxEmb), idxEmb,
-        materialize = true)
-    }
+    BandedIndex.paritySurvivors(index(BandBits, 4),
+        spark.read.parquet(textFixturePath).select("doc_id", "text", "kind"),
+        col("kind") === "base" && col("doc_id") % 2 === 0, embedText(_))
       .select("doc_id")
       .orderBy("doc_id")
   }

@@ -123,10 +123,8 @@ object VideoPhash {
     // keep join) — persist so the container-walk + frame-decode kernel
     // behind `hashes` runs once. Narrow (media_id, phashes) rows.
     val h = hashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = for (s <- 0 until Slots; b <- 0 until ImagePhash.Bands) yield
-      struct(lit(s * ImagePhash.Bands + b).as("sb"),
-        shiftrightunsigned(element_at(col("phashes"), s + 1), 16 * b)
-          .bitwiseAND(lit(0xffffL)).as("v"))
+    val keys = BandedIndex.hashBands(
+      (1 to Slots).map(s => element_at(col("phashes"), s)), "sb")
     val banded = h.select(col("media_id"),
         explode(array(keys: _*)).as("band"))
       .select(col("media_id"),

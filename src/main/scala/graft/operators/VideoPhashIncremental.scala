@@ -31,19 +31,16 @@ import org.apache.spark.sql.functions._
   */
 object VideoPhashIncremental {
 
-  import ImagePhash.Bands
   import VideoPhash.{Slots, SlotsMin}
 
   /** The banded probe surface of a (media_id, phashes) frame: one
-    * (media_id, sb, v) row per (slot, band) — [[VideoPhash
-    * .videoPhashDedup]]'s fan-out, factored so batch and index build
-    * from the same shape. Only (media_id, 8 B key) rides the 32-way
-    * explode; arrays re-join by id after the candidate distinct. */
+    * (media_id, sb, v) row per (slot, band) ([[BandedIndex.hashBands]]
+    * over the slot hashes), so batch and index build from the same shape.
+    * Only (media_id, 8 B key) rides the 32-way explode; arrays re-join
+    * by id after the candidate cut. */
   def bandRows(hashes: DataFrame): DataFrame = {
-    val keys = for (s <- 0 until Slots; b <- 0 until Bands) yield
-      struct(lit(s * Bands + b).as("sb"),
-        shiftrightunsigned(element_at(col("phashes"), s + 1), 16 * b)
-          .bitwiseAND(lit(0xffffL)).as("v"))
+    val keys = BandedIndex.hashBands(
+      (1 to Slots).map(s => element_at(col("phashes"), s)), "sb")
     hashes.select(col("media_id"), explode(array(keys: _*)).as("band"))
       .select(col("media_id"), col("band.sb").as("sb"), col("band.v").as("v"))
   }
@@ -54,96 +51,52 @@ object VideoPhashIncremental {
     size(filter(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
       d => d <= lit(ImagePhash.HammingMax)))
 
+  /** The family's [[BandedIndex]] descriptor: (sb, v) postings under
+    * `bands/`, the slot-majority cut over `hashes/`. Candidates need
+    * ≥ [[VideoPhash.MinSharedKeys]] shared keys — the exact-recall-
+    * preserving cut (a true near-dup shares ≥ SlotsMin keys by the
+    * per-slot pigeonhole) that keeps the verify join candidate-bounded
+    * at 1M+ corpora instead of drowning in singleton 16-bit collisions
+    * (measured: ~500 spurious candidates per video without it at 1M×1M,
+    * ~4000× fewer with it). */
+  private[operators] val Index = new BandedIndex.Family("video", "media_id",
+    Seq("sb", "v"), bandRows, "phashes",
+    (a, b) => slotsWithin(a, b) >= lit(SlotsMin), "hashes",
+    minShared = VideoPhash.MinSharedKeys)
+
   /** Media_ids of `batchHashes` videos that slot-majority-match a
-    * LOWER-id batch video or ANY index video. Candidates need
-    * ≥ [[VideoPhash.MinSharedKeys]] shared (sb, v) keys — the exact-
-    * recall-preserving cut (a true near-dup shares ≥ SlotsMin keys by
-    * the per-slot pigeonhole) that keeps the verify join candidate-
-    * bounded at 1M+ corpora instead of drowning in singleton 16-bit
-    * collisions (measured: ~500 spurious candidates per video without
-    * it at 1M×1M, ~4000× fewer with it). */
+    * LOWER-id batch video or ANY index video ([[BandedIndex.drops]]). */
   def nearDupDrops(batchHashes: DataFrame, idxBands: DataFrame,
-      idxHashes: DataFrame): DataFrame = {
-    val bb = bandRows(batchHashes)
-    val inCand = bb.as("x").join(bb.as("y"),
-        col("x.sb") === col("y.sb") && col("x.v") === col("y.v") &&
-          col("x.media_id") < col("y.media_id"))
-      .groupBy(col("x.media_id").as("id_a"), col("y.media_id").as("id_b"))
-      .agg(count(lit(1)).as("nkeys"))
-      .filter(col("nkeys") >= VideoPhash.MinSharedKeys)
-      .select("id_a", "id_b")
-    val inDrops = inCand
-      .join(batchHashes.select(col("media_id").as("id_a"), col("phashes").as("h_a")), Seq("id_a"))
-      .join(batchHashes.select(col("media_id").as("id_b"), col("phashes").as("h_b")), Seq("id_b"))
-      .filter(slotsWithin(col("h_a"), col("h_b")) >= lit(SlotsMin))
-      .select(col("id_b").as("media_id"))
-    val crossCand = bb.as("x").join(idxBands.as("i"),
-        col("x.sb") === col("i.sb") && col("x.v") === col("i.v"))
-      .groupBy(col("x.media_id").as("media_id"), col("i.media_id").as("idx_id"))
-      .agg(count(lit(1)).as("nkeys"))
-      .filter(col("nkeys") >= VideoPhash.MinSharedKeys)
-      .select("media_id", "idx_id")
-    val crossDrops = crossCand
-      .join(batchHashes.select(col("media_id"), col("phashes").as("h_b")), Seq("media_id"))
-      .join(idxHashes.select(col("media_id").as("idx_id"), col("phashes").as("h_i")), Seq("idx_id"))
-      .filter(slotsWithin(col("h_b"), col("h_i")) >= lit(SlotsMin))
-      .select("media_id")
-    inDrops.union(crossDrops).distinct()
-  }
+      idxHashes: DataFrame): DataFrame =
+    BandedIndex.drops(Index, batchHashes, idxBands, idxHashes)
 
   /** Dedup `batch` (media_id, payload, carry…) within itself and against
     * an index given as frames; non-video payloads survive by
-    * construction ([[PhashIncremental.dedupAgainst]]'s contract). */
+    * construction; `materialize` as in [[BandedIndex.survivors]]. */
   def dedupAgainst(batch: DataFrame, idxBands: DataFrame,
-      idxHashes: DataFrame, materialize: Boolean = false): DataFrame = {
-    val decoded = VideoPhash.videoPhashFrame(batch.select("media_id", "payload"))
-    // Persist only on the materialize path, where the eager checkpoint
-    // bounds the cache to this call ([[PhashIncremental.dedupAgainst]]'s
-    // hygiene, verbatim); the lazy path is the plan-audit hook.
-    if (!materialize)
-      batch.join(nearDupDrops(decoded, idxBands, idxHashes),
-        Seq("media_id"), "left_anti")
-    else {
-      val hashes = decoded
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.Caching.withCleanup(hashes) {
-        batch.join(nearDupDrops(hashes, idxBands, idxHashes),
-            Seq("media_id"), "left_anti")
-          .localCheckpoint(true)
-      }
-    }
-  }
+      idxHashes: DataFrame, materialize: Boolean = false): DataFrame =
+    BandedIndex.survivors(Index, batch,
+      VideoPhash.videoPhashFrame(batch.select("media_id", "payload")),
+      idxBands, idxHashes, materialize)
 
   // ---------------------------------------------------- persisted index
 
-  /** Persist (or append) a hash frame's band rows + slot arrays —
-    * [[PhashIncremental.writePhashIndex]]'s layout with the array
-    * verification surface. */
+  /** Persist (or append) a hash frame's band rows + slot arrays
+    * ([[BandedIndex.write]]). */
   def writeVideoIndex(hashes: DataFrame, path: String,
-      nBuckets: Int = PhashIncremental.IndexBuckets, append: Boolean = false): Unit = {
-    StagedCommit.writeBucketed(bandRows(hashes), col("v"), nBuckets,
-      s"$path/bands", append)
-    StagedCommit.writeBucketed(hashes.select(col("media_id"), col("phashes")),
-      xxhash64(col("media_id")), nBuckets, s"$path/hashes", append)
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets, append: Boolean = false): Unit =
+    BandedIndex.write(Index, hashes, path, nBuckets, append)
 
   def readVideoIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/bands"), spark.read.parquet(s"$path/hashes"))
+    BandedIndex.read(Index, spark, path)
 
-  /** One full incremental step — survivors localCheckpoint BEFORE the
-    * append (the [[IncrementalDedup.step]] guard, verbatim). */
+  /** One full incremental step ([[BandedIndex.step]]). */
   def step(spark: SparkSession, batch: DataFrame, path: String,
-      nBuckets: Int = PhashIncremental.IndexBuckets,
-      autoCompact: Int = 0): DataFrame = {
-    val (idxBands, idxHashes) = readVideoIndex(spark, path)
-    val survivors = dedupAgainst(batch, idxBands, idxHashes, materialize = true)
-    writeVideoIndex(
-      VideoPhash.videoPhashFrame(survivors.select("media_id", "payload")), path,
-      nBuckets, append = true)
-    IndexMaintenance.autoCompact(spark, autoCompact,
-      Seq(s"$path/bands" -> "bucket", s"$path/hashes" -> "bucket"))
-    survivors
-  }
+      nBuckets: Int = BandedIndex.IndexBuckets,
+      autoCompact: Int = 0): DataFrame =
+    BandedIndex.step(Index, spark, batch, path,
+      b => VideoPhash.videoPhashFrame(b.select("media_id", "payload")),
+      nBuckets, autoCompact)
 
   /** Declared key (`video_phash_incremental`): the [[PhashIncremental
     * .mediaPhashIncremental]] parity split over the VIDEO fixture —
@@ -158,20 +111,7 @@ object VideoPhashIncremental {
     * time-slot fingerprint, (sb, v) probe, and slot-majority verify. */
   def videoPhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     VideoPhash.ensureVideoPhashFixture(spark)
-    val fix = spark.read.parquet(VideoPhash.videoFixturePath)
-    val idxHashes = VideoPhash.videoPhashFrame(
-      fix.filter(col("kind") === "base" && col("media_id") % 2 === 0)
-        .select("media_id", "payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize=true + withCleanup: both caches die with this call
-    // (the CacheHygieneSpec contract — see mediaPhashIncremental).
-    graft.Caching.withCleanup(idxHashes) {
-      dedupAgainst(
-        fix.filter(col("kind") =!= "base" || col("media_id") % 2 === 1)
-          .select("media_id", "payload"),
-        bandRows(idxHashes), idxHashes, materialize = true)
-    }
-      .select("media_id")
-      .orderBy("media_id")
+    PhashIncremental.parityKey(Index,
+      spark.read.parquet(VideoPhash.videoFixturePath), VideoPhash.videoPhashFrame)
   }
 }

@@ -978,17 +978,12 @@ object StreamingOps {
       }
   }
 
-  /** The 16-bit band fan-out of 64-bit hash columns: one row per band of
-    * each hash, keyed (`bandCol`, `v`) with band ids numbered across the
-    * hashes in order, every input column carried. */
+  /** [[graft.operators.BandedIndex.hashBands]] as rows: one per band of
+    * each hash, keyed (`bandCol`, `v`), every input column carried. */
   private def hashBands(df: DataFrame, hashes: Seq[Column],
-      bandCol: String): DataFrame = {
-    import graft.operators.ImagePhash.Bands
-    val keys = for ((h, s) <- hashes.zipWithIndex; b <- 0 until Bands)
-      yield struct(lit(s * Bands + b).as(bandCol),
-        shiftrightunsigned(h, 16 * b).bitwiseAND(lit(0xffffL)).as("v"))
-    df.select(col("*"), inline(array(keys: _*)))
-  }
+      bandCol: String): DataFrame =
+    df.select(col("*"),
+      inline(array(graft.operators.BandedIndex.hashBands(hashes, bandCol): _*)))
 
   /** A (media_id, payload, `tsCol`) frame decoded to (media_id, `hashCol`,
     * ts) by `hash`, undecodable payloads dropped — the typed pass carries

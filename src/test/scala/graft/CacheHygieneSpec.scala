@@ -17,7 +17,7 @@ class CacheHygieneSpec extends SparkSpec {
   /** Keys whose implementations persist internally and must release. */
   private val cachingKeys = Seq(
     "media_phash_incremental", "video_phash_incremental",
-    "audio_phash_incremental", "bm25_serve",
+    "audio_phash_incremental", "dedup_minhash_incremental", "bm25_serve",
     // packSequences persists internally; the incremental macro runs it
     // per night, so its key must release per call (materialize=true)
     "curation_incremental",

@@ -335,6 +335,32 @@ class PlanAuditSpec extends SparkSpec {
       }
   }
 
+  test("incremental text-embed near-dup: band exchanges carry no text and no vectors") {
+    import spark.implicits._
+    val docs = (0L until 30L)
+      .map(i => (i, (0 until 10).map(j => s"t${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val idx = graft.operators.TextEmbed.embedText(docs.limit(5))
+    val blocks = nodeBlocks(graft.operators.TextEmbed.dedupEmbedAgainst(
+      docs, graft.operators.TextEmbed.bandRowsAll(idx), idx))
+    val gens = blocks.filter(b => b.contains(") Generate") && b.contains("explode"))
+    assert(gens.nonEmpty, "(table, band) explode present")
+    // a band exchange (shuffle or broadcast) ships the band value `bv`
+    val bandEx = blocks.filter(b =>
+      b.linesIterator.nextOption
+        .exists(_.matches("""\(\d+\) (Broadcast)?Exchange.*""")) &&
+        b.linesIterator.exists(l => l.startsWith("Input") && l.contains("bv#")))
+    assert(bandEx.nonEmpty, "band exchanges present")
+    (gens ++ bandEx).foreach { b =>
+      // a Generate lists its rows as Output, an Exchange as Input
+      val rows = b.linesIterator
+        .filter(l => l.startsWith("Output") || l.startsWith("Input")).mkString
+      assert(rows.nonEmpty, s"no row list found in: $b")
+      assert(!rows.contains("text") && """\bv#""".r.findFirstIn(rows).isEmpty,
+        s"band rows must be (doc_id, tbl, b, bv) only — no text, no v: $rows")
+    }
+  }
+
   test("incremental substring dedup: no exchange carries document text — digests only") {
     // the operator's 100 TB claim: everything after windowDigests ships
     // 16 B md5 rows + two longs; the text stays in the scan stage. The

@@ -169,7 +169,7 @@ class TakedownSpec extends SparkSpec {
       fpIndex = Some(s"$root/fp"), bm25 = Some(s"$root/bm25"))
     Takedown.stageJournal(spark, root, targets, retr) // committed
     // the estate changes under the committed journal: a sub-table vanishes
-    StagedCommit.deleteRecursively(
+    graft.Engine.deleteTree(
       java.nio.file.Paths.get(root, "bm25", "postings"))
     intercept[IllegalStateException] {
       Takedown.recoverTakedown(spark, root)

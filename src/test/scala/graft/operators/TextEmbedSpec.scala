@@ -95,6 +95,54 @@ class TextEmbedSpec extends SparkSpec {
       "a paraphrase of an appended survivor must die; fresh text survives")
   }
 
+  test("verification is exact: a band collision below CosThreshold is not dropped") {
+    import spark.implicits._
+    TextEmbed.ensureTextFixture(spark)
+    val bases = spark.read.parquet(TextEmbed.textFixturePath)
+      .filter(col("kind") === "base").select("doc_id", "text")
+    val emb = TextEmbed.embedText(bases).localCheckpoint(true)
+    // a pair of distinct bases (cosine far below the threshold, pinned
+    // by the margins test) whose signatures share at least one band key
+    val bands = TextEmbed.bandRowsAll(emb)
+    val (lo, hi) = bands.as("x").join(bands.as("y"),
+        Seq("tbl", "b", "bv").map(k => col(s"x.$k") === col(s"y.$k"))
+          .reduce(_ && _) && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id"), col("y.doc_id")).as[(Long, Long)]
+      .orderBy("x.doc_id", "y.doc_id").head()
+    val pair = emb.filter(col("doc_id").isin(lo, hi))
+    val cos = pair.as("a").join(pair.as("b"), col("a.doc_id") < col("b.doc_id"))
+      .select(Similarity.cosine(col("a.v"), col("b.v"))).as[Double].head()
+    assert(cos < TextEmbed.CosThreshold, s"fixture pair ($lo, $hi) at $cos")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().toSet
+    // in-batch: both collide, neither verifies, both survive
+    val batch = bases.filter(col("doc_id").isin(lo, hi))
+    val none = emb.limit(0)
+    assert(ids(TextEmbed.dedupEmbedAgainst(batch,
+      TextEmbed.bandRowsAll(none), none)) === Set(lo, hi))
+    // cross-index: `lo` indexed, `hi` arriving — it survives the probe
+    val idx = emb.filter(col("doc_id") === lo)
+    assert(ids(TextEmbed.dedupEmbedAgainst(batch.filter(col("doc_id") === hi),
+      TextEmbed.bandRowsAll(idx), idx)) === Set(hi))
+  }
+
+  test("the band sub-path carries the geometry: a read at another geometry fails by name") {
+    TextEmbed.ensureTextFixture(spark)
+    val dir = tmpDir("text-embed-geom")
+    TextEmbed.writeTextEmbedIndex(TextEmbed.embedText(
+        spark.read.parquet(TextEmbed.textFixturePath).limit(20)
+          .select("doc_id", "text")),
+      dir, nBuckets = 4, bandBits = 8, nTables = 4)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      TextEmbed.readTextEmbedIndex(spark, dir, bandBits = 16, nTables = 12)
+    }
+    assert(e.getCondition === "PATH_NOT_FOUND")
+    assert(e.getMessage.contains("bands_b16t12"), e.getMessage)
+    // the written geometry still reads
+    val (bands, vecs) = TextEmbed.readTextEmbedIndex(spark, dir)
+    assert(vecs.count() === 20L && bands.count() === 20L * 8 * 4)
+  }
+
   test("declared keys recover the planted structure") {
     val verdicts = graft.SparkEntry.queries("text_embed")(spark, sf0001)
       .collect().map(r => (r.getLong(0),
