@@ -107,7 +107,10 @@ object BandedIndex {
 
   /** `batch` anti-joined against the [[drops]] of its `decoded` frame.
     * Rows with no decoded row (short docs, undecodable payloads) survive
-    * by construction. `materialize = true` persists `decoded` for its
+    * by construction. The drop ids are broadcast: they are one id per
+    * near-dup the batch carries, while a shuffled anti-join would move
+    * every batch row with its payload or text through an exchange.
+    * `materialize = true` persists `decoded` for its
     * band and verify references, `localCheckpoint`s the survivors and
     * releases the cache before returning ([[graft.Caching]]'s contract);
     * the lazy form persists nothing and keeps the whole plan visible for
@@ -116,7 +119,8 @@ object BandedIndex {
       idxBands: DataFrame, idxValues: DataFrame,
       materialize: Boolean): DataFrame = {
     def anti(d: DataFrame) =
-      batch.join(drops(f, d, idxBands, idxValues), Seq(f.id), "left_anti")
+      batch.join(broadcast(drops(f, d, idxBands, idxValues)), Seq(f.id),
+        "left_anti")
     if (!materialize) anti(decoded)
     else {
       val d = decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

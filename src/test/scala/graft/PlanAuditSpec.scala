@@ -251,6 +251,31 @@ class PlanAuditSpec extends SparkSpec {
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       .split("\n\n").toSeq
 
+  /** The row list of every shuffle Exchange block among `blocks` that
+    * `keep` selects. Formatted explain prints an Exchange's rows as its
+    * `Input [n]: [...]` line (it has no `Output` line), so that is the
+    * line read. Fails when no block matches, or a matched block has no
+    * row list: an audit over an empty set would pass with nothing
+    * checked. */
+  /** An Exchange that funnels its rows into one partition: a
+    * `SinglePartition` one, or one keyed on a computed window key —
+    * Packing's offsets window partitions by the constant `pmod(bucket,
+    * 1)`, which formatted explain prints as `hashpartitioning(_w0#…)`. */
+  private def onePartition(block: String): Boolean =
+    block.contains("SinglePartition") ||
+      """hashpartitioning\(_w\d+#""".r.findFirstIn(block).nonEmpty
+
+  private def exchangeInputs(blocks: Seq[String],
+      keep: String => Boolean = _ => true): Seq[String] = {
+    val rows = blocks
+      .filter(b => b.linesIterator.nextOption
+        .exists(_.matches("""\(\d+\) Exchange.*""")) && keep(b))
+      .map(b => b.linesIterator.find(_.startsWith("Input"))
+        .getOrElse(fail(s"exchange block without an Input line:\n$b")))
+    assert(rows.nonEmpty, "expected at least one matching exchange")
+    rows
+  }
+
   test("videoPhashDedup banded fan-out emits ids only — no hash arrays on the exploded rows") {
     import spark.implicits._
     val hashes = (0L until 40L)
@@ -303,12 +328,10 @@ class PlanAuditSpec extends SparkSpec {
         s"band fan-out must emit (media_id, band struct) only: $out")
     }
     // and no exchange anywhere in the dedup may carry the payload bytes
-    blocks.filter(_.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-      .foreach { b =>
-        val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-        assert(!out.contains("payload"),
-          s"payload bytes must never shuffle — hashes re-join by id: $out")
-      }
+    exchangeInputs(blocks).foreach { in =>
+      assert(!in.contains("payload"),
+        s"payload bytes must never shuffle — hashes re-join by id: $in")
+    }
   }
 
   test("incremental video near-dup: banded fan-out emits (media_id, key) only — no payloads, no arrays") {
@@ -327,12 +350,9 @@ class PlanAuditSpec extends SparkSpec {
       assert(!out.contains("payload") && !out.contains("phashes"),
         s"fan-out must emit (media_id, band struct) only: $out")
     }
-    blocks.filter(_.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-      .foreach { b =>
-        val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-        assert(!out.contains("payload"),
-          s"payload bytes must never shuffle: $out")
-      }
+    exchangeInputs(blocks).foreach { in =>
+      assert(!in.contains("payload"), s"payload bytes must never shuffle: $in")
+    }
   }
 
   test("incremental text-embed near-dup: band exchanges carry no text and no vectors") {
@@ -367,15 +387,12 @@ class PlanAuditSpec extends SparkSpec {
     // count-window exchange, the membership semi-join, and the
     // region-merge exchange must all be text-free. (The declared key is
     // fully lazy — no interior checkpoint — so the whole plan audits.)
-    val blocks = nodeBlocks(SparkEntry.queries("substring_dedup_incremental")(spark, sf))
-    val exchanges = blocks.filter(
-      _.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-    assert(exchanges.nonEmpty, "expected the digest/count/merge exchanges")
-    exchanges.foreach { b =>
-      val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-      assert(!out.contains("text"),
-        s"document text must never shuffle — digests carry the probe: $out")
-    }
+    exchangeInputs(nodeBlocks(
+        SparkEntry.queries("substring_dedup_incremental")(spark, sf)))
+      .foreach { in =>
+        assert(!in.contains("text"),
+          s"document text must never shuffle — digests carry the probe: $in")
+      }
   }
 
   test("curation_incremental: accepted() ships no text; the only SinglePartition is the offsets frame") {
@@ -388,24 +405,19 @@ class PlanAuditSpec extends SparkSpec {
     import spark.implicits._
     val acc = graft.operators.CurationIncremental.accepted(
       docs, Seq.empty[String].toDF("fp"))
-    nodeBlocks(acc)
-      .filter(_.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-      .foreach { b =>
-        val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-        assert(!out.contains("text"),
-          s"document text must never shuffle in the curation macro: $out")
-      }
+    exchangeInputs(nodeBlocks(acc)).foreach { in =>
+      assert(!in.contains("text"),
+        s"document text must never shuffle in the curation macro: $in")
+    }
     // the packing half keeps the two-phase prefix-sum guarantee: any
-    // SinglePartition exchange is the #buckets-row offsets frame
+    // one-partition exchange is the #buckets-row offsets frame, never docs
     val packed = graft.operators.CurationIncremental.packBatch(
       acc.filter(col("doc_id") < 100), 0L)
-    nodeBlocks(packed)
-      .filter(b => b.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*"""))
-        && b.contains("SinglePartition"))
-      .foreach { b =>
-        val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-        assert(out.contains("bucket") || out.contains("btot"),
-          s"the only SinglePartition step is the #buckets offsets frame: $b")
+    exchangeInputs(nodeBlocks(packed), onePartition)
+      .foreach { in =>
+        assert((in.contains("bucket") || in.contains("btot")) &&
+          !in.contains("doc_id"),
+          s"the only one-partition step is the #buckets offsets frame: $in")
       }
   }
 
@@ -785,15 +797,11 @@ class PlanAuditSpec extends SparkSpec {
     // (graft_hash_embed); everything after ships (doc_id, v/sig/band)
     // rows, so every exchange must be text-free
     graft.operators.TextEmbed.ensureTextFixture(spark)
-    val blocks = nodeBlocks(SparkEntry.queries("text_embed")(spark, sf))
-    val exchanges = blocks.filter(
-      _.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-    assert(exchanges.nonEmpty, "expected the band/verify exchanges")
-    exchanges.foreach { b =>
-      val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-      assert(!out.contains("text"),
-        s"document text must never shuffle in the embedding pathway: $out")
-    }
+    exchangeInputs(nodeBlocks(SparkEntry.queries("text_embed")(spark, sf)))
+      .foreach { in =>
+        assert(!in.contains("text"),
+          s"document text must never shuffle in the embedding pathway: $in")
+      }
   }
 
   test("curation_incremental_full: no text past the narrow projection; mix and pack stay bucketed") {
@@ -805,27 +813,22 @@ class PlanAuditSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).select("doc_id", "text", "lang")
     val acc = graft.operators.CurationIncremental.acceptedFull(
       docs, Seq.empty[String].toDF("fp"))
-    nodeBlocks(acc)
-      .filter(_.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-      .foreach { b =>
-        val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-        assert(!out.contains("text"),
-          s"document text must never shuffle in the full macro: $out")
-      }
+    exchangeInputs(nodeBlocks(acc)).foreach { in =>
+      assert(!in.contains("text"),
+        s"document text must never shuffle in the full macro: $in")
+    }
     // the mix + pack halves keep the two-phase prefix-sum guarantee: any
-    // SinglePartition exchange is a bounded summary frame (per-domain
+    // one-partition exchange is a bounded summary frame (per-domain
     // bucket offsets / the #buckets pack offsets), never docs
     val packed = graft.operators.CurationIncremental.packBatchMixed(
       graft.operators.CurationIncremental.mixBatch(
         acc.filter(col("doc_id") < 200),
         graft.operators.DomainMix.Budgets, Map("en" -> 100L)), 0L)
-    nodeBlocks(packed)
-      .filter(b => b.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*"""))
-        && b.contains("SinglePartition"))
-      .foreach { b =>
-        val out = b.linesIterator.find(_.startsWith("Output")).getOrElse("")
-        assert(out.contains("bucket") || out.contains("btot") || out.contains("boff"),
-          s"the only SinglePartition steps are bounded summary frames: $b")
+    exchangeInputs(nodeBlocks(packed), onePartition)
+      .foreach { in =>
+        assert((in.contains("bucket") || in.contains("btot") ||
+          in.contains("boff")) && !in.contains("doc_id"),
+          s"the only one-partition steps are bounded summary frames: $in")
       }
   }
 
@@ -835,13 +838,9 @@ class PlanAuditSpec extends SparkSpec {
     // search must still be digest/position rows, and the text must only
     // appear in the final cut join's inputs, never in a count/merge
     // exchange (those are the corpus-sized ones)
-    val blocks = nodeBlocks(
-      SparkEntry.queries("substring_drop_incremental")(spark, sf))
-    val exchanges = blocks.filter(
-      _.linesIterator.nextOption.exists(_.matches("""\(\d+\) Exchange.*""")))
-    assert(exchanges.nonEmpty)
-    val textCarrying = exchanges.filter(
-      _.linesIterator.find(_.startsWith("Output")).exists(_.contains("text")))
+    val textCarrying = exchangeInputs(nodeBlocks(
+        SparkEntry.queries("substring_drop_incremental")(spark, sf)))
+      .filter(_.contains("text"))
     assert(textCarrying.isEmpty,
       "exchanges must carry digests/positions/spans — the text reaches the " +
         "cut through its scan-side join input, not a shuffle")
