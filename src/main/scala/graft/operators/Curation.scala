@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation macro (SURVEY.md §2.7 [EXT] — the north-star
@@ -32,87 +31,98 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
+  /** Whitespace token count — [[curate]]'s default `tokenCounter`. */
+  private val wsTokens: Column => Column = t => size(split(t, " ")).cast("long")
+
+  /** Stage 1, the gate: keep docs with quality ≥ 0.35, then the optional
+    * model-based filters. Shared by [[curate]], the arrival mode's accept
+    * stage ([[CurationIncremental]]) and the streaming curation query,
+    * which gates before its dedup state.
+    *   - LM filter (r12, CCNet): keep docs whose mean log10 token
+    *     probability under a reference model clears the cutoff
+    *     ([[LmScore.scoreKernel]] — a narrow codegen'd projection, so
+    *     like the heuristic gate it fuses into the same stage; the
+    *     (model, oov) pair is driver-resident, trained out-of-band via
+    *     [[LmScore.trainModel]]/[[LmScore.collectModel]]);
+    *   - DSIR importance selection (r12): keep docs whose hashed n-gram
+    *     features are likelier under the target model than the raw model
+    *     ([[Dsir.score]] — likewise a narrow kernel projection; weights
+    *     train out-of-band via [[Dsir.trainWeights]]). Paper placement:
+    *     selection runs on the cleaned, quality-gated crawl BEFORE dedup
+    *     (Xie et al. 2023 §3). */
+  def gate(docs: DataFrame,
+      lmFilter: Option[(Map[String, Long], Long, Double)] = None,
+      dsirFilter: Option[(Map[String, Long], Long)] = None): DataFrame = {
+    val gated = TextOps.quality(docs).filter(col("verdict") === "keep")
+    val lmKept = lmFilter.fold(gated) { case (model, oov, cutoff) =>
+      LmScore.scoreKernel(gated, model, oov)
+        .filter(col("lp_mean") >= cutoff)
+        .drop("n_tok", "lp_mean")
+    }
+    dsirFilter.fold(lmKept) { case (weights, oov) =>
+      Dsir.score(lmKept, weights, oov)
+        .filter(col("selected"))
+        .drop("n_feat", "lw_mean", "selected")
+    }
+  }
+
+  /** Stages 0-2 over any (doc_id, text) frame, the front half every
+    * curation form shares:
+    *   0. optional PII scrub (r12): [[Redact.clean]] is a stateless
+    *      column expression, so it fuses into the SAME narrow projection
+    *      as the quality score — everything downstream (quality,
+    *      fingerprint, token counts) sees the scrubbed text, which is the
+    *      point: a redacted duplicate must dedup against a redacted
+    *      original;
+    *   1. [[gate]];
+    *   2. exact dedup — keep-first per fingerprint ([[TextOps.keepFirst]],
+    *      the doc_dedup shape). n_tok is computed HERE so the dedup
+    *      exchange and everything after it carry four narrow columns,
+    *      (doc_id, quality, fp, n_tok), not the text — plus
+    *      [[DomainMix.DomainCol]] under `withDomain`, for a mix stage.
+    *      `tokenCounter` decides what a "token" is for EVERY downstream
+    *      budget — the domain-mix fills and the sequence packing both
+    *      consume this one column, so swapping in [[Bpe.encodeSymCount]]
+    *      (tokenizer-aware curation — the counts a training-batch writer
+    *      uses) re-budgets the whole pipeline without touching any
+    *      stage. */
+  private[operators] def deduped(docs: DataFrame, redactPii: Boolean = false,
+      withDomain: Boolean = false,
+      lmFilter: Option[(Map[String, Long], Long, Double)] = None,
+      dsirFilter: Option[(Map[String, Long], Long)] = None,
+      tokenCounter: Column => Column = wsTokens): DataFrame = {
+    val input =
+      if (redactPii) docs.withColumn("text", Redact.clean(col("text")))
+      else docs
+    TextOps.keepFirst(gate(input, lmFilter, dsirFilter).select(
+      Seq(col("doc_id"), col("quality"),
+        TextOps.fingerprint(col("text")).as("fp"),
+        tokenCounter(col("text")).as("n_tok")) ++
+        (if (withDomain) Seq(col(DomainMix.DomainCol)) else Nil): _*))
+  }
+
   /** The composed pipeline over ANY (doc_id, text) frame — the library
     * surface ([[curationPipeline]] is its declared-key binding; the scale
     * probe `graft.Probe curation` runs it over a synthetic 1M-doc corpus
-    * with planted junk and duplicates). */
+    * with planted junk and duplicates). Stages 0-2 are [[deduped]]; a
+    * `mixBudgets` frame carries [[DomainMix.DomainCol]]. */
   def curate(docs: DataFrame, budget: Int = Packing.SeqBudget,
       bucketWidth: Long = Packing.BucketWidth,
       redactPii: Boolean = false,
       mixBudgets: Option[Seq[(String, Long)]] = None,
-      domainCol: String = "lang",
       lmFilter: Option[(Map[String, Long], Long, Double)] = None,
       dsirFilter: Option[(Map[String, Long], Long)] = None,
-      tokenCounter: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        t => size(split(t, " ")).cast("long")): DataFrame = {
-    // 0. optional PII scrub (r12): [[Redact.clean]] is a stateless column
-    //    expression, so it fuses into the SAME narrow projection as the
-    //    quality score — everything downstream (quality, fingerprint,
-    //    token counts) sees the scrubbed text, which is the point: a
-    //    redacted duplicate must dedup against a redacted original
-    val input =
-      if (redactPii) docs.withColumn("text", Redact.clean(col("text")))
-      else docs
-    // 1. quality gate — narrow, same columns the text_quality key emits
-    val gated = TextOps.quality(input).filter(col("verdict") === "keep")
-    // 1b. optional CCNet LM filter (r12): keep docs whose mean log10
-    //     token probability under a reference model clears the cutoff
-    //     ([[LmScore.scoreKernel]] — a narrow codegen'd projection, so
-    //     like the heuristic gate it fuses into the same stage; the
-    //     (model, oov) pair is driver-resident, trained out-of-band via
-    //     [[LmScore.trainModel]]/[[LmScore.collectModel]]). Runs on the
-    //     scrubbed text, BEFORE dedup — the CCNet stage order
-    val lmKept = lmFilter match {
-      case Some((model, oov, cutoff)) =>
-        LmScore.scoreKernel(gated, model, oov)
-          .filter(col("lp_mean") >= cutoff)
-          .drop("n_tok", "lp_mean")
-      case None => gated
-    }
-    // 1c. optional DSIR importance selection (r12): keep docs whose hashed
-    //     n-gram features are likelier under the target model than the raw
-    //     model ([[Dsir.score]] — like the LM filter, a narrow kernel
-    //     projection over a driver-resident model, so it fuses into the
-    //     same stage; weights train out-of-band via [[Dsir.trainWeights]]).
-    //     Paper placement: selection runs on the cleaned, quality-gated
-    //     crawl BEFORE dedup (Xie et al. 2023 §3)
-    val kept = dsirFilter match {
-      case Some((weights, oov)) =>
-        Dsir.score(lmKept, weights, oov)
-          .filter(col("selected"))
-          .drop("n_feat", "lw_mean", "selected")
-      case None => lmKept
-    }
-    // 2. exact dedup — keep-first per fingerprint (the doc_dedup shape);
-    //    n_tok is computed HERE so the dedup exchange and everything after
-    //    it carry four narrow columns, not the text (plus the domain
-    //    column when a mix stage needs it downstream). `tokenCounter`
-    //    decides what a "token" is for EVERY downstream budget — the
-    //    domain-mix fills and the sequence packing both consume this one
-    //    column, so swapping in [[Bpe.encodeSymCount]] (tokenizer-aware
-    //    curation — the counts a training-batch writer uses) re-budgets
-    //    the whole pipeline without touching any stage.
-    val w = Window.partitionBy("fp").orderBy("doc_id")
-    val narrowCols = Seq(col("doc_id"), col("quality"),
-      TextOps.fingerprint(col("text")).as("fp"),
-      tokenCounter(col("text")).as("n_tok")) ++
-      (if (mixBudgets.isDefined) Seq(col(domainCol)) else Nil)
-    val deduped = kept
-      .select(narrowCols: _*)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+      tokenCounter: Column => Column = wsTokens): DataFrame = {
     // 3. deterministic train shard (the split_hash discipline)
-    val sharded = deduped
+    val sharded = deduped(docs, redactPii, mixBudgets.isDefined, lmFilter,
+        dsirFilter, tokenCounter)
       .filter(Sampling.hashBucket(col("doc_id")) < Sampling.TrainUpper)
     // 3b. optional weighted domain mixing (r12): fill each domain's token
     //     budget in [[DomainMix]] hash order — placed AFTER dedup/split so
     //     budgets are filled with unique training-shard tokens only
-    val train = mixBudgets match {
-      case Some(budgets) =>
-        DomainMix.mix(sharded, domainCol, "n_tok", budgets)
-          .select("doc_id", "quality", "n_tok")
-      case None => sharded.select("doc_id", "quality", "n_tok")
-    }
+    val train = mixBudgets
+      .fold(sharded)(DomainMix.mix(sharded, DomainMix.DomainCol, "n_tok", _))
+      .select("doc_id", "quality", "n_tok")
     // 4. pack into training sequences
     Packing.packSequences(train, "doc_id", "n_tok", budget, bucketWidth)
       .select("doc_id", "quality", "n_tok", "start_tok", "seq_id")
@@ -136,7 +146,6 @@ object Curation {
     curate(
       Redact.plantPii(Tables.documents(spark, dir)
         .select("doc_id", "text", "lang")),
-      redactPii = true,
-      mixBudgets = Some(DomainMix.Budgets), domainCol = "lang")
+      redactPii = true, mixBudgets = Some(DomainMix.Budgets))
       .orderBy("doc_id")
 }

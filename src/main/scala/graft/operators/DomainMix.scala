@@ -45,6 +45,11 @@ object DomainMix {
   val Budgets: Seq[(String, Long)] = Seq(
     "de" -> 2000L, "en" -> 5000L, "es" -> 1000L, "fr" -> 10000L)
 
+  /** The domain column [[Budgets]] are keyed by — the one the curation
+    * macro's mix stage ([[Curation.curate]], [[CurationIncremental]])
+    * carries and budgets. */
+  val DomainCol = "lang"
+
   /** Salt so mix order is independent of [[Sampling.splitHash]] buckets
     * and [[Sampling.StratSalt]] order. */
   val MixSalt = ":mix"

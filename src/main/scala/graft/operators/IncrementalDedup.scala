@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental exact dedup against a persisted fingerprint index
@@ -52,15 +51,11 @@ object IncrementalDedup {
     * callers that carry `text` should project it away first if the
     * survivors feed a wide downstream (the declared key carries only
     * doc_id/lang/n_chars). */
-  def dedupAgainst(batch: DataFrame, indexFps: DataFrame): DataFrame = {
-    val w = Window.partitionBy("fp").orderBy("doc_id")
-    batch
-      .withColumn("fp", TextOps.fingerprint(col("text")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "text")
+  def dedupAgainst(batch: DataFrame, indexFps: DataFrame): DataFrame =
+    TextOps.keepFirst(
+        batch.withColumn("fp", TextOps.fingerprint(col("text"))))
+      .drop("text")
       .join(indexFps.select("fp"), Seq("fp"), "left_anti")
-  }
 
   /** Persist (or append) fingerprints into a bucket-partitioned index
     * ([[StagedCommit.writeBucketed]]: one file per touched bucket per

@@ -71,15 +71,23 @@ object LineDedup {
 
   /** The generic operator over ANY (doc_id, text) frame whose text is
     * '\n'-separated lines. */
-  def dedupLines(docs: DataFrame): DataFrame = {
-    val lines = docs
-      .select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("idx", "line")))
-    // keep-first corpus-wide: one hash-shuffle on the line fingerprint
+  def dedupLines(docs: DataFrame): DataFrame = keptLines(docs, None)
+
+  /** The one line-dedup body: explode, keep-first corpus-wide per line
+    * fingerprint (one hash-shuffle on `md5(line)`), under `indexFps` drop
+    * the kept lines the index already holds, then reassemble each
+    * document from its kept lines in original order (the trainCentroids
+    * sort-collect shape). One row per input document. */
+  private def keptLines(docs: DataFrame, indexFps: Option[DataFrame])
+      : DataFrame = {
     val w = Window.partitionBy(md5(col("line"))).orderBy("doc_id", "idx")
-    val kept = lines
+    val firsts = docs
+      .select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("idx", "line")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-    // reassemble in original order (the trainCentroids sort-collect shape)
+    val kept = indexFps.fold(firsts)(idx => firsts
+      .withColumn("fp", md5(col("line")))
+      .join(idx.select("fp"), Seq("fp"), "left_anti"))
     val rebuilt = kept.groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
         concat_ws("\n",
@@ -116,15 +124,13 @@ object LineDedup {
     * would let the line's next arrival pass unmarked), so only
     * retracted-exclusive lines become keys. The support recount streams
     * `remaining`'s lines once, semi-joined down to the retracted
-    * candidate set before the distinct — the honest price of exact
-    * takedown on shared evidence, paid on the rare retraction path. */
+    * candidate set before the distinct (Catalyst pushes the semi-join
+    * below [[lineFps]]' distinct) — the honest price of exact takedown
+    * on shared evidence, paid on the rare retraction path. */
   def unsupportedLineFps(retracted: DataFrame, remaining: DataFrame): DataFrame = {
     val cand = lineFps(retracted)
-    val supported = remaining
-      .select(explode(split(col("text"), "\n")).as("line"))
-      .select(md5(col("line")).as("fp"))
-      .join(cand, Seq("fp"), "left_semi").distinct()
-    cand.join(supported, Seq("fp"), "left_anti")
+    cand.join(lineFps(remaining).join(cand, Seq("fp"), "left_semi"),
+      Seq("fp"), "left_anti")
   }
 
   /** The INCREMENTAL form — the [[IncrementalDedup]] operating mode one
@@ -139,27 +145,8 @@ object LineDedup {
     * Returns the same per-document shape as [[dedupLines]]. The kept
     * lines' fingerprints are recomputable by the caller for the index
     * append ([[stepLines]] does both). */
-  def dedupLinesAgainst(docs: DataFrame, indexFps: DataFrame): DataFrame = {
-    val lines = docs
-      .select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("idx", "line")))
-    val w = Window.partitionBy(md5(col("line"))).orderBy("doc_id", "idx")
-    val kept = lines
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .withColumn("fp", md5(col("line")))
-      .join(indexFps.select("fp"), Seq("fp"), "left_anti")
-    val rebuilt = kept.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        concat_ws("\n",
-          transform(array_sort(collect_list(struct(col("idx"), col("line")))),
-            s => s.getField("line"))).as("clean"))
-    docs.select(col("doc_id"),
-        size(split(col("text"), "\n")).cast("long").as("n_lines"))
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_lines"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        md5(coalesce(col("clean"), lit(""))).as("clean_fp"))
-  }
+  def dedupLinesAgainst(docs: DataFrame, indexFps: DataFrame): DataFrame =
+    keptLines(docs, Some(indexFps))
 
   /** One full incremental step against a persisted line-fp index (the
     * [[IncrementalDedup.step]] discipline — same bucket-partitioned
@@ -169,16 +156,11 @@ object LineDedup {
   def stepLines(spark: SparkSession, batch: DataFrame, path: String,
       nBuckets: Int = BandedIndex.IndexBuckets,
       autoCompact: Int = 0): DataFrame = {
-    val out = dedupLinesAgainst(batch,
-        IncrementalDedup.readFpIndex(spark, path).select("fp"))
-      .localCheckpoint(true)
-    // the surviving lines' fingerprints: recompute from the batch joined
-    // to the survivor set — only docs with n_kept > 0 contribute
-    val keptFps = batch
-      .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
-      .select(md5(col("line")).as("fp")).distinct()
-      .join(IncrementalDedup.readFpIndex(spark, path).select("fp"),
-        Seq("fp"), "left_anti")
+    val index = IncrementalDedup.readFpIndex(spark, path).select("fp")
+    val out = dedupLinesAgainst(batch, index).localCheckpoint(true)
+    // the surviving lines' fingerprints: the batch's distinct line
+    // fingerprints the index does not hold yet
+    val keptFps = lineFps(batch).join(index, Seq("fp"), "left_anti")
       .localCheckpoint(true)
     IncrementalDedup.writeFpIndex(keptFps, path, nBuckets, append = true)
     IndexMaintenance.autoCompact(spark, autoCompact, Seq(path -> "bucket"))
@@ -192,10 +174,8 @@ object LineDedup {
     * corpus nor earlier in the batch. */
   def lineDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val lined = toLines(Tables.documents(spark, dir).select("doc_id", "text"))
-    val index = lined.filter(col("doc_id") % 2 === 0)
-      .select(explode(split(col("text"), "\n")).as("line"))
-      .select(md5(col("line")).as("fp")).distinct()
-    dedupLinesAgainst(lined.filter(col("doc_id") % 2 === 1), index)
+    dedupLinesAgainst(lined.filter(col("doc_id") % 2 === 1),
+        lineFps(lined.filter(col("doc_id") % 2 === 0)))
       .orderBy("doc_id")
   }
 }

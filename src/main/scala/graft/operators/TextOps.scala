@@ -181,17 +181,21 @@ object TextOps {
   def fingerprint(c: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(split(c, " ")))))
 
+  /** Keep the lowest doc_id per `fp` — the keep-first every exact dedup
+    * shares: one hash shuffle on the fingerprint. */
+  def keepFirst(docs: DataFrame): DataFrame =
+    docs.withColumn("rn",
+        row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
+      .filter(col("rn") === 1)
+      .drop("rn")
+
   /** E1 exact/normalized dedup over documents: keep the lowest doc_id per
     * bag-of-words fingerprint. */
-  def docDedup(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("fp").orderBy("doc_id")
-    Tables.documents(spark, dir)
-      .withColumn("fp", fingerprint(col("text")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def docDedup(spark: SparkSession, dir: String): DataFrame =
+    keepFirst(Tables.documents(spark, dir)
+        .withColumn("fp", fingerprint(col("text"))))
       .select("doc_id", "fp", "lang", "n_chars")
       .orderBy("doc_id")
-  }
 
   // -------------------------------------------------------- token counting
 

@@ -224,39 +224,21 @@ object StreamingOps {
   def streamingCuration(docs: DataFrame): DataFrame =
     streamingCurationWith(docs)
 
-  /** [[streamingCuration]] with the model-based filter stages live — the
-    * streaming twin of `Curation.curate`'s optional stages: the LM filter
-    * ([[graft.operators.LmScore.scoreKernel]]) and the DSIR importance
-    * filter ([[graft.operators.Dsir.score]]) are stateless kernel
+  /** [[streamingCuration]] with the model-based filter stages live —
+    * the batch macro's own gate ([[graft.operators.Curation.gate]]): the
+    * LM filter and the DSIR importance filter are stateless kernel
     * projections over driver-resident models (batch/stream parity
     * spec-asserted), so they drop straight into the stateful query BEFORE
     * the dedup state — junk dies at the stateless gates and never costs
     * state, the same ordering the batch macro uses. */
   def streamingCurationWith(docs: DataFrame,
       lmFilter: Option[(Map[String, Long], Long, Double)] = None,
-      dsirFilter: Option[(Map[String, Long], Long)] = None): DataFrame = {
-    val gated = graft.operators.TextOps.quality(docs)
-      .filter(col("verdict") === "keep")
-    val lmKept = lmFilter match {
-      case Some((model, oov, cutoff)) =>
-        graft.operators.LmScore.scoreKernel(gated, model, oov)
-          .filter(col("lp_mean") >= cutoff)
-          .drop("n_tok", "lp_mean")
-      case None => gated
-    }
-    val kept = dsirFilter match {
-      case Some((weights, oov)) =>
-        graft.operators.Dsir.score(lmKept, weights, oov)
-          .filter(col("selected"))
-          .drop("n_feat", "lw_mean", "selected")
-      case None => lmKept
-    }
-    kept
+      dsirFilter: Option[(Map[String, Long], Long)] = None): DataFrame =
+    graft.operators.Curation.gate(docs, lmFilter, dsirFilter)
       .withColumn("fp", graft.operators.TextOps.fingerprint(col("text")))
       .select(col("doc_id"), col("quality"),
         size(split(col("text"), " ")).cast("long").as("n_tok"), col("fp"))
       .dropDuplicates("fp")
-  }
 
   /** [EXT] Streaming weighted sampling without replacement — the
     * continuously-arriving twin of `Sampling.sampleWeighted`: maintain,

@@ -808,7 +808,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // audited through the lazy hooks (the declared key checkpoints its
-    // interiors): acceptedFull ships (doc_id, lang, quality, fp, n_tok),
+    // interiors): acceptedFull ships (doc_id, quality, fp, n_tok, lang),
     // never the (scrubbed) text
     val docs = Tables.documents(spark, sf).select("doc_id", "text", "lang")
     val acc = graft.operators.CurationIncremental.acceptedFull(

@@ -120,6 +120,43 @@ class CurationIncrementalSpec extends SparkSpec {
     assert(CurationIncremental.readCtl(spark, dir)._1 === refCursor)
   }
 
+  test("a re-init discards a committed-but-unfolded night of the old state") {
+    import spark.implicits._
+    val n1 = Seq((2L, "alpha beta gamma delta"), (4L, "one two three four"))
+      .toDF("doc_id", "text")
+    val n2 = Seq((1L, "five six seven eight"), (7L, "nine ten eleven twelve"))
+      .toDF("doc_id", "text")
+    // night 4 carries a dup of the crashed night-3 doc 13: on clean
+    // re-init state nothing has seen that text, so doc 4 must survive
+    val n3 = Seq((13L, "fresh words arriving tonight")).toDF("doc_id", "text")
+    val n4 = Seq((4L, "tonight arriving words fresh"), (7L, "nine ten eleven twelve"))
+      .toDF("doc_id", "text")
+    def fps(p: String) = IncrementalDedup.readFpIndex(spark, s"$p/fps")
+      .select("fp").as[String].collect().toSet
+    // old state: two nights, then a third COMMITTED but never folded
+    val dir = tmpDir("curinc-reinit")
+    CurationIncremental.step(spark, n1, dir, budget = 8, bucketWidth = 2,
+      init = true)
+    CurationIncremental.step(spark, n2, dir, budget = 8, bucketWidth = 2)
+    val acc3 = CurationIncremental.accepted(n3,
+        IncrementalDedup.readFpIndex(spark, s"$dir/fps").select("fp"))
+      .localCheckpoint(true)
+    CurationIncremental.stageAndCommit(spark, acc3, 999L, dir)
+    // re-init the same dir, then one more night; a fresh dir is the truth
+    val ref = tmpDir("curinc-reinit-ref")
+    val got = Seq(dir, ref).map { p =>
+      val init = rows(CurationIncremental.step(spark, Seq((2L,
+        "alpha beta gamma delta")).toDF("doc_id", "text"), p, budget = 8,
+        bucketWidth = 2, init = true))
+      val next = rows(CurationIncremental.step(spark, n4, p, budget = 8,
+        bucketWidth = 2))
+      (init, next, CurationIncremental.readCtl(spark, p), fps(p))
+    }
+    assert(got(1)._2.map(_._1) === Set(4L, 7L))
+    assert(got(0) === got(1),
+      "a re-init must not fold the old state's committed night onto the new")
+  }
+
   test("stepFull: budget counters carry across nights; an exhausted domain stops filling") {
     import spark.implicits._
     val dir = tmpDir("curinc-budget")
