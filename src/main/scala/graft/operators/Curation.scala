@@ -50,7 +50,7 @@ object Curation {
     *     train out-of-band via [[Dsir.trainWeights]]). Paper placement:
     *     selection runs on the cleaned, quality-gated crawl BEFORE dedup
     *     (Xie et al. 2023 §3). */
-  def gate(docs: DataFrame,
+  private[graft] def gate(docs: DataFrame,
       lmFilter: Option[(Map[String, Long], Long, Double)] = None,
       dsirFilter: Option[(Map[String, Long], Long)] = None): DataFrame = {
     val gated = TextOps.quality(docs).filter(col("verdict") === "keep")
@@ -66,8 +66,8 @@ object Curation {
     }
   }
 
-  /** Stages 0-2 over any (doc_id, text) frame, the front half every
-    * curation form shares:
+  /** Stages 0-2 over any (doc_id, text) frame — the front half of
+    * [[curate]] and of the arrival mode's accept stage:
     *   0. optional PII scrub (r12): [[Redact.clean]] is a stateless
     *      column expression, so it fuses into the SAME narrow projection
     *      as the quality score — everything downstream (quality,
