@@ -107,9 +107,11 @@ object BandedIndex {
 
   /** `batch` anti-joined against the [[drops]] of its `decoded` frame.
     * Rows with no decoded row (short docs, undecodable payloads) survive
-    * by construction. The drop ids are broadcast: they are one id per
-    * near-dup the batch carries, while a shuffled anti-join would move
-    * every batch row with its payload or text through an exchange.
+    * by construction. The drop ids are broadcast: the distinct ids of
+    * the dropped rows, at most one per batch row, while a shuffled
+    * anti-join would move every batch row with its payload or text
+    * through an exchange. Spark refuses a broadcast of more than 512M
+    * rows, so a batch with more near-dups than that fails here.
     * `materialize = true` persists `decoded` for its
     * band and verify references, `localCheckpoint`s the survivors and
     * releases the cache before returning ([[graft.Caching]]'s contract);

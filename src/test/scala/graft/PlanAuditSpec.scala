@@ -251,12 +251,6 @@ class PlanAuditSpec extends SparkSpec {
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       .split("\n\n").toSeq
 
-  /** The row list of every shuffle Exchange block among `blocks` that
-    * `keep` selects. Formatted explain prints an Exchange's rows as its
-    * `Input [n]: [...]` line (it has no `Output` line), so that is the
-    * line read. Fails when no block matches, or a matched block has no
-    * row list: an audit over an empty set would pass with nothing
-    * checked. */
   /** An Exchange that funnels its rows into one partition: a
     * `SinglePartition` one, or one keyed on a computed window key —
     * Packing's offsets window partitions by the constant `pmod(bucket,
@@ -265,6 +259,12 @@ class PlanAuditSpec extends SparkSpec {
     block.contains("SinglePartition") ||
       """hashpartitioning\(_w\d+#""".r.findFirstIn(block).nonEmpty
 
+  /** The row list of every shuffle Exchange block among `blocks` that
+    * `keep` selects. Formatted explain prints an Exchange's rows as its
+    * `Input [n]: [...]` line (it has no `Output` line), so that is the
+    * line read. Fails when no block matches, or a matched block has no
+    * row list: an audit over an empty set would pass with nothing
+    * checked. */
   private def exchangeInputs(blocks: Seq[String],
       keep: String => Boolean = _ => true): Seq[String] = {
     val rows = blocks
